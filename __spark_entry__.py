@@ -597,7 +597,7 @@ def q_unigram_logprob_documents(spark, sf_dir):
     mean token log-prob + perplexity — the cheapest model-based quality
     signal (CCNet/Gopher trim both perplexity tails).  Train = the
     token_histogram bincount fold (|vocab| exchange rows per partition);
-    score = ONE mapInPandas scan with the |vocab| log-prob vector closed
+    score = ONE mapInArrow scan with the |vocab| log-prob vector closed
     over — token arrays never ride a shuffle, there is no join.  The
     oracle replays the naive explode ⋈ logp form DuckDB-side."""
     from vldt_spark.functions.lm import unigram_logprob

@@ -87,3 +87,33 @@ def test_null_values_are_dropped_not_counted(spark):
     rows = sorted(got.collect(), key=lambda r: r["ts"])
     assert len(rows) == 2  # the NULL point emits nothing
     assert rows[1]["n_trailing"] == 1  # and does not occupy history
+
+
+def test_out_of_order_batch_matches_batch_report_at_small_arrow_batches(spark):
+    # one micro-batch of 8 points delivered out of time order, split by
+    # Arrow into 2-row chunks: the handler must sort the whole batch once
+    vals = [10, 12, 11, 30, 11, 13, 9, 45]
+    points = _days(vals)
+    order = [5, 0, 7, 2, 4, 1, 6, 3]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        got = _run_stream(
+            spark, [[points[i] for i in order]], window=3, k=2.0, alpha=0.5
+        ).collect()
+    finally:
+        spark.conf.set(conf, old)
+    batch = metric_control_report(
+        spark.createDataFrame(points, "s string, ts timestamp, value double"),
+        by="s", window=3, k=2.0, alpha=0.5,
+    ).collect()
+    s_rows = {r["ts"]: r for r in got}
+    assert len(s_rows) == len(batch) == 8
+    for b in batch:
+        srow = s_rows[b["ts"]]
+        for c in (
+            "value", "n_trailing", "trailing_mean", "trailing_std", "z",
+            "shewhart_alarm", "ewma_prev", "ewma_alarm",
+        ):
+            assert srow[c] == b[c], (b["ts"], c, srow[c], b[c])

@@ -1,0 +1,201 @@
+"""The Arrow training fold behind the unigram LM: `token_histogram` and
+`unigram_logprob` against a pure-Python reference on NULL, empty, OOV and
+int32-extreme token arrays, identical under every Arrow batch size and
+input row order; and `lm_cross_entropy` scanning each corpus once."""
+
+import math
+import random
+import uuid
+from collections import Counter
+
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from vldt_spark.functions import lm
+from vldt_spark.functions.tokens import token_histogram
+
+V = 8
+I32_MIN, I32_MAX = -(2**31), 2**31 - 1
+SCHEMA = "doc_id string, tokens array<int>"
+BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _r6(x):
+    return math.floor(x * 1e6 + 0.5) / 1e6 if x >= 0 else -math.floor(-x * 1e6 + 0.5) / 1e6
+
+
+def py_histogram(arrays):
+    """token -> count; NULL elements and ids outside [0, V) under -1."""
+    out = Counter()
+    for arr in arrays:
+        for t in arr or []:
+            out[t if t is not None and 0 <= t < V else -1] += 1
+    return dict(out)
+
+
+def py_logprob(arrays):
+    """Per row (n_tok, mean_logp, ppl) under the add-one unigram LM."""
+    hist = py_histogram(arrays)
+    n = sum(c for t, c in hist.items() if t >= 0)
+    denom = n + V
+    floor = math.log(1.0 / denom)
+    out = []
+    for arr in arrays:
+        if not arr:
+            out.append((0, None, None))
+            continue
+        lp = [
+            math.log((hist.get(t, 0) + 1.0) / denom)
+            if t is not None and 0 <= t < V
+            else floor
+            for t in arr
+        ]
+        mean = sum(lp) / len(lp)
+        out.append((len(arr), _r6(mean), _r6(math.exp(-mean))))
+    return out
+
+
+def _run_fold(spark, rows, batch):
+    """(histogram, {doc_id: (n_tok, mean_logp, ppl)}) at one Arrow batch
+    size (None = the session default)."""
+    old = spark.conf.get(BATCH_CONF)
+    if batch is not None:
+        spark.conf.set(BATCH_CONF, str(batch))
+    try:
+        df = spark.createDataFrame(rows, SCHEMA)
+        hist = {r["token"]: r["cnt"] for r in token_histogram(df, V).collect()}
+        scored = {
+            r["doc_id"]: (r["n_tok"], r["mean_logp"], r["ppl"])
+            for r in lm.unigram_logprob(df, V).collect()
+        }
+    finally:
+        spark.conf.set(BATCH_CONF, old)
+    return hist, scored
+
+
+token_strat = st.one_of(
+    st.none(),
+    st.integers(0, V - 1),
+    st.integers(V, V + 3),
+    st.integers(-3, -1),
+    st.sampled_from([I32_MIN, I32_MAX]),
+)
+array_strat = st.one_of(st.none(), st.lists(token_strat, max_size=6))
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(arrays=st.lists(array_strat, max_size=12), seed=st.integers(0, 2**16))
+def test_fold_matches_python_reference_at_any_batch_size(spark, arrays, seed):
+    rows = [(f"d{i}", a) for i, a in enumerate(arrays)]
+    want_hist = py_histogram(arrays)
+    want_scores = dict(zip((r[0] for r in rows), py_logprob(arrays)))
+    results = []
+    for batch in (1, 3, None):
+        shuffled = list(rows)
+        random.Random(seed + (batch or 0)).shuffle(shuffled)
+        hist, scored = _run_fold(spark, shuffled, batch)
+        assert hist == want_hist, (batch, arrays)
+        assert scored.keys() == want_scores.keys()
+        for doc, (n_tok, mean, ppl) in want_scores.items():
+            g_n, g_mean, g_ppl = scored[doc]
+            assert g_n == n_tok, (batch, doc)
+            if mean is None:
+                assert g_mean is None and g_ppl is None, (batch, doc)
+            else:
+                # numpy's and libm's exp may differ by an ulp, which can
+                # flip the 6th decimal
+                assert g_mean == pytest.approx(mean, abs=1.01e-6), (batch, doc)
+                assert g_ppl == pytest.approx(ppl, abs=1.01e-6), (batch, doc)
+        results.append((hist, scored))
+    # bit-identical across batch sizes and row orders
+    assert results[0] == results[1] == results[2]
+
+
+def test_fold_edge_rows(spark):
+    arrays = [
+        None, [], [None], [None, None, 3], [I32_MIN, I32_MAX],
+        [-1, V, 0, 0], [V - 1], [7, 7, None, -5],
+    ]
+    rows = [(f"d{i}", a) for i, a in enumerate(arrays)]
+    hist, scored = _run_fold(spark, rows, 1)
+    assert hist == py_histogram(arrays)
+    assert hist[-1] == 9  # 4 NULL elements + 5 out-of-range ids
+    assert scored["d0"] == (0, None, None) and scored["d1"] == (0, None, None)
+    counts, total, n_oov = lm._train_counts(spark.createDataFrame(rows, SCHEMA), V, "tokens")
+    assert counts.tolist() == [hist.get(t, 0) for t in range(V)]
+    assert total == sum(counts) and n_oov == 9
+
+
+def test_fold_on_empty_input(spark):
+    df = spark.createDataFrame([], SCHEMA)
+    assert token_histogram(df, V).collect() == []
+    counts, total, n_oov = lm._train_counts(df, V, "tokens")
+    assert counts.tolist() == [0] * V and total == 0 and n_oov == 0
+    assert lm.unigram_logprob(df, V).collect() == []
+
+
+def _jobs_in_group(spark, fn):
+    sc = spark.sparkContext
+    group = f"lm_fold_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lm_cross_entropy_scans_each_corpus_once(spark, monkeypatch):
+    ref_arrays = [[0, 0, 1, 2], [3, 3, 3], [1]]
+    cur_arrays = [[0, 1, V, None], [4, 4, -1], None, []]
+    ref = spark.createDataFrame([(f"r{i}", a) for i, a in enumerate(ref_arrays)], SCHEMA)
+    cur = spark.createDataFrame([(f"c{i}", a) for i, a in enumerate(cur_arrays)], SCHEMA)
+
+    # one histogram collect costs this many jobs
+    _, per_hist = _jobs_in_group(spark, lambda: lm._train_counts(cur, V, "tokens"))
+    assert per_hist >= 1
+
+    built = []
+
+    def counting_histogram(df, *a, **kw):
+        built.append(df)
+        return token_histogram(df, *a, **kw)
+
+    monkeypatch.setattr(lm, "token_histogram", counting_histogram)
+    out, jobs = _jobs_in_group(spark, lambda: lm.lm_cross_entropy(ref, cur, V))
+    assert len(built) == 2
+    assert jobs == 2 * per_hist
+
+    # closed form: both models add-one smoothed over [0, V); cur's OOV
+    # and NULL elements score at each model's floor
+    def model(arrays):
+        h = py_histogram(arrays)
+        n = sum(c for t, c in h.items() if t >= 0)
+        return h, n
+
+    h_ref, n_ref = model(ref_arrays)
+    h_cur, n_cur = model(cur_arrays)
+    n_oov = h_cur.get(-1, 0)
+    assert n_oov == 3
+
+    def logp(h, n, t):
+        return math.log(((h.get(t, 0) if t >= 0 else 0) + 1.0) / (n + V))
+
+    def entropy(h_model, n_model):
+        s = sum(c * logp(h_model, n_model, t) for t, c in h_cur.items() if t >= 0)
+        s += n_oov * math.log(1.0 / (n_model + V))
+        return -s / (n_cur + n_oov)
+
+    cross = entropy(h_ref, n_ref)
+    self_e = entropy(h_cur, n_cur)
+    row = out.collect()[0]
+    assert row["n_tokens"] == n_cur + n_oov == 7
+    assert row["cross_entropy"] == pytest.approx(_r6(cross), abs=1e-9)
+    assert row["ppl"] == pytest.approx(_r6(math.exp(cross)), abs=1e-9)
+    assert row["self_entropy"] == pytest.approx(_r6(self_e), abs=1e-9)
+    assert row["kl"] == pytest.approx(_r6(cross - self_e), abs=1e-9)

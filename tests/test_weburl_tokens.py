@@ -188,7 +188,7 @@ def test_token_bigram_topk_deterministic(toks_df):
 
 
 def test_histogram_never_explodes_tokens_through_shuffle(toks_df):
-    # the exchange input must be the mapInPandas partials (token, cnt),
+    # the exchange input must be the mapInArrow partials (token, cnt),
     # not an explode of the token arrays
     plan = (
         token_histogram(toks_df, 100)
@@ -197,7 +197,7 @@ def test_histogram_never_explodes_tokens_through_shuffle(toks_df):
         .toString()
     )
     assert "Generate explode" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 # -- sequence_stats / zipf_report (round 5) ------------------------------

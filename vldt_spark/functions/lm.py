@@ -12,14 +12,23 @@ Reference parity: the reference validates rows against a declared model
 "model" is learned from the corpus and every row is scored against it.
 
 Scale design (10^12 sequences, |vocab| ~ 10^5):
-- TRAIN is `token_histogram`'s per-partition dense numpy-bincount fold:
-  token arrays never ride a shuffle; the exchange carries at most |vocab|
-  rows per partition and the final aggregate is |vocab|-sized.
-- The smoothed log-prob table is |vocab| float64s (~1 MB at 10^5) —
-  collected once on the driver (the same bounded-collect family as the
-  Bloom bitmap partials in checks/referential.py) and shipped to executors
-  as a closure broadcast inside ONE `mapInArrow` scoring
+- TRAIN is `token_histogram`'s per-partition dense bincount fold: one
+  `mapInArrow` pass that flattens each Arrow batch once and adds ONE
+  `np.bincount` per batch — no Python runs per row.  Token arrays never
+  ride a shuffle; the exchange carries at most |vocab| rows per
+  partition and the final aggregate is |vocab|-sized.
+- The |vocab|+1-row histogram is collected once on the driver as Arrow
+  (`DataFrame.toArrow`, no `Row` objects) and scattered into the dense
+  count vector with one NumPy index assignment; its token = -1 row is
+  the OOV count, so no caller rescans for it.  The smoothed log-prob
+  table is |vocab| float64s (~1 MB at 10^5) — the same bounded-collect
+  family as the Bloom bitmap partials in checks/referential.py — shipped
+  to executors as a closure broadcast inside ONE `mapInArrow` scoring
   pass.  SCORE is therefore a pure scan: zero exchanges, zero joins.
+- The scoring kernel (`_flat_mean_logp`) is shared with the streaming
+  scorer (`streaming/lm_stream.ppl_udf`): flatten the Arrow list column
+  once, one vectorized gather of log-probs, and per-row means from one
+  `np.add.reduceat` over the row segments.
 - The naive alternative — explode(tokens) ⋈ logp_table → groupBy(doc) —
   ships n_rows × seq_len rows through TWO exchanges; at 10^12 × 1k tokens
   that is 10^15 shuffle rows.  It exists here only as the DuckDB oracle.
@@ -53,20 +62,44 @@ def _round6(x: float) -> float:
 
 def _train_counts(
     df: DataFrame, vocab_size: int, tokens_col: str
-) -> tuple[np.ndarray, int]:
-    """Dense in-vocab count vector + total in-vocab token count N.
+) -> tuple[np.ndarray, int, int]:
+    """Dense in-vocab count vector, total in-vocab token count N, and the
+    OOV count.
 
-    Bounded driver collect: |vocab|+1 rows (token_histogram folds OOV and
-    NULL elements under token = -1; those are excluded from N — the model
-    is defined over [0, vocab) and OOV tokens score at the unseen floor).
+    Bounded driver collect of |vocab|+1 rows, read as Arrow and scattered
+    with one index assignment.  token_histogram folds OOV ids and NULL
+    elements under token = -1; those are excluded from N — the model is
+    defined over [0, vocab) and OOV tokens score at the unseen floor —
+    and returned as the third value.
     """
-    rows = token_histogram(df, vocab_size, tokens_col=tokens_col).collect()
+    hist = token_histogram(df, vocab_size, tokens_col=tokens_col).toArrow()
+    token = hist.column("token").to_numpy()
+    cnt = hist.column("cnt").to_numpy()
+    in_vocab = token >= 0
     counts = np.zeros(vocab_size, dtype=np.int64)
-    for r in rows:
-        t = r["token"]
-        if 0 <= t < vocab_size:
-            counts[t] = r["cnt"]
-    return counts, int(counts.sum())
+    counts[token[in_vocab]] = cnt[in_vocab]
+    return counts, int(counts.sum()), int(cnt[~in_vocab].sum())
+
+
+def _flat_mean_logp(
+    list_arr, logp: np.ndarray, floor: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Score one Arrow list<int> column under a unigram LM with no per-row
+    Python: ``(lens int64, mean float64)``, where ``mean[i]`` is row i's
+    mean token log-prob and NaN when the row is NULL or empty.  Ids
+    outside [0, |logp|) and NULL elements score at ``floor``."""
+    flat, lens = _arrow_flat_tokens(list_arr)
+    vocab_size = logp.size
+    nz = lens > 0
+    mean = np.full(lens.size, np.nan)
+    if flat.size:
+        lens_nz = lens[nz]
+        starts = np.zeros(lens_nz.size, dtype=np.int64)
+        np.cumsum(lens_nz[:-1], out=starts[1:])
+        in_range = (flat >= 0) & (flat < vocab_size)
+        lp = np.where(in_range, logp[np.clip(flat, 0, vocab_size - 1)], floor)
+        mean[nz] = np.add.reduceat(lp, starts) / lens_nz
+    return lens, mean
 
 
 def unigram_lm_table(
@@ -78,7 +111,7 @@ def unigram_lm_table(
     including never-seen ids, whose smoothed mass is the OOV/unseen floor.
     |vocab| rows total; downstream consumers broadcast it.
     """
-    counts, total = _train_counts(df, vocab_size, tokens_col)
+    counts, total, _ = _train_counts(df, vocab_size, tokens_col)
     denom = float(total + vocab_size)
     spark = df.sparkSession
     pdf = pd.DataFrame(
@@ -97,7 +130,7 @@ def unigram_lm_vector(
     """The trained model as plain Python: (logp vector over [0, vocab),
     unseen/OOV floor) — the hand-off shape for the streaming scorer
     (`streaming/lm_stream.stream_ppl_windows`), which closes over it."""
-    counts, total = _train_counts(df, vocab_size, tokens_col)
+    counts, total, _ = _train_counts(df, vocab_size, tokens_col)
     denom = float(total + vocab_size)
     logp = np.log((counts + 1.0) / denom)
     return logp.tolist(), math.log(1.0 / denom)
@@ -122,14 +155,14 @@ def unigram_logprob(
     Two passes over the fact table, zero exchanges of token arrays: the
     |vocab|-bounded train fold, then one mapInArrow scoring scan with the
     log-prob vector closed over (see module docstring for why not a join).
-    The scoring kernel has NO per-row Python: the Arrow list column is
-    flattened zero-copy (`_arrow_flat_tokens`), the whole flat token
-    relation is scored with one vectorized gather, and per-row means come
-    from one `np.add.reduceat` over the row segments.
+    The scoring kernel (`_flat_mean_logp`) has NO per-row Python: the
+    Arrow list column is flattened zero-copy (`_arrow_flat_tokens`), the
+    whole flat token relation is scored with one vectorized gather, and
+    per-row means come from one `np.add.reduceat` over the row segments.
     """
     import pyarrow as pa
 
-    counts, total = _train_counts(df, vocab_size, tokens_col)
+    counts, total, _ = _train_counts(df, vocab_size, tokens_col)
     logp = np.log((counts + 1.0) / float(total + vocab_size))
     floor = math.log(1.0 / float(total + vocab_size))
     q = None if round_to is None else 10.0**round_to
@@ -137,19 +170,7 @@ def unigram_logprob(
     def score(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         for batch in batches:
             ids = batch.column(0)
-            flat, lens = _arrow_flat_tokens(batch.column(1))
-            m = lens.size
-            nz = lens > 0
-            mean = np.full(m, np.nan)
-            if flat.size:
-                lens_nz = lens[nz]
-                starts = np.zeros(lens_nz.size, dtype=np.int64)
-                np.cumsum(lens_nz[:-1], out=starts[1:])
-                in_range = (flat >= 0) & (flat < vocab_size)
-                lp = np.where(
-                    in_range, logp[np.clip(flat, 0, vocab_size - 1)], floor
-                )
-                mean[nz] = np.add.reduceat(lp, starts) / lens_nz
+            lens, mean = _flat_mean_logp(batch.column(1), logp, floor)
             # ppl is exp of the UNROUNDED mean, then rounded — the same
             # order of operations as the scalar path and the SQL oracle
             ppl = np.exp(-mean)
@@ -163,7 +184,7 @@ def unigram_logprob(
                     / q
                 )
                 ppl = np.floor(ppl * q + 0.5) / q
-            null_mask = ~nz
+            null_mask = lens == 0
             yield pa.RecordBatch.from_arrays(
                 [
                     ids,
@@ -204,18 +225,15 @@ def lm_cross_entropy(
     Scale shape — the part worth noticing: NO scoring scan exists.
     Cross-entropy under a unigram model depends on the current corpus
     only through its token HISTOGRAM (H = -Σ_t p_cur(t)·logp_ref(t)), so
-    the whole op is the two |vocab|-bounded bincount folds plus |vocab|
-    driver-side multiply-adds.  Tokens outside [0, vocab) contribute at
-    the respective model's unseen floor.
+    the whole op is the two |vocab|-bounded bincount folds (one scan of
+    each corpus; cur's OOV count comes from its histogram's token = -1
+    row) plus |vocab| driver-side multiply-adds.  Tokens outside
+    [0, vocab) contribute at the respective model's unseen floor.
     """
-    c_ref, n_ref = _train_counts(ref, vocab_size, tokens_col)
-    c_cur, n_cur = _train_counts(cur, vocab_size, tokens_col)
-    # OOV mass of cur: token_histogram folds out-of-range under -1; those
-    # tokens are real observations of cur, scored at each model's floor
-    oov_rows = token_histogram(cur, vocab_size, tokens_col=tokens_col).where(
-        F.col("token") == -1
-    ).collect()
-    n_oov = int(oov_rows[0]["cnt"]) if oov_rows else 0
+    c_ref, n_ref, _ = _train_counts(ref, vocab_size, tokens_col)
+    # OOV mass of cur (the histogram's token = -1 row): those tokens are
+    # real observations of cur, scored at each model's floor
+    c_cur, n_cur, n_oov = _train_counts(cur, vocab_size, tokens_col)
 
     logp_ref = np.log((c_ref + 1.0) / float(n_ref + vocab_size))
     logp_cur = np.log((c_cur + 1.0) / float(n_cur + vocab_size))

@@ -12,8 +12,9 @@ Scale design:
 - `token_histogram` NEVER explodes the token arrays through a shuffle.
   A naive `explode(tokens)` → groupBy ships n_rows × seq_len rows into
   the exchange (at 10^12 sequences × 1k tokens that is 10^15 shuffle
-  rows).  Instead an Arrow-batched numpy `bincount` folds each partition
-  into one dense partial histogram, so the exchange carries at most
+  rows).  Instead a `mapInArrow` fold flattens each Arrow batch once and
+  adds ONE numpy `bincount` per batch (no Python loop over rows) to a
+  dense per-partition histogram, so the exchange carries at most
   |vocab| rows per PARTITION (not per row) and the final groupBy(token)
   is a |vocab|-sized aggregate.  Same partial-then-final shape as the
   salted uniqueness check.
@@ -93,38 +94,39 @@ def _int_tokens(arr) -> "np.ndarray | None":
 def token_histogram(
     df: DataFrame, vocab_size: int, tokens_col: str = "tokens"
 ) -> DataFrame:
-    """Exact unigram token counts: (token int, cnt long).
+    """Exact unigram token counts: (token long, cnt long).
 
-    Per-partition dense numpy bincount (one Arrow batch at a time), then
-    a |vocab|-row final sum.  Tokens outside [0, vocab_size) and NULL
-    elements are counted under token = -1 so the total is conserved
-    (callers can split OOV out; see `oov_report` for the rate view).
+    A `mapInArrow` fold with no per-row Python: each Arrow batch's list
+    column is flattened once (`_arrow_flat_tokens`) and its in-range ids
+    are added to a per-partition dense accumulator with ONE
+    `np.bincount`; the partition then emits its nonzero bins, and a
+    |vocab|-row final sum merges the partials.  Tokens outside
+    [0, vocab_size) and NULL elements are counted under token = -1 so the
+    total is conserved (callers can split OOV out; see `oov_report` for
+    the rate view); NULL and empty arrays add nothing.  The counts do not
+    depend on Arrow batch size, partitioning or row order.
     """
+    import pyarrow as pa
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fold(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         acc = np.zeros(vocab_size, dtype=np.int64)
         oov = 0
-        for pdf in batches:
-            for arr in pdf[tokens_col]:
-                t = _int_tokens(arr)  # NULL elements become -1
-                if t is None:
-                    continue
-                in_range = (t >= 0) & (t < vocab_size)
-                oov += int((~in_range).sum())
-                acc += np.bincount(t[in_range], minlength=vocab_size)
-            del pdf
-        nz = np.nonzero(acc)[0]
-        out = pd.DataFrame(
-            {"token": nz.astype(np.int64), "cnt": acc[nz]}
-        )
+        for batch in batches:
+            flat, _ = _arrow_flat_tokens(batch.column(0))
+            ids = flat[(flat >= 0) & (flat < vocab_size)]
+            oov += flat.size - ids.size
+            acc += np.bincount(ids, minlength=vocab_size)
+        token = np.flatnonzero(acc)
+        cnt = acc[token]
         if oov:
-            out = pd.concat(
-                [out, pd.DataFrame({"token": [-1], "cnt": [oov]})],
-                ignore_index=True,
-            )
-        yield out
+            token = np.append(token, -1)
+            cnt = np.append(cnt, oov)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(token, type=pa.int64()), pa.array(cnt, type=pa.int64())],
+            names=["token", "cnt"],
+        )
 
-    partials = df.select(tokens_col).mapInPandas(
+    partials = df.select(tokens_col).mapInArrow(
         fold, schema="token long, cnt long"
     )
     return partials.groupBy("token").agg(F.sum("cnt").alias("cnt"))

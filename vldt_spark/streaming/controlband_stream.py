@@ -7,18 +7,24 @@ point against its own trailing history, per series, across micro-batch
 boundaries.  A batch recomputation sees a regression at the next audit;
 this sees it at the trigger that delivers the offending point.
 
-Semantics: points are processed in event-time order WITHIN each
-micro-batch and in arrival order across batches — identical to the
-batch report whenever the upstream is an append-mode windowed
-aggregation (windows finalize in watermark order).  NULL metric values
-carry no signal and are dropped (the batch report's lag frame skips
-them the same way).
+Semantics: a series' points in one micro-batch are gathered from every
+Arrow chunk they arrive in and processed in event-time order; batches
+are processed in arrival order.  This is identical to the batch report,
+whatever the Arrow batch size, whenever no micro-batch carries a point
+older than an earlier batch's — e.g. when the upstream is an
+append-mode windowed aggregation (windows finalize in watermark order).
+NULL metric values carry no signal: they emit no row and take no slot in
+the trailing history.  The batch report differs on them: it emits a row
+for a NULL point, and that row takes a slot in its trailing row frame
+and a lag position of the EWMA, so the two agree only on series without
+NULL values.
 
 Scale shape: state per series is a fixed-length ring of the last ``w``
 values — a few doubles per distinct series, hash-partitioned by the
-series key (the exact shuffle a batch groupBy would use); the
-per-batch math is numpy over Arrow batches, no per-row Python.  State
-is bounded by construction, so no TTL is needed.
+series key (the exact shuffle a batch groupBy would use).  The handler
+walks each series' points of a micro-batch in order, because every
+point's band depends on the one before it.  State is bounded by
+construction, so no TTL is needed.
 """
 
 from __future__ import annotations
@@ -51,42 +57,44 @@ def _make_handler(window: int, k: float, alpha: float):
         else:
             hist = []
         rows = []
-        for pdf in pdfs:
-            pdf = pdf.dropna(subset=["__value"]).sort_values("__ts")
-            for ts, x in zip(pdf["__ts"], pdf["__value"]):
-                x = float(x)
-                n_tr = len(hist)
-                mean = std = z = ewma = None
-                shew = ew_alarm = None
-                if n_tr:
-                    arr = np.asarray(hist, dtype=np.float64)
-                    mean = float(arr.mean())
-                    std = float(arr.std(ddof=1)) if n_tr >= 2 else None
-                    # trailing EWMA: hist[-1] is the most recent point
-                    num = den = 0.0
-                    for j, w in enumerate(weights[:n_tr]):
-                        num += w * hist[-1 - j]
-                        den += w
-                    ewma = num / den
-                    ok = n_tr >= 3 and std is not None and std > 0
-                    if ok:
-                        z = (x - mean) / std
-                        shew = abs(x - mean) > k * std
-                        ew_alarm = abs(x - ewma) > k * std
-                rows.append(
-                    (
-                        key[0], ts, x, n_tr,
-                        None if mean is None else _r6(mean),
-                        None if std is None else _r6(std),
-                        None if z is None else _r6(z),
-                        shew,
-                        None if ewma is None else _r6(ewma),
-                        ew_alarm,
-                    )
+        # one sort over the group's whole micro-batch: the chunks Arrow
+        # splits it into are not in event-time order relative to each other
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        pdf = pdf.dropna(subset=["__value"]).sort_values("__ts", kind="stable")
+        for ts, x in zip(pdf["__ts"], pdf["__value"]):
+            x = float(x)
+            n_tr = len(hist)
+            mean = std = z = ewma = None
+            shew = ew_alarm = None
+            if n_tr:
+                arr = np.asarray(hist, dtype=np.float64)
+                mean = float(arr.mean())
+                std = float(arr.std(ddof=1)) if n_tr >= 2 else None
+                # trailing EWMA: hist[-1] is the most recent point
+                num = den = 0.0
+                for j, w in enumerate(weights[:n_tr]):
+                    num += w * hist[-1 - j]
+                    den += w
+                ewma = num / den
+                ok = n_tr >= 3 and std is not None and std > 0
+                if ok:
+                    z = (x - mean) / std
+                    shew = abs(x - mean) > k * std
+                    ew_alarm = abs(x - ewma) > k * std
+            rows.append(
+                (
+                    key[0], ts, x, n_tr,
+                    None if mean is None else _r6(mean),
+                    None if std is None else _r6(std),
+                    None if z is None else _r6(z),
+                    shew,
+                    None if ewma is None else _r6(ewma),
+                    ew_alarm,
                 )
-                hist.append(x)
-                if len(hist) > window:
-                    hist = hist[-window:]
+            )
+            hist.append(x)
+            if len(hist) > window:
+                hist = hist[-window:]
         state.update((hist,))
         if rows:
             yield pd.DataFrame(

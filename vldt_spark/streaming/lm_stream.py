@@ -7,50 +7,45 @@ reference model is fixed, the stream is judged against it) and emit
 per-event-time-window counts, mean perplexity, and the share of
 sequences whose perplexity crosses an alert threshold.
 
-Scale shape: scoring is a STATELESS Arrow-batched pandas UDF with the
-|vocab| log-prob vector closed over (float64, ~400 KB at a 50k vocab —
-shipped once per executor, never through state).  The only state is the
-watermarked windowed aggregation's |open windows| rows of three
-numbers; token arrays never enter state, and partial aggregation runs
-map-side within each micro-batch — identical cost profile to the batch
-scorer plus a |windows|-bounded exchange.
+Scale shape: scoring is a STATELESS Arrow UDF on the batch scorer's
+flat kernel, with the |vocab| log-prob vector closed over (float64,
+~400 KB at a 50k vocab — shipped once per executor, never through
+state).  The only state is the watermarked windowed aggregation's
+|open windows| rows of three numbers; token arrays never enter state,
+and partial aggregation runs map-side within each micro-batch —
+identical cost profile to the batch scorer plus a |windows|-bounded
+exchange.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 
 def ppl_udf(logp: Sequence[float], floor: float):
     """Vectorized per-sequence perplexity under a fixed unigram LM:
     exp(-mean logp(token)), rounded half-up to 6 decimals (the shared
-    oracle convention); NULL for empty/NULL sequences.  OOV ids score at
-    ``floor`` (the model's unseen-mass log-prob)."""
-    from vldt_spark.functions.tokens import _int_tokens
+    oracle convention); NULL for empty/NULL sequences.  OOV ids and NULL
+    elements score at ``floor`` (the model's unseen-mass log-prob).
+
+    An Arrow UDF over the batch scorer's kernel (`lm._flat_mean_logp`):
+    each Arrow batch is flattened once, scored with one gather and
+    reduced per row with one `np.add.reduceat` — no per-row Python."""
+    from vldt_spark.functions.lm import _flat_mean_logp
 
     vec = np.asarray(logp, dtype=np.float64)
-    v = vec.size
 
-    @pandas_udf("double")
-    def _score(tokens: pd.Series) -> pd.Series:
-        out = []
-        for arr in tokens:
-            t = _int_tokens(arr)
-            if t is None or t.size == 0:
-                out.append(None)
-                continue
-            in_range = (t >= 0) & (t < v)
-            lp = np.where(in_range, vec[np.clip(t, 0, v - 1)], floor)
-            p = math.exp(-float(lp.mean()))
-            out.append(math.floor(p * 1e6 + 0.5) / 1e6)
-        return pd.Series(out, dtype="float64")
+    @arrow_udf("double")
+    def _score(tokens: pa.Array) -> pa.Array:
+        lens, mean = _flat_mean_logp(tokens, vec, floor)
+        ppl = np.floor(np.exp(-mean) * 1e6 + 0.5) / 1e6
+        return pa.array(ppl, type=pa.float64(), mask=lens == 0)
 
     return _score
 
