@@ -5094,7 +5094,7 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CAST(8 AS INT) AS bits,
        CAST(n AS BIGINT) AS n_samples,
        s1 AS s_sum, s2 AS s_sumsq,
-       floor((CAST(s1 AS DOUBLE) / n) * 1e6 + 0.5) / 1e6 AS s_mean,
+       sign(s1) * floor(abs(CAST(s1 AS DOUBLE) / n) * 1e6 + 0.5) / 1e6 AS s_mean,
        floor(sqrt(greatest(CAST(s2 AS DOUBLE) / n
                            - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n),
                            0)) * 1e6 + 0.5) / 1e6 AS s_std
@@ -8019,9 +8019,12 @@ def q_suggest_constraints_lineitem(spark, sf_dir):
     from vldt_spark.checks.suggest import suggest_constraints
 
     li = _t(spark, sf_dir, "lineitem")
-    return suggest_constraints(
+    out = suggest_constraints(
         li, ["l_orderkey", "l_quantity", "l_returnflag", "l_shipdate"]
     )
+    # gate results are canonicalized by sorting them as pandas cells,
+    # which cannot order lists: the isin list is reported comma-joined
+    return out.withColumn("values", F.array_join("values", ","))
 
 
 SQL_SUGGEST_CONSTRAINTS_LINEITEM = """
@@ -8054,9 +8057,10 @@ SELECT col AS "column",
        CASE WHEN nn = 0 THEN 'not_null' ELSE 'null_rate_below' END AS kind,
        CAST(NULL AS DOUBLE) AS lo,
        CASE WHEN nn = 0 THEN CAST(NULL AS DOUBLE)
-            ELSE floor(least(1.0, nn * 1.2 / n) * 1e6 + 0.5) / 1e6
+            ELSE greatest(floor(least(1.0, nn * 1.2 / n) * 1e6 + 0.5) / 1e6,
+                          ceil(CAST(nn AS DOUBLE) / n * 1e6) / 1e6)
        END AS hi,
-       CAST(NULL AS VARCHAR[]) AS "values",
+       CAST(NULL AS VARCHAR) AS "values",
        CASE WHEN nn = 0 THEN 1.0
             ELSE floor((1.0 - CAST(nn AS DOUBLE) / n) * 1e6 + 0.5) / 1e6
        END AS support
@@ -8066,7 +8070,7 @@ SELECT 'l_orderkey', 'range', omin, omax, NULL, 1.0 FROM a
 UNION ALL
 SELECT 'l_quantity', 'range', qmin, qmax, NULL, 1.0 FROM a
 UNION ALL
-SELECT 'l_returnflag', 'isin', NULL, NULL, v, 1.0 FROM vs
+SELECT 'l_returnflag', 'isin', NULL, NULL, array_to_string(v, ','), 1.0 FROM vs
 WHERE card BETWEEN 1 AND 10
 UNION ALL
 SELECT 'l_returnflag', 'length_between', lmin, lmax, NULL, 1.0 FROM a
@@ -8257,7 +8261,10 @@ def q_token_affix_documents(spark, sf_dir):
     suf = token_affix_report(toks, k=12, side="suffix", top=20).withColumn(
         "side", F.lit("suffix")
     )
-    return pre.unionByName(suf)
+    # gate results are canonicalized by sorting them as pandas cells,
+    # which cannot order lists: the affix id slice is reported comma-joined
+    out = pre.unionByName(suf)
+    return out.withColumn("affix", F.array_join(F.col("affix").cast("array<string>"), ","))
 
 
 SQL_TOKEN_AFFIX_DOCUMENTS = (
@@ -8288,11 +8295,11 @@ rs AS (
          round(n_docs / greatest(total, 1), 6) AS doc_share
   FROM gs, tots WHERE n_docs >= 2
 )
-SELECT CAST(rank AS INTEGER) AS rank, affix, n_docs, exemplar_id,
+SELECT CAST(rank AS INTEGER) AS rank, array_to_string(affix, ',') AS affix, n_docs, exemplar_id,
        doc_share, 'prefix' AS side
 FROM rp WHERE rank <= 20
 UNION ALL
-SELECT CAST(rank AS INTEGER) AS rank, affix, n_docs, exemplar_id,
+SELECT CAST(rank AS INTEGER) AS rank, array_to_string(affix, ',') AS affix, n_docs, exemplar_id,
        doc_share, 'suffix' AS side
 FROM rs WHERE rank <= 20
 """

@@ -63,18 +63,6 @@ def test_resize_images_shapes(spark):
     assert again[rows[0]["media_id"]] == rows[0]["payload"]
 
 
-def test_stub_era_aliases_still_importable():
-    from vldt_spark.functions.multimodal import (
-        frame_sample_stub,
-        frame_timestamps,
-        resize_images,
-        resize_stub,
-    )
-
-    assert resize_stub is resize_images
-    assert frame_sample_stub is frame_timestamps
-
-
 def test_parse_media_headers_real_formats(spark):
     """REAL header decode: PNG IHDR / JPEG SOF0 / WAV fmt+data parsed with
     int.from_bytes against payloads written by the independent struct.pack

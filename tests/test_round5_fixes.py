@@ -409,14 +409,14 @@ def test_bench_compact_line_fits_driver_tail():
 
 
 def test_suite_round6_is_half_up():
-    from vldt_spark.checks.suite import _round6
+    from vldt_spark.rounding import round6
 
     # 0.1234565 halves up to 0.123457 (banker's round() gives 0.123456)
-    assert _round6(0.1234565) == 0.123457
-    assert _round6(0.1234555) == 0.123456
-    nan = _round6(float("nan"))
+    assert round6(0.1234565) == 0.123457
+    assert round6(0.1234555) == 0.123456
+    nan = round6(float("nan"))
     assert nan != nan
-    assert _round6(float("inf")) == float("inf")
+    assert round6(float("inf")) == float("inf")
 
 
 def test_corpus_shuffle_deterministic_and_dense(spark):

@@ -80,3 +80,17 @@ def test_suggested_suite_passes_on_profiled_data(table):
 def test_unknown_column_raises(table):
     with pytest.raises(ValueError):
         suggest_constraints(table, ["nope"])
+
+
+def test_tiny_null_rate_guard_passes_on_its_own_profile(spark):
+    """One NULL in 3M rows: rate · headroom = 4e-7 rounds to 0 at 6dp,
+    so the threshold is rounded up to the observed rate instead."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(3_000_000).select(
+        F.when(F.col("id") == 0, None).otherwise(F.col("id")).alias("x")
+    )
+    sugg = suggest_constraints(df)
+    (row,) = sugg.where("kind = 'null_rate_below'").collect()
+    assert row["hi"] >= 1 / 3_000_000
+    assert suite_from_suggestions(df, sugg).passed(df)

@@ -1,9 +1,24 @@
-"""Check-suite runner: one fused pass for row-local expectations, bounded
-jobs for whole-table ones, one report frame."""
+"""Check-suite runner: one fused pass for row-local and plain-aggregate
+expectations, own jobs for the rest, one report frame."""
+
+import uuid
 
 from pyspark.sql import functions as F
 
 from vldt_spark.checks.suite import Suite, expect
+
+NAN = float("nan")
+
+
+def _jobs_in_group(spark, fn):
+    sc = spark.sparkContext
+    group = f"suite_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_suite_report_and_gate(spark):
@@ -48,21 +63,140 @@ def test_suite_report_and_gate(spark):
 
 
 def test_suite_row_local_is_single_pass(spark):
-    """All row-local expectations fuse into ONE aggregate over one scan."""
-    df = spark.createDataFrame([(1, "a")], "id long, name string")
-    suite = Suite(
-        [
-            expect.not_null("id"),
-            expect.range("id", lo=0),
-            expect.regex("name", "^a$"),
-            expect.null_rate_below("name", 0.9),
-        ]
-    )
-    rep = suite._row_local_report(df, suite.expectations)
-    plan = rep._jdf.queryExecution().executedPlan().toString()
-    # one HashAggregate pair (partial+final) over one scan — the scan
-    # appears once, no union of per-expectation jobs
-    assert plan.count("Scan ExistingRDD") + plan.count("Scan parquet") == 1, plan
+    """Row-local and plain-aggregate expectations fuse into ONE aggregate
+    job over one scan; an exact distinct count runs as a job of its own."""
+    df = spark.createDataFrame([(1, "a"), (2, "b b")], "id long, name string")
+    fused = [
+        expect.not_null("id"),
+        expect.range("id", lo=0),
+        expect.regex("name", "^a$"),
+        expect.null_rate_below("name", 0.9),
+        expect.row_count_between(1, 10),
+        expect.quantile_between("id", 0.5, lo=0, hi=5),
+        expect.distinct_count_between("name", 1, 5),
+        expect.distinct_text_frac_above("name", 0.5, approx=True),
+        expect.pii_frac_below("name", 0.5),
+        expect.fertility_between("name", 0.5, 2.0),
+    ]
+    exact = expect.distinct_count_between("name", 1, 5, approx=False)
+    # AQE submits each shuffle stage as a job of its own; without it one
+    # aggregate action is exactly one job
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        rep, jobs = _jobs_in_group(spark, lambda: Suite(fused).run(df))
+        assert jobs == 1
+        assert rep.count() == len(fused)
+        _, jobs = _jobs_in_group(spark, lambda: Suite(fused + [exact]).run(df))
+        assert jobs == 2
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+_GOLDEN_SUITE = Suite(
+    [
+        expect.row_count_between(1, 10),
+        expect.not_null("score"),
+        expect.quantile_between("score", 0.5, lo=0.0, hi=1.0),
+        expect.null_rate_below("name", 0.5),
+        expect.unique("id"),
+        expect.range("score", lo=0.0, hi=1.0),
+        expect.distinct_count_between("seg", 1, 5),
+        expect.regex("name", r"^a-\d$"),
+        expect.distinct_count_between("seg", 1, 2, approx=False),
+        expect.isin("seg", ["x", "y"]),
+        expect.quantile_between("score", 0.25, lo=-1.0, exact=True),
+        expect.element_range("tokens", lo=0, hi=50),
+        expect.heavy_hitter_share_below("seg", 0.9),
+        expect.length_between("text", lo=10, hi=60),
+        expect.distinct_text_frac_above("text", 0.5, approx=True),
+        expect.size_between("tokens", lo=1, hi=3),
+        expect.distinct_seq_frac_above("tokens", 0.5, approx=True),
+        expect.distinct_text_frac_above("text", 0.5),
+        expect.gopher_pass_frac_above("text", 0.1),
+        expect.c4_pass_frac_above("text", 0.1),
+        expect.pii_frac_below("text", 0.5),
+        expect.fertility_between("text", 1.0, 2.0),
+        expect.distinct_seq_frac_above("tokens", 0.5),
+    ]
+)
+
+
+_GOLDEN_SCHEMA = "id long, name string, score double, seg string, tokens array<int>, text string"
+_GOOD = "Hello world. This is a test sentence here. Another one follows it."
+_GOLDEN_ROWS = [
+    (1, "a-1", 0.5, "x", [1, 2, 3], _GOOD),
+    (2, "a-2", 1.5, "y", [1, 2, 3], "mail bob@example.com or call 555-123-4567 now"),
+    (3, "b!", None, "zz", [5, 99], None),
+    (4, "a-4", -0.25, None, None, "lorem ipsum dolor {sit} amet"),
+    (5, None, 0.75, "x", [], "short"),
+    (5, "a-5", 0.1234565, "x", [7], _GOOD),
+]
+
+# reports of the kind-ladder runner this table replaced, row for row
+_GOLDEN_SMALL = [
+    ("not_null", "score", 1.0, 0.0, False),
+    ("null_rate_below", "name", 0.166667, 0.5, True),
+    ("range", "score", 2.0, 0.0, False),
+    ("regex", "name", 1.0, 0.0, False),
+    ("isin", "seg", 1.0, 0.0, False),
+    ("element_range", "tokens", 1.0, 0.0, False),
+    ("length_between", "text", 3.0, 0.0, False),
+    ("size_between", "tokens", 1.0, 0.0, False),
+    ("row_count_between", "*", 6.0, 10.0, True),
+    ("quantile_between", "score", 0.5, 1.0, True),
+    ("unique", "id", 2.0, 0.0, False),
+    ("distinct_count_between", "seg", 3.0, 5.0, True),
+    ("distinct_count_between", "seg", 3.0, 2.0, False),
+    ("quantile_between", "score", 0.123457, -1.0, True),
+    ("heavy_hitter_share_below", "seg", 0.6, 0.9, True),
+    ("distinct_text_frac_above", "text", 0.666667, 0.5, True),
+    ("distinct_seq_frac_above", "tokens", 0.666667, 0.5, True),
+    ("distinct_text_frac_above", "text", 0.666667, 0.5, True),
+    ("gopher_pass_frac_above", "text", 0.0, 0.1, False),
+    ("c4_pass_frac_above", "text", 0.333333, 0.1, True),
+    ("pii_frac_below", "text", 0.166667, 0.5, True),
+    ("fertility_between", "text", 1.444444, 2.0, True),
+    ("distinct_seq_frac_above", "tokens", 0.666667, 0.5, True),
+]
+_GOLDEN_EMPTY = [
+    ("not_null", "score", None, 0.0, None),
+    ("null_rate_below", "name", None, 0.5, None),
+    ("range", "score", None, 0.0, None),
+    ("regex", "name", None, 0.0, None),
+    ("isin", "seg", None, 0.0, None),
+    ("element_range", "tokens", None, 0.0, None),
+    ("length_between", "text", None, 0.0, None),
+    ("size_between", "tokens", None, 0.0, None),
+    ("row_count_between", "*", 0.0, 10.0, False),
+    ("quantile_between", "score", NAN, 1.0, False),
+    ("unique", "id", 0.0, 0.0, True),
+    ("distinct_count_between", "seg", 0.0, 5.0, False),
+    ("distinct_count_between", "seg", 0.0, 2.0, False),
+    ("quantile_between", "score", NAN, -1.0, False),
+    ("heavy_hitter_share_below", "seg", NAN, 0.9, False),
+    ("distinct_text_frac_above", "text", NAN, 0.5, False),
+    ("distinct_seq_frac_above", "tokens", NAN, 0.5, False),
+    ("distinct_text_frac_above", "text", NAN, 0.5, False),
+    ("gopher_pass_frac_above", "text", NAN, 0.1, False),
+    ("c4_pass_frac_above", "text", NAN, 0.1, False),
+    ("pii_frac_below", "text", NAN, 0.5, False),
+    ("fertility_between", "text", NAN, 2.0, False),
+    ("distinct_seq_frac_above", "tokens", NAN, 0.5, False),
+]
+
+
+def test_suite_plain_aggregate_golden_report(spark):
+    """Every plain-aggregate kind, interleaved with row-local and frame
+    kinds: the report — values, NaN sentinels, NULL row-local metrics on
+    an empty table, and row order — is pinned literally."""
+    for rows, want in ((_GOLDEN_ROWS, _GOLDEN_SMALL), ([], _GOLDEN_EMPTY)):
+        rep = _GOLDEN_SUITE.run(spark.createDataFrame(rows, _GOLDEN_SCHEMA))
+        assert rep.schema.simpleString() == (
+            "struct<check:string,column:string,metric:double,threshold:double,passed:boolean>"
+        )
+        # repr compares NaN to NaN and keeps -0.0 apart from 0.0
+        assert repr([tuple(r) for r in rep.collect()]) == repr(want)
 
 
 def test_suite_psi_expectation(spark):

@@ -13,7 +13,8 @@ Suggestion rules, per column (all from ONE aggregation pass):
 - null rate 0            -> ``not_null``
 - 0 < null rate          -> ``null_rate_below`` with configurable
                             headroom (threshold = rate · headroom,
-                            capped at 1.0)
+                            capped at 1.0, rounded to 6dp but never
+                            below the observed rate)
 - numeric                -> ``range`` [min, max]
 - string, exact distinct count <= ``isin_max_card``
                          -> ``isin`` (sorted value list)
@@ -34,9 +35,13 @@ arithmetic exactly.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vldt_spark.rounding import round6
 
 
 _NUMERIC = (
@@ -122,10 +127,14 @@ def suggest_constraints(
         if n and nulls == 0:
             out_rows.append((c, "not_null", None, None, None, 1.0))
         elif n:
-            thr = min(1.0, null_rate * null_rate_headroom)
+            # rounded, never below the observed rate: the guard must pass
+            # on the table it was profiled from
+            thr = max(
+                round6(min(1.0, null_rate * null_rate_headroom)),
+                math.ceil(null_rate * 1e6) / 1e6,
+            )
             out_rows.append(
-                (c, "null_rate_below", None, _r6(thr), None,
-                 _r6(1.0 - null_rate))
+                (c, "null_rate_below", None, thr, None, round6(1.0 - null_rate))
             )
         dt = schema[c]
         if isinstance(dt, _NUMERIC) and row[f"{c}__min"] is not None:
@@ -160,12 +169,6 @@ def suggest_constraints(
         "column string, kind string, lo double, hi double,"
         " values array<string>, support double",
     )
-
-
-def _r6(x: float) -> float:
-    import math
-
-    return math.floor(x * 1e6 + 0.5) / 1e6
 
 
 def suite_from_suggestions(df: DataFrame, suggestions: DataFrame):

@@ -6,40 +6,55 @@ passed). This is the whole-table analogue of declaring a reference model
 with constraints and asking "does the table conform?" — and the shape
 every orchestration layer (Airflow sensor, CI gate, publish guard) wants.
 
-Execution plan, not a loop of jobs:
+Every expectation kind is defined once, in ``_KINDS``: either the
+aggregate columns it reads off the table, or the report frame it runs,
+then its metric, threshold and comparison. The execution plan follows:
 
   * every ROW-LOCAL expectation (not_null / null_rate / range / regex /
-    isin) compiles into ONE fused aggregate pass over the table — a
-    single scan with map-side combine, |expectations| output numbers;
-  * uniqueness runs as the salted two-stage aggregate (B5), referential
-    integrity as distinct-FK anti-join (B6), drift as the histogram PSI
-    (B7) — each a bounded-output job on its key column only;
-  * the report is the union of tiny one-row frames — driver-side cheap.
-
-At 100 TB the whole suite therefore costs one full scan plus
-dim-cardinality aggregates, the same budget as ``engine.run``.
+    isin / element and size bounds) and every plain aggregate (row
+    count, quantile, HLL distinct counts, pass fractions, fertility)
+    share ONE ``df.agg`` — a single scan with map-side combine;
+  * exact distinct counts, and the grouped, joined and ``mapInArrow``
+    checks (uniqueness as the salted two-stage aggregate, referential
+    integrity as distinct-FK anti-join, drift histograms, dedup,
+    classifier evals, ...) run as their own jobs from a thread pool,
+    overlapping the fused scan;
+  * the report is one driver-built frame, row-local rows first.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _round6(x: float) -> float:
-    """Half-up rounding to 6 decimals — same `floor(x*1e6+0.5)` convention
-    as the decode-stats surface (functions/multimodal.py), matching DuckDB
-    `round()` on the non-negative metrics suites report; Python's builtin
-    `round` is banker's and diverges on exact 5e-7 boundaries. NaN/inf pass
-    through unchanged (failed-expectation sentinels)."""
-    import math
-
-    if x != x or math.isinf(x):
-        return x
-    return math.floor(x * 1e6 + 0.5) / 1e6
+from vldt_spark.checks.classifier_eval import auc_report, brier_report, ece_report, pr_report
+from vldt_spark.checks.drift import (
+    embedding_drift,
+    histogram,
+    js_divergence,
+    ks_from_histograms,
+    psi,
+    wasserstein_from_histograms,
+)
+from vldt_spark.checks.layout import partition_health_summary
+from vldt_spark.checks.referential import ri_report
+from vldt_spark.checks.schema_drift import schema_diff
+from vldt_spark.checks.snapshot import snapshot_summary
+from vldt_spark.checks.uniqueness import duplicate_keys
+from vldt_spark.functions.dedup import (
+    contamination_report,
+    duplicated_ngram_fraction,
+    token_sequence_key,
+)
+from vldt_spark.functions.lm import unigram_logprob
+from vldt_spark.functions.sampling import split_leakage_report
+from vldt_spark.functions.text import c4_rules, fingerprint, gopher_rules, pii_flags
+from vldt_spark.functions.tokens import _PRETOKEN_RE, sequence_stats
+from vldt_spark.plans.skew import key_skew_report
+from vldt_spark.rounding import round6
 
 
 @dataclass(frozen=True)
@@ -692,18 +707,445 @@ class expect:
         )
 
 
-_ROW_LOCAL = {
-    "not_null",
-    "null_rate_below",
-    "range",
-    "regex",
-    "isin",
-    "element_range",
-    "length_between",
-    "size_between",
+# -- the kind table ---------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Kind:
+    """One expectation kind, defined once.  Exactly one of ``bad``,
+    ``aggs`` and ``read`` is set:
+
+    * ``bad(col, params)`` — row-local violation predicate, summed in the
+      fused pass.  The report row is built Spark-side by ``_report_struct``
+      (shared with ``run_stream``): metric = violation count against the
+      ``limit`` param, or the violation rate when ``limit == "rate"``.
+    * ``aggs(col, params)`` — aggregate columns over the table, whose
+      values go to ``metric(params, *values)``.
+    * ``read(df, expectation)`` — runs the kind's own report frame and
+      returns the metric.
+
+    A metric of None means the population is empty: the row reports NaN
+    and fails.  ``check(params, metric)`` gives (threshold, passed)."""
+
+    check: Callable | None = None
+    bad: Callable | None = None
+    limit: str = "max_violations"
+    aggs: Callable | None = None
+    metric: Callable | None = None
+    read: Callable | None = None
+
+
+def _below(key):
+    return lambda p, m: (float(p[key]), m < float(p[key]))
+
+
+def _above(key):
+    return lambda p, m: (float(p[key]), m > float(p[key]))
+
+
+def _at_most(key):
+    return lambda p, m: (float(p[key]), m <= float(p[key]))
+
+
+def _between(p, m):
+    lo, hi = p["lo"], p["hi"]
+    passed = (lo is None or m >= lo) and (hi is None or m <= hi)
+    return float(hi if hi is not None else lo), passed
+
+
+def _frac(num, den):
+    return float(num) / float(den) if den else None
+
+
+def _count(p, n):
+    return float(n)
+
+
+def _share(p, n, k):
+    """k per n: the metric of every (population, count) aggregate pair."""
+    return _frac(k, n)
+
+
+def _outside(x, p):
+    bad = F.lit(False)
+    if p["lo"] is not None:
+        bad = bad | (x < F.lit(p["lo"]))
+    if p["hi"] is not None:
+        bad = bad | (x > F.lit(p["hi"]))
+    return bad
+
+
+def _range_bad(c, p):
+    bad = F.lit(False)
+    if p["lo"] is not None:
+        lo = F.lit(p["lo"])
+        bad = bad | (c <= lo if p.get("lo_strict") else c < lo)
+    if p["hi"] is not None:
+        hi = F.lit(p["hi"])
+        bad = bad | (c >= hi if p.get("hi_strict") else c > hi)
+    return c.isNotNull() & bad
+
+
+def _pass_frac(rules):
+    """Row count and passing rows of a rule bundle (gopher / c4)."""
+
+    def aggs(c, p):
+        ok = F.when(rules(c, **p["rules"]).getField("passes"), F.lit(1)).otherwise(F.lit(0))
+        return [F.count(F.lit(1)), F.sum(ok)]
+
+    return aggs
+
+
+def _pii_aggs(c, p):
+    flags = pii_flags(c)
+    any_pii = flags.getField("has_email") | flags.getField("has_ip") | flags.getField("has_phone")
+    return [F.count(F.lit(1)), F.sum(any_pii.cast("long"))]
+
+
+def _fertility_aggs(c, p):
+    return [
+        F.sum(F.regexp_count(c, F.lit(r"\S+")).cast("long")),
+        F.sum(F.regexp_count(c, F.lit(_PRETOKEN_RE)).cast("long")),
+    ]
+
+
+def _distinct_frac(key):
+    """Row count and distinct ``key(col)`` values; ``approx`` swaps the
+    exact count_distinct for the HLL sketch."""
+
+    def aggs(c, p):
+        cd = F.approx_count_distinct if p["approx"] else F.count_distinct
+        return [F.count(F.lit(1)), cd(key(c))]
+
+    return aggs
+
+
+def _quantile_aggs(c, p):
+    prob = F.lit(float(p["prob"]))
+    if p["exact"]:
+        return [F.percentile(c, prob)]
+    return [F.percentile_approx(c, prob, p["accuracy"])]
+
+
+def _first(frame: DataFrame, col: str):
+    row = frame.first()
+    return None if row is None or row[col] is None else float(row[col])
+
+
+def _total(frame: DataFrame, col: str) -> float:
+    return float(frame.agg(F.coalesce(F.sum(col), F.lit(0)).cast("double")).first()[0])
+
+
+def _drift(divergence):
+    """Histogram drift vs the reference frame; the bin range defaults to
+    the reference column's [min, max].  A NULL/empty column on either side
+    leaves no distribution (None)."""
+
+    def read(df, e):
+        p = e.params
+        lo, hi = p["lo"], p["hi"]
+        if lo is None or hi is None:
+            row = p["ref"].agg(F.min(e.column), F.max(e.column)).first()
+            lo = (float(row[0]) if row[0] is not None else None) if lo is None else lo
+            hi = (float(row[1]) if row[1] is not None else None) if hi is None else hi
+        if lo is None or hi is None:
+            return None
+        h_ref = histogram(p["ref"], e.column, bins=p["bins"], lo=lo, hi=hi)
+        h_cur = histogram(df, e.column, bins=p["bins"], lo=lo, hi=hi)
+        try:
+            return divergence(h_ref, h_cur, (hi - lo) / p["bins"])
+        except TypeError:  # the divergence aggregates came back NULL (0/0)
+            return None
+
+    return read
+
+
+def _schema_changes(df, e):
+    changes = schema_diff(e.params["previous"], df).collect()
+    if e.params["allow_added"]:
+        changes = [r for r in changes if r["change"] != "added"]
+    return float(len(changes))
+
+
+def _heavy_hitter(df, e):
+    row = (
+        df.where(F.col(e.column).isNotNull())
+        .groupBy(e.column)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.max("n").cast("double").alias("top"), F.sum("n").cast("double").alias("total"))
+        .first()
+    )
+    return _frac(row["top"], row["total"])
+
+
+def _with_sid(df, col):
+    return df.select(F.monotonically_increasing_id().alias("__sid"), F.col(col))
+
+
+def _mean_ppl(df, e):
+    row = (
+        unigram_logprob(
+            _with_sid(df, e.column), e.params["vocab_size"], id_col="__sid", tokens_col=e.column
+        )
+        .agg(
+            # exact micro-ppl integer sum: float avg is partition-order
+            # dependent and would wobble at rounding boundaries;
+            # decimal(38,0) because 10^12 rows × ~10^7 micro-ppl overflows int64
+            F.sum(F.round(F.col("ppl") * 1e6).cast("decimal(38,0)")).alias("s"),
+            F.count("ppl").alias("n"),
+        )
+        .first()
+    )
+    return float(row["s"]) / (float(row["n"]) * 1e6) if row["n"] else None
+
+
+def _key_skew(df, e):
+    row = key_skew_report(df, e.column).first()
+    if row is None or not row["n_rows"]:
+        return None
+    return float(row["hot_n"]) * float(row["n_keys"]) / float(row["n_rows"])
+
+
+def _partition_skew(df, e):
+    row = partition_health_summary(df, e.params["columns"]).first()
+    return None if row is None or not row["n_partitions"] else float(row["max_skew_factor"])
+
+
+def _dup_ngram(df, e):
+    p = e.params
+    row = (
+        duplicated_ngram_fraction(
+            df, text_col=e.column, id_col=p["id_col"], shingle_k=p["shingle_k"]
+        )
+        .agg(F.sum("n_duplicated").alias("d"), F.sum("n_shingles").alias("n"))
+        .first()
+    )
+    return _frac(row["d"], row["n"])
+
+
+def _contamination(df, e):
+    p = e.params
+    n_docs = df.count()
+    if n_docs == 0:
+        return None
+    n_bad = contamination_report(
+        df, p["benchmark"], id_col=p["id_col"], text_col=e.column,
+        bench_text_col=p["bench_text_col"], shingle_k=p["shingle_k"],
+        shingle_impl=p["shingle_impl"],
+    ).count()
+    return float(n_bad) / float(n_docs)
+
+
+def _degenerate(df, e):
+    p = e.params
+    bad = (F.col("n_tok") == 0) | (F.col("max_run") >= p["max_run"])
+    if p["min_entropy"] is not None:
+        bad = bad | (F.col("entropy") < float(p["min_entropy"]))
+    row = (
+        sequence_stats(_with_sid(df, e.column), id_col="__sid", tokens_col=e.column)
+        .agg(F.sum(bad.cast("long")).alias("n_bad"), F.count(F.lit(1)).alias("n"))
+        .first()
+    )
+    return _frac(row["n_bad"], row["n"])
+
+
+def _churn(df, e):
+    rows = snapshot_summary(
+        e.params["previous"], df, id_col=e.column, compare_cols=e.params["compare_cols"]
+    ).collect()  # bounded: ≤ 4 status rows
+    total = sum(r["n_rows"] for r in rows)
+    unchanged = sum(r["n_rows"] for r in rows if r["status"] == "unchanged")
+    return _frac(total - unchanged, total)
+
+
+def _leakage(df, e):
+    p = e.params
+    rep = split_leakage_report(
+        p["pairs"],
+        splits=df.select(e.column, p["split_col"]) if p["use_table_splits"] else None,
+        weights=p["weights"],
+        id_cols=p["id_cols"],
+        id_col=e.column,
+        split_col=p["split_col"],
+        seed=p["seed"],
+        hash_fn=p["hash_fn"],
+    ).collect()  # bounded: ≤ |splits|² matrix rows
+    total = sum(r["n_pairs"] for r in rep)
+    leaked = sum(r["n_pairs"] for r in rep if r["leaked"])
+    # no pairs = nothing can leak: a clean 0.0, not NaN (see factory)
+    return float(leaked) / float(total) if total else 0.0
+
+
+def _mixture_gap(df, e):
+    shares = e.params["shares"]
+    tot_w = float(sum(shares.values()))
+    tok = F.col(e.params["token_col"]).cast("double")
+    rows = (
+        df.where(F.col(e.column).isin(list(shares)) & tok.isNotNull() & (tok > 0))
+        .groupBy(e.column)
+        .agg(F.sum(tok).alias("t"))
+        .collect()  # bounded: one row per NAMED source
+    )
+    total = sum(float(r["t"]) for r in rows)
+    if not rows or total <= 0:
+        return None
+    got = {r[e.column]: float(r["t"]) / total for r in rows}
+    return max(abs(got.get(k, 0.0) - w / tot_w) for k, w in shares.items())
+
+
+def _classifier(report, col, *params):
+    """Metric ``col`` of a checks/classifier_eval report; None on an empty
+    or single-class audit slice, which certifies nothing."""
+
+    def read(df, e):
+        kw = {k: e.params[k] for k in params}
+        return _first(report(df, e.column, e.params["label_col"], **kw), col)
+
+    return read
+
+
+def _centroid(df, e):
+    return _first(embedding_drift(df, e.params["ref"], vec_col=e.column), "centroid_cosine")
+
+
+def _sized(size):
+    return lambda c, p: c.isNotNull() & _outside(size(c), p)
+
+
+_KINDS: dict[str, _Kind] = {
+    # row-local: one violation predicate each, summed in the fused pass
+    "not_null": _Kind(bad=lambda c, p: c.isNull(), limit="max_nulls"),
+    "null_rate_below": _Kind(bad=lambda c, p: c.isNull(), limit="rate"),
+    "range": _Kind(bad=_range_bad),
+    "regex": _Kind(bad=lambda c, p: c.isNotNull() & ~c.rlike(p["pattern"])),
+    "isin": _Kind(bad=lambda c, p: c.isNotNull() & ~c.isin(p["values"])),
+    "element_range": _Kind(
+        bad=lambda c, p: c.isNotNull() & F.exists(c, lambda x: x.isNotNull() & _outside(x, p))
+    ),
+    "length_between": _Kind(bad=_sized(F.length)),
+    "size_between": _Kind(bad=_sized(F.size)),
+    # plain aggregates: join the fused pass unless DISTINCT
+    "row_count_between": _Kind(_between, aggs=lambda c, p: [F.count(F.lit(1))], metric=_count),
+    "distinct_count_between": _Kind(
+        _between,
+        aggs=lambda c, p: [F.approx_count_distinct(c) if p["approx"] else F.count_distinct(c)],
+        metric=_count,
+    ),
+    "quantile_between": _Kind(
+        _between, aggs=_quantile_aggs, metric=lambda p, q: None if q is None else float(q)
+    ),
+    "gopher_pass_frac_above": _Kind(
+        _above("threshold"), aggs=_pass_frac(gopher_rules), metric=_share
+    ),
+    "c4_pass_frac_above": _Kind(_above("threshold"), aggs=_pass_frac(c4_rules), metric=_share),
+    "pii_frac_below": _Kind(_below("threshold"), aggs=_pii_aggs, metric=_share),
+    "fertility_between": _Kind(_between, aggs=_fertility_aggs, metric=_share),
+    "distinct_text_frac_above": _Kind(
+        _above("threshold"), aggs=_distinct_frac(fingerprint), metric=_share
+    ),
+    "distinct_seq_frac_above": _Kind(
+        _above("threshold"), aggs=_distinct_frac(token_sequence_key), metric=_share
+    ),
+    # own report frames: grouped, joined and mapInArrow checks
+    "unique": _Kind(
+        _at_most("max_dup_rows"),
+        read=lambda df, e: _total(duplicate_keys(df, e.params["columns"]), "n_dups"),
+    ),
+    "ref": _Kind(
+        _at_most("max_violations"),
+        read=lambda df, e: _total(
+            ri_report(df, e.column, e.params["dim"], e.params["dim_key"]), "n_rows"
+        ),
+    ),
+    "psi_below": _Kind(_below("threshold"), read=_drift(lambda r, c, bw: psi(r, c))),
+    "ks_below": _Kind(
+        _below("threshold"), read=_drift(lambda r, c, bw: _first(ks_from_histograms(r, c), "ks"))
+    ),
+    "js_below": _Kind(
+        _below("threshold"), read=_drift(lambda r, c, bw: _first(js_divergence(r, c), "js"))
+    ),
+    "wasserstein_below": _Kind(
+        _below("threshold"),
+        read=_drift(lambda r, c, bw: _first(wasserstein_from_histograms(r, c, bin_width=bw), "w1")),
+    ),
+    "schema_stable": _Kind(lambda p, m: (0.0, m <= 0.0), read=_schema_changes),
+    "heavy_hitter_share_below": _Kind(_below("share"), read=_heavy_hitter),
+    "mean_ppl_between": _Kind(_between, read=_mean_ppl),
+    "skew_factor_below": _Kind(_below("factor"), read=_key_skew),
+    "partition_skew_below": _Kind(_below("factor"), read=_partition_skew),
+    "dup_ngram_fraction_below": _Kind(_below("threshold"), read=_dup_ngram),
+    "contamination_below": _Kind(_below("threshold"), read=_contamination),
+    "degenerate_sequence_share_below": _Kind(_below("share"), read=_degenerate),
+    "snapshot_churn_below": _Kind(_below("threshold"), read=_churn),
+    "split_leakage_below": _Kind(_below("threshold"), read=_leakage),
+    "mixture_gap_below": _Kind(_below("threshold"), read=_mixture_gap),
+    "auc_above": _Kind(_above("threshold"), read=_classifier(auc_report, "auc", "quantize")),
+    "ece_below": _Kind(_below("threshold"), read=_classifier(ece_report, "ece", "n_bins")),
+    "brier_below": _Kind(_below("threshold"), read=_classifier(brier_report, "brier")),
+    "average_precision_above": _Kind(
+        _above("threshold"),
+        read=_classifier(pr_report, "average_precision", "quantize"),
+    ),
+    "centroid_cosine_above": _Kind(_above("threshold"), read=_centroid),
 }
 
-REPORT_COLS = ["check", "column", "metric", "threshold", "passed"]
+
+def _has_distinct(cols: list[Column]) -> bool:
+    """True when an aggregate column holds a DISTINCT aggregate.  Catalyst
+    plans one with an Expand that replays every input row once per
+    distinct child, so fusing it would slow the shared scan; such an entry
+    runs as its own job instead."""
+    todo = [c._jc.node() for c in cols]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "UnresolvedFunction" and node.isDistinct():
+            return True
+        children = node.children().iterator()
+        while children.hasNext():
+            todo.append(children.next())
+    return False
+
+
+def _counts(exps: list[Expectation]) -> list[Column]:
+    """Row count ``__n`` and each row-local expectation's violation count
+    ``__m_<i>`` — the aggregates ``_report_struct`` reads."""
+    return [F.count(F.lit(1)).alias("__n")] + [
+        F.sum(_KINDS[e.kind].bad(F.col(e.column), e.params).cast("long")).alias(f"__m_{i}")
+        for i, e in enumerate(exps)
+    ]
+
+
+def _report_struct(e: Expectation, i: int) -> Column:
+    """Report row struct of row-local expectation ``i`` from ``_counts``."""
+    limit = _KINDS[e.kind].limit
+    m = F.col(f"__m_{i}").cast("double")
+    if limit == "rate":
+        metric = m / F.col("__n")
+        threshold = F.lit(float(e.params["rate"]))
+        passed = metric < threshold
+    else:
+        metric = m
+        threshold = F.lit(float(e.params[limit]))
+        passed = metric <= threshold
+    return F.struct(
+        F.lit(e.kind).alias("check"),
+        F.lit(e.column).alias("column"),
+        F.round(metric, 6).alias("metric"),
+        threshold.alias("threshold"),
+        passed.alias("passed"),
+    )
+
+
+def _report_row(e: Expectation, metric: float | None) -> tuple:
+    """Report row of a driver-side metric.  An empty population (None)
+    reports NaN and fails."""
+    thr, passed = _KINDS[e.kind].check(e.params, float("nan") if metric is None else metric)
+    if metric is None:
+        return (e.kind, e.column, float("nan"), thr, False)
+    return (e.kind, e.column, round6(float(metric)), thr, bool(passed))
+
+
+_REPORT_SCHEMA = "check string, column string, metric double, threshold double, passed boolean"
 
 
 class Suite:
@@ -773,623 +1215,61 @@ class Suite:
             exps.append(expect.unique(list(combo)))
         return cls(exps)
 
-    # -- row-local tier: ONE fused aggregate ------------------------------
-
-    @staticmethod
-    def _bad_condition(e: Expectation):
-        """Boolean Column: this row violates the expectation."""
-        c, p = F.col(e.column), e.params
-        if e.kind in ("not_null", "null_rate_below"):
-            return c.isNull()
-        if e.kind == "range":
-            bad = F.lit(False)
-            if p["lo"] is not None:
-                lo = F.lit(p["lo"])
-                bad = bad | (c <= lo if p.get("lo_strict") else c < lo)
-            if p["hi"] is not None:
-                hi = F.lit(p["hi"])
-                bad = bad | (c >= hi if p.get("hi_strict") else c > hi)
-            return c.isNotNull() & bad
-        if e.kind == "regex":
-            return c.isNotNull() & ~c.rlike(p["pattern"])
-        if e.kind == "isin":
-            return c.isNotNull() & ~c.isin(p["values"])
-        if e.kind == "element_range":
-
-            def oob(x):
-                bad = F.lit(False)
-                if p["lo"] is not None:
-                    bad = bad | (x < F.lit(p["lo"]))
-                if p["hi"] is not None:
-                    bad = bad | (x > F.lit(p["hi"]))
-                return x.isNotNull() & bad
-
-            return c.isNotNull() & F.exists(c, oob)
-        if e.kind in ("length_between", "size_between"):
-            n = F.length(c) if e.kind == "length_between" else F.size(c)
-            bad = F.lit(False)
-            if p["lo"] is not None:
-                bad = bad | (n < F.lit(p["lo"]))
-            if p["hi"] is not None:
-                bad = bad | (n > F.lit(p["hi"]))
-            return c.isNotNull() & bad
-        raise ValueError(f"not a row-local expectation: {e.kind}")
-
-    @staticmethod
-    def _report_struct(e: Expectation, i: int):
-        """Report row struct from the aggregated __m_<i> / __n columns."""
-        p = e.params
-        m = F.col(f"__m_{i}").cast("double")
-        if e.kind == "null_rate_below":
-            metric = m / F.col("__n")
-            threshold = F.lit(float(p["rate"]))
-            passed = metric < threshold
-        else:
-            key = {
-                "not_null": "max_nulls",
-                "range": "max_violations",
-                "regex": "max_violations",
-                "isin": "max_violations",
-                "element_range": "max_violations",
-                "length_between": "max_violations",
-                "size_between": "max_violations",
-            }[e.kind]
-            metric = m
-            threshold = F.lit(float(p[key]))
-            passed = metric <= threshold
-        return F.struct(
-            F.lit(e.kind).alias("check"),
-            F.lit(e.column).alias("column"),
-            F.round(metric, 6).alias("metric"),
-            threshold.alias("threshold"),
-            passed.alias("passed"),
-        )
-
-    def _row_local_report(self, df: DataFrame, exps: list[Expectation]) -> DataFrame | None:
-        if not exps:
-            return None
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for i, e in enumerate(exps):
-            aggs.append(F.sum(self._bad_condition(e).cast("long")).alias(f"__m_{i}"))
-        wide = df.agg(*aggs)
-        rows = [self._report_struct(e, i) for i, e in enumerate(exps)]
-        return wide.select(F.explode(F.array(*rows)).alias("s")).select("s.*")
-
-    # -- whole-table tier: bounded-output jobs ----------------------------
-
-    def _whole_table_report(self, df: DataFrame, e: Expectation) -> DataFrame:
-        spark = df.sparkSession
-        p = e.params
-        if e.kind == "unique":
-            from vldt_spark.checks.uniqueness import duplicate_keys
-
-            dups = duplicate_keys(df, p["columns"])
-            n_dup_rows = (
-                dups.agg(F.coalesce(F.sum("n_dups"), F.lit(0)).cast("double")).first()[0]
-            )
-            metric, thr = float(n_dup_rows), float(p["max_dup_rows"])
-            passed = metric <= thr
-        elif e.kind == "ref":
-            from vldt_spark.checks.referential import ri_report
-
-            rep = ri_report(df, e.column, p["dim"], p["dim_key"])
-            n_bad = rep.agg(
-                F.coalesce(F.sum("n_rows"), F.lit(0)).cast("double")
-            ).first()[0]
-            metric, thr = float(n_bad), float(p["max_violations"])
-            passed = metric <= thr
-        elif e.kind == "row_count_between":
-            n = df.count()
-            lo, hi = p["lo"], p["hi"]
-            metric = float(n)
-            thr = float(hi if hi is not None else lo)
-            passed = n >= lo and (hi is None or n <= hi)
-        elif e.kind == "distinct_count_between":
-            agg = (
-                F.approx_count_distinct(e.column)
-                if p["approx"]
-                else F.countDistinct(e.column)
-            )
-            n = df.agg(agg.alias("n")).first()["n"]
-            lo, hi = p["lo"], p["hi"]
-            metric = float(n)
-            thr = float(hi if hi is not None else lo)
-            passed = n >= lo and (hi is None or n <= hi)
-        elif e.kind == "quantile_between":
-            prob = F.lit(float(p["prob"]))
-            q_agg = (
-                F.percentile(F.col(e.column), prob)
-                if p["exact"]
-                else F.percentile_approx(F.col(e.column), prob, p["accuracy"])
-            )
-            q_raw = df.agg(q_agg.alias("q")).first()["q"]
-            lo, hi = p["lo"], p["hi"]
-            thr = float(hi if hi is not None else lo)
-            if q_raw is None:
-                # all-null column / empty table: report a failed expectation
-                # instead of crashing the whole suite on float(None)
-                metric, passed = float("nan"), False
-            else:
-                v = float(q_raw)
-                metric = v
-                passed = (lo is None or v >= lo) and (hi is None or v <= hi)
-        elif e.kind in ("psi_below", "ks_below", "js_below", "wasserstein_below"):
-            from vldt_spark.checks.drift import (
-                histogram,
-                js_divergence,
-                ks_from_histograms,
-                psi,
-                wasserstein_from_histograms,
-            )
-
-            lo, hi = p["lo"], p["hi"]
-            thr = float(p["threshold"])
-            if lo is None or hi is None:
-                row = p["ref"].agg(F.min(e.column), F.max(e.column)).first()
-                lo = (float(row[0]) if row[0] is not None else None) if lo is None else lo
-                hi = (float(row[1]) if row[1] is not None else None) if hi is None else hi
-            if lo is None or hi is None:
-                # reference column entirely null/empty: no bin range exists
-                # — report a failed expectation instead of float(None)
-                metric, passed = float("nan"), False
-            else:
-                h_ref = histogram(p["ref"], e.column, bins=p["bins"], lo=lo, hi=hi)
-                h_cur = histogram(df, e.column, bins=p["bins"], lo=lo, hi=hi)
-                try:
-                    if e.kind == "psi_below":
-                        metric = psi(h_ref, h_cur)
-                    elif e.kind == "js_below":
-                        metric = float(js_divergence(h_ref, h_cur).first()["js"])
-                    elif e.kind == "wasserstein_below":
-                        bw = (hi - lo) / p["bins"]
-                        metric = float(
-                            wasserstein_from_histograms(h_ref, h_cur, bin_width=bw).first()["w1"]
-                        )
-                    else:
-                        metric = float(ks_from_histograms(h_ref, h_cur).first()["ks"])
-                except TypeError:
-                    # CURRENT column entirely null/empty: the divergence
-                    # aggregates come back NULL (0/0 division) and float(None)
-                    # would kill the suite — report a failed expectation,
-                    # same convention as the quantile/ref-range guards above
-                    metric = float("nan")
-                passed = metric == metric and metric < thr  # NaN-safe
-        elif e.kind == "schema_stable":
-            from vldt_spark.checks.schema_drift import schema_diff
-
-            changes = schema_diff(p["previous"], df).collect()
-            if p["allow_added"]:
-                changes = [r for r in changes if r["change"] != "added"]
-            metric, thr = float(len(changes)), 0.0
-            passed = not changes
-        elif e.kind == "heavy_hitter_share_below":
-            thr = float(p["share"])
-            row = (
-                df.where(F.col(e.column).isNotNull())
-                .groupBy(e.column)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.max("n").cast("double").alias("top"),
-                    F.sum("n").cast("double").alias("total"),
-                )
-                .first()
-            )
-            if row is None or row["total"] is None or row["total"] == 0.0:
-                # empty / all-null column: no distribution exists to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["top"]) / float(row["total"])
-                passed = metric < thr
-        elif e.kind == "mean_ppl_between":
-            from vldt_spark.functions.lm import unigram_logprob
-
-            lo, hi = float(p["lo"]), float(p["hi"])
-            thr = hi
-            row = (
-                unigram_logprob(
-                    df.select(
-                        F.monotonically_increasing_id().alias("__sid"),
-                        F.col(e.column),
-                    ),
-                    p["vocab_size"],
-                    id_col="__sid",
-                    tokens_col=e.column,
-                )
-                .agg(
-                    # exact micro-ppl integer sum: float avg is partition-
-                    # order dependent and would wobble at rounding
-                    # boundaries; decimal(38,0) because 10^12 rows × ~10^7
-                    # micro-ppl overflows int64
-                    F.sum(
-                        F.round(F.col("ppl") * 1e6).cast("decimal(38,0)")
-                    ).alias("s"),
-                    F.count("ppl").alias("n"),
-                )
-                .first()
-            )
-            if row is None or not row["n"]:
-                # no scoreable sequence exists: no distribution to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["s"]) / (float(row["n"]) * 1e6)
-                passed = lo <= metric <= hi
-        elif e.kind == "skew_factor_below":
-            from vldt_spark.plans.skew import key_skew_report
-
-            thr = float(p["factor"])
-            row = key_skew_report(df, e.column).first()
-            if row is None or row["n_rows"] is None or not row["n_rows"]:
-                # empty / all-null key column: no key distribution to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["hot_n"]) * float(row["n_keys"]) / float(
-                    row["n_rows"]
-                )
-                passed = metric < thr
-        elif e.kind == "partition_skew_below":
-            from vldt_spark.checks.layout import partition_health_summary
-
-            thr = float(p["factor"])
-            row = partition_health_summary(df, p["columns"]).first()
-            if row is None or not row["n_partitions"]:
-                # empty table: no partition layout to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["max_skew_factor"])
-                passed = metric < thr
-        elif e.kind == "dup_ngram_fraction_below":
-            from vldt_spark.functions.dedup import duplicated_ngram_fraction
-
-            thr = float(p["threshold"])
-            row = (
-                duplicated_ngram_fraction(
-                    df,
-                    text_col=e.column,
-                    id_col=p["id_col"],
-                    shingle_k=p["shingle_k"],
-                )
-                .agg(
-                    F.sum("n_duplicated").alias("d"),
-                    F.sum("n_shingles").alias("n"),
-                )
-                .first()
-            )
-            if row is None or not row["n"]:
-                # shingle-less corpus: no duplication distribution to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["d"]) / float(row["n"])
-                passed = metric < thr
-        elif e.kind == "contamination_below":
-            from vldt_spark.functions.dedup import contamination_report
-
-            thr = float(p["threshold"])
-            n_docs = df.count()
-            if n_docs == 0:
-                metric, passed = float("nan"), False
-            else:
-                n_bad = contamination_report(
-                    df,
-                    p["benchmark"],
-                    id_col=p["id_col"],
-                    text_col=e.column,
-                    bench_text_col=p["bench_text_col"],
-                    shingle_k=p["shingle_k"],
-                    shingle_impl=p["shingle_impl"],
-                ).count()
-                metric = float(n_bad) / float(n_docs)
-                passed = metric < thr
-        elif e.kind == "degenerate_sequence_share_below":
-            from vldt_spark.functions.tokens import sequence_stats
-
-            thr = float(p["share"])
-            bad = (F.col("n_tok") == 0) | (F.col("max_run") >= p["max_run"])
-            if p["min_entropy"] is not None:
-                bad = bad | (F.col("entropy") < float(p["min_entropy"]))
-            row = (
-                sequence_stats(
-                    df.select(
-                        F.monotonically_increasing_id().alias("__sid"),
-                        F.col(e.column),
-                    ),
-                    id_col="__sid",
-                    tokens_col=e.column,
-                )
-                .agg(
-                    F.sum(bad.cast("long")).alias("n_bad"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .first()
-            )
-            if row is None or not row["n"]:
-                # empty table: no sequence population exists to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["n_bad"]) / float(row["n"])
-                passed = metric < thr
-        elif e.kind == "gopher_pass_frac_above":
-            from vldt_spark.functions.text import gopher_rules
-
-            thr = float(p["threshold"])
-            g = gopher_rules(F.col(e.column), **p["rules"])
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(g.getField("passes"), F.lit(1)).otherwise(F.lit(0))
-                ).alias("ok"),
-            ).first()
-            if row is None or not row["n"]:
-                # empty corpus: no pass fraction to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["ok"]) / float(row["n"])
-                passed = metric > thr
-        elif e.kind == "c4_pass_frac_above":
-            from vldt_spark.functions.text import c4_rules
-
-            thr = float(p["threshold"])
-            c = c4_rules(F.col(e.column), **p["rules"])
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(c.getField("passes"), F.lit(1)).otherwise(F.lit(0))
-                ).alias("ok"),
-            ).first()
-            if row is None or not row["n"]:
-                # empty corpus: no pass fraction to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["ok"]) / float(row["n"])
-                passed = metric > thr
-        elif e.kind == "fertility_between":
-            lo, hi = float(p["lo"]), float(p["hi"])
-            thr = hi
-            from vldt_spark.functions.tokens import _PRETOKEN_RE
-
-            t = F.col(e.column)
-            row = df.agg(
-                F.sum(F.regexp_count(t, F.lit(r"\S+")).cast("long")).alias("nw"),
-                F.sum(F.regexp_count(t, F.lit(_PRETOKEN_RE)).cast("long")).alias(
-                    "nt"
-                ),
-            ).first()
-            if row is None or not row["nw"]:
-                # wordless corpus: fertility is undefined
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["nt"]) / float(row["nw"])
-                passed = lo <= metric <= hi
-        elif e.kind == "snapshot_churn_below":
-            from vldt_spark.checks.snapshot import snapshot_summary
-
-            thr = float(p["threshold"])
-            rows = snapshot_summary(
-                p["previous"], df, id_col=e.column,
-                compare_cols=p["compare_cols"],
-            ).collect()  # bounded: ≤ 4 status rows
-            total = sum(r["n_rows"] for r in rows)
-            if not total:
-                # both versions empty: no population to guard
-                metric, passed = float("nan"), False
-            else:
-                unchanged = sum(
-                    r["n_rows"] for r in rows if r["status"] == "unchanged"
-                )
-                metric = float(total - unchanged) / float(total)
-                passed = metric < thr
-        elif e.kind == "split_leakage_below":
-            from vldt_spark.functions.sampling import split_leakage_report
-
-            thr = float(p["threshold"])
-            rep = split_leakage_report(
-                p["pairs"],
-                splits=df.select(e.column, p["split_col"])
-                if p["use_table_splits"]
-                else None,
-                weights=p["weights"],
-                id_cols=p["id_cols"],
-                id_col=e.column,
-                split_col=p["split_col"],
-                seed=p["seed"],
-                hash_fn=p["hash_fn"],
-            ).collect()  # bounded: ≤ |splits|² matrix rows
-            total = sum(r["n_pairs"] for r in rep)
-            leaked = sum(r["n_pairs"] for r in rep if r["leaked"])
-            # no pairs = nothing can leak: a clean 0.0, not NaN (see factory)
-            metric = float(leaked) / float(total) if total else 0.0
-            passed = metric < thr
-        elif e.kind == "mixture_gap_below":
-            thr = float(p["threshold"])
-            shares = p["shares"]
-            tot_w = float(sum(shares.values()))
-            tok = F.col(p["token_col"]).cast("double")
-            rows = (
-                df.where(
-                    F.col(e.column).isin(list(shares))
-                    & tok.isNotNull()
-                    & (tok > 0)
-                )
-                .groupBy(e.column)
-                .agg(F.sum(tok).alias("t"))
-                .collect()  # bounded: one row per NAMED source
-            )
-            total = sum(float(r["t"]) for r in rows)
-            if not rows or total <= 0:
-                # no token mass in any named source: no mixture to guard
-                metric, passed = float("nan"), False
-            else:
-                got = {r[e.column]: float(r["t"]) / total for r in rows}
-                metric = max(
-                    abs(got.get(k, 0.0) - w / tot_w) for k, w in shares.items()
-                )
-                passed = metric < thr
-        elif e.kind == "auc_above":
-            from vldt_spark.checks.classifier_eval import auc_report
-
-            thr = float(p["threshold"])
-            row = auc_report(
-                df, e.column, p["label_col"], quantize=p["quantize"]
-            ).first()
-            if row is None or row["auc"] is None:
-                # empty / single-class audit slice: AUC undefined — fail,
-                # a slice with no negatives (or positives) certifies nothing
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["auc"])
-                passed = metric > thr
-        elif e.kind == "ece_below":
-            from vldt_spark.checks.classifier_eval import ece_report
-
-            thr = float(p["threshold"])
-            row = ece_report(
-                df, e.column, p["label_col"], n_bins=p["n_bins"]
-            ).first()
-            if row is None or row["ece"] is None:
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["ece"])
-                passed = metric < thr
-        elif e.kind == "brier_below":
-            from vldt_spark.checks.classifier_eval import brier_report
-
-            thr = float(p["threshold"])
-            row = brier_report(df, e.column, p["label_col"]).first()
-            if row is None or row["brier"] is None:
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["brier"])
-                passed = metric < thr
-        elif e.kind == "average_precision_above":
-            from vldt_spark.checks.classifier_eval import pr_report
-
-            thr = float(p["threshold"])
-            row = pr_report(
-                df, e.column, p["label_col"], quantize=p["quantize"]
-            ).first()
-            if row is None or row["average_precision"] is None:
-                # empty / single-class audit slice: AP undefined — fail,
-                # same loud-failure semantics as auc_above
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["average_precision"])
-                passed = metric > thr
-        elif e.kind == "pii_frac_below":
-            from vldt_spark.functions.text import pii_flags
-
-            thr = float(p["threshold"])
-            flags = pii_flags(F.col(e.column))
-            any_pii = (
-                flags.getField("has_email")
-                | flags.getField("has_ip")
-                | flags.getField("has_phone")
-            )
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(any_pii.cast("long")).alias("bad"),
-            ).first()
-            if row is None or not row["n"]:
-                # empty corpus: no PII population to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["bad"]) / float(row["n"])
-                passed = metric < thr
-        elif e.kind == "distinct_text_frac_above":
-            from vldt_spark.functions.text import fingerprint
-
-            thr = float(p["threshold"])
-            fp = fingerprint(F.col(e.column))
-            cd = (
-                F.approx_count_distinct(fp)
-                if p["approx"]
-                else F.count_distinct(fp)
-            )
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"), cd.alias("d")
-            ).first()
-            if row is None or not row["n"]:
-                # empty corpus: no text population to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["d"]) / float(row["n"])
-                passed = metric > thr
-        elif e.kind == "distinct_seq_frac_above":
-            from vldt_spark.functions.dedup import token_sequence_key
-
-            thr = float(p["threshold"])
-            key = token_sequence_key(F.col(e.column))
-            cd = (
-                F.approx_count_distinct(key)
-                if p["approx"]
-                else F.count_distinct(key)
-            )
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"), cd.alias("d")
-            ).first()
-            if row is None or not row["n"]:
-                # empty corpus: no sequence population to guard
-                metric, passed = float("nan"), False
-            else:
-                metric = float(row["d"]) / float(row["n"])
-                passed = metric > thr
-        elif e.kind == "centroid_cosine_above":
-            from vldt_spark.checks.drift import embedding_drift
-
-            thr = float(p["threshold"])
-            row = embedding_drift(df, p["ref"], vec_col=e.column).first()
-            cos = row["centroid_cosine"] if row is not None else None
-            if cos is None:
-                # empty table / all-null vectors / zero centroid: cosine is
-                # undefined — report a failed expectation, never float(None)
-                metric, passed = float("nan"), False
-            else:
-                metric = float(cos)
-                passed = metric > thr
-        else:  # pragma: no cover
-            raise ValueError(f"unknown expectation kind {e.kind}")
-        return spark.createDataFrame(
-            [(e.kind, e.column, _round6(float(metric)), thr, bool(passed))],
-            "check string, column string, metric double, threshold double, passed boolean",
-        )
-
-    def run(self, df: DataFrame, *, concurrency: int = 4) -> DataFrame:
+    def run(self, df: DataFrame) -> DataFrame:
         """Evaluate every expectation; returns the report DataFrame
-        (check, column, metric, threshold, passed) in declaration order
-        grouping: row-local rows first (one fused pass), then whole-table
-        rows.
+        (check, column, metric, threshold, passed): row-local rows first,
+        then the rest, each group in declaration order.
 
-        Whole-table expectations each trigger a blocking Spark action; they
-        are submitted from a thread pool (Spark's scheduler runs jobs from
-        separate threads concurrently) so a contract with several
-        unique/ref/psi expectations overlaps their scans instead of running
-        them back-to-back — each job is bounded-output and key-column-
-        pruned, so this buys wall-clock without changing resource shape.
-        ``concurrency=1`` restores strictly serial execution; report rows
-        come back in declaration order either way."""
-        row_local = [e for e in self.expectations if e.kind in _ROW_LOCAL]
-        whole = [e for e in self.expectations if e.kind not in _ROW_LOCAL]
-        parts = []
-        rl = self._row_local_report(df, row_local)
-        if rl is not None:
-            parts.append(rl)
-        if len(whole) > 1 and concurrency > 1:
-            from concurrent.futures import ThreadPoolExecutor
+        Row-local expectations and plain aggregates share one ``df.agg``,
+        collected as one row.  Every other expectation — an exact distinct
+        count, or a kind that reads its own report frame — is one blocking
+        job submitted from a thread pool (Spark's scheduler runs jobs from
+        separate threads concurrently), so those jobs overlap the fused
+        scan and each other.  Pool threads inherit the caller's job group
+        and description."""
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(
-                max_workers=min(concurrency, len(whole))
-            ) as pool:
-                parts.extend(
-                    pool.map(lambda e: self._whole_table_report(df, e), whole)
+        from pyspark.util import inheritable_thread_target
+
+        row_local, fused, own = [], [], []
+        for i, e in enumerate(self.expectations):
+            k = _KINDS[e.kind]
+            if k.bad is not None:
+                row_local.append(e)
+            elif k.aggs is None:
+                own.append((i, e, None))
+            else:
+                cols = k.aggs(F.col(e.column), e.params)
+                (own if _has_distinct(cols) else fused).append((i, e, cols))
+
+        def job(e, cols):
+            if cols is None:
+                return _KINDS[e.kind].read(df, e)
+            return _KINDS[e.kind].metric(e.params, *df.agg(*cols).first())
+
+        metrics: dict[int, float | None] = {}
+        rows: list[tuple] = []
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futures = {
+                i: pool.submit(inheritable_thread_target(df.sparkSession)(job), e, cols)
+                for i, e, cols in own
+            }
+            if row_local or fused:
+                wide = df.agg(
+                    *_counts(row_local),
+                    *[c.alias(f"__a_{i}_{j}") for i, _, cols in fused for j, c in enumerate(cols)],
                 )
-        else:
-            parts.extend(self._whole_table_report(df, e) for e in whole)
-        if not parts:
-            return df.sparkSession.createDataFrame(
-                [], "check string, column string, metric double, threshold double, passed boolean"
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+                one = wide.select(
+                    *[_report_struct(e, n).alias(f"__r_{n}") for n, e in enumerate(row_local)],
+                    *[f"__a_{i}_{j}" for i, _, cols in fused for j in range(len(cols))],
+                ).first()
+                rows = [tuple(one[f"__r_{n}"]) for n in range(len(row_local))]
+                for i, e, cols in fused:
+                    values = [one[f"__a_{i}_{j}"] for j in range(len(cols))]
+                    metrics[i] = _KINDS[e.kind].metric(e.params, *values)
+            metrics.update((i, f.result()) for i, f in futures.items())
+        rows += [_report_row(self.expectations[i], metrics[i]) for i in sorted(metrics)]
+        return df.sparkSession.createDataFrame(rows, _REPORT_SCHEMA)
 
     def passed(self, df: DataFrame) -> bool:
         """True iff every expectation holds (the CI-gate boolean)."""
@@ -1416,23 +1296,18 @@ class Suite:
         here — uniqueness needs cross-batch state
         (streaming/stateful.py) and drift its own monitor
         (streaming/drift_stream.py); declaring one raises."""
-        bad = [e.kind for e in self.expectations if e.kind not in _ROW_LOCAL]
+        exps = self.expectations
+        bad = [e.kind for e in exps if _KINDS[e.kind].bad is None]
         if bad:
             raise ValueError(
                 f"run_stream supports row-local expectations only, got: {bad}"
             )
-        exps = self.expectations
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for i, e in enumerate(exps):
-            aggs.append(
-                F.sum(self._bad_condition(e).cast("long")).alias(f"__m_{i}")
-            )
         win = (
             stream_df.withWatermark(ts_col, watermark)
             .groupBy(F.window(F.col(ts_col), window).alias("__w"))
-            .agg(*aggs)
+            .agg(*_counts(exps))
         )
-        rows = [self._report_struct(e, i) for i, e in enumerate(exps)]
+        rows = [_report_struct(e, i) for i, e in enumerate(exps)]
         return win.select(
             F.col("__w.start").alias("window_start"),
             F.col("__w.end").alias("window_end"),

@@ -97,7 +97,7 @@ def corpus_card(
     long = wide.selectExpr(
         f"stack({len(names)}, {stack_expr}) as (metric, value)"
     )
-    # half-up 6dp, matching the engine-wide _round6 convention
+    # 6dp half away from zero, the vldt_spark.rounding.round6 convention
     v = F.col("value")
     rounded = F.when(
         v.isNull(), v

@@ -54,12 +54,6 @@ __all__ = [
 ]
 
 
-def _round6(x: float) -> float:
-    """Half-up 6-decimal rounding (matches DuckDB round(); Python round()
-    is banker's)."""
-    return math.floor(x * 1e6 + 0.5) / 1e6 if x >= 0 else -math.floor(-x * 1e6 + 0.5) / 1e6
-
-
 def _train_counts(
     df: DataFrame, vocab_size: int, tokens_col: str
 ) -> tuple[np.ndarray, int, int]:

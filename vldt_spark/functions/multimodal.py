@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vldt_spark.rounding import round6
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples/pixel
 
@@ -363,10 +365,6 @@ def resize_images(media: DataFrame, *, width: int = 32, height: int = 32) -> Dat
     return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
-# Back-compat alias from the pre-round-4 stub era (the PNG path is real now).
-resize_stub = resize_images
-
-
 def frame_timestamps(media: DataFrame, *, every_ms: int = 1000) -> DataFrame:
     """Video frame-TIMESTAMP sampling: expands each video row into frame
     timestamps by metadata alone — no payload decode. Use this to pick
@@ -380,12 +378,6 @@ def frame_timestamps(media: DataFrame, *, every_ms: int = 1000) -> DataFrame:
             F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))
         ).alias("frame_idx"),
     ).withColumn("frame_ts_ms", F.col("frame_idx") * every_ms)
-
-
-# Back-compat alias from the pre-round-4 stub era (timestamp sampling was
-# always the intended semantics; real frame pixel decode lives in
-# frame_stats).
-frame_sample_stub = frame_timestamps
 
 
 FRAME_STATS_SCHEMA = T.StructType(
@@ -443,9 +435,9 @@ def frame_stats(
                     rows["height"].append(h)
                     rows["n_channels"].append(c)
                     rows["px_sum"].append(s1)
-                    rows["px_mean"].append(_round6(mean))
+                    rows["px_mean"].append(round6(mean))
                     rows["px_std"].append(
-                        _round6(float(np.sqrt(max(var, 0.0))))
+                        round6(float(np.sqrt(max(var, 0.0))))
                     )
             yield pd.DataFrame(
                 {
@@ -639,15 +631,6 @@ PIXEL_STATS_SCHEMA = T.StructType(
 )
 
 
-def _round6(x: float) -> float:
-    """Deterministic half-up rounding to 6 decimals — `floor(x*1e6+0.5)`
-    on BOTH the Python and SQL side, so the oracle comparison never hinges
-    on banker's-vs-away rounding (Python round vs DuckDB round differ)."""
-    import math
-
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
 def decode_image_stats(
     media: DataFrame, *, id_col: str = "media_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -690,8 +673,8 @@ def decode_image_stats(
                     out["n_channels"].append(c)
                     out["px_sum"].append(s1)
                     out["px_sumsq"].append(s2)
-                    out["px_mean"].append(_round6(mean))
-                    out["px_std"].append(_round6(std))
+                    out["px_mean"].append(round6(mean))
+                    out["px_std"].append(round6(std))
             yield pd.DataFrame(
                 {
                     "media_id": out["media_id"],
@@ -830,8 +813,8 @@ def decode_audio_stats(
                 if n:
                     mean = s1 / n
                     var = s2 / n - mean * mean
-                    rows["s_mean"].append(_round6(mean))
-                    rows["s_std"].append(_round6(float(np.sqrt(max(var, 0.0)))))
+                    rows["s_mean"].append(round6(mean))
+                    rows["s_std"].append(round6(float(np.sqrt(max(var, 0.0)))))
                 else:
                     rows["s_mean"].append(None)
                     rows["s_std"].append(None)

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vldt_spark.rounding import round6, round6_vec
+
 
 def _arrow_flat_tokens(list_arr) -> "tuple[np.ndarray, np.ndarray]":
     """Flatten one Arrow list<int> column to ``(flat int64, lens int64)``
@@ -60,16 +62,6 @@ def _arrow_flat_tokens(list_arr) -> "tuple[np.ndarray, np.ndarray]":
         .astype(np.int64)
     )
     return flat, lens
-
-
-def _round6_vec(x: "np.ndarray") -> "np.ndarray":
-    """Vectorized half-up 6-decimal rounding — elementwise identical to
-    the scalar `_round6` (Python round() is banker's; DuckDB's is
-    half-up, and the oracle gate compares at 6dp)."""
-    return (
-        np.where(x >= 0, np.floor(x * 1e6 + 0.5), -np.floor(-x * 1e6 + 0.5))
-        / 1e6
-    )
 
 
 def _int_tokens(arr) -> "np.ndarray | None":
@@ -355,15 +347,6 @@ def special_token_violations(
     return out.select(id_col, F.col("__v.path").alias("path"), F.col("__v.msg").alias("msg"))
 
 
-def _round6(x: float) -> float:
-    """Half-up 6-decimal rounding (Python round() is banker's; DuckDB
-    round() is half-away-from-zero — identical for the non-negative
-    metrics emitted here)."""
-    import math
-
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
 def sequence_stats(
     df: DataFrame,
     *,
@@ -446,9 +429,9 @@ def sequence_stats(
                 ratio_full[i] = nd / n
                 ent_full[i] = log(n) - s / n
                 top_full[i] = int(counts.max()) / n
-            ratio_full = _round6_vec(ratio_full)
-            ent_full = _round6_vec(ent_full)
-            top_full = _round6_vec(top_full)
+            ratio_full = round6_vec(ratio_full)
+            ent_full = round6_vec(ent_full)
+            top_full = round6_vec(top_full)
             null_mask = ~nz
             yield pa.RecordBatch.from_arrays(
                 [
@@ -560,7 +543,7 @@ def degenerate_flag(
             bad = int(np.diff(edges).max()) >= max_run
             if not bad and min_entropy is not None:
                 _, counts = np.unique(t, return_counts=True)
-                ent = _round6(
+                ent = round6(
                     float(np.log(n))
                     - float((counts * np.log(counts)).sum()) / n
                 )

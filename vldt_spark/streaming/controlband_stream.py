@@ -29,7 +29,6 @@ construction, so no TTL is needed.
 
 from __future__ import annotations
 
-import math
 from typing import Iterable
 
 import numpy as np
@@ -38,13 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-
-def _r6(x: float) -> float:
-    return (
-        math.floor(x * 1e6 + 0.5) / 1e6
-        if x >= 0
-        else -math.floor(-x * 1e6 + 0.5) / 1e6
-    )
+from vldt_spark.rounding import round6
 
 
 def _make_handler(window: int, k: float, alpha: float):
@@ -84,11 +77,11 @@ def _make_handler(window: int, k: float, alpha: float):
             rows.append(
                 (
                     key[0], ts, x, n_tr,
-                    None if mean is None else _r6(mean),
-                    None if std is None else _r6(std),
-                    None if z is None else _r6(z),
+                    None if mean is None else round6(mean),
+                    None if std is None else round6(std),
+                    None if z is None else round6(z),
                     shew,
-                    None if ewma is None else _r6(ewma),
+                    None if ewma is None else round6(ewma),
                     ew_alarm,
                 )
             )
