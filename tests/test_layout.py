@@ -113,3 +113,21 @@ def test_file_layout_report_counts_and_key_ranges(spark):
     ranges = sorted((r["key_min"], r["key_max"]) for r in rep)
     for (lo1, hi1), (lo2, _) in zip(ranges, ranges[1:]):
         assert hi1 < lo2  # disjoint = clustering survived into the layout
+
+
+def test_file_layout_report_keeps_same_named_files_apart(spark):
+    # one writing task → every partition directory holds a part file with
+    # the same basename; each is still its own row
+    src = spark.createDataFrame(
+        [("a", i) for i in range(3)] + [("b", i) for i in range(10, 15)], "p string, k long"
+    ).coalesce(1)
+    root = os.path.join(tempfile.mkdtemp(prefix="vldt_layout_"), "t")
+    src.write.partitionBy("p").parquet(root)
+    names = [
+        f for d in ("p=a", "p=b") for f in os.listdir(os.path.join(root, d))
+        if f.endswith(".parquet")
+    ]
+    assert len(names) == 2 and names[0] == names[1]
+    rep = file_layout_report(spark.read.parquet(root), key="k").collect()
+    got = sorted((r["file"], r["n_rows"], r["key_min"], r["key_max"]) for r in rep)
+    assert got == [(names[0], 3, 0, 2), (names[0], 5, 10, 14)]

@@ -97,12 +97,17 @@ def file_layout_report(
     given) the file's key min/max — overlapping ranges across files
     mean the clustering the table claims does not exist in the layout
     and scan pruning will not happen.  Exchange carries |files|
-    partial rows."""
-    base = F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file")
+    partial rows.
+
+    Files are grouped by their full path: partitioned writes reuse
+    ``part-0000…`` basenames across directories, so the basename is
+    only the displayed ``file`` column, never the grouping key."""
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if key is not None:
         aggs += [
             F.min(key).alias("key_min"),
             F.max(key).alias("key_max"),
         ]
-    return df.groupBy(base).agg(*aggs)
+    per_file = df.groupBy(F.input_file_name().alias("__path")).agg(*aggs)
+    base = F.element_at(F.split("__path", "/"), -1).alias("file")
+    return per_file.select(base, *[a for a in per_file.columns if a != "__path"])

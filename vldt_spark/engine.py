@@ -20,6 +20,16 @@ table is never shuffled:
 
 At 100 TB the only shuffle in the whole validation job is therefore the
 low-cardinality aggregate of FK/dup candidates, never the fact table.
+
+``ValidationEngine.run`` is eager: it computes each of those side tables
+once, collects it (Arrow) and re-creates it as a driver-held local
+relation before any join.  The result's plan is the fused scan plus
+broadcast joins of local relations, so every later action (``verdicts``,
+``summary``, ``valid`` ...) is one scan of the input and never repeats the
+aggregates; a side table that comes back empty (a clean table) is
+optimized out of the plan.  No ``cache()`` (plan-keyed entries that are
+never collected and can go stale) and no ``localCheckpoint()`` (executor
+blocks, lost with the executor).
 """
 
 from __future__ import annotations
@@ -47,7 +57,11 @@ from vldt_spark.validators import Cols
 
 @dataclass
 class ValidationResult:
-    """Outcome of a full validation run."""
+    """Outcome of a full validation run.
+
+    ``ValidationEngine.run`` builds it eagerly: ``annotated`` is the fused
+    scan of the input plus broadcast joins of side tables already held on
+    the driver, so every action below is one scan of the input."""
 
     annotated: DataFrame  # coerced canonical columns + violations + is_valid
     id_cols: list[str]
@@ -150,12 +164,14 @@ class ValidationResult:
         )
 
     def summary(self) -> DataFrame:
-        """Per-constraint-path violation counts (one small aggregate)."""
+        """Per-constraint-path violation counts (one small aggregate),
+        most frequent first; ties break on ``path`` then ``msg``, so the
+        row order never depends on the physical execution."""
         return (
             self.annotated.select(F.explode("violations").alias("v"))
             .groupBy(F.col("v.path").alias("path"), F.col("v.msg").alias("msg"))
             .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"))
+            .orderBy(F.desc("n"), "path", "msg")
         )
 
 
@@ -444,100 +460,135 @@ class ValidationEngine:
         dims: dict[str, DataFrame] | None = None,
         keep_extra: bool = False,
     ) -> ValidationResult:
-        """Full run: fused row-local pass + uniqueness + RI, violations merged."""
+        """Full run: fused row-local pass + uniqueness + RI, violations merged.
+
+        Eager: each side table (the dup keys of every ``unique_together``
+        combo and ``unique`` field, the invalid values of every ``ref``
+        field) is computed here, once, as one job labelled
+        ``vldt:engine.run:<check>``, and held on the driver as a local
+        relation; two or more are computed concurrently.  They are then
+        broadcast-joined onto the fused pass in declaration order, so every
+        later action on the result is one scan of ``df``."""
         ann = self.annotate(df, keep_extra=keep_extra)
         ids = list(id_cols) if id_cols else [self.compiled.fields[0].name]
-        dims = dims or {}
+        sides = self._side_tables(df, ann, dims or {})
+        for side, local in zip(sides, _materialize(df.sparkSession, sides)):
+            ann = side.join_onto(ann, local)
+        ann = ann.withColumn("is_valid", F.size("violations") == 0)
+        return ValidationResult(annotated=ann, id_cols=ids)
 
-        # model-level composite uniqueness: class attribute
-        # ``unique_together = [("a", "b"), ...]`` — same salted two-stage
-        # aggregate + broadcast join-back as per-field unique, keyed on the
-        # column tuple. Duplicate detection runs on the COERCED values (a
-        # key pair that only collides after coercion, e.g. "01" vs 1, must
-        # still be flagged, and the join-back compares coerced columns);
-        # Catalyst prunes the annotated plan to just the combo columns, so
-        # for declarative models the aggregate still scans only those
-        # columns. An unresolvable combo column is an error, never a
-        # silent skip.
-        ann0 = ann
-        model_names_set = {s.name for s in self.compiled.fields}
+    def _side_tables(
+        self, raw: DataFrame, ann: DataFrame, dims: dict[str, DataFrame]
+    ) -> list["_SideTable"]:
+        """The whole-table checks' side tables, lazy, in join order:
+        ``unique_together`` combos, then per field ``unique`` and ``ref``.
+
+        Model-level composite uniqueness (class attribute
+        ``unique_together = [("a", "b"), ...]``) runs on the COERCED values
+        of the annotated plan: a key pair that only collides after
+        coercion, e.g. "01" vs 1, must still be flagged, and the join-back
+        compares coerced columns; Catalyst prunes the plan to the combo
+        columns.  An unresolvable combo column is an error, never a silent
+        skip.  Per-field checks read ONLY the key column from the raw input
+        when it is there — never the annotated plan, which would re-run the
+        fused pass (column pruning then reaches the parquet scan)."""
+        from vldt_spark.checks.referential import invalid_fk_values
+
+        sides: list[_SideTable] = []
+        model_names = {s.name for s in self.compiled.fields}
         for combo in getattr(self.model, "unique_together", []) or []:
             combo = list(combo)
-            missing = [
-                c for c in combo if c not in model_names_set and c not in ann0.columns
-            ]
+            missing = [c for c in combo if c not in model_names and c not in ann.columns]
             if missing:
                 raise ValueError(
                     f"unique_together columns not in model {self.model.__name__}: "
                     f"{missing}"
                 )
-            dups = self.duplicate_keys(ann0.select(*combo), combo).select(
-                *[F.col(c).alias(f"__dk_{c}") for c in combo]
-            )
-            cond = F.lit(True)
-            for c in combo:
-                cond = cond & (ann[c] == F.col(f"__dk_{c}"))
-            extra = violation_if(
-                F.col(f"__dk_{combo[0]}").isNotNull(),
+            sides.append(_SideTable(
+                f"unique_together({','.join(combo)})",
+                combo,
+                self.duplicate_keys(ann.select(*combo), combo),
                 ".".join(combo),
                 f"Duplicate value for unique fields ({', '.join(combo)})",
-            )
-            ann = (
-                ann.join(F.broadcast(dups), cond, "left")
-                .withColumn("violations", merge_violations(F.col("violations"), extra))
-                .drop(*[f"__dk_{c}" for c in combo])
-            )
-
-        # whole-table checks read ONLY the key column from the raw input —
-        # never the annotated plan, which would re-run the fused pass per
-        # aggregate (column pruning then reaches the parquet scan)
-        raw = df
-
+            ))
         for spec in self.compiled.fields:
+            src = raw if spec.name in raw.columns else ann
             if spec.field.unique:
-                src_key = spec.name if spec.name in raw.columns else None
-                dups = self.duplicate_keys(
-                    raw if src_key else ann, spec.name
-                ).select(F.col(spec.name).alias("__dup_key"))
-                extra = violation_if(
-                    F.col("__dup_key").isNotNull(),
+                sides.append(_SideTable(
+                    f"unique({spec.name})",
+                    [spec.name],
+                    self.duplicate_keys(src, spec.name),
                     spec.name,
                     f"Duplicate value for unique field {spec.name}",
-                )
-                ann = (
-                    ann.join(
-                        F.broadcast(dups),
-                        ann[spec.name] == F.col("__dup_key"),
-                        "left",
-                    )
-                    .withColumn("violations", merge_violations(F.col("violations"), extra))
-                    .drop("__dup_key")
-                )
-            if spec.field.ref is not None:
+                ))
+            if spec.field.ref is not None and spec.field.ref[0] in dims:
                 dim_name, dim_col = spec.field.ref
-                if dim_name not in dims:
-                    continue
-                from vldt_spark.checks.referential import invalid_fk_values
-
-                fk_src = raw if spec.name in raw.columns else ann
-                bad = invalid_fk_values(fk_src, spec.name, dims[dim_name], dim_col).select(
-                    F.col(spec.name).alias("__bad_fk")
-                )
-                extra = violation_if(
-                    F.col("__bad_fk").isNotNull(),
+                sides.append(_SideTable(
+                    f"ref({spec.name})",
+                    [spec.name],
+                    invalid_fk_values(src, spec.name, dims[dim_name], dim_col),
                     spec.name,
-                    f"Referential integrity violation: {spec.name} not in {dim_name}.{dim_col}",
-                )
-                ann = (
-                    ann.join(
-                        F.broadcast(bad), ann[spec.name] == F.col("__bad_fk"), "left"
-                    )
-                    .withColumn("violations", merge_violations(F.col("violations"), extra))
-                    .drop("__bad_fk")
-                )
+                    f"Referential integrity violation: {spec.name} not in "
+                    f"{dim_name}.{dim_col}",
+                ))
+        return sides
 
-        ann = ann.withColumn("is_valid", F.size("violations") == 0)
-        return ValidationResult(annotated=ann, id_cols=ids)
+
+@dataclass
+class _SideTable:
+    """One whole-table check: ``frame`` holds the distinct offending values
+    of ``keys``; every annotated row whose keys equal one of them gets the
+    violation (``path``, ``msg``)."""
+
+    label: str
+    keys: list[str]
+    frame: DataFrame
+    path: str
+    msg: str
+
+    @property
+    def keyed(self) -> DataFrame:
+        """The key columns only, renamed ``__k0, __k1, ...``."""
+        return self.frame.select(
+            *[F.col(k).alias(f"__k{j}") for j, k in enumerate(self.keys)]
+        )
+
+    def join_onto(self, ann: DataFrame, local: DataFrame) -> DataFrame:
+        """Left broadcast join of the materialized ``keyed`` table; the
+        frame is distinct on its keys, so no row is multiplied."""
+        cond = F.lit(True)
+        for j, k in enumerate(self.keys):
+            cond = cond & (ann[k] == F.col(f"__k{j}"))
+        extra = violation_if(F.col("__k0").isNotNull(), self.path, self.msg)
+        return (
+            ann.join(F.broadcast(local), cond, "left")
+            .withColumn("violations", merge_violations(F.col("violations"), extra))
+            .drop(*[f"__k{j}" for j in range(len(self.keys))])
+        )
+
+
+def _materialize(spark: SparkSession, sides: list[_SideTable]) -> list[DataFrame]:
+    """Collect each side table once (as Arrow) and re-create it as a
+    driver-held local relation — the bytes the broadcast would ship
+    anyway, fetched once per run instead of once per action.  Each is
+    collected from a pool thread, so several run concurrently, as a job
+    described ``vldt:engine.run:<label>``; the caller's own job
+    description is never touched."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    def one(side: _SideTable) -> DataFrame:
+        spark.sparkContext.setJobDescription(f"vldt:engine.run:{side.label}")
+        keyed = side.keyed
+        return spark.createDataFrame(keyed.toArrow(), schema=keyed.schema)
+
+    # wrapped per task: a wrapper copies the caller's local properties once
+    # and every thread running it mutates that one copy, so a wrapper
+    # shared by all tasks would let their descriptions overwrite each other
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(one), s) for s in sides]
+        return [f.result() for f in futures]
 
 
 def validate(

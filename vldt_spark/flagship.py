@@ -1,8 +1,10 @@
 """The flagship north-star job: full validation of the token-sequence table.
 
 One fused scan computes every row-local check; uniqueness and RI add two
-tiny broadcast-joined aggregates; the output is the reference-shaped
-verdict + violation-rows pair (SURVEY.md A1/A16 → B11/B12).
+tiny aggregates, computed once inside ``validate_token_table`` (it is
+eager) and broadcast-joined back as driver-held local relations; the
+output is the reference-shaped verdict + violation-rows pair (SURVEY.md
+A1/A16 → B11/B12), and each of ``verdicts``/``summary`` is then one scan.
 """
 
 from __future__ import annotations
