@@ -674,7 +674,7 @@ FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
 def q_skew_report_documents(spark, sf_dir):
     """Key-skew diagnostic gate (round-5): `key_skew_report` over a dirty
     fixture with a synthetic hot key (every doc_id % 3 == 0 row re-tagged
-    source='src_hot') — the measurement that SIZES the salt bucket count
+    source='src_hot') — the measurement that sizes a hot key's split
     before a shuffle instead of guessing it.  Two bounded aggregates; the
     per-key relation never exceeds |distinct keys| rows."""
     from vldt_spark.plans.skew import key_skew_report
@@ -1346,7 +1346,7 @@ UNION ALL SELECT g, CAST(0.75 AS DOUBLE) AS p, q75 AS q FROM q
 
 
 # ---------------------------------------------------------------------------
-# B5 — uniqueness (salted two-stage aggregate)
+# B5 — uniqueness (one map-side-combined aggregate)
 # ---------------------------------------------------------------------------
 
 
@@ -1373,7 +1373,7 @@ def q_unique_orderkeys(spark, sf_dir):
 
 def q_dup_composite_lineitem(spark, sf_dir):
     """Composite-key uniqueness (real PKs are multi-column): duplicated
-    (l_partkey, l_suppkey) pairs via the same salted two-stage aggregate."""
+    (l_partkey, l_suppkey) pairs via the same one-aggregate shape."""
     from vldt_spark.checks.uniqueness import duplicate_keys
 
     li = _t(spark, sf_dir, "lineitem")
@@ -1430,7 +1430,7 @@ FROM j
 
 def q_uniqueness_report_lineitem(spark, sf_dir):
     """One-row uniqueness summary (B5 report shape): totals + dup-key and
-    dup-row counts from the salted two-stage aggregate."""
+    dup-row counts from one per-key count and one scalar aggregate."""
     from vldt_spark.checks.uniqueness import uniqueness_report
 
     li = _t(spark, sf_dir, "lineitem")

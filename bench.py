@@ -2,7 +2,7 @@
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
-The flagship number is the full fused validation pass (all checks + salted
+The flagship number is the full fused validation pass (all checks +
 uniqueness + RI, one scan) over a deterministic synthetic token table
 (BASELINE.json input_hint shape) — reported both as seconds and as
 validated sequences/sec (the BASELINE.json metric).

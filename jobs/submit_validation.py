@@ -17,7 +17,7 @@ Local sandbox smoke (same code path, local master):
 
 The job validates partition-by-partition through the checkpoint ledger
 (B13): kill it mid-run and re-submit — completed partitions are skipped.
-Skew config (AQE + salting) is applied at session build (B14).
+AQE skew-join config is applied at session build (B14).
 """
 
 from __future__ import annotations

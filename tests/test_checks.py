@@ -79,17 +79,6 @@ def test_ri_anti_join(spark):
     assert [r["fk"] for r in rows] == [9]  # null FK not an RI violation
 
 
-def test_salted_agg_helper(spark):
-    from vldt_spark.plans.skew import salted
-
-    df = spark.createDataFrame(
-        [("web", 1.0)] * 50 + [("books", 2.0)] * 5, "src string, v double"
-    )
-    out = {r["src"]: r for r in salted(df, "src", [("count", "v", "n"), ("sum", "v", "s")]).collect()}
-    assert out["web"]["n"] == 50 and out["web"]["s"] == 50.0
-    assert out["books"]["n"] == 5 and out["books"]["s"] == 10.0
-
-
 def test_schema_conformance(spark):
     from vldt_spark.checks.schema_conf import conforms, schema_conformance
     from vldt_spark.flagship import TokenSequence

@@ -160,7 +160,7 @@ def main():
         f.write(f"""# BENCH/BASELINE — scaling evidence (north rule)
 
 Job: the full flagship validation pass — schema/type/range/regex/cross-field
-checks + salted uniqueness + RI anti-join + per-source verdict aggregation —
+checks + uniqueness aggregate + RI anti-join + per-source verdict aggregation —
 over a {n_rows:,}-row deterministic synthetic token table (BASELINE.json
 input_hint shape), pre-materialized parquet. Same input at both parallelism
 levels; fresh JVM per round; page cache warmed; levels interleaved in

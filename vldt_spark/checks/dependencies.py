@@ -19,7 +19,7 @@ Partial (map-side) aggregation bounds the exchange at
 distinct-determinants-per-partition rows; no join, no window, no row
 explosion. Violating groups only are returned (the overwhelming
 majority of a healthy table aggregates away map-side). At 10^12 rows
-this is strictly cheaper than the salted uniqueness pass it composes
+this costs one aggregate, like the uniqueness pass it composes
 with. Skewed determinants are fine: countDistinct's partial dedup keeps
 hot keys bounded by |distinct dependents|, not row count.
 """

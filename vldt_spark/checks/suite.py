@@ -15,7 +15,7 @@ then its metric, threshold and comparison. The execution plan follows:
     count, quantile, HLL distinct counts, pass fractions, fertility)
     share ONE ``df.agg`` — a single scan with map-side combine;
   * exact distinct counts, and the grouped, joined and ``mapInArrow``
-    checks (uniqueness as the salted two-stage aggregate, referential
+    checks (uniqueness as one map-side-combined aggregate, referential
     integrity as distinct-FK anti-join, drift histograms, dedup,
     classifier evals, ...) run as their own jobs from a thread pool,
     overlapping the fused scan;

@@ -13,8 +13,9 @@ and referential integrity (B6) — run as separate small aggregates whose
 (tiny) outputs are **broadcast-joined back** onto the main scan, so the big
 table is never shuffled:
 
-  * uniqueness: two-stage salted aggregate — partial count per (key, salt),
-    final sum per key, filter >1. The dup-key set is rare/small → broadcast.
+  * uniqueness: one hash aggregate — map-side partial count per key, one
+    exchange on the key, final count, filter >1. The dup-key set is
+    rare/small → broadcast.
   * RI: distinct values of the FK column (dim-like cardinality) LEFT ANTI
     JOIN the dim → invalid-value set → broadcast back.
 
@@ -438,20 +439,6 @@ class ValidationEngine:
 
     # -- whole-table checks ---------------------------------------------------
 
-    def duplicate_keys(
-        self, df: DataFrame, key: str, salt_buckets: int = 64
-    ) -> DataFrame:
-        """B5: keys appearing more than once, via two-stage salted aggregate.
-
-        Stage 1 groups on (key, salt) — partial counts stay bounded per
-        reducer even for a pathologically hot key; stage 2 sums the (tiny)
-        partials per key. Catalyst's map-side partial agg handles the common
-        case; the explicit salt guards the adversarial one at 10^12 rows.
-        """
-        from vldt_spark.checks.uniqueness import duplicate_keys
-
-        return duplicate_keys(df, key, salt_buckets=salt_buckets)
-
     def run(
         self,
         df: DataFrame,
@@ -493,6 +480,7 @@ class ValidationEngine:
         when it is there — never the annotated plan, which would re-run the
         fused pass (column pruning then reaches the parquet scan)."""
         from vldt_spark.checks.referential import invalid_fk_values
+        from vldt_spark.checks.uniqueness import duplicate_keys
 
         sides: list[_SideTable] = []
         model_names = {s.name for s in self.compiled.fields}
@@ -507,7 +495,7 @@ class ValidationEngine:
             sides.append(_SideTable(
                 f"unique_together({','.join(combo)})",
                 combo,
-                self.duplicate_keys(ann.select(*combo), combo),
+                duplicate_keys(ann.select(*combo), combo),
                 ".".join(combo),
                 f"Duplicate value for unique fields ({', '.join(combo)})",
             ))
@@ -517,7 +505,7 @@ class ValidationEngine:
                 sides.append(_SideTable(
                     f"unique({spec.name})",
                     [spec.name],
-                    self.duplicate_keys(src, spec.name),
+                    duplicate_keys(src, spec.name),
                     spec.name,
                     f"Duplicate value for unique field {spec.name}",
                 ))

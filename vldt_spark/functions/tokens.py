@@ -17,7 +17,7 @@ Scale design:
   dense per-partition histogram, so the exchange carries at most
   |vocab| rows per PARTITION (not per row) and the final groupBy(token)
   is a |vocab|-sized aggregate.  Same partial-then-final shape as the
-  salted uniqueness check.
+  uniqueness check's map-side-combined count.
 - `oov_report` / `vocab_coverage` are single hash aggregates over
   row-local expressions (no HOF in the hot loop for oov: `aggregate`
   over int comparisons is interpreted but cheap; the histogram path is

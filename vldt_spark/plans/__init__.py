@@ -2,6 +2,6 @@
 (B14), spark-submit job entrypoint."""
 
 from vldt_spark.plans.ledger import ValidationLedger
-from vldt_spark.plans.skew import salted, with_salt, aqe_skew_conf
+from vldt_spark.plans.skew import aqe_skew_conf
 
-__all__ = ["ValidationLedger", "salted", "with_salt", "aqe_skew_conf"]
+__all__ = ["ValidationLedger", "aqe_skew_conf"]

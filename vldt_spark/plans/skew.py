@@ -1,65 +1,22 @@
-"""B14 — skew mitigation: hot-key salting + AQE configuration.
+"""B14 — skew mitigation: AQE configuration, min-parallelism and a
+key-skew diagnostic.
 
 The token table's ``source`` column is zipfian ("web" ≈ 70%,
-FIXTURES.md F1): any groupBy/join on it puts 70% of rows on one reducer.
-Two mitigations, composable:
+FIXTURES.md F1): any join on it puts 70% of rows on one reducer.  A
+count/sum/min/max groupBy on it does not: the partial ``HashAggregate``
+combines each key map-side, so a hot key reaches its reducer as one row
+per map partition.
 
-  * salting: ``with_salt`` adds a deterministic salt column so hot keys
-    spread over S reducers; aggregate (key, salt) partially, then key.
   * AQE: ``spark.sql.adaptive.skewJoin`` splits oversized join partitions
     at runtime — ``aqe_skew_conf`` returns the config dict to apply.
+  * ``ensure_min_parallelism`` spreads a too-narrow scan over the cores.
+  * ``key_skew_report`` measures a key's skew before shuffling on it.
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def with_salt(df: DataFrame, key: str, *, buckets: int = 32, salt_col: str = "__salt") -> DataFrame:
-    """Salt column spreading equal-key rows over ``buckets`` reducers.
-
-    The salt hashes the partition id + row position, so individual salt
-    VALUES depend on the physical partition layout and are NOT stable
-    across retries — what IS stable is every downstream RESULT: stage 2 of
-    ``salted`` merges per key regardless of how rows were salted, so any
-    layout yields the same final aggregate. (A truly layout-independent
-    salt would need per-row content, which a generic key-only API doesn't
-    have; rand() would be both layout- and schedule-dependent.)"""
-    return df.withColumn(
-        salt_col,
-        F.pmod(F.xxhash64(F.col(key), F.spark_partition_id(), F.monotonically_increasing_id()), F.lit(buckets)),
-    )
-
-
-def salted(
-    df: DataFrame,
-    key: str,
-    aggs: list[tuple[str, str, str]],
-    *,
-    buckets: int = 32,
-) -> DataFrame:
-    """Two-stage salted aggregation for re-aggregable functions.
-
-    ``aggs`` = [(fn, col, alias)] with fn in {count,sum,min,max}: stage 1
-    aggregates per (key, salt) — bounded reducer load even when one key is
-    70% of rows — stage 2 merges the ≤ buckets partials per key."""
-    merge = {"count": "sum", "sum": "sum", "min": "min", "max": "max"}
-    s = with_salt(df, key, buckets=buckets)
-    stage1 = s.groupBy(key, "__salt").agg(
-        *[
-            (F.count(F.lit(1)) if fn == "count" else getattr(F, fn)(c)).alias(f"__p_{alias}")
-            for fn, c, alias in aggs
-        ]
-    )
-    return stage1.groupBy(key).agg(
-        *[
-            getattr(F, merge[fn])(f"__p_{alias}").alias(alias)
-            for fn, c, alias in aggs
-        ]
-    )
 
 
 def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -92,15 +49,16 @@ def aqe_skew_conf() -> dict[str, str]:
 
 
 def key_skew_report(df: DataFrame, key: str) -> DataFrame:
-    """Quantified skew diagnostic for a prospective groupBy/join key —
-    the measurement that DECIDES the mitigations above (salt bucket count,
-    whether AQE skew-join will fire) instead of guessing them.
+    """Quantified skew diagnostic for a prospective join key — the
+    measurement that decides whether AQE skew-join will fire, or a
+    non-combinable per-key operation needs splitting, instead of guessing.
 
     One row: (key_col, n_rows, n_keys, hot_key, hot_n, hot_share,
     skew_factor, recommended_buckets) where skew_factor = hot_n /
     (n_rows / n_keys) — how many × the average reducer load the hottest
-    key carries — and recommended_buckets = ceil(skew_factor), the salt
-    count that levels the hot reducer back to average.  hot_key tie-break:
+    key carries — and recommended_buckets = ceil(skew_factor), the number
+    of pieces the hot key's rows would need to be split into to level its
+    reducer back to average.  The library applies no salt of its own.  hot_key tie-break:
     largest count, then lexicographically greatest key (deterministic).
 
     Scale shape: one hash aggregate per key (map-side partials), then a
