@@ -5514,9 +5514,9 @@ SELECT wepoch, 'isin', 'event_type', m_isin, CAST(0.0 AS DOUBLE), m_isin <= 0 FR
 
 
 def q_ledger_metrics_events(spark, sf_dir):
-    """B13 checkpoint ledger, value-checked end-to-end: events validate
-    partition-by-partition (write-audit-publish — metrics + violations
-    parquet land before the commit marker), and the read-back METRICS
+    """B13 checkpoint ledger, value-checked end-to-end: events validate in
+    one pass over every partition (write-audit-publish — metrics + violations
+    parquet land before the commit markers), and the read-back METRICS
     table must equal the batch per-partition verdicts the oracle predicts.
     Exercises the full resume machinery's output path, not just a pytest
     shape check."""

@@ -15,8 +15,9 @@ Local sandbox smoke (same code path, local master):
 
     python jobs/submit_validation.py --synthetic 100000 --output /tmp/vldt_run
 
-The job validates partition-by-partition through the checkpoint ledger
-(B13): kill it mid-run and re-submit — completed partitions are skipped.
+The job validates every uncommitted partition in one pass through the
+checkpoint ledger (B13): kill it mid-run and re-submit — committed
+partitions are skipped, the killed run's partitions run again.
 AQE skew-join config is applied at session build (B14).
 """
 
@@ -74,9 +75,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.synthetic:
         # materialize partitioned by the ledger's partition column — the
-        # Iceberg-table shape the job is designed for. Each per-partition
-        # ledger run then PRUNES to its own files instead of re-generating
-        # and filtering the whole synthetic plan per partition.
+        # Iceberg-table shape the job is designed for. The ledger's filter
+        # to uncommitted partitions then PRUNES to their files instead of
+        # re-generating and filtering the whole synthetic plan.
         inp = os.path.join(args.output, "_input")
         if not os.path.exists(os.path.join(inp, "_SUCCESS")):
             token_sequences(spark, args.synthetic, seed=42).write.mode(

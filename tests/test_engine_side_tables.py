@@ -134,6 +134,36 @@ def test_unique_together_composite_equals_reference(spark):
     assert _engine_rows(eng.run(df, id_cols=["rid"])) == _by_hand(ann, checks)
 
 
+class Scoped(Model):
+    rid: int
+    grp: str
+    key: int = Field(unique=True)
+    a: int
+    b: str
+
+    unique_together = [("a", "b")]
+
+
+def test_unique_within_scopes_every_uniqueness_check(spark):
+    df = spark.createDataFrame(
+        [(1, "x", 1, 1, "p"), (2, "x", 1, 1, "p"), (3, "y", 1, 1, "p"),
+         (4, None, 2, 2, "q"), (5, None, 2, 2, "q")],
+        "rid long, grp string, key long, a long, b string",
+    )
+    eng = ValidationEngine(Scoped)
+    ann = eng.annotate(df)
+    # a key repeated across groups, or with a NULL group, is no duplicate
+    checks = [
+        (["grp", "a", "b"], {("x", 1, "p")}, "a.b",
+         "Duplicate value for unique fields (a, b)"),
+        (["grp", "key"], {("x", 1)}, "key", DUP.format("key")),
+    ]
+    got = _engine_rows(eng.run(df, id_cols=["rid"], unique_within=["grp"]))
+    assert got == _by_hand(ann, checks)
+    with pytest.raises(ValueError, match="unique_within"):
+        eng.run(df, id_cols=["rid"], unique_within=["nope"])
+
+
 def _fact_inputs(spark, rows):
     d = datetime.date
     fact = spark.createDataFrame(rows, "rid long, cat long, day date")

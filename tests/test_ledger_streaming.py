@@ -6,7 +6,9 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from vldt_spark.fields import Field
 from vldt_spark.flagship import TokenSequence
+from vldt_spark.model import Model
 from vldt_spark.plans.ledger import ValidationLedger
 from vldt_spark.sources.token_table import sources_dim, token_sequences
 
@@ -98,6 +100,38 @@ def test_quarantine_sink_routes_and_reconciles(spark, tmp_path):
     v = json.loads(row["violations_json"])
     assert v and all("path" in e and "msg" in e for e in v)
     assert "tokens" in q.columns and "doc_id" in q.columns
+
+
+@pytest.mark.parametrize("partition_col", [None, "source"])
+def test_quarantine_counts_come_from_the_writes(spark, tmp_path, partition_col):
+    """The returned counts equal the audit read-back, and the call runs no
+    job of its own beyond the two writes: with AQE off, one broadcast of
+    the side-table relation plus the two writes (the read-back counts took
+    four more)."""
+    import uuid
+
+    from vldt_spark.engine import ValidationEngine
+    from vldt_spark.sources.quarantine import write_quarantined
+
+    toks = token_sequences(spark, 3000, seed=42)
+    res = ValidationEngine(TokenSequence).run(toks, id_cols=["doc_id"])
+    root = str(tmp_path / "q")
+    sc = spark.sparkContext
+    group = f"quarantine_{uuid.uuid4().hex[:8]}"
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        stats = write_quarantined(res, root, partition_col=partition_col)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert stats == {
+        "n_valid": spark.read.parquet(root + "/data").count(),
+        "n_quarantined": spark.read.parquet(root + "/quarantine").count(),
+    }
+    assert stats["n_valid"] + stats["n_quarantined"] == 3000
 
 
 def test_streaming_drift_monitor(spark, tmp_path):
@@ -314,32 +348,160 @@ def test_streaming_psi_by_group(spark, tmp_path):
     assert abs(rows["shifted"]["psi"] - round(batch, 6)) < 1e-4
 
 
-def test_ledger_concurrent_equals_serial(spark, tmp_path):
-    """concurrency>1 yields the same metrics + resume state as serial; a
-    pre-completed partition is still skipped."""
-    from vldt_spark.fields import Field
-    from vldt_spark.model import Model
-    from vldt_spark.plans.ledger import ValidationLedger
+class _RowStr(Model):
+    rid: int
+    key: int = Field(unique=True)
+    grp: str
+    v: float = Field(ge=0.0)
 
-    class Row(Model):
-        rid: int
-        grp: str
-        v: float = Field(ge=0.0)
 
-    globals()["RowL"] = Row
-    df = spark.createDataFrame(
-        [(i, f"g{i % 3}", float(i % 7) - (1.0 if i % 11 == 0 else 0.0))
-         for i in range(60)],
-        "rid long, grp string, v double",
+class _RowInt(Model):
+    rid: int
+    key: int = Field(unique=True)
+    grp: int
+    v: float = Field(ge=0.0)
+
+
+def _ledger_rows(spark, grp_type):
+    """``key`` repeats within a partition (i, i + 39) and across partitions
+    (i, i + 13); ``v`` breaks ``ge`` on every 11th row; rid 60 has a NULL
+    partition value and is never validated."""
+    conv = str if grp_type == "string" else int
+    rows = [
+        (i, i % 13, conv(i % 3), float(i % 7) - (1.0 if i % 11 == 0 else 0.0))
+        for i in range(60)
+    ] + [(60, 0, None, 1.0)]
+    return spark.createDataFrame(rows, f"rid long, key long, grp {grp_type}, v double")
+
+
+def _per_partition_reference(df, model):
+    """What one ``engine.run`` per partition value gives: {value: verdict
+    tuple} and the set of (rid, path, msg) violation rows."""
+    from vldt_spark.engine import ValidationEngine
+
+    eng = ValidationEngine(model)
+    verdicts, violations = {}, set()
+    for (value,) in df.select("grp").where(F.col("grp").isNotNull()).distinct().collect():
+        res = eng.run(df.where(F.col("grp") == value), id_cols=["rid"])
+        v = res.verdicts(["grp"]).first()
+        verdicts[str(value)] = (v["n_rows"], v["n_invalid"], v["n_violations"], v["passed"])
+        violations |= {tuple(r) for r in res.violations().collect()}
+    return verdicts, violations
+
+
+def _ledger_state(spark, led):
+    metrics = {
+        str(r["grp"]): (r["n_rows"], r["n_invalid"], r["n_violations"], r["passed"])
+        for r in led.metrics(spark).collect()
+    }
+    return metrics, {tuple(r) for r in led.violations(spark).collect()}
+
+
+@pytest.mark.parametrize("parts", [1, 7])
+@pytest.mark.parametrize("grp_type", ["string", "int"])
+def test_ledger_equals_per_partition_runs(spark, tmp_path, grp_type, parts):
+    """One scoped pass gives the metrics and violations of one engine run
+    per partition: a key repeated across partitions is not a duplicate."""
+    model = _RowStr if grp_type == "string" else _RowInt
+    df = _ledger_rows(spark, grp_type)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        want_verdicts, want_violations = _per_partition_reference(df, model)
+        led = ValidationLedger(str(tmp_path / "ledger"), "grp")
+        out = led.run(df, model, id_cols=["rid"])
+        metrics, violations = _ledger_state(spark, led)
+        assert led.run(df, model, id_cols=["rid"]) == {}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert sorted(want_verdicts) == ["0", "1", "2"]
+    got = {k: (m["n_rows"], m["n_invalid"], m["n_violations"], m["passed"])
+           for k, m in out.items()}
+    assert got == want_verdicts
+    assert metrics == want_verdicts
+    assert violations == want_violations
+    assert {p for _, p, _ in violations} == {"key", "v"}
+
+
+def _file_times(root, skip):
+    """{path: mtime_ns} of every file under ``root``'s part dirs but ``skip``."""
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for table in ("metrics", "violations")
+        for part in os.listdir(os.path.join(root, table))
+        if part.startswith("part=") and part != skip
+        for d in [os.path.join(root, table, part)]
+        for f in os.listdir(d)
+    }
+
+
+def _killed(self, value, metrics):
+    """Stands in for ``ValidationLedger._commit``: the job dies after both
+    parquet writes landed, before its first marker."""
+    raise RuntimeError("killed before commit")
+
+
+def test_ledger_crash_before_markers_then_resume(spark, tmp_path, monkeypatch):
+    """A run killed after both parquet writes but before any marker leaves
+    nothing committed; the re-run commits every partition, and its metrics
+    equal an uninterrupted run's, one row per partition."""
+    df = _ledger_rows(spark, "string")
+    clean = ValidationLedger(str(tmp_path / "clean"), "grp")
+    want = clean.run(df, _RowStr, id_cols=["rid"])
+
+    root = str(tmp_path / "crashed")
+    led = ValidationLedger(root, "grp")
+    with monkeypatch.context() as m:
+        m.setattr(ValidationLedger, "_commit", _killed)
+        with pytest.raises(RuntimeError):
+            led.run(df, _RowStr, id_cols=["rid"])
+    assert led.completed_partitions() == set()
+    assert os.listdir(os.path.join(root, "metrics")) and os.listdir(
+        os.path.join(root, "violations")
     )
-    l1 = ValidationLedger(str(tmp_path / "serial"), "grp")
-    m_serial = l1.run(df, Row, id_cols=["rid"])
-    l2 = ValidationLedger(str(tmp_path / "conc"), "grp")
-    m_conc = l2.run(df, Row, id_cols=["rid"], concurrency=3)
-    key = lambda m: {k: (v["n_rows"], v["n_invalid"], v["passed"]) for k, v in m.items()}
-    assert key(m_serial) == key(m_conc)
-    # resume: nothing left to do on a second concurrent run
-    assert l2.run(df, Row, id_cols=["rid"], concurrency=3) == {}
+
+    got = led.run(df, _RowStr, id_cols=["rid"])
+    assert led.completed_partitions() == set(want) == {"0", "1", "2"}
+    key = lambda out: {k: (v["n_rows"], v["n_invalid"], v["n_violations"], v["passed"])
+                       for k, v in out.items()}
+    assert key(got) == key(want)
+    assert _ledger_state(spark, led) == _ledger_state(spark, clean)
+    assert led.metrics(spark).count() == 3
+
+
+def test_ledger_rerun_replaces_uncommitted_violations(spark, tmp_path, monkeypatch):
+    """A partition that has no violations on the re-run must not keep the
+    violation rows an interrupted run wrote for it."""
+    from vldt_spark.engine import ValidationEngine
+
+    df = _ledger_rows(spark, "string")
+    led = ValidationLedger(str(tmp_path / "ledger"), "grp")
+    with monkeypatch.context() as m:
+        m.setattr(ValidationLedger, "_commit", _killed)
+        with pytest.raises(RuntimeError):
+            led.run(df, _RowStr, id_cols=["rid"])
+    assert led.violations(spark).count() > 0
+
+    res = ValidationEngine(_RowStr).run(df, id_cols=["rid"], unique_within=["grp"])
+    out = led.run(res.valid, _RowStr, id_cols=["rid"])
+    assert sorted(out) == ["0", "1", "2"]
+    assert all(m["n_violations"] == 0 for m in out.values())
+    assert led.violations(spark).count() == 0
+
+
+def test_ledger_rerun_leaves_committed_partitions_untouched(spark, tmp_path):
+    """Re-running one partition rewrites only its own files: every other
+    partition's metrics and violations files keep their names and mtimes."""
+    df = _ledger_rows(spark, "string")
+    root = str(tmp_path / "ledger")
+    led = ValidationLedger(root, "grp")
+    led.run(df, _RowStr, id_cols=["rid"])
+    before = _file_times(root, skip="part=1")
+    assert len(before) >= 4
+    os.remove(os.path.join(root, "_ledger", "part=1.json"))
+    assert sorted(led.run(df, _RowStr, id_cols=["rid"])) == ["1"]
+    assert _file_times(root, skip="part=1") == before
+    assert led.metrics(spark).count() == 3
 
 
 def test_stream_centroid_drift_matches_batch(spark, tmp_path):

@@ -27,6 +27,11 @@ def invalid_fk_values(
 ) -> DataFrame:
     """Distinct non-null FK values absent from the dimension (small output).
 
+    NULL semantics: a NULL FK is never an RI violation (a required FK
+    reports it as a ``not_null`` violation), and a NULL dimension key
+    matches nothing, so it cannot make any FK value valid.  The result does
+    not depend on how the fact table is partitioned.
+
     ``broadcast_dim=True`` pins a broadcast anti-join — only when the dim's
     distinct keys are known to fit executor memory. The default (``None``)
     leaves the choice to AQE, which broadcasts small dims at runtime and

@@ -446,6 +446,7 @@ class ValidationEngine:
         id_cols: Iterable[str] | None = None,
         dims: dict[str, DataFrame] | None = None,
         keep_extra: bool = False,
+        unique_within: Iterable[str] = (),
     ) -> ValidationResult:
         """Full run: fused row-local pass + uniqueness + RI, violations merged.
 
@@ -455,17 +456,22 @@ class ValidationEngine:
         ``vldt:engine.run:<check>``, and held on the driver as a local
         relation; two or more are computed concurrently.  They are then
         broadcast-joined onto the fused pass in declaration order, so every
-        later action on the result is one scan of ``df``."""
+        later action on the result is one scan of ``df``.
+
+        ``unique_within`` scopes every uniqueness check to the groups of
+        those columns (embedded uniqueness on ``(*unique_within, key)``), so
+        one run over many partitions flags what a run per partition would;
+        the default is the whole table.  RI does not depend on the groups."""
         ann = self.annotate(df, keep_extra=keep_extra)
         ids = list(id_cols) if id_cols else [self.compiled.fields[0].name]
-        sides = self._side_tables(df, ann, dims or {})
+        sides = self._side_tables(df, ann, dims or {}, list(unique_within))
         for side, local in zip(sides, _materialize(df.sparkSession, sides)):
             ann = side.join_onto(ann, local)
         ann = ann.withColumn("is_valid", F.size("violations") == 0)
         return ValidationResult(annotated=ann, id_cols=ids)
 
     def _side_tables(
-        self, raw: DataFrame, ann: DataFrame, dims: dict[str, DataFrame]
+        self, raw: DataFrame, ann: DataFrame, dims: dict[str, DataFrame], within: list[str]
     ) -> list["_SideTable"]:
         """The whole-table checks' side tables, lazy, in join order:
         ``unique_together`` combos, then per field ``unique`` and ``ref``.
@@ -478,10 +484,14 @@ class ValidationEngine:
         columns.  An unresolvable combo column is an error, never a silent
         skip.  Per-field checks read ONLY the key column from the raw input
         when it is there — never the annotated plan, which would re-run the
-        fused pass (column pruning then reaches the parquet scan)."""
+        fused pass (column pruning then reaches the parquet scan).  Every
+        uniqueness key is prefixed with the ``within`` columns."""
         from vldt_spark.checks.referential import invalid_fk_values
         from vldt_spark.checks.uniqueness import duplicate_keys
 
+        missing = [c for c in within if c not in ann.columns]
+        if missing:
+            raise ValueError(f"unique_within columns not in the validated frame: {missing}")
         sides: list[_SideTable] = []
         model_names = {s.name for s in self.compiled.fields}
         for combo in getattr(self.model, "unique_together", []) or []:
@@ -492,25 +502,28 @@ class ValidationEngine:
                     f"unique_together columns not in model {self.model.__name__}: "
                     f"{missing}"
                 )
+            keys = [*within, *combo]
             sides.append(_SideTable(
                 f"unique_together({','.join(combo)})",
-                combo,
-                duplicate_keys(ann.select(*combo), combo),
+                keys,
+                duplicate_keys(ann.select(*keys), keys),
                 ".".join(combo),
                 f"Duplicate value for unique fields ({', '.join(combo)})",
             ))
         for spec in self.compiled.fields:
-            src = raw if spec.name in raw.columns else ann
             if spec.field.unique:
+                keys = [*within, spec.name]
+                src = raw if set(keys) <= set(raw.columns) else ann
                 sides.append(_SideTable(
                     f"unique({spec.name})",
-                    [spec.name],
-                    duplicate_keys(src, spec.name),
+                    keys,
+                    duplicate_keys(src, keys),
                     spec.name,
                     f"Duplicate value for unique field {spec.name}",
                 ))
             if spec.field.ref is not None and spec.field.ref[0] in dims:
                 dim_name, dim_col = spec.field.ref
+                src = raw if spec.name in raw.columns else ann
                 sides.append(_SideTable(
                     f"ref({spec.name})",
                     [spec.name],

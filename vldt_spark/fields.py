@@ -112,17 +112,3 @@ class Field:
         if self.default_factory is not None:
             return self.default_factory()
         return self.default
-
-    def constraint_items(self) -> list[tuple[str, Any]]:
-        """Non-empty declarative constraints as (kind, arg) pairs."""
-        out: list[tuple[str, Any]] = []
-        for kind in ("ge", "gt", "le", "lt", "regex", "isin",
-                     "element_ge", "element_le", "min_size", "max_size"):
-            v = getattr(self, kind)
-            if v is not None:
-                out.append((kind, v))
-        if self.unique:
-            out.append(("unique", True))
-        if self.not_null:
-            out.append(("not_null", True))
-        return out

@@ -9,19 +9,23 @@ write-audit-publish shape an Iceberg/Delta writer would use:
     <root>/violations/part=<value>/  exploded violation rows (B12 shape)
     <root>/_ledger/part=<value>.json  commit marker, written LAST
 
-A partition is "done" iff its commit marker exists — markers are written
-after both tables land, so a kill between writes re-runs that partition
-(overwrite semantics make the re-run idempotent). On a real cluster the
-same interface maps to Iceberg's ``overwritePartitions()``.
+``<value>`` is the partition value cast to a string.  A partition is
+"done" iff its commit marker exists.  ``run`` validates every partition
+not done in ONE pass: one ``engine.run`` with uniqueness scoped to the
+partition (``unique_within``), one collect of the verdicts, and one
+``partitionBy`` write per table with dynamic partition overwrite, so only
+this run's partitions are replaced; the markers land after both writes.
+The commit unit is therefore one run: a job killed before its markers
+land re-runs every partition it had not committed (idempotently, by the
+overwrites), and partitions committed earlier are skipped.  On a real
+cluster the same interface maps to Iceberg's ``overwritePartitions()``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
-from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,74 +62,70 @@ class ValidationLedger:
         *,
         id_cols: list[str],
         dims: dict[str, DataFrame] | None = None,
-        partitions: Iterable[str] | None = None,
-        concurrency: int = 1,
     ) -> dict[str, dict]:
-        """Validate partition-by-partition, skipping completed ones.
+        """Validate every partition that has no commit marker, in one pass.
 
-        Each partition is one filtered job (partition pruning applies when
-        the source is partitioned by the same column); its verdict + exploded
-        violations are overwritten-by-partition, then the commit marker lands.
-        Returns {partition: metrics} for partitions run in this call.
-
-        ``concurrency > 1`` submits that many partition jobs at once from a
-        thread pool — useful when individual partitions are small relative
-        to the cluster (a single big partition already saturates it, so the
-        default stays serial). Commit markers, metrics and violations are
-        all per-partition paths, so concurrent partitions never touch the
-        same files; the resume contract is unchanged."""
-        engine = ValidationEngine(model)
+        Rows with a NULL partition value are never validated.  Uniqueness
+        is checked within each partition (``unique_within``), so the one
+        run flags what a run per partition would.  The verdicts are
+        collected once: they are the metrics rows and the marker contents.
+        Returns {partition: metrics} for the partitions run in this call.
+        A caller that wants fewer partitions filters ``df``."""
+        t0 = time.perf_counter()
         pcol = self.partition_col
-        if partitions is None:
-            partitions = [
-                r[pcol]
-                for r in df.select(pcol).distinct().collect()
-                if r[pcol] is not None
-            ]
+        part = F.col(pcol).cast("string")
         done = self.completed_partitions()
-        todo = [v for v in partitions if str(v) not in done]  # idempotent skip
-
-        def _one(value) -> tuple[str, dict]:
-            sval = str(value)
-            part_df = df.where(F.col(pcol) == value)
-            t0 = time.perf_counter()
-            res = engine.run(part_df, id_cols=id_cols, dims=dims)
-            verdict = res.verdicts([pcol])
-            vio = res.violations()
-            mdir = os.path.join(self.root, "metrics", f"part={sval}")
-            vdir = os.path.join(self.root, "violations", f"part={sval}")
-            verdict.write.mode("overwrite").parquet(mdir)
-            vio.write.mode("overwrite").parquet(vdir)
-            # read the landed metrics back rather than re-running the
-            # verdict computation (one tiny scan vs a full partition pass)
-            row = df.sparkSession.read.parquet(mdir).first()
-            metrics = {
-                "partition": sval,
-                "n_rows": row["n_rows"] if row else 0,
-                "n_invalid": row["n_invalid"] if row else 0,
-                "n_violations": row["n_violations"] if row else 0,
-                "passed": bool(row["passed"]) if row else True,
-                "wall_sec": round(time.perf_counter() - t0, 3),
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            # marker written LAST → crash before this point re-runs the
-            # partition; overwrite above makes the re-run idempotent.
-            # temp-file + atomic rename: a crash mid-write must never leave
-            # a half-written marker that reads as "completed"
-            tmp = self._marker(sval) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(metrics, f)
-            os.replace(tmp, self._marker(sval))
-            return sval, metrics
-
-        if concurrency > 1 and len(todo) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(concurrency, len(todo))) as pool:
-                out = dict(pool.map(_one, todo))
-        else:
-            out = dict(_one(v) for v in todo)
+        todo = df.where(F.col(pcol).isNotNull() & ~part.isin(*done))  # idempotent skip
+        res = ValidationEngine(model).run(
+            todo, id_cols=id_cols, dims=dims, unique_within=[pcol]
+        )
+        verdicts = res.verdicts([pcol]).withColumn("part", part)
+        rows = verdicts.collect()
+        if not rows:
+            return {}
+        spark = df.sparkSession
+        vio = ValidationResult(
+            res.annotated.withColumn("part", part), [*res.id_cols, "part"]
+        ).violations()
+        for frame, table in [
+            (spark.createDataFrame(rows, verdicts.schema), "metrics"),
+            (vio, "violations"),
+        ]:
+            frame.write.option("partitionOverwriteMode", "dynamic").mode(
+                "overwrite"
+            ).partitionBy("part").parquet(os.path.join(self.root, table))
+        # that write replaces only the partitions it has rows for: a
+        # partition without violations gets an empty file, which also drops
+        # the rows an interrupted earlier run left there
+        catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog  # noqa: SLF001
+        for r in rows:
+            if r["n_violations"] == 0:
+                name = catalog.ExternalCatalogUtils.getPartitionValueString(r["part"])
+                vio.drop("part").limit(0).write.mode("overwrite").parquet(
+                    os.path.join(self.root, "violations", f"part={name}")
+                )
+        stamp = {
+            "wall_sec": round(time.perf_counter() - t0, 3),
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+        counts = ("n_rows", "n_invalid", "n_violations", "passed")
+        out = {
+            r["part"]: {"partition": r["part"], **{k: r[k] for k in counts}, **stamp}
+            for r in rows
+        }
+        # markers LAST: a crash before this point re-runs every partition
+        # of this call; the dynamic overwrites make that re-run idempotent
+        for value, metrics in out.items():
+            self._commit(value, metrics)
         return out
+
+    def _commit(self, value: str, metrics: dict) -> None:
+        """Write one commit marker: temp file + atomic rename, so a crash
+        mid-write never leaves a half-written marker that reads as done."""
+        tmp = self._marker(value) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(metrics, f)
+        os.replace(tmp, self._marker(value))
 
     # -- read back -------------------------------------------------------------
 
@@ -134,7 +134,3 @@ class ValidationLedger:
 
     def violations(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.root, "violations", "part=*"))
-
-    def reset(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
-        os.makedirs(os.path.join(self.root, "_ledger"), exist_ok=True)
