@@ -3,8 +3,9 @@
 Each side table is collected in ``run()`` and joined back as a driver-held
 local relation.  These tests pin that the annotated rows equal a reference
 built by hand from ``duplicate_keys`` / ``invalid_fk_values``, that each
-side table costs one labelled job inside ``run()``, and that a later action
-is one scan of the input with no uniqueness aggregate in it.
+side table costs one labelled job inside ``run()``, that the counts job of
+``verdicts`` is one scan of the input with no uniqueness aggregate in it,
+and that ``summary`` after it runs no job.
 """
 
 import datetime
@@ -294,14 +295,21 @@ def token_parquet(spark):
     return root, clean
 
 
+def _counts_job_plan(res, pc):
+    """The final plan of the aggregate ``verdicts(pc)`` runs (the result
+    holds only its output, so the same frame is executed again here)."""
+    frame = res._count_frame(pc)
+    frame.toArrow()
+    return _final_plan(frame)
+
+
 def test_verdicts_after_run_is_one_scan_without_dup_aggregate(spark, token_parquet):
     df = spark.read.parquet(token_parquet[0])
     res = ValidationEngine(TokenSequence).run(
         df, id_cols=["doc_id"], dims={"sources": sources_dim(spark)}
     )
-    verdicts = res.verdicts(["source"])
-    verdicts.collect()
-    nodes = _final_plan(verdicts)
+    assert res.verdicts(["source"]).collect()
+    nodes = _counts_job_plan(res, ["source"])
     scans = [n for n in nodes if n.getClass().getSimpleName() == "FileSourceScanExec"]
     assert len(scans) == 1
     aggs = [n for n in nodes if n.getClass().getSimpleName().endswith("AggregateExec")]
@@ -309,7 +317,8 @@ def test_verdicts_after_run_is_one_scan_without_dup_aggregate(spark, token_parqu
     for agg in aggs:
         grouping = agg.groupingExpressions()
         keys |= {grouping.apply(i).name() for i in range(grouping.size())}
-    assert aggs and keys == {"source"}
+    # the counts' grouping sets only: no uniqueness aggregate on doc_id
+    assert aggs and keys == {"source", "__path", "__msg", "spark_grouping_id"}
     joins = [n for n in nodes if n.getClass().getSimpleName().endswith("JoinExec")]
     assert len(joins) == 2  # the dirty table has dup ids and unknown sources
 
@@ -321,8 +330,42 @@ def test_clean_table_verdicts_plan_has_no_join(spark, token_parquet):
     )
     verdicts = res.verdicts(["source"])
     assert sum(r["n_invalid"] for r in verdicts.collect()) == 0
-    nodes = _final_plan(verdicts)
+    nodes = _counts_job_plan(res, ["source"])
+    assert len([n for n in nodes if n.getClass().getSimpleName() == "FileSourceScanExec"]) == 1
     assert [n for n in nodes if n.getClass().getSimpleName().endswith("JoinExec")] == []
+
+
+def test_verdicts_then_summary_is_one_job(spark, token_parquet, aqe_off):
+    # clean table: no side-table joins, so every job is a scan of the input
+    df = spark.read.parquet(token_parquet[1])
+    res = ValidationEngine(TokenSequence).run(
+        df, id_cols=["doc_id"], dims={"sources": sources_dim(spark)}
+    )
+
+    def both():
+        return res.verdicts(["source"]).collect(), res.summary().collect()
+
+    (verdicts, summary), jobs = _jobs_in_group(spark, both)
+    assert len(jobs) == 1
+    assert sum(r["n_rows"] for r in verdicts) == 1000 and summary == []
+
+
+def test_summary_and_repeated_verdicts_run_no_job(spark, token_parquet):
+    # dirty table: the counts job also broadcasts the side tables; what
+    # follows it reads the counts the result holds
+    df = spark.read.parquet(token_parquet[0])
+    res = ValidationEngine(TokenSequence).run(
+        df, id_cols=["doc_id"], dims={"sources": sources_dim(spark)}
+    )
+    verdicts = res.verdicts(["source"]).collect()
+
+    def later():
+        return res.summary().collect(), res.verdicts(["source"]).collect()
+
+    (summary, again), jobs = _jobs_in_group(spark, later)
+    assert jobs == []
+    assert again == verdicts
+    assert sum(r["n_violations"] for r in verdicts) == sum(r["n"] for r in summary) > 0
 
 
 def test_summary_order_is_deterministic(spark):

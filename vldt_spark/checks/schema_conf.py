@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from vldt_spark.coercion import _lossless as _scalar_lossless
+from vldt_spark.frames import local_frame
 from vldt_spark.model import Model
 
 
@@ -59,8 +60,8 @@ def schema_conformance(spark: SparkSession, df: DataFrame, model: type[Model]) -
     for name, dt in actual.items():
         if name not in claimed:
             rows.append((name, None, dt.simpleString(), "extra_ignored"))
-    return spark.createDataFrame(
-        rows, "field string, expected string, actual string, status string"
+    return local_frame(
+        spark, rows, "field string, expected string, actual string, status string"
     )
 
 

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vldt_spark.frames import local_frame
+
 
 def schema_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """One row per schema change between ``old`` and ``new``:
@@ -60,8 +62,8 @@ def schema_diff(old: DataFrame, new: DataFrame) -> DataFrame:
                     )
                 )
     spark = new.sparkSession
-    return spark.createDataFrame(
-        rows, "column string, change string, old_type string, new_type string"
+    return local_frame(
+        spark, rows, "column string, change string, old_type string, new_type string"
     )
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vldt_spark.frames import local_frame
 from vldt_spark.rounding import round6
 
 
@@ -164,7 +165,8 @@ def suggest_constraints(
                 )
     out_rows.sort(key=lambda r: (r[0], r[1]))
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "column string, kind string, lo double, hi double,"
         " values array<string>, support double",

@@ -44,6 +44,7 @@ from vldt_spark.checks.referential import ri_report
 from vldt_spark.checks.schema_drift import schema_diff
 from vldt_spark.checks.snapshot import snapshot_summary
 from vldt_spark.checks.uniqueness import duplicate_keys
+from vldt_spark.frames import local_frame
 from vldt_spark.functions.dedup import (
     contamination_report,
     duplicated_ngram_fraction,
@@ -1269,7 +1270,7 @@ class Suite:
                     metrics[i] = _KINDS[e.kind].metric(e.params, *values)
             metrics.update((i, f.result()) for i, f in futures.items())
         rows += [_report_row(self.expectations[i], metrics[i]) for i in sorted(metrics)]
-        return df.sparkSession.createDataFrame(rows, _REPORT_SCHEMA)
+        return local_frame(df.sparkSession, rows, _REPORT_SCHEMA)
 
     def passed(self, df: DataFrame) -> bool:
         """True iff every expectation holds (the CI-gate boolean)."""

@@ -25,32 +25,41 @@ low-cardinality aggregate of FK/dup candidates, never the fact table.
 ``ValidationEngine.run`` is eager: it computes each of those side tables
 once, collects it (Arrow) and re-creates it as a driver-held local
 relation before any join.  The result's plan is the fused scan plus
-broadcast joins of local relations, so every later action (``verdicts``,
-``summary``, ``valid`` ...) is one scan of the input and never repeats the
+broadcast joins of local relations, so every later action (``valid``,
+``violations`` ...) is one scan of the input and never repeats the
 aggregates; a side table that comes back empty (a clean table) is
-optimized out of the plan.  No ``cache()`` (plan-keyed entries that are
-never collected and can go stale) and no ``localCheckpoint()`` (executor
-blocks, lost with the executor).
+optimized out of the plan.  The counts are eager as well: the first
+``verdicts(pc)`` is one scan whose single ``GROUPING SETS ((pc), (path,
+msg))`` aggregate gives the row, invalid and violation counts per
+partition and the violation count per constraint; the result holds that
+small table, so ``summary()`` and a repeated ``verdicts(pc)`` scan
+nothing, and only a new run sees new data.  No ``cache()`` (plan-keyed
+entries that are never collected and can go stale) and no
+``localCheckpoint()`` (executor blocks, lost with the executor).
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable
 
+import pyarrow as pa
+import pyarrow.compute as pac
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vldt_spark.coercion import build_value, default_column, scalar_constraints
 from vldt_spark.errors import (
+    VIOLATION_STRUCT,
     VIOLATIONS_TYPE,
     empty_violations,
     merge_violations,
     missing_required_msg,
     violation_if,
 )
+from vldt_spark.frames import local_frame
 from vldt_spark.model import CompiledSchema, Model
 from vldt_spark.typeschema import ContainerKind, py_name_of_spark
 from vldt_spark.validators import Cols
@@ -62,10 +71,19 @@ class ValidationResult:
 
     ``ValidationEngine.run`` builds it eagerly: ``annotated`` is the fused
     scan of the input plus broadcast joins of side tables already held on
-    the driver, so every action below is one scan of the input."""
+    the driver, so every action below is one scan of the input.
+
+    The counts are eager too, and held: the first ``verdicts(pc)`` runs
+    one aggregate that yields both its per-partition counts and the
+    per-constraint counts, and keeps the small result here.  Later
+    ``verdicts(pc)`` calls and ``summary()`` are driver-held local
+    relations built from it, with no scan.  So they answer for the data
+    as the first count read it: to see new data, run the engine again."""
 
     annotated: DataFrame  # coerced canonical columns + violations + is_valid
     id_cols: list[str]
+    #: partition columns → counts table (``_counts_for``)
+    _counts: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     @property
     def valid(self) -> DataFrame:
@@ -120,17 +138,20 @@ class ValidationResult:
         return inv.mapInPandas(run, schema=out_schema)
 
     def verdicts(self, partition_cols: Iterable[str]) -> DataFrame:
-        """Per-partition pass/fail verdicts — B11."""
+        """Per-partition pass/fail verdicts — B11: (partition cols...,
+        n_rows, n_invalid, n_violations, passed), sorted by the partition
+        columns, NULLs first.  With no partition columns it is one row,
+        ``(0, NULL, NULL, NULL)`` on empty input."""
         pc = list(partition_cols)
-        return (
-            self.annotated.groupBy(*pc)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((~F.col("is_valid")).cast("long")).alias("n_invalid"),
-                F.sum(F.size("violations").cast("long")).alias("n_violations"),
-            )
-            .withColumn("passed", F.col("n_invalid") == 0)
-        )
+        t = self._counts_for(pc)
+        t = t.filter(pac.equal(t["__set"], 1)).select([*pc, "n_rows", "n_invalid", "n_violations"])
+        schema = T.StructType([self.annotated.schema[c] for c in pc] + _COUNT_FIELDS)
+        if not pc and t.num_rows == 0:
+            return local_frame(self.annotated.sparkSession, [(0, None, None, None)], schema)
+        t = t.append_column("passed", pac.equal(t["n_invalid"], 0))
+        if pc:
+            t = _sorted(t, [(c, "ascending") for c in pc])
+        return self.annotated.sparkSession.createDataFrame(t, schema=schema)
 
     def profile(self, columns: Iterable[str] | None = None) -> DataFrame:
         """Column profile (B2/B3) of the VALID rows — the natural follow-up
@@ -165,15 +186,66 @@ class ValidationResult:
         )
 
     def summary(self) -> DataFrame:
-        """Per-constraint-path violation counts (one small aggregate),
-        most frequent first; ties break on ``path`` then ``msg``, so the
-        row order never depends on the physical execution."""
-        return (
-            self.annotated.select(F.explode("violations").alias("v"))
-            .groupBy(F.col("v.path").alias("path"), F.col("v.msg").alias("msg"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), "path", "msg")
+        """Per-constraint-path violation counts (path, msg, n), most
+        frequent first; ties break on ``path`` then ``msg``, NULLs first,
+        so the row order never depends on the physical execution.  The
+        totals do not depend on the partitioning, so any counts table
+        ``verdicts`` already holds answers it without a scan."""
+        t = next(iter(self._counts.values())) if self._counts else self._counts_for([])
+        t = t.filter(pac.and_(pac.equal(t["__set"], 0), pac.greater(t["n_violations"], 0)))
+        t = t.select(["__path", "__msg", "n_violations"]).rename_columns(["path", "msg", "n"])
+        t = _sorted(t, [("n", "descending"), ("path", "ascending"), ("msg", "ascending")])
+        return self.annotated.sparkSession.createDataFrame(t, schema=_SUMMARY_SCHEMA)
+
+    def _counts_for(self, pc: list[str]) -> pa.Table:
+        """The counts table for partitioning ``pc``: collected by the first
+        call, then held."""
+        key = tuple(pc)
+        if key not in self._counts:
+            self._counts[key] = self._count_frame(pc).toArrow()
+        return self._counts[key]
+
+    def _count_frame(self, pc: list[str]) -> DataFrame:
+        """One aggregate over the exploded violations, ``GROUPING SETS
+        ((pc), (path, msg))``: one row per partition (``__set`` = 1) and one
+        per (path, msg) (``__set`` = 0).  An input row explodes to one row
+        per violation at ``pos`` 0, 1, ... or, with none, to one row with a
+        NULL ``pos``; so it counts once in ``n_rows``, once in
+        ``n_invalid`` if it has a violation, and once per violation in
+        ``n_violations``.  |pc groups| + |constraints| rows reach the
+        driver, never one per input row."""
+        pos = F.col("__pos")
+        exploded = self.annotated.select(
+            *pc, F.posexplode_outer("violations").alias("__pos", "__v")
+        ).select(*pc, pos, F.col("__v.path").alias("__path"), F.col("__v.msg").alias("__msg"))
+        return exploded.groupingSets([pc, ["__path", "__msg"]], *pc, "__path", "__msg").agg(
+            F.grouping("__path").alias("__set"),
+            F.count_if((pos == 0) | pos.isNull()).alias("n_rows"),
+            F.count_if(pos == 0).alias("n_invalid"),
+            F.count(pos).alias("n_violations"),
         )
+
+
+#: the verdict counters' types as ``groupBy().agg(count, sum, sum)`` and
+#: ``n_invalid == 0`` type them
+_COUNT_FIELDS = [
+    T.StructField("n_rows", T.LongType(), False),
+    T.StructField("n_invalid", T.LongType(), True),
+    T.StructField("n_violations", T.LongType(), True),
+    T.StructField("passed", T.BooleanType(), True),
+]
+_SUMMARY_SCHEMA = T.StructType([*VIOLATION_STRUCT.fields, T.StructField("n", T.LongType(), False)])
+
+
+def _sorted(t: pa.Table, keys: list[tuple[str, str]]) -> pa.Table:
+    """``t`` in Spark's ``orderBy`` order for these keys: NULLs first on
+    ascending keys, the default; the descending ones here are never NULL.
+    Arrow cannot sort list keys (an array partition column): those rows
+    keep the aggregate's order."""
+    try:
+        return t.take(pac.sort_indices(t, sort_keys=keys, null_placement="at_start"))
+    except (pa.ArrowTypeError, pa.ArrowNotImplementedError):
+        return t
 
 
 class ValidationEngine:

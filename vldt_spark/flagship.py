@@ -4,7 +4,9 @@ One fused scan computes every row-local check; uniqueness and RI add two
 tiny aggregates, computed once inside ``validate_token_table`` (it is
 eager) and broadcast-joined back as driver-held local relations; the
 output is the reference-shaped verdict + violation-rows pair (SURVEY.md
-A1/A16 → B11/B12), and each of ``verdicts``/``summary`` is then one scan.
+A1/A16 → B11/B12).  ``verdicts`` is then one scan, whose one aggregate
+also yields the per-constraint counts, so ``summary`` after it scans
+nothing.
 """
 
 from __future__ import annotations

@@ -40,10 +40,10 @@ import math
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vldt_spark.frames import local_frame
 from vldt_spark.functions.tokens import _arrow_flat_tokens, token_histogram
 
 __all__ = [
@@ -108,14 +108,12 @@ def unigram_lm_table(
     counts, total, _ = _train_counts(df, vocab_size, tokens_col)
     denom = float(total + vocab_size)
     spark = df.sparkSession
-    pdf = pd.DataFrame(
-        {
-            "token": np.arange(vocab_size, dtype=np.int64),
-            "cnt": counts,
-            "logp": np.log((counts + 1.0) / denom),
-        }
-    )
-    return spark.createDataFrame(pdf, schema="token long, cnt long, logp double")
+    cols = {
+        "token": np.arange(vocab_size, dtype=np.int64),
+        "cnt": counts,
+        "logp": np.log((counts + 1.0) / denom),
+    }
+    return local_frame(spark, cols, "token long, cnt long, logp double")
 
 
 def unigram_lm_vector(
@@ -237,7 +235,8 @@ def lm_cross_entropy(
     n_total = n_cur + n_oov
     spark = cur.sparkSession
     if n_total == 0:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(0, None, None, None, None)],
             "n_tokens long, cross_entropy double, ppl double,"
             " self_entropy double, kl double",
@@ -257,7 +256,8 @@ def lm_cross_entropy(
             )
 
         cross, ppl, self_e, kl = r(cross), r(ppl), r(self_e), r(kl)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_total, cross, ppl, self_e, kl)],
         "n_tokens long, cross_entropy double, ppl double,"
         " self_entropy double, kl double",

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vldt_spark.frames import local_frame
 from vldt_spark.functions.dedup import _hash64
 
 
@@ -524,7 +525,8 @@ def mixture_epochs(
     toks = df.groupBy(group_col).agg(
         F.sum(F.col(token_col).cast("double")).alias("__tok")
     )
-    shares = df.sparkSession.createDataFrame(
+    shares = local_frame(
+        df.sparkSession,
         [(k, v / tot_w) for k, v in target_shares.items()],
         f"{group_col} string, __share double",
     )
@@ -578,7 +580,8 @@ def mixture_epochs_report(
     tot_w = float(sum(target_shares.values()))
     if tot_w <= 0:
         raise ValueError("mixture_epochs_report: shares must have a positive sum")
-    shares = before.sparkSession.createDataFrame(
+    shares = local_frame(
+        before.sparkSession,
         [(k, v / tot_w) for k, v in target_shares.items()],
         f"{group_col} string, __share double",
     )

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vldt_spark.frames import local_frame
+
 # RFC-3986-ish component patterns, shared verbatim with the SQL oracles.
 RE_SCHEME = "^([A-Za-z][A-Za-z0-9+.-]*)://"
 RE_HOST = "^[A-Za-z][A-Za-z0-9+.-]*://(?:[^@/?#]*@)?([^:/?#]+)"
@@ -183,9 +185,7 @@ def blocklist_filter(
     if not as_join:
         return df.where(dom.isNull() | ~dom.isin(*blocked_domains))
     spark = df.sparkSession
-    bl = spark.createDataFrame(
-        [(d,) for d in blocked_domains], "blocked_domain string"
-    )
+    bl = local_frame(spark, [(d,) for d in blocked_domains], "blocked_domain string")
     return (
         df.withColumn("__dom", dom)
         .join(

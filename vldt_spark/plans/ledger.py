@@ -87,10 +87,7 @@ class ValidationLedger:
         vio = ValidationResult(
             res.annotated.withColumn("part", part), [*res.id_cols, "part"]
         ).violations()
-        for frame, table in [
-            (spark.createDataFrame(rows, verdicts.schema), "metrics"),
-            (vio, "violations"),
-        ]:
+        for frame, table in [(verdicts, "metrics"), (vio, "violations")]:
             frame.write.option("partitionOverwriteMode", "dynamic").mode(
                 "overwrite"
             ).partitionBy("part").parquet(os.path.join(self.root, table))

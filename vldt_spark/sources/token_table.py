@@ -23,6 +23,8 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vldt_spark.frames import local_frame
+
 VOCAB = 50257
 SOURCES = ["web", "books", "code", "wiki", "news"]
 #: cumulative zipf-ish mix, "web" hot at 70% → drives skew handling (B14)
@@ -154,6 +156,4 @@ def token_sequences_shifted(
 def sources_dim(spark: SparkSession) -> DataFrame:
     """The 5-row sources dimension (target of the anti-join RI check, B6)."""
     licenses = ["common-crawl", "public-domain", "permissive", "cc-by-sa", "licensed"]
-    return spark.createDataFrame(
-        list(zip(SOURCES, licenses)), schema="source string, license string"
-    )
+    return local_frame(spark, zip(SOURCES, licenses), "source string, license string")
