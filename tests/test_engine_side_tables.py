@@ -4,8 +4,9 @@ Each side table is collected in ``run()`` and joined back as a driver-held
 local relation.  These tests pin that the annotated rows equal a reference
 built by hand from ``duplicate_keys`` / ``invalid_fk_values``, that each
 side table costs one labelled job inside ``run()``, that the counts job of
-``verdicts`` is one scan of the input with no uniqueness aggregate in it,
-and that ``summary`` after it runs no job.
+``verdicts`` is one scan of the input with no uniqueness aggregate and no
+``exists`` lambda in it, that ``summary`` after it runs no job, and that
+the joins' and counts' Columns are built once per SparkSession.
 """
 
 import datetime
@@ -394,3 +395,61 @@ def test_summary_order_is_deterministic(spark):
     assert len({r[2] for r in first}) < len(first)  # there is a tie to break
     for parts, ordered in [(7, True), (1, False), (7, False)]:
         assert summary(parts, ordered) == first
+
+
+def _exists_calls(nodes):
+    """The ``exists`` calls in the expressions of the plan ``nodes``."""
+    found = []
+    for node in nodes:
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            text = exprs.apply(i).toString()
+            if "exists(" in text:
+                found.append(text)
+    return found
+
+
+def test_counts_job_runs_no_exists_lambda(spark, token_parquet, monkeypatch):
+    # the flagship's element checks gate on array kernels, not on
+    # exists(tokens, x -> ...), which Spark interprets once per element
+    df = spark.read.parquet(token_parquet[0])
+    dims = {"sources": sources_dim(spark)}
+    res = ValidationEngine(TokenSequence).run(df, id_cols=["doc_id"], dims=dims)
+    assert _exists_calls(_counts_job_plan(res, ["source"])) == []
+
+    # the probe finds them when the guards are the old lambdas
+    from pyspark.sql import functions as F
+
+    from vldt_spark import coercion
+
+    monkeypatch.setattr(
+        coercion, "has_null_element", lambda arr, dt: F.exists(arr, lambda x: x.isNull())
+    )
+    old = ValidationEngine(TokenSequence).run(df, id_cols=["doc_id"], dims=dims)
+    assert _exists_calls(_counts_job_plan(old, ["source"]))
+
+
+def test_new_session_run_equals_and_reuses_built_columns(spark, token_parquet, monkeypatch):
+    from vldt_spark import engine
+
+    built = []
+    for name in ("_count_columns", "_side_columns"):
+        orig = getattr(engine, name)
+        monkeypatch.setattr(
+            engine, name, lambda *a, _orig=orig, _name=name: built.append(_name) or _orig(*a)
+        )
+
+    def verdicts(session):
+        df = session.read.parquet(token_parquet[0])
+        res = ValidationEngine(TokenSequence).run(
+            df, id_cols=["doc_id"], dims={"sources": sources_dim(session)}
+        )
+        return [tuple(r) for r in res.verdicts(["source"]).collect()], res.summary().collect()
+
+    want = verdicts(spark)
+    other = spark.newSession()
+    del built[:]
+    assert verdicts(other) == want
+    assert sorted(built) == ["_count_columns", "_side_columns"]  # built for the new session
+    assert verdicts(other) == want
+    assert sorted(built) == ["_count_columns", "_side_columns"]  # and reused

@@ -239,7 +239,7 @@ def test_empty_violations_cached_per_session(spark):
     c1 = errors.empty_violations()
     c2 = errors.empty_violations()
     assert c1 is c2  # cache hit for the live session
-    assert spark in errors._EMPTY_VIOLATIONS
+    assert spark in errors._SESSION_COLUMNS
 
 
 # -- A23: nested type-keyed dict serializers --------------------------------

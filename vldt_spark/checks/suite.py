@@ -29,6 +29,7 @@ from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vldt_spark.checks.classifier_eval import auc_report, brier_report, ece_report, pr_report
 from vldt_spark.checks.drift import (
@@ -44,6 +45,7 @@ from vldt_spark.checks.referential import ri_report
 from vldt_spark.checks.schema_drift import schema_diff
 from vldt_spark.checks.snapshot import snapshot_summary
 from vldt_spark.checks.uniqueness import duplicate_keys
+from vldt_spark.coercion import elements_outside
 from vldt_spark.frames import local_frame
 from vldt_spark.functions.dedup import (
     contamination_report,
@@ -119,8 +121,9 @@ class expect:
     ) -> Expectation:
         """Array-column element bounds — e.g. every token id inside the
         vocabulary (the north-star token table's core invariant). A row
-        violates when ANY element is out of range (exists(), row-local —
-        fuses into the single aggregate pass and streams)."""
+        violates when ANY element is out of range: the fused pass's own
+        verdict, ``coercion.elements_outside`` (row-local — fuses into the
+        single aggregate pass and streams)."""
         return Expectation(
             "element_range",
             column,
@@ -716,8 +719,9 @@ class _Kind:
     """One expectation kind, defined once.  Exactly one of ``bad``,
     ``aggs`` and ``read`` is set:
 
-    * ``bad(col, params)`` — row-local violation predicate, summed in the
-      fused pass.  The report row is built Spark-side by ``_report_struct``
+    * ``bad(col, params, dtype)`` — row-local violation predicate, summed
+      in the fused pass; ``dtype`` is the column's Spark type (None for a
+      nested path).  The report row is built Spark-side by ``_report_struct``
       (shared with ``run_stream``): metric = violation count against the
       ``limit`` param, or the violation rate when ``limit == "rate"``.
     * ``aggs(col, params)`` — aggregate columns over the table, whose
@@ -776,7 +780,7 @@ def _outside(x, p):
     return bad
 
 
-def _range_bad(c, p):
+def _range_bad(c, p, dt):
     bad = F.lit(False)
     if p["lo"] is not None:
         lo = F.lit(p["lo"])
@@ -1010,18 +1014,20 @@ def _centroid(df, e):
 
 
 def _sized(size):
-    return lambda c, p: c.isNotNull() & _outside(size(c), p)
+    return lambda c, p, dt: c.isNotNull() & _outside(size(c), p)
 
 
 _KINDS: dict[str, _Kind] = {
     # row-local: one violation predicate each, summed in the fused pass
-    "not_null": _Kind(bad=lambda c, p: c.isNull(), limit="max_nulls"),
-    "null_rate_below": _Kind(bad=lambda c, p: c.isNull(), limit="rate"),
+    "not_null": _Kind(bad=lambda c, p, dt: c.isNull(), limit="max_nulls"),
+    "null_rate_below": _Kind(bad=lambda c, p, dt: c.isNull(), limit="rate"),
     "range": _Kind(bad=_range_bad),
-    "regex": _Kind(bad=lambda c, p: c.isNotNull() & ~c.rlike(p["pattern"])),
-    "isin": _Kind(bad=lambda c, p: c.isNotNull() & ~c.isin(p["values"])),
+    "regex": _Kind(bad=lambda c, p, dt: c.isNotNull() & ~c.rlike(p["pattern"])),
+    "isin": _Kind(bad=lambda c, p, dt: c.isNotNull() & ~c.isin(p["values"])),
     "element_range": _Kind(
-        bad=lambda c, p: c.isNotNull() & F.exists(c, lambda x: x.isNotNull() & _outside(x, p))
+        bad=lambda c, p, dt: elements_outside(
+            c, dt.elementType if isinstance(dt, T.ArrayType) else None, p["lo"], p["hi"]
+        )
     ),
     "length_between": _Kind(bad=_sized(F.length)),
     "size_between": _Kind(bad=_sized(F.size)),
@@ -1107,11 +1113,15 @@ def _has_distinct(cols: list[Column]) -> bool:
     return False
 
 
-def _counts(exps: list[Expectation]) -> list[Column]:
+def _counts(exps: list[Expectation], schema: T.StructType) -> list[Column]:
     """Row count ``__n`` and each row-local expectation's violation count
-    ``__m_<i>`` — the aggregates ``_report_struct`` reads."""
+    ``__m_<i>`` over a frame of ``schema`` — the aggregates
+    ``_report_struct`` reads."""
+    types = {f.name: f.dataType for f in schema.fields}
     return [F.count(F.lit(1)).alias("__n")] + [
-        F.sum(_KINDS[e.kind].bad(F.col(e.column), e.params).cast("long")).alias(f"__m_{i}")
+        F.sum(
+            _KINDS[e.kind].bad(F.col(e.column), e.params, types.get(e.column)).cast("long")
+        ).alias(f"__m_{i}")
         for i, e in enumerate(exps)
     ]
 
@@ -1257,7 +1267,7 @@ class Suite:
             }
             if row_local or fused:
                 wide = df.agg(
-                    *_counts(row_local),
+                    *_counts(row_local, df.schema),
                     *[c.alias(f"__a_{i}_{j}") for i, _, cols in fused for j, c in enumerate(cols)],
                 )
                 one = wide.select(
@@ -1306,7 +1316,7 @@ class Suite:
         win = (
             stream_df.withWatermark(ts_col, watermark)
             .groupBy(F.window(F.col(ts_col), window).alias("__w"))
-            .agg(*_counts(exps))
+            .agg(*_counts(exps, stream_df.schema))
         )
         rows = [_report_struct(e, i) for i, e in enumerate(exps)]
         return win.select(

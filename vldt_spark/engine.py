@@ -54,9 +54,9 @@ from vldt_spark.coercion import build_value, default_column, scalar_constraints
 from vldt_spark.errors import (
     VIOLATION_STRUCT,
     VIOLATIONS_TYPE,
-    empty_violations,
     merge_violations,
     missing_required_msg,
+    session_columns,
     violation_if,
 )
 from vldt_spark.frames import local_frame
@@ -214,16 +214,32 @@ class ValidationResult:
         ``n_invalid`` if it has a violation, and once per violation in
         ``n_violations``.  |pc groups| + |constraints| rows reach the
         driver, never one per input row."""
-        pos = F.col("__pos")
-        exploded = self.annotated.select(
-            *pc, F.posexplode_outer("violations").alias("__pos", "__v")
-        ).select(*pc, pos, F.col("__v.path").alias("__path"), F.col("__v.msg").alias("__msg"))
-        return exploded.groupingSets([pc, ["__path", "__msg"]], *pc, "__path", "__msg").agg(
-            F.grouping("__path").alias("__set"),
-            F.count_if((pos == 0) | pos.isNull()).alias("n_rows"),
-            F.count_if(pos == 0).alias("n_invalid"),
-            F.count(pos).alias("n_violations"),
+        keys, explode, fields, path_msg, aggs = session_columns(
+            self.annotated.sparkSession, ("counts", *pc), lambda: _count_columns(pc)
         )
+        return (
+            self.annotated.select(*keys, explode)
+            .select(*fields)
+            .groupingSets([keys, path_msg], *keys, *path_msg)
+            .agg(*aggs)
+        )
+
+
+def _count_columns(pc: list[str]) -> tuple:
+    """``_count_frame``'s Columns for partitioning ``pc``: the partition
+    keys, the explode, the fields it selects, (path, msg) and the
+    aggregates."""
+    keys = [F.col(c) for c in pc]
+    pos = F.col("__pos")
+    fields = [*keys, pos, F.col("__v.path").alias("__path"), F.col("__v.msg").alias("__msg")]
+    aggs = [
+        F.grouping("__path").alias("__set"),
+        F.count_if((pos == 0) | pos.isNull()).alias("n_rows"),
+        F.count_if(pos == 0).alias("n_invalid"),
+        F.count(pos).alias("n_violations"),
+    ]
+    explode = F.posexplode_outer("violations").alias("__pos", "__v")
+    return keys, explode, fields, [F.col("__path"), F.col("__msg")], aggs
 
 
 #: the verdict counters' types as ``groupBy().agg(count, sum, sum)`` and
@@ -527,8 +543,12 @@ class ValidationEngine:
         field) is computed here, once, as one job labelled
         ``vldt:engine.run:<check>``, and held on the driver as a local
         relation; two or more are computed concurrently.  They are then
-        broadcast-joined onto the fused pass in declaration order, so every
-        later action on the result is one scan of ``df``.
+        broadcast-joined onto the fused pass in declaration order and their
+        violations merged in one projection, so every later action on the
+        result is one scan of ``df``.  The joins' Columns, like the counts'
+        (``_count_frame``), do not depend on the data: they are built once
+        per SparkSession (``errors.session_columns``), since each ``F.*``
+        call is a few py4j round trips.
 
         ``unique_within`` scopes every uniqueness check to the groups of
         those columns (embedded uniqueness on ``(*unique_within, key)``), so
@@ -537,9 +557,16 @@ class ValidationEngine:
         ann = self.annotate(df, keep_extra=keep_extra)
         ids = list(id_cols) if id_cols else [self.compiled.fields[0].name]
         sides = self._side_tables(df, ann, dims or {}, list(unique_within))
-        for side, local in zip(sides, _materialize(df.sparkSession, sides)):
-            ann = side.join_onto(ann, local)
-        ann = ann.withColumn("is_valid", F.size("violations") == 0)
+        spark = df.sparkSession
+        specs = tuple((tuple(s.keys), s.path, s.msg) for s in sides)
+        selects, conds, merged, names, is_valid = session_columns(
+            spark, ("sides", *specs), lambda: _side_columns(specs)
+        )
+        for cond, local in zip(conds, _materialize(spark, sides, selects)):
+            ann = ann.join(F.broadcast(local), cond, "left")
+        if sides:
+            ann = ann.withColumn("violations", merged).drop(*names)
+        ann = ann.withColumn("is_valid", is_valid)
         return ValidationResult(annotated=ann, id_cols=ids)
 
     def _side_tables(
@@ -619,31 +646,34 @@ class _SideTable:
     path: str
     msg: str
 
-    @property
-    def keyed(self) -> DataFrame:
-        """The key columns only, renamed ``__k0, __k1, ...``."""
-        return self.frame.select(
-            *[F.col(k).alias(f"__k{j}") for j, k in enumerate(self.keys)]
-        )
 
-    def join_onto(self, ann: DataFrame, local: DataFrame) -> DataFrame:
-        """Left broadcast join of the materialized ``keyed`` table; the
-        frame is distinct on its keys, so no row is multiplied."""
-        cond = F.lit(True)
-        for j, k in enumerate(self.keys):
-            cond = cond & (ann[k] == F.col(f"__k{j}"))
-        extra = violation_if(F.col("__k0").isNotNull(), self.path, self.msg)
-        return (
-            ann.join(F.broadcast(local), cond, "left")
-            .withColumn("violations", merge_violations(F.col("violations"), extra))
-            .drop(*[f"__k{j}" for j in range(len(self.keys))])
-        )
+def _side_columns(specs: tuple) -> tuple:
+    """The Columns that join side tables ``specs`` — (keys, path, msg) each,
+    in join order — onto the fused pass: per table, the select that renames
+    its keys ``__s<i>k<j>`` (so the tables join side by side) and the left
+    join condition; then the merged violations, the key names to drop and
+    ``is_valid``.  Each table is distinct on its keys, so no row is
+    multiplied."""
+    selects, conds, flags, names = [], [], [], []
+    for i, (keys, path, msg) in enumerate(specs):
+        ks = [f"__s{i}k{j}" for j in range(len(keys))]
+        selects.append([F.col(k).alias(n) for k, n in zip(keys, ks)])
+        cond = F.col(keys[0]) == F.col(ks[0])
+        for k, n in zip(keys[1:], ks[1:]):
+            cond = cond & (F.col(k) == F.col(n))
+        conds.append(cond)
+        flags.append(violation_if(F.col(ks[0]).isNotNull(), path, msg))
+        names += ks
+    merged = merge_violations(F.col("violations"), *flags)
+    return selects, conds, merged, names, F.size("violations") == 0
 
 
-def _materialize(spark: SparkSession, sides: list[_SideTable]) -> list[DataFrame]:
-    """Collect each side table once (as Arrow) and re-create it as a
-    driver-held local relation — the bytes the broadcast would ship
-    anyway, fetched once per run instead of once per action.  Each is
+def _materialize(
+    spark: SparkSession, sides: list[_SideTable], selects: list[list[Column]]
+) -> list[DataFrame]:
+    """Collect each side table's renamed keys once (as Arrow) and re-create
+    them as a driver-held local relation — the bytes the broadcast would
+    ship anyway, fetched once per run instead of once per action.  Each is
     collected from a pool thread, so several run concurrently, as a job
     described ``vldt:engine.run:<label>``; the caller's own job
     description is never touched."""
@@ -651,16 +681,19 @@ def _materialize(spark: SparkSession, sides: list[_SideTable]) -> list[DataFrame
 
     from pyspark.util import inheritable_thread_target
 
-    def one(side: _SideTable) -> DataFrame:
+    def one(side: _SideTable, select: list[Column]) -> DataFrame:
         spark.sparkContext.setJobDescription(f"vldt:engine.run:{side.label}")
-        keyed = side.keyed
+        keyed = side.frame.select(*select)
         return spark.createDataFrame(keyed.toArrow(), schema=keyed.schema)
 
     # wrapped per task: a wrapper copies the caller's local properties once
     # and every thread running it mutates that one copy, so a wrapper
     # shared by all tasks would let their descriptions overwrite each other
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(one), s) for s in sides]
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(one), side, select)
+            for side, select in zip(sides, selects)
+        ]
         return [f.result() for f in futures]
 
 

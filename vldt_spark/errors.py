@@ -21,6 +21,7 @@ Paths use dotted lineage with numeric list indices / dict keys:
 from __future__ import annotations
 
 import weakref
+from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -46,16 +47,28 @@ def violation_if(cond: Column, path: Column | str, msg: Column | str) -> Column:
     return F.when(cond, F.array(violation(path, msg))).otherwise(empty_violations())
 
 
-#: Catalyst expressions are immutable, so one empty-array Column can appear
-#: in every expression tree — re-building it per check costs a DataType→JVM
-#: conversion each time, which dominates driver-side plan construction for
-#: wide models (measured: ~40% of a 120-field annotate build). In classic
-#: py4j mode a Column holds a reference through the gateway that created
-#: it, so the cache is keyed on the owning SparkSession — via a WEAK
-#: reference: id()-keying could serve a stale Column when CPython reuses a
-#: dead session's id, and would pin dead gateways alive. A garbage-collected
-#: session evicts its entry for free.
-_EMPTY_VIOLATIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+#: Catalyst expressions are immutable, so a Column built once can appear in
+#: every expression tree that needs it.  Building one is not free: each
+#: ``F.*`` call is a few py4j round trips, and re-building the empty array
+#: per check (a DataType→JVM conversion) once dominated driver-side plan
+#: construction for wide models (measured: ~40% of a 120-field annotate
+#: build).  In classic py4j mode a Column holds a reference through the
+#: gateway that created it, so the cache is keyed on the owning
+#: SparkSession — via a WEAK reference: id()-keying could serve a stale
+#: Column when CPython reuses a dead session's id, and would pin dead
+#: gateways alive.  A garbage-collected session evicts its entry for free.
+_SESSION_COLUMNS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def session_columns(spark, key, build: Callable[[], Any]) -> Any:
+    """``build()`` — data-independent Columns — built once per
+    SparkSession and ``key``, then reused by every plan of that session."""
+    per_session = _SESSION_COLUMNS.get(spark)
+    if per_session is None:
+        per_session = _SESSION_COLUMNS[spark] = {}
+    if key not in per_session:
+        per_session[key] = build()
+    return per_session[key]
 
 
 def empty_violations() -> Column:
@@ -64,11 +77,7 @@ def empty_violations() -> Column:
     s = SparkSession.getActiveSession()
     if s is None:
         return F.array().cast(VIOLATIONS_TYPE)
-    col = _EMPTY_VIOLATIONS.get(s)
-    if col is None:
-        col = F.array().cast(VIOLATIONS_TYPE)
-        _EMPTY_VIOLATIONS[s] = col
-    return col
+    return session_columns(s, "empty_violations", lambda: F.array().cast(VIOLATIONS_TYPE))
 
 
 def merge_violations(*arrays: Column) -> Column:
