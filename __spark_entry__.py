@@ -596,7 +596,8 @@ def q_unigram_logprob_documents(spark, sf_dir):
     unigram LM on the corpus's own char tokens, score every sequence's
     mean token log-prob + perplexity — the cheapest model-based quality
     signal (CCNet/Gopher trim both perplexity tails).  Train = the
-    token_histogram bincount fold (|vocab| exchange rows per partition);
+    token_histogram native map-side-combined count (at most
+    |distinct tokens| + 1 exchange rows per partition, no Python stage);
     score = ONE mapInArrow scan with the |vocab| log-prob vector closed
     over — token arrays never ride a shuffle, there is no join.  The
     oracle replays the naive explode ⋈ logp form DuckDB-side."""

@@ -1,7 +1,8 @@
-"""The Arrow training fold behind the unigram LM: `token_histogram` and
+"""The training fold behind the unigram LM: `token_histogram` and
 `unigram_logprob` against a pure-Python reference on NULL, empty, OOV and
-int32-extreme token arrays, identical under every Arrow batch size and
-input row order; and `lm_cross_entropy` scanning each corpus once."""
+int32-extreme token arrays, identical under every Arrow batch size,
+shuffle width, AQE setting and input row order; `lm_cross_entropy`
+scanning each corpus once; and `ppl_band_filter` scoring once."""
 
 import math
 import random
@@ -9,6 +10,7 @@ import uuid
 from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -116,6 +118,48 @@ def test_fold_matches_python_reference_at_any_batch_size(spark, arrays, seed):
     assert results[0] == results[1] == results[2]
 
 
+I64 = st.sampled_from([-(2**62), -(2**40), 2**40, 2**62])
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    arrays=st.lists(array_strat, max_size=12),
+    wide=st.lists(
+        st.one_of(st.none(), st.lists(st.one_of(token_strat, I64), max_size=6)),
+        max_size=6,
+    ),
+    seed=st.integers(0, 2**16),
+)
+def test_histogram_is_invariant_to_partitions_aqe_and_order(spark, arrays, wide, seed):
+    # the native fold against the reference under every shuffle width,
+    # AQE setting and input order, for array<int> and array<bigint>
+    cases = [(SCHEMA, arrays), ("doc_id string, tokens array<bigint>", arrays + wide)]
+    old = {k: spark.conf.get(k) for k in ("spark.sql.shuffle.partitions",
+                                          "spark.sql.adaptive.enabled")}
+    try:
+        for parts in (1, 7):
+            for aqe in ("true", "false"):
+                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                for schema, arrs in cases:
+                    rows = [(f"d{i}", a) for i, a in enumerate(arrs)]
+                    random.Random(seed + parts).shuffle(rows)
+                    df = spark.createDataFrame(rows, schema)
+                    want = py_histogram(arrs)
+                    hist = {r["token"]: r["cnt"] for r in token_histogram(df, V).collect()}
+                    assert hist == want, (parts, aqe, schema)
+                    counts, total, n_oov = lm._train_counts(df, V, "tokens")
+                    assert counts.tolist() == [want.get(t, 0) for t in range(V)]
+                    assert total == sum(counts) and n_oov == want.get(-1, 0)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def test_fold_edge_rows(spark):
     arrays = [
         None, [], [None], [None, None, 3], [I32_MIN, I32_MAX],
@@ -221,3 +265,59 @@ def test_ppl_band_filter_keeps_each_scored_row_once(spark, exact):
     out = lm.ppl_band_filter(df, 16, lo=0.0, hi=1.0, exact=exact)
     got = Counter((r["doc_id"], tuple(r["tokens"])) for r in out.collect())
     assert got == Counter((i, tuple(t)) for i, t, _ in rows if t)
+
+
+def _final_plan_nodes(df):
+    """(node, nearest exchange above it) for every node of ``df``'s final
+    adaptive plan, the query stages' plans included."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        root = root.executedPlan()
+    out, todo = [], [(root, None)]
+    while todo:
+        node, above = todo.pop()
+        out.append((node, above))
+        cls = node.getClass().getSimpleName()
+        if cls.endswith("ExchangeExec"):
+            above = node
+        if cls.endswith("QueryStageExec"):
+            todo.append((node.plan(), above))
+        children = node.children()
+        todo.extend((children.apply(i), above) for i in range(children.size()))
+    return out
+
+
+def _has_node(plan, suffix):
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName().endswith(suffix):
+            return True
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+def test_ppl_band_filter_scores_once(spark):
+    # the approximate band reads one scored relation twice (thresholds and
+    # filter): the final plan runs the scoring MapInArrow under one
+    # exchange and reuses that exchange for the second read
+    rows = [
+        (f"d{i}", [(i * j) % 13 for j in range(1 + i % 7)], ["web", "wiki"][i % 2])
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, source string")
+    out = lm.ppl_band_filter(df, 16, exact=False).agg(F.count(F.lit(1)).alias("n"))
+    assert out.collect()[0]["n"] > 0
+    nodes = _final_plan_nodes(out)
+    scans = [(n, above) for n, above in nodes
+             if n.getClass().getSimpleName().endswith("MapInArrowExec")]
+    assert len(scans) == 1
+    above = scans[0][1]
+    assert above is not None
+    assert above.getClass().getSimpleName() != "ReusedExchangeExec"
+    reused = [n for n, _ in nodes
+              if n.getClass().getSimpleName() == "ReusedExchangeExec"
+              and _has_node(n.child(), "MapInArrowExec")]
+    assert len(reused) == 1
+    assert reused[0].child().canonicalized().equals(above.canonicalized())

@@ -187,17 +187,62 @@ def test_token_bigram_topk_deterministic(toks_df):
     assert [r["rank"] for r in rows] == [1, 2, 3]
 
 
-def test_histogram_never_explodes_tokens_through_shuffle(toks_df):
-    # the exchange input must be the mapInArrow partials (token, cnt),
-    # not an explode of the token arrays
-    plan = (
-        token_histogram(toks_df, 100)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def _final_plan_nodes(df):
+    """Every node of ``df``'s executed plan, the query stages' plans
+    included (the final adaptive plan when AQE is on)."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        root = root.executedPlan()
+    nodes, todo = [], [root]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(node.plan())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_histogram_never_ships_token_arrays_through_shuffle(spark, aqe):
+    # the property the histogram's scale rests on: no exchange carries a
+    # token array, and the shuffle writes at most |distinct tokens| + 1
+    # partial rows per map partition -- far fewer than the tokens
+    n_parts, n_rows, seq_len = 3, 300, 40
+    rows = [
+        (f"d{i}", [None if (i + j) % 17 == 0 else (i * j) % 11 + (j % 3) * 500
+                   for j in range(seq_len)])
+        for i in range(n_rows)
+    ]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, n_parts),
+        "doc_id string, tokens array<int>",
     )
-    assert "Generate explode" not in plan
-    assert "MapInArrow" in plan
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        hist = token_histogram(df, 100)
+        got = hist.collect()
+        nodes = _final_plan_nodes(hist)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    assert sum(r["cnt"] for r in got) == n_rows * seq_len
+    exchanges = [n for n in nodes if "Exchange" in n.getClass().getSimpleName()]
+    shuffles = [
+        n for n in exchanges
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+    assert shuffles
+    for ex in exchanges:
+        out = ex.output()
+        types = [out.apply(i).dataType().typeName() for i in range(out.size())]
+        assert "array" not in types, (ex.getClass().getSimpleName(), types)
+    written = sum(
+        ex.metrics().apply("shuffleRecordsWritten").value() for ex in shuffles
+    )
+    distinct = sum(1 for r in got if r["token"] >= 0)
+    assert 0 < written <= n_parts * (distinct + 1) < n_rows * seq_len
 
 
 # -- sequence_stats / zipf_report (round 5) ------------------------------

@@ -639,11 +639,11 @@ def token_unigram_drift(
     provenance). A retrained tokenizer, a new scrape, or a filtering
     change all move this before they move anything else.
 
-    Scale shape: each side's histogram is the per-partition numpy
-    bincount fold (``token_histogram`` — token arrays never ride a
-    shuffle; the exchange is |vocab| partial rows per partition), and the
-    metric join is the standard tiny-input (bin, n) full-outer +
-    eps-smoothed probabilities (``_paired_probs``), identical smoothing
+    Scale shape: each side's histogram is ``token_histogram``'s native
+    map-side-combined count (token arrays never ride a shuffle; the
+    exchange is at most |distinct tokens| + 1 partial rows per
+    partition), and the metric join is the standard tiny-input (bin, n)
+    full-outer + eps-smoothed probabilities (``_paired_probs``), identical smoothing
     and rounding to the rest of the drift family. OOV ids fold into the
     token = -1 bin on both sides so mass is conserved. Returns one row
     (psi, js, kl) rounded to 6."""

@@ -5,8 +5,13 @@ One ``Model(**row)`` call in the reference (tp_init,
 ``df.select`` projection here: alias resolution → defaults → BEFORE UDFs →
 coercion casts → AFTER UDFs → declarative constraints → cross-field checks,
 all violations concatenated into one ``violations`` array column, evaluated
-in one whole-stage-codegen'd scan. "Raise TypeError" ≙ ``is_valid=false`` +
-violation rows; "return instance" ≙ the coerced canonical columns.
+in one scan. That projection runs interpreted, outside whole-stage codegen:
+the violation-lineage lambdas (``transform``/``filter`` under ``CASE WHEN``)
+are ``CodegenFallback`` expressions, which keep the whole ``Project`` out of
+the codegen stages around it; the verdict guards that every row evaluates
+are lambda-free array kernels, so only violating rows reach a lambda.
+"Raise TypeError" ≙ ``is_valid=false`` + violation rows; "return instance"
+≙ the coerced canonical columns.
 
 Whole-table checks that cannot be row-local expressions — uniqueness (B5)
 and referential integrity (B6) — run as separate small aggregates whose

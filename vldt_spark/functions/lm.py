@@ -12,11 +12,12 @@ Reference parity: the reference validates rows against a declared model
 "model" is learned from the corpus and every row is scored against it.
 
 Scale design (10^12 sequences, |vocab| ~ 10^5):
-- TRAIN is `token_histogram`'s per-partition dense bincount fold: one
-  `mapInArrow` pass that flattens each Arrow batch once and adds ONE
-  `np.bincount` per batch — no Python runs per row.  Token arrays never
-  ride a shuffle; the exchange carries at most |vocab| rows per
-  partition and the final aggregate is |vocab|-sized.
+- TRAIN is `token_histogram`: a native explode → groupBy(token) count
+  whose partial aggregate runs map-side, so no Python worker starts and
+  token arrays never ride a shuffle; the exchange carries at most
+  |distinct tokens| + 1 rows per partition and the final aggregate is
+  |vocab|-sized.  Every Python stage has a fixed per-task cost (see
+  DEVELOPING.md), so the only Python stage left in scoring is SCORE.
 - The |vocab|+1-row histogram is collected once on the driver as Arrow
   (`DataFrame.toArrow`, no `Row` objects) and scattered into the dense
   count vector with one NumPy index assignment; its token = -1 row is
@@ -145,9 +146,9 @@ def unigram_logprob(
     at the unseen floor ln(1 / (N + |vocab|)).
 
     Two passes over the fact table, zero exchanges of token arrays: the
-    |vocab|-bounded train fold, then one mapInArrow scoring scan with the
-    log-prob vector closed over (see module docstring for why not a join).
-    The scoring kernel (`_flat_mean_logp`) has NO per-row Python: the
+    native |vocab|-bounded train aggregate, then one mapInArrow scoring
+    scan with the log-prob vector closed over (see module docstring for
+    why not a join).  The scoring kernel (`_flat_mean_logp`) has NO per-row Python: the
     Arrow list column is flattened zero-copy (`_arrow_flat_tokens`), the
     whole flat token relation is scored with one vectorized gather, and
     per-row means come from one `np.add.reduceat` over the row segments.
@@ -217,8 +218,8 @@ def lm_cross_entropy(
     Scale shape — the part worth noticing: NO scoring scan exists.
     Cross-entropy under a unigram model depends on the current corpus
     only through its token HISTOGRAM (H = -Σ_t p_cur(t)·logp_ref(t)), so
-    the whole op is the two |vocab|-bounded bincount folds (one scan of
-    each corpus; cur's OOV count comes from its histogram's token = -1
+    the whole op is the two |vocab|-bounded histogram aggregates (one
+    scan of each corpus; cur's OOV count comes from its histogram's token = -1
     row) plus |vocab| driver-side multiply-adds.  Tokens outside
     [0, vocab) contribute at the respective model's unseen floor.
     """
@@ -299,7 +300,10 @@ def ppl_band_filter(
       edge rows vs the exact path (documented, not hidden).
 
     The scoring pass itself is ``unigram_logprob`` — zero token-array
-    exchanges either way.
+    exchanges either way.  With ``exact=False`` the thresholds and the
+    filter both read the scored relation, and the final adaptive plan
+    runs its scoring ``MapInArrow`` once: the second read is a
+    ``ReusedExchange`` of the first one's broadcast.
     """
     from pyspark.sql import Window
 
