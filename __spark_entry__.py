@@ -4505,7 +4505,8 @@ WITH d AS (
               ELSE text END AS t
   FROM documents
 )
-SELECT source, count(*) AS n_docs,
+-- NULL text carries no signal and counts in no cell, n_docs included
+SELECT source, count(t) AS n_docs,
        CAST(sum(CASE WHEN regexp_matches(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}') THEN 1 ELSE 0 END) AS BIGINT) AS n_email,
        CAST(sum(CASE WHEN regexp_matches(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b') THEN 1 ELSE 0 END) AS BIGINT) AS n_ip,
        CAST(sum(CASE WHEN regexp_matches(t, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b') THEN 1 ELSE 0 END) AS BIGINT) AS n_phone
@@ -7521,7 +7522,8 @@ WITH d AS (
 """
 
 SQL_PII_REDACT_REPORT_DOCUMENTS = _SQL_PII_INJ + r"""
-SELECT source, count(*) AS n_docs,
+-- NULL text counts in no cell, n_docs included
+SELECT source, count(t) AS n_docs,
        CAST(sum(CASE WHEN n_email + n_ip + n_phone > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_redacted,
        CAST(sum(n_email) AS BIGINT) AS n_email,
        CAST(sum(n_ip) AS BIGINT) AS n_ip,
@@ -7738,7 +7740,8 @@ WITH d AS (
               ELSE text END AS t
   FROM documents
 ), pii AS (
-  SELECT round(avg(CASE WHEN
+  -- NULL text counts in neither the numerator nor the denominator
+  SELECT round(avg(CASE WHEN t IS NULL THEN NULL WHEN
            regexp_matches(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')
            OR regexp_matches(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')
            OR regexp_matches(t, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b')
@@ -7838,20 +7841,21 @@ WITH d AS (
               ELSE text END AS t
   FROM documents
 ), f AS (
-  SELECT window_epoch,
+  SELECT window_epoch, t,
          CASE WHEN regexp_matches(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}') THEN 1 ELSE 0 END AS e,
          CASE WHEN regexp_matches(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b') THEN 1 ELSE 0 END AS i,
          CASE WHEN regexp_matches(t, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b') THEN 1 ELSE 0 END AS ph
   FROM d
 )
+-- NULL text counts in no cell, n_docs included
 SELECT window_epoch,
-       count(*) AS n_docs,
+       count(t) AS n_docs,
        CAST(sum(e) AS BIGINT) AS n_email,
        CAST(sum(i) AS BIGINT) AS n_ip,
        CAST(sum(ph) AS BIGINT) AS n_phone,
        CAST(sum(CASE WHEN e + i + ph > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_any,
        round(CAST(sum(CASE WHEN e + i + ph > 0 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*), 6) AS pii_frac
+             / count(t), 6) AS pii_frac
 FROM f GROUP BY window_epoch
 """
 

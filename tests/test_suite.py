@@ -133,7 +133,8 @@ _GOLDEN_ROWS = [
     (5, "a-5", 0.1234565, "x", [7], _GOOD),
 ]
 
-# reports of the kind-ladder runner this table replaced, row for row
+# reports of the kind-ladder runner this table replaced, row for row, but
+# for the PII and C4 shares: a NULL text counts in neither share
 _GOLDEN_SMALL = [
     ("not_null", "score", 1.0, 0.0, False),
     ("null_rate_below", "name", 0.166667, 0.5, True),
@@ -154,8 +155,8 @@ _GOLDEN_SMALL = [
     ("distinct_seq_frac_above", "tokens", 0.666667, 0.5, True),
     ("distinct_text_frac_above", "text", 0.666667, 0.5, True),
     ("gopher_pass_frac_above", "text", 0.0, 0.1, False),
-    ("c4_pass_frac_above", "text", 0.333333, 0.1, True),
-    ("pii_frac_below", "text", 0.166667, 0.5, True),
+    ("c4_pass_frac_above", "text", 0.4, 0.1, True),
+    ("pii_frac_below", "text", 0.2, 0.5, True),
     ("fertility_between", "text", 1.444444, 2.0, True),
     ("distinct_seq_frac_above", "tokens", 0.666667, 0.5, True),
 ]
@@ -213,8 +214,8 @@ def test_suite_psi_expectation(spark):
 
 def test_suite_from_model_matches_engine(spark):
     """A model doubles as a table contract: the derived suite's range
-    metric equals the engine's per-row violation count for the same
-    field on the same (dirty) table."""
+    metrics (one row per bound) sum to the engine's per-row violation
+    count for the same field on the same (dirty) table."""
     from vldt_spark import validate
     from vldt_spark.flagship import TokenSequence
     from vldt_spark.sources.token_table import sources_dim, token_sequences
@@ -222,9 +223,12 @@ def test_suite_from_model_matches_engine(spark):
     df = token_sequences(spark, 2000)  # includes injected violations
     dims = {"sources": sources_dim(spark)}
     suite = Suite.from_model(TokenSequence, dims=dims)
-    rep = {(r["check"], r["column"]): r for r in suite.run(df).collect()}
+    rows = suite.run(df).collect()
+    rep = {(r["check"], r["column"]): r for r in rows}
     assert ("unique", "doc_id") in rep and ("ref", "source") in rep
     assert ("regex", "doc_id") in rep and ("range", "n_tok") in rep
+    n_tok_ranges = [r["metric"] for r in rows if (r["check"], r["column"]) == ("range", "n_tok")]
+    assert len(n_tok_ranges) == 2  # ge=1 and le=2048
 
     res = validate(df, TokenSequence, id_cols=["doc_id"], dims=dims)
     n_range_engine = (
@@ -232,7 +236,7 @@ def test_suite_from_model_matches_engine(spark):
         .where((F.col("path") == "n_tok") & F.col("msg").contains("out of range"))
         .count()
     )
-    assert rep[("range", "n_tok")]["metric"] == float(n_range_engine)
+    assert sum(n_tok_ranges) == float(n_range_engine)
     n_ref_engine = (
         res.violations().where(F.col("msg").contains("Referential integrity")).count()
     )

@@ -53,6 +53,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vldt_spark.cells import Cells, grouped
+
 _MICRO = 1_000_000
 
 
@@ -280,6 +282,40 @@ def brier_report(
     )
 
 
+def confusion_cells(score: Column, label: Column, threshold: float) -> Cells:
+    """The confusion family's cells at ``score >= threshold`` against
+    boolean/0-1 ``label``, shared by `confusion_report` and
+    `streaming.clf_stream.stream_confusion_windows`: tp, fp, fn, tn.  A
+    row with a NULL score or label carries no verdict and counts in no
+    cell."""
+    s = score.cast("double")
+    y = label.cast("boolean").cast("long")
+    pred = (s >= F.lit(float(threshold))).cast("long")
+    return Cells(
+        s.isNotNull() & y.isNotNull(),
+        {"tp": pred * y, "fp": pred * (1 - y), "fn": (1 - pred) * y, "tn": (1 - pred) * (1 - y)},
+    )
+
+
+def confusion_ratios(tp: Column, fp: Column, fn: Column, tn: Column) -> dict[str, Column]:
+    """precision, recall, f1 and accuracy of confusion counts, unrounded;
+    a zero denominator gives NULL, never a fake 0."""
+    tp, fp, fn, tn = (c.cast("double") for c in (tp, fp, fn, tn))
+    precision = F.when(tp + fp > 0, tp / (tp + fp))
+    recall = F.when(tp + fn > 0, tp / (tp + fn))
+    f1 = F.when(
+        precision.isNotNull() & recall.isNotNull() & (precision + recall > 0),
+        2 * precision * recall / (precision + recall),
+    )
+    n = tp + fp + fn + tn
+    return {
+        "precision": precision,
+        "recall": recall,
+        "f1": f1,
+        "accuracy": F.when(n > 0, (tp + tn) / n),
+    }
+
+
 def confusion_report(
     df: DataFrame,
     score_col: str,
@@ -292,36 +328,15 @@ def confusion_report(
     ``score >= threshold``. AUC certifies the ranking; this certifies
     the CUT the pipeline actually applies (the quality filter ships with
     one threshold, and its junk leak-through rate is 1 − precision of
-    the keep side). One conditional aggregate over a single scan — four
-    long partials per map task, no shuffle of anything row-sized.
-    Zero-denominator slices (no predicted positives / no actual
-    positives) report NULL precision/recall/f1 rather than a fake 0."""
-    sl = _score_label(df, score_col, label_col, quantize=None)
-    pred = (F.col("__s") >= F.lit(float(threshold))).cast("long")
-    y = F.col("__y")
-    agg = sl.agg(
-        F.sum(pred * y).alias("tp"),
-        F.sum(pred * (1 - y)).alias("fp"),
-        F.sum((1 - pred) * y).alias("fn"),
-        F.sum((1 - pred) * (1 - y)).alias("tn"),
-    )
-    tp, fp, fn, tn = (F.col(c).cast("double") for c in ("tp", "fp", "fn", "tn"))
-    precision = F.when(tp + fp > 0, tp / (tp + fp))
-    recall = F.when(tp + fn > 0, tp / (tp + fn))
-    f1 = F.when(
-        precision.isNotNull() & recall.isNotNull() & (precision + recall > 0),
-        2 * precision * recall / (precision + recall),
-    )
-    accuracy = F.when(tp + fp + fn + tn > 0, (tp + tn) / (tp + fp + fn + tn))
-    return agg.select(
-        F.coalesce(F.col("tp"), F.lit(0)).cast("long").alias("tp"),
-        F.coalesce(F.col("fp"), F.lit(0)).cast("long").alias("fp"),
-        F.coalesce(F.col("fn"), F.lit(0)).cast("long").alias("fn"),
-        F.coalesce(F.col("tn"), F.lit(0)).cast("long").alias("tn"),
-        F.round(precision, 6).alias("precision"),
-        F.round(recall, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
-        F.round(accuracy, 6).alias("accuracy"),
+    the keep side). One conditional aggregate over a single scan
+    (`confusion_cells`) — four long partials per map task, no shuffle of
+    anything row-sized. Zero-denominator slices (no predicted positives /
+    no actual positives) report NULL precision/recall/f1 rather than a
+    fake 0."""
+    counts = grouped(df, [], confusion_cells(F.col(score_col), F.col(label_col), threshold))
+    ratios = confusion_ratios(*(F.col(c) for c in ("tp", "fp", "fn", "tn")))
+    return counts.select(
+        "tp", "fp", "fn", "tn", *[F.round(c, 6).alias(k) for k, c in ratios.items()]
     )
 
 
@@ -502,28 +517,21 @@ def threshold_sweep(
     descending threshold order (the conventional curve direction); the
     sort is over the bounded relation only."""
     curve = _per_score_curve(df, score_col, label_col, quantize=quantize)
-    tp, fp = F.col("tp").cast("double"), F.col("fp").cast("double")
-    fn = (F.col("p") - F.col("tp")).cast("double")
-    tn = (F.col("n") - F.col("fp")).cast("double")
-    precision = F.when(tp + fp > 0, tp / (tp + fp))
-    recall = F.when(tp + fn > 0, tp / (tp + fn))
-    fpr = F.when(fp + tn > 0, fp / (fp + tn))
-    f1 = F.when(
-        precision.isNotNull() & recall.isNotNull() & (precision + recall > 0),
-        2 * precision * recall / (precision + recall),
-    )
-    accuracy = (tp + tn) / (tp + fp + fn + tn)
+    tp, fp = F.col("tp"), F.col("fp")
+    fn, tn = F.col("p") - tp, F.col("n") - fp
+    r = confusion_ratios(tp, fp, fn, tn)
+    fpr = F.when(fp + tn > 0, fp.cast("double") / (fp + tn))
     return curve.select(
         F.col("__s").alias("threshold"),
-        F.col("tp").cast("long").alias("tp"),
-        F.col("fp").cast("long").alias("fp"),
-        (F.col("p") - F.col("tp")).cast("long").alias("fn"),
-        (F.col("n") - F.col("fp")).cast("long").alias("tn"),
-        F.round(precision, 6).alias("precision"),
-        F.round(recall, 6).alias("recall"),
+        tp.cast("long").alias("tp"),
+        fp.cast("long").alias("fp"),
+        fn.cast("long").alias("fn"),
+        tn.cast("long").alias("tn"),
+        F.round(r["precision"], 6).alias("precision"),
+        F.round(r["recall"], 6).alias("recall"),
         F.round(fpr, 6).alias("fpr"),
-        F.round(f1, 6).alias("f1"),
-        F.round(accuracy, 6).alias("accuracy"),
+        F.round(r["f1"], 6).alias("f1"),
+        F.round(r["accuracy"], 6).alias("accuracy"),
     ).orderBy(F.desc("threshold"))
 
 

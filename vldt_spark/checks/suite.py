@@ -12,8 +12,13 @@ then its metric, threshold and comparison. The execution plan follows:
 
   * every ROW-LOCAL expectation (not_null / null_rate / range / regex /
     isin / element and size bounds) and every plain aggregate (row
-    count, quantile, HLL distinct counts, pass fractions, fertility)
-    share ONE ``df.agg`` — a single scan with map-side combine;
+    count, quantile, HLL distinct counts, pass fractions, PII and
+    degenerate shares, fertility) share ONE ``df.agg`` — a single scan
+    with map-side combine.  The row-local tier is one ``cells.Cells``
+    spec, which ``run_stream`` sums per window with ``cells.windowed``;
+    the range, regex, isin and size predicates are the ones the fused
+    validation pass uses (``coercion``), and the PII, C4 and degenerate
+    guards sum their families' cells;
   * exact distinct counts, and the grouped, joined and ``mapInArrow``
     checks (uniqueness as one map-side-combined aggregate, referential
     integrity as distinct-FK anti-join, drift histograms, dedup,
@@ -45,7 +50,15 @@ from vldt_spark.checks.referential import ri_report
 from vldt_spark.checks.schema_drift import schema_diff
 from vldt_spark.checks.snapshot import snapshot_summary
 from vldt_spark.checks.uniqueness import duplicate_keys
-from vldt_spark.coercion import elements_outside
+from vldt_spark.cells import Cells, windowed
+from vldt_spark.coercion import (
+    elements_outside,
+    field_constraints,
+    not_in,
+    outside_range,
+    pattern_mismatch,
+    size_outside,
+)
 from vldt_spark.frames import local_frame
 from vldt_spark.functions.dedup import (
     contamination_report,
@@ -54,8 +67,8 @@ from vldt_spark.functions.dedup import (
 )
 from vldt_spark.functions.lm import unigram_logprob
 from vldt_spark.functions.sampling import split_leakage_report
-from vldt_spark.functions.text import c4_rules, fingerprint, gopher_rules, pii_flags
-from vldt_spark.functions.tokens import _PRETOKEN_RE, sequence_stats
+from vldt_spark.functions.text import c4_cells, fingerprint, gopher_rules, pii_cells
+from vldt_spark.functions.tokens import _PRETOKEN_RE, degenerate_cells
 from vldt_spark.plans.skew import key_skew_report
 from vldt_spark.rounding import round6
 
@@ -406,9 +419,11 @@ class expect:
         single token repeated ≥ ``max_run`` times consecutively, or
         (when ``min_entropy`` is set) unigram entropy below it — must
         stay BELOW ``share``.  Catches decoder collapse, boilerplate
-        loops, and gibberish before they reach training.  Runs as ONE
-        row-local `sequence_stats` pass (scan → mapInPandas, zero
-        exchanges) reduced to a single scalar."""
+        loops, and gibberish before they reach training.  Sums
+        ``functions.tokens.degenerate_cells`` in the fused aggregate
+        pass: the flag is an Arrow UDF over `sequence_stats`' batch
+        kernel, with zero exchanges of the table.  The same cells drive
+        ``streaming.seq_stream.stream_degenerate_share``."""
         return Expectation(
             "degenerate_sequence_share_below",
             tokens_col,
@@ -440,8 +455,10 @@ class expect:
         (no lorem ipsum, no curly brace, ≥3 surviving sentences, ≥1 kept
         line — ``c4_report.pass_frac``) must stay ABOVE the threshold.
         Keyword args tune ``min_words`` / ``min_sentences`` (see
-        ``functions.text.c4_rules``).  One codegen projection + one
-        scalar aggregate — the corpus never shuffles."""
+        ``functions.text.c4_rules``).  Sums ``functions.text.c4_cells``,
+        so documents with NULL text count in neither the numerator nor
+        the denominator.  One codegen projection + one scalar aggregate —
+        the corpus never shuffles."""
         return Expectation(
             "c4_pass_frac_above",
             text_col,
@@ -654,9 +671,11 @@ class expect:
         `pii_flags` screen pattern (email / IP / phone) must stay BELOW
         the threshold — the declarative acceptance check run before a
         corpus ships, and the gate that decides whether a `pii_redact`
-        pass is required at all. One conditional scalar aggregate over
-        row-local regex screens (map-side combined, zero exchange of
-        the fact table); empty corpus fails loud (NaN metric)."""
+        pass is required at all. Sums ``functions.text.pii_cells``, so
+        documents with NULL text count in neither the numerator nor the
+        denominator: one conditional scalar aggregate over row-local
+        regex screens (map-side combined, zero exchange of the fact
+        table); empty corpus fails loud (NaN metric)."""
         return Expectation("pii_frac_below", text_col, {"threshold": threshold})
 
     @staticmethod
@@ -771,40 +790,10 @@ def _share(p, n, k):
     return _frac(k, n)
 
 
-def _outside(x, p):
-    bad = F.lit(False)
-    if p["lo"] is not None:
-        bad = bad | (x < F.lit(p["lo"]))
-    if p["hi"] is not None:
-        bad = bad | (x > F.lit(p["hi"]))
-    return bad
-
-
-def _range_bad(c, p, dt):
-    bad = F.lit(False)
-    if p["lo"] is not None:
-        lo = F.lit(p["lo"])
-        bad = bad | (c <= lo if p.get("lo_strict") else c < lo)
-    if p["hi"] is not None:
-        hi = F.lit(p["hi"])
-        bad = bad | (c >= hi if p.get("hi_strict") else c > hi)
-    return c.isNotNull() & bad
-
-
-def _pass_frac(rules):
-    """Row count and passing rows of a rule bundle (gopher / c4)."""
-
-    def aggs(c, p):
-        ok = F.when(rules(c, **p["rules"]).getField("passes"), F.lit(1)).otherwise(F.lit(0))
-        return [F.count(F.lit(1)), F.sum(ok)]
-
-    return aggs
-
-
-def _pii_aggs(c, p):
-    flags = pii_flags(c)
-    any_pii = flags.getField("has_email") | flags.getField("has_ip") | flags.getField("has_phone")
-    return [F.count(F.lit(1)), F.sum(any_pii.cast("long"))]
+def _gopher_aggs(c, p):
+    """Row count and rows passing the Gopher rule bundle."""
+    ok = F.when(gopher_rules(c, **p["rules"]).getField("passes"), F.lit(1)).otherwise(F.lit(0))
+    return [F.count(F.lit(1)), F.sum(ok)]
 
 
 def _fertility_aggs(c, p):
@@ -883,14 +872,13 @@ def _heavy_hitter(df, e):
     return _frac(row["top"], row["total"])
 
 
-def _with_sid(df, col):
-    return df.select(F.monotonically_increasing_id().alias("__sid"), F.col(col))
-
-
 def _mean_ppl(df, e):
     row = (
         unigram_logprob(
-            _with_sid(df, e.column), e.params["vocab_size"], id_col="__sid", tokens_col=e.column
+            df.select(F.monotonically_increasing_id().alias("__sid"), e.column),
+            e.params["vocab_size"],
+            id_col="__sid",
+            tokens_col=e.column,
         )
         .agg(
             # exact micro-ppl integer sum: float avg is partition-order
@@ -939,19 +927,6 @@ def _contamination(df, e):
         shingle_impl=p["shingle_impl"],
     ).count()
     return float(n_bad) / float(n_docs)
-
-
-def _degenerate(df, e):
-    p = e.params
-    bad = (F.col("n_tok") == 0) | (F.col("max_run") >= p["max_run"])
-    if p["min_entropy"] is not None:
-        bad = bad | (F.col("entropy") < float(p["min_entropy"]))
-    row = (
-        sequence_stats(_with_sid(df, e.column), id_col="__sid", tokens_col=e.column)
-        .agg(F.sum(bad.cast("long")).alias("n_bad"), F.count(F.lit(1)).alias("n"))
-        .first()
-    )
-    return _frac(row["n_bad"], row["n"])
 
 
 def _churn(df, e):
@@ -1014,16 +989,20 @@ def _centroid(df, e):
 
 
 def _sized(size):
-    return lambda c, p, dt: c.isNotNull() & _outside(size(c), p)
+    return lambda c, p, dt: size_outside(c, size, p["lo"], p["hi"])
 
 
 _KINDS: dict[str, _Kind] = {
     # row-local: one violation predicate each, summed in the fused pass
     "not_null": _Kind(bad=lambda c, p, dt: c.isNull(), limit="max_nulls"),
     "null_rate_below": _Kind(bad=lambda c, p, dt: c.isNull(), limit="rate"),
-    "range": _Kind(bad=_range_bad),
-    "regex": _Kind(bad=lambda c, p, dt: c.isNotNull() & ~c.rlike(p["pattern"])),
-    "isin": _Kind(bad=lambda c, p, dt: c.isNotNull() & ~c.isin(p["values"])),
+    "range": _Kind(
+        bad=lambda c, p, dt: outside_range(
+            c, p["lo"], p["hi"], lo_strict=p.get("lo_strict"), hi_strict=p.get("hi_strict")
+        )
+    ),
+    "regex": _Kind(bad=lambda c, p, dt: pattern_mismatch(c, p["pattern"])),
+    "isin": _Kind(bad=lambda c, p, dt: not_in(c, p["values"])),
     "element_range": _Kind(
         bad=lambda c, p, dt: elements_outside(
             c, dt.elementType if isinstance(dt, T.ArrayType) else None, p["lo"], p["hi"]
@@ -1041,11 +1020,23 @@ _KINDS: dict[str, _Kind] = {
     "quantile_between": _Kind(
         _between, aggs=_quantile_aggs, metric=lambda p, q: None if q is None else float(q)
     ),
-    "gopher_pass_frac_above": _Kind(
-        _above("threshold"), aggs=_pass_frac(gopher_rules), metric=_share
+    "gopher_pass_frac_above": _Kind(_above("threshold"), aggs=_gopher_aggs, metric=_share),
+    # the family cells their batch reports and streaming twins sum
+    "c4_pass_frac_above": _Kind(
+        _above("threshold"),
+        aggs=lambda c, p: c4_cells(c, **p["rules"]).aggs("n_docs", "n_pass"),
+        metric=_share,
     ),
-    "c4_pass_frac_above": _Kind(_above("threshold"), aggs=_pass_frac(c4_rules), metric=_share),
-    "pii_frac_below": _Kind(_below("threshold"), aggs=_pii_aggs, metric=_share),
+    "pii_frac_below": _Kind(
+        _below("threshold"), aggs=lambda c, p: pii_cells(c).aggs("n_docs", "n_any"), metric=_share
+    ),
+    "degenerate_sequence_share_below": _Kind(
+        _below("share"),
+        aggs=lambda c, p: degenerate_cells(
+            c, max_run=p["max_run"], min_entropy=p["min_entropy"]
+        ).aggs(),
+        metric=_share,
+    ),
     "fertility_between": _Kind(_between, aggs=_fertility_aggs, metric=_share),
     "distinct_text_frac_above": _Kind(
         _above("threshold"), aggs=_distinct_frac(fingerprint), metric=_share
@@ -1082,7 +1073,6 @@ _KINDS: dict[str, _Kind] = {
     "partition_skew_below": _Kind(_below("factor"), read=_partition_skew),
     "dup_ngram_fraction_below": _Kind(_below("threshold"), read=_dup_ngram),
     "contamination_below": _Kind(_below("threshold"), read=_contamination),
-    "degenerate_sequence_share_below": _Kind(_below("share"), read=_degenerate),
     "snapshot_churn_below": _Kind(_below("threshold"), read=_churn),
     "split_leakage_below": _Kind(_below("threshold"), read=_leakage),
     "mixture_gap_below": _Kind(_below("threshold"), read=_mixture_gap),
@@ -1113,29 +1103,30 @@ def _has_distinct(cols: list[Column]) -> bool:
     return False
 
 
-def _counts(exps: list[Expectation], schema: T.StructType) -> list[Column]:
-    """Row count ``__n`` and each row-local expectation's violation count
-    ``__m_<i>`` over a frame of ``schema`` — the aggregates
-    ``_report_struct`` reads."""
+def _counts(exps: list[Expectation], schema: T.StructType) -> Cells:
+    """The row-local tier's cells over a frame of ``schema``: row count
+    ``__n`` and each expectation's violation count ``__m_<i>``, which
+    ``_report_struct`` reads.  Every row counts."""
     types = {f.name: f.dataType for f in schema.fields}
-    return [F.count(F.lit(1)).alias("__n")] + [
-        F.sum(
-            _KINDS[e.kind].bad(F.col(e.column), e.params, types.get(e.column)).cast("long")
-        ).alias(f"__m_{i}")
+    bad = {
+        f"__m_{i}": _KINDS[e.kind].bad(F.col(e.column), e.params, types.get(e.column)).cast("long")
         for i, e in enumerate(exps)
-    ]
+    }
+    return Cells(F.lit(True), {"__n": F.lit(1), **bad})
 
 
 def _report_struct(e: Expectation, i: int) -> Column:
-    """Report row struct of row-local expectation ``i`` from ``_counts``."""
+    """Report row struct of row-local expectation ``i`` from ``_counts``.
+    An empty table or window has no metric: NULL metric and verdict."""
     limit = _KINDS[e.kind].limit
+    n = F.col("__n")
     m = F.col(f"__m_{i}").cast("double")
     if limit == "rate":
-        metric = m / F.col("__n")
+        metric = F.when(n > 0, m / n)
         threshold = F.lit(float(e.params["rate"]))
         passed = metric < threshold
     else:
-        metric = m
+        metric = F.when(n > 0, m)
         threshold = F.lit(float(e.params[limit]))
         passed = metric <= threshold
     return F.struct(
@@ -1167,64 +1158,34 @@ class Suite:
     def from_model(
         cls, model, *, dims: dict[str, DataFrame] | None = None
     ) -> "Suite":
-        """Derive a table contract from a declarative Model: every
-        Field(ge/le/gt/lt/regex/isin/not_null/unique) and non-optional
-        annotation becomes the corresponding expectation, and
-        ``Field(ref=(dim_name, key))`` becomes a referential check when
-        ``dims`` supplies the dimension. A reference user's per-object
-        model therefore doubles as the whole-table data contract.
-
-        gt/lt map to strict bounds (``lo_strict``/``hi_strict``) so the
-        expectation counts exactly the rows the fused pass would flag."""
+        """Derive a table contract from a declarative Model: one
+        expectation per entry of each field's ``coercion.field_constraints``
+        table (the required-null check, ge/gt/le/lt, regex, isin, not_null,
+        min_size/max_size), so every one counts exactly the rows the fused
+        pass flags with that entry's message.  Element ranges become
+        ``element_range``, ``Field(unique=True)`` and ``unique_together``
+        become ``unique``, and ``Field(ref=(dim_name, key))`` becomes a
+        referential check when ``dims`` supplies the dimension.  Identical
+        expectations (a required field declared ``not_null``) are kept once.
+        A reference user's per-object model therefore doubles as the
+        whole-table data contract."""
         dims = dims or {}
-        compiled = model.__vldt_compile__()
         exps: list[Expectation] = []
-        for spec in compiled.fields:
+        for spec in model.__vldt_compile__().fields:
             f, name = spec.field, spec.name
-            # a defaulted field is filled during coercion, so raw nulls are
-            # NOT a contract violation — emitting not_null here would fail
-            # tables the ValidationEngine itself passes (divergent verdicts
-            # for one model)
-            if (f.not_null or not spec.node.is_optional) and not f.has_default:
-                exps.append(expect.not_null(name))
-            lo = f.ge if f.ge is not None else f.gt
-            hi = f.le if f.le is not None else f.lt
-            if lo is not None or hi is not None:
-                exps.append(
-                    expect.range(
-                        name,
-                        lo=lo,
-                        hi=hi,
-                        lo_strict=f.ge is None and f.gt is not None,
-                        hi_strict=f.le is None and f.lt is not None,
-                    )
-                )
-            e_lo = getattr(f, "element_ge", None)
-            e_hi = getattr(f, "element_le", None)
-            if e_lo is not None or e_hi is not None:
-                exps.append(expect.element_range(name, lo=e_lo, hi=e_hi))
-            if f.min_size is not None or f.max_size is not None:
-                from vldt_spark.typeschema import ContainerKind
-
-                sizer = (
-                    expect.length_between
-                    if spec.node.kind is ContainerKind.NONE
-                    else expect.size_between
-                )
-                exps.append(sizer(name, lo=f.min_size, hi=f.max_size))
-            if f.regex is not None:
-                exps.append(expect.regex(name, f.regex))
-            if f.isin is not None:
-                exps.append(expect.isin(name, list(f.isin)))
+            exps += [
+                getattr(expect, c.kind)(name, **c.params)
+                for c in field_constraints(f, spec.node, spec.dtype)
+                if c.kind is not None
+            ]
+            if f.element_ge is not None or f.element_le is not None:
+                exps.append(expect.element_range(name, lo=f.element_ge, hi=f.element_le))
             if f.unique:
                 exps.append(expect.unique(name))
-            if f.ref is not None:
-                dim_name, dim_key = f.ref
-                if dim_name in dims:
-                    exps.append(expect.ref(name, dims[dim_name], dim_key))
-        for combo in getattr(model, "unique_together", []) or []:
-            exps.append(expect.unique(list(combo)))
-        return cls(exps)
+            if f.ref is not None and f.ref[0] in dims:
+                exps.append(expect.ref(name, dims[f.ref[0]], f.ref[1]))
+        exps += [expect.unique(list(combo)) for combo in getattr(model, "unique_together", None) or []]
+        return cls([e for i, e in enumerate(exps) if e not in exps[:i]])
 
     def run(self, df: DataFrame) -> DataFrame:
         """Evaluate every expectation; returns the report DataFrame
@@ -1267,7 +1228,7 @@ class Suite:
             }
             if row_local or fused:
                 wide = df.agg(
-                    *_counts(row_local, df.schema),
+                    *_counts(row_local, df.schema).aggs(),
                     *[c.alias(f"__a_{i}_{j}") for i, _, cols in fused for j, c in enumerate(cols)],
                 )
                 one = wide.select(
@@ -1313,14 +1274,12 @@ class Suite:
             raise ValueError(
                 f"run_stream supports row-local expectations only, got: {bad}"
             )
-        win = (
-            stream_df.withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("__w"))
-            .agg(*_counts(exps, stream_df.schema))
+        win = windowed(
+            stream_df, ts_col, _counts(exps, stream_df.schema), window=window, watermark=watermark
         )
         rows = [_report_struct(e, i) for i, e in enumerate(exps)]
         return win.select(
-            F.col("__w.start").alias("window_start"),
-            F.col("__w.end").alias("window_end"),
+            F.col("window.start").alias("window_start"),
+            F.col("window.end").alias("window_end"),
             F.explode(F.array(*rows)).alias("s"),
         ).select("window_start", "window_end", "s.*")

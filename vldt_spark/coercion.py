@@ -21,9 +21,10 @@ fields collect-all across the row (data_model.cpp:197-211), mirrored via
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from datetime import date, datetime
 from decimal import Decimal
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -82,6 +83,18 @@ def _kernel_ordered(elem_dt: T.DataType, v: Any) -> bool:
     return False
 
 
+def _bounds(
+    low: Column, high: Column, lo: Any, hi: Any, lo_strict: bool = False, hi_strict: bool = False
+) -> Column:
+    """``low`` below ``lo`` or ``high`` above ``hi``; a None bound is not
+    checked.  ``low`` and ``high`` are one value, or an array's min and max."""
+    tests = [low <= F.lit(lo) if lo_strict else low < F.lit(lo)] if lo is not None else []
+    tests += [high >= F.lit(hi) if hi_strict else high > F.lit(hi)] if hi is not None else []
+    if not tests:
+        return F.lit(False)
+    return tests[0] if len(tests) == 1 else tests[0] | tests[1]
+
+
 def elements_outside(
     arr: Column, elem_dt: T.DataType, lo: Any = None, hi: Any = None
 ) -> Column:
@@ -100,18 +113,10 @@ def elements_outside(
     Both kernels skip NULL elements, as the lambda's ``x IS NOT NULL``
     did, and order NaN above every number, as ``<``/``>`` do.  A bound the
     kernels cannot order (``_kernel_ordered``) keeps the lambda."""
-    if lo is None and hi is None:
-        return F.lit(False)
-
-    def outside(low: Column, high: Column) -> Column:
-        tests = [low < F.lit(lo)] if lo is not None else []
-        tests += [high > F.lit(hi)] if hi is not None else []
-        return tests[0] if len(tests) == 1 else tests[0] | tests[1]
-
     if all(_kernel_ordered(elem_dt, v) for v in (lo, hi) if v is not None):
-        bad = outside(F.array_min(arr), F.array_max(arr))
+        bad = _bounds(F.array_min(arr), F.array_max(arr), lo, hi)
     else:
-        bad = F.exists(arr, lambda x: x.isNotNull() & outside(x, x))
+        bad = F.exists(arr, lambda x: x.isNotNull() & _bounds(x, x, lo, hi))
     return F.coalesce(bad, F.lit(False))
 
 
@@ -125,6 +130,122 @@ def has_null_element(arr: Column, elem_dt: T.DataType) -> Column:
     if isinstance(elem_dt, T.AtomicType):
         return F.size(F.array_intersect(arr, F.array(F.lit(None).cast(elem_dt)))) > 0
     return F.exists(arr, lambda x: x.isNull())
+
+
+# -- declared Field constraints: one table for the engine and the Suite -----
+
+
+def outside_range(
+    v: Column, lo: Any = None, hi: Any = None, *, lo_strict: bool = False, hi_strict: bool = False
+) -> Column:
+    """True when the non-NULL ``v`` is below ``lo`` (at or below it when
+    ``lo_strict``) or above ``hi`` (at or above it when ``hi_strict``); a
+    None bound is not checked.  False for a NULL ``v``."""
+    return v.isNotNull() & _bounds(v, v, lo, hi, lo_strict, hi_strict)
+
+
+def size_outside(v: Column, size, lo: Any = None, hi: Any = None) -> Column:
+    """True when the non-NULL ``v``'s ``size(v)`` (``F.length`` for a
+    string, ``F.size`` for an array or map) is below ``lo`` or above
+    ``hi``.  False for a NULL ``v``."""
+    n = size(v)
+    return v.isNotNull() & _bounds(n, n, lo, hi)
+
+
+def pattern_mismatch(v: Column, pattern: str) -> Column:
+    """True when the non-NULL ``v`` does not match ``pattern``."""
+    return v.isNotNull() & ~v.rlike(pattern)
+
+
+def not_in(v: Column, values: list) -> Column:
+    """True when the non-NULL ``v`` is not one of ``values``."""
+    return v.isNotNull() & ~v.isin(values)
+
+
+@dataclass(frozen=True)
+class Constraint:
+    """One declared Field constraint.  ``bad(value)`` is its violation
+    predicate; only the two NULL checks are true on a NULL value.
+    ``msg`` is the engine's message, and ``kind``/``params`` the Suite
+    expectation, ``expect.<kind>(column, **params)``, that counts the rows
+    ``bad`` flags (``kind`` is None when none can).  A ``raw`` entry reads
+    the source value, before coercion and defaults; the others read the
+    coerced value."""
+
+    bad: Callable[[Column], Column]
+    msg: str
+    kind: str | None
+    params: dict
+    raw: bool = False
+
+
+def field_constraints(fld: Field, node: TypeNode, dtype: T.DataType) -> list[Constraint]:
+    """The one definition of a field's declared constraints, in the order
+    the engine reports them: the required-null check of a non-optional
+    field without a default, then ``ge``, ``gt``, ``le``, ``lt``,
+    ``regex``, ``isin``, ``not_null``, ``min_size`` and ``max_size``.  Sizes
+    are characters for a string (``length_between``) and elements for a
+    list, set or map (``size_between``).
+
+    The fused pass (``constraint_violations``) and ``Suite.from_model``
+    both read this table.  Element ranges are not in it: their single
+    definition is ``elements_outside``, with indexed lineage paths."""
+    out: list[Constraint] = []
+    if not node.is_optional and not fld.has_default:
+        msg = expected_type_msg(node.py_name, "NoneType")
+        out.append(Constraint(lambda v: v.isNull(), msg, "not_null", {}, raw=True))
+    for bound, op, side, strict in (
+        (fld.ge, ">=", "lo", False),
+        (fld.gt, ">", "lo", True),
+        (fld.le, "<=", "hi", False),
+        (fld.lt, "<", "hi", True),
+    ):
+        if bound is not None:
+            p = {side: bound, f"{side}_strict": strict}
+            out.append(Constraint(
+                lambda v, p=p: outside_range(v, **p),
+                f"Value out of range: expected {op} {bound}", "range", p,
+            ))
+    if fld.regex is not None:
+        out.append(Constraint(
+            lambda v, r=fld.regex: pattern_mismatch(v, r),
+            f"Value does not match pattern {fld.regex}", "regex", {"pattern": fld.regex},
+        ))
+    if fld.isin is not None:
+        values = list(fld.isin)
+        out.append(Constraint(
+            lambda v: not_in(v, values), "Value not in allowed set", "isin", {"values": values}
+        ))
+    if fld.not_null:
+        # a default fills the value this reads, but not the raw column a
+        # Suite expectation counts
+        kind = None if fld.has_default else "not_null"
+        out.append(Constraint(lambda v: v.isNull(), missing_required_msg(), kind, {}))
+    if isinstance(dtype, T.StringType):
+        size, unit, kind = F.length, "characters", "length_between"
+    elif node.kind in (ContainerKind.LIST, ContainerKind.SET, ContainerKind.DICT):
+        size, unit, kind = F.size, "elements", "size_between"
+    else:
+        return out
+    for bound, word, side in ((fld.min_size, "at least", "lo"), (fld.max_size, "at most", "hi")):
+        if bound is not None:
+            p = {side: bound}
+            out.append(Constraint(
+                lambda v, p=p: size_outside(v, size, **p),
+                f"Expected {word} {bound} {unit}", kind, p,
+            ))
+    return out
+
+
+def constraint_violations(
+    fld: Field, node: TypeNode, dtype: T.DataType, value: Column, source: Column, path: Column | str
+) -> list[Column]:
+    """``field_constraints`` as violation arrays at ``path``: ``value`` is
+    the coerced value, ``source`` the one a ``raw`` entry reads."""
+    return [
+        violation_if(c.bad(source if c.raw else value), _p(path), c.msg)
+        for c in field_constraints(fld, node, dtype)
+    ]
 
 
 def _truthy(src: Column, src_dtype: T.DataType) -> Column:
@@ -338,22 +459,6 @@ def _list_value(src, src_dtype, node, path, fld, truthy_bool):
             # lambda-free verdict first; indexed-path construction only on
             # the rare violating rows (conditional evaluation)
             viol_parts.append(F.when(verdict, indexed).otherwise(empty_violations()))
-        if fld.min_size is not None:
-            viol_parts.append(
-                violation_if(
-                    src.isNotNull() & (F.size(coerced) < fld.min_size),
-                    _p(path),
-                    f"Expected at least {fld.min_size} elements",
-                )
-            )
-        if fld.max_size is not None:
-            viol_parts.append(
-                violation_if(
-                    src.isNotNull() & (F.size(coerced) > fld.max_size),
-                    _p(path),
-                    f"Expected at most {fld.max_size} elements",
-                )
-            )
 
     if node.kind is ContainerKind.SET:
         # set invariant: no duplicate elements (SURVEY.md A13)
@@ -507,16 +612,10 @@ def _model_value(src, src_dtype, node, path, truthy_bool):
         )
         if spec.field.has_default:
             c = F.coalesce(c, default_column(spec.field, spec.dtype))
-        elif not spec.node.is_optional:
-            viols.append(
-                violation_if(
-                    src.isNotNull() & src[src_name].isNull(),
-                    sub_path,
-                    expected_type_msg(spec.node.py_name, "NoneType"),
-                )
-            )
         viols.append(v)
-        viols.extend(scalar_constraints(c, spec.field, sub_path, spec.dtype))
+        viols.extend(
+            constraint_violations(spec.field, spec.node, spec.dtype, c, src[src_name], sub_path)
+        )
         parts.append(c.alias(spec.name))
     for pname in compiled.pruned_fields:
         # recursion cutoff (ModelConfig.max_recursion_depth): the field is
@@ -673,39 +772,3 @@ def _union_value(src, src_dtype, node, path, truthy_bool):
         expected_type_msg(names, py_name_of_spark(src_dtype)),
     )
     return expr, viols
-
-
-def scalar_constraints(
-    coerced: Column, fld: Field, path: Column | str, dtype: T.DataType
-) -> list[Column]:
-    """Declarative B9 constraints (range/regex/isin) → violation arrays."""
-    out: list[Column] = []
-    nn = coerced.isNotNull()
-    p = _p(path)
-    if fld.ge is not None:
-        out.append(violation_if(nn & (coerced < F.lit(fld.ge)), p,
-                                f"Value out of range: expected >= {fld.ge}"))
-    if fld.gt is not None:
-        out.append(violation_if(nn & (coerced <= F.lit(fld.gt)), p,
-                                f"Value out of range: expected > {fld.gt}"))
-    if fld.le is not None:
-        out.append(violation_if(nn & (coerced > F.lit(fld.le)), p,
-                                f"Value out of range: expected <= {fld.le}"))
-    if fld.lt is not None:
-        out.append(violation_if(nn & (coerced >= F.lit(fld.lt)), p,
-                                f"Value out of range: expected < {fld.lt}"))
-    if fld.regex is not None:
-        out.append(violation_if(nn & ~coerced.rlike(fld.regex), p,
-                                f"Value does not match pattern {fld.regex}"))
-    if fld.isin is not None:
-        out.append(violation_if(nn & ~coerced.isin(fld.isin), p,
-                                "Value not in allowed set"))
-    if fld.not_null:
-        out.append(violation_if(~nn, p, missing_required_msg()))
-    if fld.min_size is not None and isinstance(dtype, T.StringType):
-        out.append(violation_if(nn & (F.length(coerced) < fld.min_size), p,
-                                f"Expected at least {fld.min_size} characters"))
-    if fld.max_size is not None and isinstance(dtype, T.StringType):
-        out.append(violation_if(nn & (F.length(coerced) > fld.max_size), p,
-                                f"Expected at most {fld.max_size} characters"))
-    return out

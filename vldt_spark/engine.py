@@ -55,7 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vldt_spark.coercion import build_value, default_column, scalar_constraints
+from vldt_spark.coercion import build_value, constraint_violations, default_column
 from vldt_spark.errors import (
     VIOLATION_STRUCT,
     VIOLATIONS_TYPE,
@@ -324,9 +324,9 @@ class ValidationEngine:
         — a validator returning an out-of-range value must flag the row,
         not launder it past the constraints that ran on the pre-UDF value.
         Type conformance is already enforced by the pandas UDF's Arrow
-        return type; this re-applies the declarative ``scalar_constraints``
-        and the required-null check to every UDF-updated column and merges
-        the new violations (one extra projection, no new scan).
+        return type; this re-applies the field's ``field_constraints``,
+        the required-null check among them, to every UDF-updated column and
+        merges the new violations (one extra projection, no new scan).
         ``array_distinct`` collapses the duplicate a value failing the SAME
         constraint before and after the transform would otherwise produce —
         the reference raises once per constraint, never twice."""
@@ -340,16 +340,9 @@ class ValidationEngine:
             if spec.name not in after_fields or spec.name not in df.columns:
                 continue
             col = F.col(spec.name)
-            vs = scalar_constraints(col, spec.field, spec.name, spec.dtype)
-            if not spec.node.is_optional and not spec.field.has_default:
-                vs.append(
-                    violation_if(
-                        col.isNull(),
-                        spec.name,
-                        f"Expected type {spec.node.py_name}, got NoneType",
-                    )
-                )
-            reval.extend(vs)
+            reval.extend(
+                constraint_violations(spec.field, spec.node, spec.dtype, col, col, spec.name)
+            )
         if not reval:
             return df
         merged = merge_violations(F.col("violations"), *reval)
@@ -411,21 +404,15 @@ class ValidationEngine:
                     fld=spec.field,
                     truthy_bool=cfg.truthy_bool,
                 )
-            viols = [viols_col]
-            # defaults / required-null (data_model.cpp:192-212)
+            # defaults, then the declared constraints with the required-null
+            # check first (data_model.cpp:192-212)
             if spec.field.has_default:
                 coerced = F.coalesce(coerced, default_column(spec.field, spec.dtype))
-            elif not spec.node.is_optional:
-                viols.append(
-                    violation_if(
-                        src.isNull(),
-                        spec.name,
-                        f"Expected type {spec.node.py_name}, got NoneType",
-                    )
-                )
-            viols.extend(scalar_constraints(coerced, spec.field, spec.name, spec.dtype))
             cols.append(coerced.alias(spec.name))
-            all_viols.extend(viols)
+            all_viols.append(viols_col)
+            all_viols.extend(
+                constraint_violations(spec.field, spec.node, spec.dtype, coerced, src, spec.name)
+            )
 
         # cross-field @check constraints (B10) — evaluated on coerced values
         model_names = [s.name for s in self.compiled.fields]

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vldt_spark.cells import Cells, grouped, share
+
 VOCAB = 50257
 
 #: tiny per-language stopword markers for the n-gram/stopword heuristic
@@ -304,27 +306,31 @@ def pii_flags(text: Column) -> Column:
     oracle checks hold; they are SCREENS (high recall on obvious
     formats), not validators — route flagged docs to review/redaction,
     don't assume the negative class is clean."""
-    return F.struct(
-        text.rlike(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}").alias("has_email"),
-        text.rlike(r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b").alias("has_ip"),
-        text.rlike(r"\b\d{3}[-. ]\d{3}[-. ]\d{4}\b").alias("has_phone"),
-    )
+    return F.struct(*[text.rlike(pat).alias(f"has_{kind}") for kind, pat in PII_PATTERNS])
+
+
+def pii_cells(text: Column) -> Cells:
+    """The PII family's cells, shared by `pii_report`,
+    `streaming.pii_stream.stream_pii_windows` and
+    ``expect.pii_frac_below``: n_docs, one count per `PII_PATTERNS`
+    screen (n_email, n_ip, n_phone) and n_any.  NULL text carries no
+    signal and counts in no cell, n_docs included."""
+    hits = {f"n_{kind}": text.rlike(pat) for kind, pat in PII_PATTERNS}
+    any_hit = hits["n_email"] | hits["n_ip"] | hits["n_phone"]
+    counts = {k: h.cast("long") for k, h in {**hits, "n_any": any_hit}.items()}
+    return Cells(text.isNotNull(), {"n_docs": F.lit(1), **counts})
 
 
 def pii_report(
     docs: DataFrame, *, text_col: str = "text", by: str | None = None
 ) -> DataFrame:
     """Corpus-level PII screen counts (one aggregate pass; per-``by``
-    group when given): (n_docs, n_email, n_ip, n_phone)."""
-    flags = pii_flags(F.col(text_col)).alias("__pii")
-    base = docs.select(*( [F.col(by)] if by else [] ), flags)
-    aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("__pii.has_email").cast("long")).alias("n_email"),
-        F.sum(F.col("__pii.has_ip").cast("long")).alias("n_ip"),
-        F.sum(F.col("__pii.has_phone").cast("long")).alias("n_phone"),
-    ]
-    return base.groupBy(by).agg(*aggs) if by else base.agg(*aggs)
+    group when given): (n_docs, n_email, n_ip, n_phone) over the
+    documents whose text is not NULL (`pii_cells`)."""
+    keys = [by] if by else []
+    return grouped(docs, keys, pii_cells(F.col(text_col))).select(
+        *keys, "n_docs", "n_email", "n_ip", "n_phone"
+    )
 
 
 # -- model-based quality classification -------------------------------------
@@ -509,6 +515,20 @@ def gopher_report(
     return flagged.agg(*aggs)
 
 
+def _c4_kept_lines(lines: Column, min_words: int) -> Column:
+    """The ``lines`` (an array) that C4's line rules keep (`c4_rules`)."""
+
+    def kept(line: Column) -> Column:
+        words = F.filter(F.split(F.trim(line), r"\s+"), lambda w: F.length(w) > 0)
+        return (
+            F.trim(line).rlike(r'[.!?"]$')
+            & (F.size(words) >= min_words)
+            & ~F.contains(F.lower(line), F.lit("javascript"))
+        )
+
+    return F.filter(lines, kept)
+
+
 def c4_rules(
     text: Column,
     *,
@@ -543,16 +563,7 @@ def c4_rules(
     `exact_substr_dedup` are this engine's implementations of it.
     """
     lines = F.split(text, "\n")
-
-    def _kept_pred(l: Column) -> Column:
-        words = F.filter(F.split(F.trim(l), r"\s+"), lambda w: F.length(w) > 0)
-        return (
-            F.trim(l).rlike(r'[.!?"]$')
-            & (F.size(words) >= min_words)
-            & ~F.contains(F.lower(l), F.lit("javascript"))
-        )
-
-    kept = F.filter(lines, _kept_pred)
+    kept = _c4_kept_lines(lines, min_words)
     kept_text = F.array_join(kept, "\n")
     n_lines = F.size(lines)
     n_kept = F.size(kept)
@@ -586,22 +597,33 @@ def c4_clean(
     directly over the scan, so Parquet row-group pruning and codegen
     both apply; nothing shuffles."""
     r = c4_rules(F.col(text_col), min_words=min_words, min_sentences=min_sentences)
-    lines = F.split(F.col(text_col), "\n")
-
-    def _kept_pred(l: Column) -> Column:
-        words = F.filter(F.split(F.trim(l), r"\s+"), lambda w: F.length(w) > 0)
-        return (
-            F.trim(l).rlike(r'[.!?"]$')
-            & (F.size(words) >= min_words)
-            & ~F.contains(F.lower(l), F.lit("javascript"))
-        )
-
-    kept_text = F.array_join(F.filter(lines, _kept_pred), "\n")
+    kept_text = F.array_join(_c4_kept_lines(F.split(F.col(text_col), "\n"), min_words), "\n")
     return (
         docs.withColumn("__c4", r)
         .where(F.col("__c4.passes"))
         .withColumn(text_col, kept_text)
         .drop("__c4")
+    )
+
+
+def c4_cells(text: Column, **thresholds) -> Cells:
+    """The C4 family's cells, shared by `c4_report`,
+    `streaming.c4_stream.stream_c4_windows` and
+    ``expect.c4_pass_frac_above``: n_docs, n_pass, one failure count per
+    document rule (n_lorem, n_brace, n_few_sentences) and kept_sum, the
+    sum of ``kept_frac``.  ``thresholds`` go to `c4_rules`.  NULL text
+    carries no signal and counts in no cell, n_docs included."""
+    c = c4_rules(text, **thresholds)
+    return Cells(
+        text.isNotNull(),
+        {
+            "n_docs": F.lit(1),
+            "n_pass": c.getField("passes").cast("long"),
+            "n_lorem": (~c.getField("lorem_ok")).cast("long"),
+            "n_brace": (~c.getField("brace_ok")).cast("long"),
+            "n_few_sentences": (~c.getField("sentences_ok")).cast("long"),
+            "kept_sum": c.getField("kept_frac"),
+        },
     )
 
 
@@ -614,30 +636,20 @@ def c4_report(
 ) -> DataFrame:
     """Corpus C4-rule report, optionally per group: document counts,
     failure fraction of each document rule, overall pass fraction, and
-    the mean kept-line fraction.  One scalar-partial hash aggregate —
-    the exchange is |groups| rows; the fact table never shuffles."""
-    r = c4_rules(F.col(text_col), **thresholds)
-    cols = [r.alias("c")] + ([F.col(by)] if by else [])
-    flagged = docs.select(*cols)
-    aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(
-            F.avg(F.when(F.col("c.lorem_ok"), F.lit(0.0)).otherwise(1.0)), 6
-        ).alias("lorem_fail_frac"),
-        F.round(
-            F.avg(F.when(F.col("c.brace_ok"), F.lit(0.0)).otherwise(1.0)), 6
-        ).alias("brace_fail_frac"),
-        F.round(
-            F.avg(F.when(F.col("c.sentences_ok"), F.lit(0.0)).otherwise(1.0)), 6
-        ).alias("sentences_fail_frac"),
-        F.round(
-            F.avg(F.when(F.col("c.passes"), F.lit(1.0)).otherwise(0.0)), 6
-        ).alias("pass_frac"),
-        F.round(F.avg(F.col("c.kept_frac")), 6).alias("mean_kept_frac"),
-    ]
-    if by:
-        return flagged.groupBy(by).agg(*aggs)
-    return flagged.agg(*aggs)
+    the mean kept-line fraction, over the documents whose text is not
+    NULL (`c4_cells`).  One scalar-partial hash aggregate — the exchange
+    is |groups| rows; the fact table never shuffles."""
+    keys = [by] if by else []
+    n = F.col("n_docs")
+    return grouped(docs, keys, c4_cells(F.col(text_col), **thresholds)).select(
+        *keys,
+        "n_docs",
+        share(F.col("n_lorem"), n).alias("lorem_fail_frac"),
+        share(F.col("n_brace"), n).alias("brace_fail_frac"),
+        share(F.col("n_few_sentences"), n).alias("sentences_fail_frac"),
+        share(F.col("n_pass"), n).alias("pass_frac"),
+        share(F.col("kept_sum"), n).alias("mean_kept_frac"),
+    )
 
 
 # -- PII redaction -----------------------------------------------------------
@@ -697,18 +709,20 @@ def pii_redact_report(
     (n_docs, n_docs_redacted, n_email, n_ip, n_phone, chars_removed).
     ``chars_removed`` may be negative when the redaction token is longer
     than the matched span; it is the signed byte-budget change a storage
-    planner needs. Same scale shape as ``pii_report``: scalar partials
-    only, the fact table never shuffles."""
-    src = docs.select(*( [by] if by else [] ), F.col(text_col).alias("__orig"))
-    red2 = pii_redact(src, text_col="__orig", out_col="__red")
-    aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(
-            ((F.col("n_email") + F.col("n_ip") + F.col("n_phone")) > 0).cast("long")
-        ).alias("n_docs_redacted"),
-        F.sum("n_email").alias("n_email"),
-        F.sum("n_ip").alias("n_ip"),
-        F.sum("n_phone").alias("n_phone"),
-        F.sum(F.length("__orig") - F.length("__red")).alias("chars_removed"),
-    ]
-    return red2.groupBy(by).agg(*aggs) if by else red2.agg(*aggs)
+    planner needs. Same scale shape and NULL rule as ``pii_report``:
+    scalar partials only, the fact table never shuffles, and NULL text
+    counts in no cell."""
+    keys = [by] if by else []
+    src = docs.select(*keys, F.col(text_col).alias("__orig"))
+    red = pii_redact(src, text_col="__orig", out_col="__red")
+    n = {f"n_{kind}": F.col(f"n_{kind}") for kind, _ in PII_PATTERNS}
+    cells = Cells(
+        F.col("__orig").isNotNull(),
+        {
+            "n_docs": F.lit(1),
+            "n_docs_redacted": ((n["n_email"] + n["n_ip"] + n["n_phone"]) > 0).cast("long"),
+            **n,
+            "chars_removed": F.length("__orig") - F.length("__red"),
+        },
+    )
+    return grouped(red, keys, cells)

@@ -19,11 +19,13 @@ Scale design:
   count.  A `mapInArrow` numpy `bincount` fold has the same per-token
   cost plus the fixed cost of a Python stage, so the count stays
   native.
-- `oov_report` / `vocab_coverage` are single hash aggregates over
-  row-local expressions (no HOF in the hot loop for oov: `aggregate`
-  over int comparisons is interpreted but cheap; the histogram path is
-  the vectorized alternative when the whole distribution is needed).
-- `token_bigram_topk` uses the same per-partition numpy fold with
+- `oov_report` is one hash aggregate over row-local expressions.  A
+  clean row evaluates no lambda: the lambda-free `array_min`/`array_max`
+  and `array_intersect` kernels decide whether a row holds an
+  out-of-range id or a NULL element, and only such rows run the
+  per-element `filter` that counts them.  `vocab_coverage` is built on
+  `token_histogram`.
+- `token_bigram_topk` is a per-partition numpy fold (`mapInPandas`) with
   bigram keys packed into int64 (a * vocab + b), so the shuffle carries
   distinct-bigrams-per-partition, bounded by |vocab|², typically ≪ data.
 """
@@ -34,10 +36,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vldt_spark.rounding import round6, round6_vec
+from vldt_spark.cells import Cells
+from vldt_spark.coercion import elements_outside, has_null_element
+from vldt_spark.rounding import round6_vec
 
 
 def _arrow_flat_tokens(list_arr) -> "tuple[np.ndarray, np.ndarray]":
@@ -117,18 +122,25 @@ def oov_report(
     """Per-group OOV audit: total tokens, OOV tokens (NULL element or id
     outside [0, vocab_size)), and the OOV rate.  Row-local expressions +
     one hash aggregate — partial aggregation makes the shuffle |groups|-
-    sized."""
+    sized.
+
+    Each count runs only on the rows a lambda-free verdict picks
+    (conditional evaluation, as in the fused validation pass): NULL
+    elements are ``size(t) − size(array_compact(t))`` where
+    `has_null_element` finds one, since ``array_compact`` plans as
+    ``filter(t, x -> x IS NOT NULL)``; out-of-range ids are a ``filter``
+    where `elements_outside` finds one."""
     t = F.col(tokens_col)
+    elem_dt = df.schema[tokens_col].dataType.elementType
     n_tok = F.coalesce(F.size(t), F.lit(0))
-    # size(filter(...)) counts non-NULL out-of-range; NULL elements are
-    # total minus non-null count.
-    non_null = F.size(F.filter(t, lambda x: x.isNotNull()))
-    bad_range = F.size(
-        F.filter(t, lambda x: x.isNotNull() & ((x < 0) | (x >= vocab_size)))
-    )
-    oov = F.when(t.isNull(), F.lit(0)).otherwise(
-        (n_tok - non_null) + bad_range
-    )
+    n_null = F.when(
+        t.isNotNull() & has_null_element(t, elem_dt), F.size(t) - F.size(F.array_compact(t))
+    ).otherwise(F.lit(0))
+    n_range = F.when(
+        elements_outside(t, elem_dt, lo=0, hi=vocab_size - 1),
+        F.size(F.filter(t, lambda x: (x < 0) | (x >= vocab_size))),
+    ).otherwise(F.lit(0))
+    oov = n_null + n_range
     return (
         df.select(
             F.col(by),
@@ -422,8 +434,6 @@ def sequence_stats(
     same convention as `token_histogram`); a NULL or empty array yields n_tok = 0 with NULL
     ratio/entropy/top_share.  Floats use half-up 6-decimal rounding.
     """
-    import pyarrow as pa
-
     id_dtype = df.schema[id_col].dataType.simpleString()
 
     def stats(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
@@ -523,39 +533,34 @@ def degenerate_flag(
 ):
     """Boolean column: True when a sequence is degenerate — NULL/empty,
     one token repeated ≥ ``max_run`` times consecutively, or (when
-    ``min_entropy`` is set) unigram entropy below it.  The row-local
-    flag underlying `expect.degenerate_sequence_share_below`, exposed
-    as a vectorized (Arrow-batched) expression so it composes into any
-    plan — including STREAMING aggregations, where mapInPandas-shaped
-    reports don't fit but a stateless column does.  Entropy uses the
-    same half-up 6-decimal rounding as `sequence_stats`, so the two
-    surfaces agree on boundary values."""
-    from pyspark.sql import Column
+    ``min_entropy`` is set) unigram entropy below it.  A stateless Arrow
+    UDF over `sequence_stats`' batch kernel (`_flat_sequence_stats`, no
+    per-row Python), so it composes into any plan, streaming
+    aggregations included, and agrees with `sequence_stats` on every
+    row, half-up 6-decimal entropy rounding included."""
 
-    @F.pandas_udf("boolean")
-    def flag(s: pd.Series) -> pd.Series:
-        out = np.empty(len(s), dtype=bool)
-        for i, arr in enumerate(s):
-            t = _int_tokens(arr)
-            n = 0 if t is None else int(t.size)
-            if n == 0:
-                out[i] = True
-                continue
-            change = np.flatnonzero(t[1:] != t[:-1])
-            edges = np.concatenate(([-1], change, [n - 1]))
-            bad = int(np.diff(edges).max()) >= max_run
-            if not bad and min_entropy is not None:
-                _, counts = np.unique(t, return_counts=True)
-                ent = round6(
-                    float(np.log(n))
-                    - float((counts * np.log(counts)).sum()) / n
-                )
-                bad = ent < min_entropy
-            out[i] = bad
-        return pd.Series(out)
+    @F.arrow_udf("boolean")
+    def flag(tokens: pa.Array) -> pa.Array:
+        flat, lens = _arrow_flat_tokens(tokens)
+        _, run, s, _ = _flat_sequence_stats(flat, lens)
+        bad = (lens == 0) | (run >= max_run)
+        if min_entropy is not None:
+            n = np.where(lens == 0, 1, lens)
+            bad |= round6_vec(np.log(n) - s / n) < min_entropy
+        return pa.array(bad, type=pa.bool_())
 
     col = tokens_col if isinstance(tokens_col, Column) else F.col(tokens_col)
     return flag(col)
+
+
+def degenerate_cells(tokens: Column, *, max_run: int = 100, min_entropy: float | None = None) -> Cells:
+    """The degenerate-share family's cells, shared by
+    `streaming.seq_stream.stream_degenerate_share` and
+    ``expect.degenerate_sequence_share_below``: n_seqs and n_degenerate
+    (`degenerate_flag`).  Every row counts: a NULL or empty sequence is
+    degenerate."""
+    flag = degenerate_flag(tokens, max_run=max_run, min_entropy=min_entropy)
+    return Cells(F.lit(True), {"n_seqs": F.lit(1), "n_degenerate": flag.cast("long")})
 
 
 def token_affix_report(

@@ -9,14 +9,10 @@ placeholder text through shows up within one trigger, not at the next
 batch audit.
 
 Scale shape: NO udf anywhere — `c4_rules` is one codegen projection
-(split + HOF filter + regexp counts), the window aggregate is
-conditional long sums, so partial aggregation runs map-side inside each
-micro-batch and the only state is |open windows| rows of a few longs.
-NULL-text rows carry no signal and count in NO cell, but they are
-excluded via CONDITIONAL AGGREGATION, not a row filter — a filter on
-the text column gets pushed below the EventTimeWatermark node and would
-silently drop the very rows whose timestamps must advance the watermark
-(the stall `lm_stream` regression-tested).
+(split + HOF filter + regexp counts), and the window aggregate is
+`text.c4_cells` summed by `cells.windowed`, so partial aggregation runs
+map-side inside each micro-batch and the only state is |open windows|
+rows of a few numbers.
 """
 
 from __future__ import annotations
@@ -24,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vldt_spark.functions.text import c4_rules
+from vldt_spark.cells import share, windowed
+from vldt_spark.functions.text import c4_cells
 
 
 def stream_c4_windows(
@@ -42,35 +39,14 @@ def stream_c4_windows(
     Returns a streaming DataFrame with (window_start, n_docs, n_pass,
     n_lorem, n_brace, n_few_sentences, pass_frac, mean_kept_frac); use
     append output mode — a window's row is final once the watermark
-    passes its end.  Empty windows report NULL fractions, never a fake
-    0."""
-    t = F.col(text_col)
-    valid = t.isNotNull()
-    c = c4_rules(t, min_words=min_words, min_sentences=min_sentences)
-
-    def cell(cond):
-        return F.sum(F.when(valid & cond, F.lit(1)).otherwise(F.lit(0)))
-
-    agg = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"))
-        .agg(
-            F.sum(valid.cast("long")).alias("n_docs"),
-            cell(c.getField("passes")).alias("n_pass"),
-            cell(~c.getField("lorem_ok")).alias("n_lorem"),
-            cell(~c.getField("brace_ok")).alias("n_brace"),
-            cell(~c.getField("sentences_ok")).alias("n_few_sentences"),
-            F.sum(
-                F.when(valid, c.getField("kept_frac")).otherwise(F.lit(0.0))
-            ).alias("__kept_sum"),
-        )
-    )
+    passes its end.  NULL text counts in no cell; empty windows report
+    NULL fractions, never a fake 0."""
+    cells = c4_cells(F.col(text_col), min_words=min_words, min_sentences=min_sentences)
+    agg = windowed(stream_df, ts_col, cells, window=window, watermark=watermark)
     n = F.col("n_docs")
     return agg.select(
-        F.col("w.start").alias("window_start"),
+        F.col("window.start").alias("window_start"),
         "n_docs", "n_pass", "n_lorem", "n_brace", "n_few_sentences",
-        F.when(n > 0, F.round(F.col("n_pass") / n, 6)).alias("pass_frac"),
-        F.when(n > 0, F.round(F.col("__kept_sum") / n, 6)).alias(
-            "mean_kept_frac"
-        ),
+        share(F.col("n_pass"), n).alias("pass_frac"),
+        share(F.col("kept_sum"), n).alias("mean_kept_frac"),
     )

@@ -10,11 +10,12 @@ precision sags mid-stream is letting junk into the corpus NOW — hours
 before a batch re-evaluation would notice.
 
 Scale shape: there is NO udf anywhere — prediction is a codegen
-comparison, the window aggregate is four conditional long sums, so
-partial aggregation runs map-side inside each micro-batch and the only
-state is |open windows| rows of four longs. Late rows within the
-watermark update their window's counts; the derived ratios are computed
-in the same projection from exact integers, so emitted rows are
+comparison, and the window aggregate is `confusion_cells` summed by
+`cells.windowed`, so partial aggregation runs map-side inside each
+micro-batch and the only state is |open windows| rows of four longs.
+Late rows within the watermark update their window's counts; the derived
+ratios (`confusion_ratios`, as in the batch report) are computed in the
+same projection from exact integers, so emitted rows are
 bit-deterministic for a given set of arrived rows.
 """
 
@@ -22,6 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from vldt_spark.cells import windowed
+from vldt_spark.checks.classifier_eval import confusion_cells, confusion_ratios
 
 
 def stream_confusion_windows(
@@ -39,50 +43,16 @@ def stream_confusion_windows(
 
     Returns a streaming DataFrame with (window_start, n, tp, fp, fn, tn,
     precision, recall, f1, accuracy); rows with NULL score/label carry no
-    verdict and count in NO cell — but they are excluded via CONDITIONAL
-    AGGREGATION, not a row filter: a filter on the score/label columns
-    gets pushed below the EventTimeWatermark node and would silently drop
-    the very rows whose timestamps must advance the watermark (the same
-    stall `lm_stream` regression-tested). Use append output mode: a
-    window's row is final once the watermark passes its end.
-    Zero-denominator windows report NULL ratios, never a fake 0."""
-    s = F.col(score_col).cast("double")
-    y = F.col(label_col).cast("boolean").cast("long")
-    pred = (s >= F.lit(float(threshold))).cast("long")
-    valid = s.isNotNull() & y.isNotNull()
-
-    def cell(expr):
-        return F.sum(F.when(valid, expr).otherwise(F.lit(0)))
-
-    agg = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"))
-        .agg(
-            cell(pred * y).alias("tp"),
-            cell(pred * (1 - y)).alias("fp"),
-            cell((1 - pred) * y).alias("fn"),
-            cell((1 - pred) * (1 - y)).alias("tn"),
-        )
-    )
-    tp, fp, fn, tn = (F.col(c).cast("double") for c in ("tp", "fp", "fn", "tn"))
-    precision = F.when(tp + fp > 0, tp / (tp + fp))
-    recall = F.when(tp + fn > 0, tp / (tp + fn))
-    f1 = F.when(
-        precision.isNotNull() & recall.isNotNull() & (precision + recall > 0),
-        2 * precision * recall / (precision + recall),
-    )
-    n = F.col("tp") + F.col("fp") + F.col("fn") + F.col("tn")
+    verdict and count in NO cell. Use append output mode: a window's row
+    is final once the watermark passes its end. Zero-denominator windows
+    report NULL ratios, never a fake 0."""
+    cells = confusion_cells(F.col(score_col), F.col(label_col), threshold)
+    agg = windowed(stream_df, ts_col, cells, window=window, watermark=watermark)
+    counts = [F.col(c) for c in ("tp", "fp", "fn", "tn")]
+    ratios = confusion_ratios(*counts)
     return agg.select(
-        F.col("w.start").alias("window_start"),
-        n.cast("long").alias("n"),
-        F.col("tp").cast("long").alias("tp"),
-        F.col("fp").cast("long").alias("fp"),
-        F.col("fn").cast("long").alias("fn"),
-        F.col("tn").cast("long").alias("tn"),
-        F.round(precision, 6).alias("precision"),
-        F.round(recall, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
-        F.round(
-            F.when(n > 0, (tp + tn) / n.cast("double")), 6
-        ).alias("accuracy"),
+        F.col("window.start").alias("window_start"),
+        (counts[0] + counts[1] + counts[2] + counts[3]).alias("n"),
+        *counts,
+        *[F.round(c, 6).alias(k) for k, c in ratios.items()],
     )

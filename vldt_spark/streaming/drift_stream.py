@@ -77,37 +77,8 @@ def stream_psi(
     aggregation (window×bin counts → per-window map → literal-vs-map PSI
     expression), avoiding the stream-stream join Spark forbids after
     aggregation."""
-    ref_p = _ref_probs(ref_hist)
-
-    binned = (
-        stream_df.withWatermark(ts_col, watermark)
-        .where(F.col(value_col).isNotNull())
-        .select(
-            F.col(ts_col),
-            bin_col(F.col(value_col), bins=bins, lo=lo, hi=hi).alias("bin"),
-        )
-    )
-    win_hist = binned.groupBy(F.window(F.col(ts_col), window), F.col("bin")).agg(
-        F.count(F.lit(1)).alias("n_cur")
-    )
-    # chained time-window aggregation (Spark 3.5+): re-window on the event
-    # time of the first window so the watermark propagates downstream
-    per_win = win_hist.groupBy(
-        F.window(F.window_time(F.col("window")), window).alias("window")
-    ).agg(
-        F.sum("n_cur").alias("n_rows"),
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("bin"), F.col("n_cur")))
-        ).alias("m"),
-    )
-    psi_expr = _psi_literal_expr(
-        ref_p, bins, eps, F.col("m"), F.col("n_rows").cast("double")
-    )
-    return per_win.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "n_rows",
-        F.round(psi_expr, 6).alias("psi"),
+    return _windowed_psi(
+        stream_df, ref_hist, value_col, ts_col, [], bins, lo, hi, window, watermark, eps
     )
 
 
@@ -136,36 +107,45 @@ def stream_psi_by_group(
     a window. At 10^12 rows the group column must be bounded-cardinality
     (source/partition keys, not doc ids) — the same requirement the batch
     check has."""
-    ref_p = _ref_probs(ref_hist)
+    return _windowed_psi(
+        stream_df, ref_hist, value_col, ts_col, [by], bins, lo, hi, window, watermark, eps
+    )
 
-    binned = (
-        stream_df.withWatermark(ts_col, watermark)
-        .where(F.col(value_col).isNotNull())
-        .select(
-            F.col(ts_col),
-            F.col(by),
-            bin_col(F.col(value_col), bins=bins, lo=lo, hi=hi).alias("bin"),
-        )
+
+def _windowed_psi(stream_df, ref_hist, value_col, ts_col, by, bins, lo, hi, window, watermark, eps):
+    """``stream_psi`` per ``by`` group: (window_start, window_end, by...,
+    n_rows, psi)."""
+    ref_p = _ref_probs(ref_hist)
+    keys = [F.col(c) for c in by]
+    v = F.col(value_col)
+    # no row filter below the watermark (see ``cells``): a NULL value gets
+    # a NULL bin, which still advances event time and counts nowhere
+    binned = stream_df.withWatermark(ts_col, watermark).select(
+        F.col(ts_col),
+        *keys,
+        F.when(v.isNotNull(), bin_col(v, bins=bins, lo=lo, hi=hi)).alias("bin"),
     )
     win_hist = binned.groupBy(
-        F.window(F.col(ts_col), window), F.col(by), F.col("bin")
+        F.window(F.col(ts_col), window), *keys, F.col("bin")
     ).agg(F.count(F.lit(1)).alias("n_cur"))
+    # chained time-window aggregation (Spark 3.5+): re-window on the event
+    # time of the first window so the watermark propagates downstream
+    valid = F.col("bin").isNotNull()
     per_win = win_hist.groupBy(
-        F.window(F.window_time(F.col("window")), window).alias("window"),
-        F.col(by),
+        F.window(F.window_time(F.col("window")), window).alias("window"), *keys
     ).agg(
-        F.sum("n_cur").alias("n_rows"),
+        F.sum(F.when(valid, F.col("n_cur"))).alias("n_rows"),
         F.map_from_entries(
-            F.collect_list(F.struct(F.col("bin"), F.col("n_cur")))
+            F.collect_list(F.when(valid, F.struct(F.col("bin"), F.col("n_cur"))))
         ).alias("m"),
-    )
+    ).where(F.col("n_rows").isNotNull())
     psi_expr = _psi_literal_expr(
         ref_p, bins, eps, F.col("m"), F.col("n_rows").cast("double")
     )
     return per_win.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
-        F.col(by),
+        *keys,
         "n_rows",
         F.round(psi_expr, 6).alias("psi"),
     )
@@ -269,22 +249,24 @@ def stream_centroid_drift(
         )
     dim = max(rc) + 1
 
-    exploded = (
-        stream_df.withWatermark(ts_col, watermark)
-        .where(F.col(vec_col).isNotNull())
-        .select(F.col(ts_col), F.posexplode(vec_col).alias("pos", "v"))
+    # no row filter below the watermark (see ``cells``): a NULL or empty
+    # vector explodes to one NULL position, which still advances event
+    # time and counts nowhere
+    exploded = stream_df.withWatermark(ts_col, watermark).select(
+        F.col(ts_col), F.posexplode_outer(vec_col).alias("pos", "v")
     )
     win_sums = exploded.groupBy(F.window(F.col(ts_col), window), F.col("pos")).agg(
         F.sum("v").alias("s"), F.count("v").alias("c")
     )
+    at = F.col("pos").isNotNull()
     per_win = win_sums.groupBy(
         F.window(F.window_time(F.col("window")), window).alias("window")
     ).agg(
-        F.max("c").alias("n_rows"),
+        F.max(F.when(at, F.col("c"))).alias("n_rows"),
         F.map_from_entries(
-            F.collect_list(F.struct(F.col("pos"), F.struct(F.col("s"), F.col("c"))))
+            F.collect_list(F.when(at, F.struct(F.col("pos"), F.struct(F.col("s"), F.col("c")))))
         ).alias("m"),
-    )
+    ).where(F.col("n_rows").isNotNull())
 
     def mean_raw(i: int) -> Column:
         # NULL when the window has no non-null value at position i (or the

@@ -10,8 +10,8 @@ sequences whose perplexity crosses an alert threshold.
 Scale shape: scoring is a STATELESS Arrow UDF on the batch scorer's
 flat kernel, with the |vocab| log-prob vector closed over (float64,
 ~400 KB at a 50k vocab — shipped once per executor, never through
-state).  The only state is the watermarked windowed aggregation's
-|open windows| rows of three numbers; token arrays never enter state,
+state).  The only state is `cells.windowed`'s |open windows| rows of
+three numbers; token arrays never enter state,
 and partial aggregation runs map-side within each micro-batch —
 identical cost profile to the batch scorer plus a |windows|-bounded
 exchange.
@@ -26,6 +26,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
+
+from vldt_spark.cells import Cells, share, windowed
 
 
 def ppl_udf(logp: Sequence[float], floor: float):
@@ -65,21 +67,9 @@ def stream_ppl_windows(
     high_ppl_share) in append mode.  ``n_seqs`` counts only scoreable
     (non-empty) sequences; ``n_high_ppl`` counts those with perplexity
     ABOVE the threshold — the gibberish/noise alert tail."""
-    score = ppl_udf(logp, floor)
-    # No row filter anywhere: a filter on the (deterministic) UDF output
-    # can be pushed below the EventTimeWatermark node by Catalyst, so
-    # un-scoreable rows (NULL/empty tokens) would stop advancing event
-    # time and stall window emission.  Instead every row reaches the
-    # watermark operator and un-scoreable rows drop out via conditional
-    # aggregation (count/avg ignore their NULL score).
-    scored = stream_df.withWatermark(ts_col, watermark).withColumn(
-        "__ppl", score(F.col(tokens_col))
-    )
-    high = F.sum(
-        F.when(F.col("__ppl") > F.lit(float(ppl_threshold)), 1).otherwise(0)
-    )
-    n = F.count("__ppl")
-    # avg over EXACT micro-ppl integers, not doubles: float summation is
+    ppl = F.col("__ppl")
+    # un-scoreable rows (NULL/empty tokens) count in no cell.  The micro
+    # cell sums EXACT micro-ppl integers, not doubles: float summation is
     # order-dependent across partitions/triggers, so a window's mean
     # sitting near a 5e-7 rounding boundary would flip between runs; the
     # per-row scores are already 6-decimal, so the integer sum is
@@ -87,25 +77,23 @@ def stream_ppl_windows(
     # reproducible).  decimal(38,0), not long: 10^12 rows × ~10^7
     # micro-ppl overflows int64; decimal sums stay exact to 10^38 and
     # mirror DuckDB's HUGEINT sum
-    micro = F.sum(F.round(F.col("__ppl") * 1e6).cast("decimal(38,0)"))
-    win = (
-        scored.groupBy(F.window(F.col(ts_col), window).alias("__w"))
-        .agg(
-            n.alias("n_seqs"),
-            F.round(micro.cast("double") / (n.cast("double") * 1e6), 6).alias(
-                "avg_ppl"
-            ),
-            high.cast("long").alias("n_high_ppl"),
-            F.when(
-                n > 0, F.round(high / n.cast("double"), 6)
-            ).alias("high_ppl_share"),
-        )
+    cells = Cells(
+        ppl.isNotNull(),
+        {
+            "n_seqs": F.lit(1),
+            "__micro": F.round(ppl * 1e6).cast("decimal(38,0)"),
+            "n_high_ppl": (ppl > F.lit(float(ppl_threshold))).cast("long"),
+        },
     )
+    scored = stream_df.withColumn("__ppl", ppl_udf(logp, floor)(F.col(tokens_col)))
+    win = windowed(scored, ts_col, cells, window=window, watermark=watermark)
+    n = F.col("n_seqs")
     return win.select(
-        F.col("__w.start").alias("window_start"),
-        F.col("__w.end").alias("window_end"),
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
         "n_seqs",
-        "avg_ppl",
+        F.when(n > 0, F.round(F.col("__micro").cast("double") / (n.cast("double") * 1e6), 6))
+        .alias("avg_ppl"),
         "n_high_ppl",
-        "high_ppl_share",
+        share(F.col("n_high_ppl"), n).alias("high_ppl_share"),
     )

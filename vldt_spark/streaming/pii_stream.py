@@ -9,14 +9,9 @@ trigger — not at the next batch audit. Operators route a window whose
 reaches a training shard.
 
 Scale shape: NO udf anywhere — the three screens are codegen `rlike`
-expressions, the window aggregate is conditional long sums, so partial
-aggregation runs map-side inside each micro-batch and the only state is
-|open windows| rows of five longs. NULL-text rows carry no signal and
-count in NO cell, but they are excluded via CONDITIONAL AGGREGATION,
-not a row filter — a filter on the text column gets pushed below the
-EventTimeWatermark node and would silently drop the very rows whose
-timestamps must advance the watermark (the stall `lm_stream`
-regression-tested).
+expressions, and the window aggregate is `text.pii_cells` summed by
+`cells.windowed`, so partial aggregation runs map-side inside each
+micro-batch and the only state is |open windows| rows of five longs.
 """
 
 from __future__ import annotations
@@ -24,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vldt_spark.functions.text import PII_PATTERNS
+from vldt_spark.cells import share, windowed
+from vldt_spark.functions.text import pii_cells
 
 
 def stream_pii_windows(
@@ -39,30 +35,13 @@ def stream_pii_windows(
 
     Returns a streaming DataFrame with (window_start, n_docs, n_email,
     n_ip, n_phone, n_any, pii_frac); use append output mode — a window's
-    row is final once the watermark passes its end. Empty-text windows
-    report NULL pii_frac, never a fake 0."""
-    t = F.col(text_col)
-    valid = t.isNotNull()
-    hits = {kind: t.rlike(pat) for kind, pat in PII_PATTERNS}
-    any_hit = hits["email"] | hits["ip"] | hits["phone"]
-
-    def cell(cond):
-        return F.sum(F.when(valid & cond, F.lit(1)).otherwise(F.lit(0)))
-
-    agg = (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"))
-        .agg(
-            F.sum(valid.cast("long")).alias("n_docs"),
-            cell(hits["email"]).alias("n_email"),
-            cell(hits["ip"]).alias("n_ip"),
-            cell(hits["phone"]).alias("n_phone"),
-            cell(any_hit).alias("n_any"),
-        )
+    row is final once the watermark passes its end. NULL text counts in
+    no cell; an empty-text window reports NULL pii_frac, never a fake 0."""
+    agg = windowed(
+        stream_df, ts_col, pii_cells(F.col(text_col)), window=window, watermark=watermark
     )
-    n = F.col("n_docs")
     return agg.select(
-        F.col("w.start").alias("window_start"),
+        F.col("window.start").alias("window_start"),
         "n_docs", "n_email", "n_ip", "n_phone", "n_any",
-        F.when(n > 0, F.round(F.col("n_any") / n, 6)).alias("pii_frac"),
+        share(F.col("n_any"), F.col("n_docs")).alias("pii_frac"),
     )

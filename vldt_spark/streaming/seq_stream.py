@@ -6,18 +6,22 @@ degenerate share (empty / looping / sub-entropy sequences) once the
 watermark closes each window.
 
 Scale shape: the flag is a STATELESS vectorized expression
-(`degenerate_flag`, Arrow-batched pandas UDF) evaluated inside the
-micro-batch — token arrays never enter state.  The only state is the
-watermarked windowed aggregation's |open windows| rows of three
-numbers, and partial aggregation runs map-side within each batch, so
-the monitor's cost profile is identical to the batch guard's: one
-streaming pass, |windows|-bounded exchange and memory.
+(`degenerate_flag`, an Arrow UDF over the `sequence_stats` batch
+kernel) evaluated inside the micro-batch — token arrays never enter
+state.  The window aggregate is `tokens.degenerate_cells` summed by
+`cells.windowed`: |open windows| rows of two longs, with partial
+aggregation map-side within each batch, so the monitor's cost profile is
+the batch guard's: one streaming pass, |windows|-bounded exchange and
+memory.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from vldt_spark.cells import share, windowed
+from vldt_spark.functions.tokens import degenerate_cells
 
 
 def stream_degenerate_share(
@@ -31,33 +35,15 @@ def stream_degenerate_share(
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Per-window (window_start, window_end, n_seqs, n_degenerate,
-    degenerate_share) in append mode — same flag semantics (and the
-    same half-up rounding) as the batch suite guard, so a window's
-    share equals `expect.degenerate_sequence_share_below`'s metric
-    over that window's rows."""
-    from vldt_spark.functions.tokens import degenerate_flag
-
-    bad = degenerate_flag(
-        tokens_col, max_run=max_run, min_entropy=min_entropy
-    )
-    win = (
-        stream_df.withColumn("__bad", bad)
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("__w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_seqs"),
-            F.sum(F.col("__bad").cast("long")).alias("n_degenerate"),
-            F.round(
-                F.sum(F.col("__bad").cast("long"))
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ).alias("degenerate_share"),
-        )
-    )
+    degenerate_share) in append mode — the batch suite guard's cells, so
+    a window's share equals `expect.degenerate_sequence_share_below`'s
+    metric over that window's rows."""
+    cells = degenerate_cells(F.col(tokens_col), max_run=max_run, min_entropy=min_entropy)
+    win = windowed(stream_df, ts_col, cells, window=window, watermark=watermark)
     return win.select(
-        F.col("__w.start").alias("window_start"),
-        F.col("__w.end").alias("window_end"),
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
         "n_seqs",
         "n_degenerate",
-        "degenerate_share",
+        share(F.col("n_degenerate"), F.col("n_seqs")).alias("degenerate_share"),
     )

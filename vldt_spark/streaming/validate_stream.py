@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vldt_spark.cells import Cells, windowed
 from vldt_spark.engine import ValidationEngine
 from vldt_spark.model import Model
 
@@ -32,17 +33,19 @@ def stream_verdicts(
     watermark: str = "10 minutes",
     extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Windowed per-partition verdicts (streaming B11)."""
-    return (
-        annotated.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), *extra_keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col("is_valid")).cast("long")).alias("n_invalid"),
-            F.sum(F.size("violations").cast("long")).alias("n_violations"),
-        )
-        .withColumn("passed", F.col("n_invalid") == 0)
+    """Windowed per-partition verdicts (streaming B11): (window,
+    extra_keys..., n_rows, n_invalid, n_violations, passed)."""
+    cells = Cells(
+        F.lit(True),
+        {
+            "n_rows": F.lit(1),
+            "n_invalid": (~F.col("is_valid")).cast("long"),
+            "n_violations": F.size("violations").cast("long"),
+        },
     )
+    return windowed(
+        annotated, ts_col, cells, window=window, watermark=watermark, by=extra_keys
+    ).withColumn("passed", F.col("n_invalid") == 0)
 
 
 def windowed_violation_counts(
