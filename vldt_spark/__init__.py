@@ -12,6 +12,10 @@ All predicate evaluation is native Spark SQL expressions or vectorized
 pandas/Arrow UDFs — never per-row Python.
 """
 
+from vldt_spark import zip_invalidate_guard
+
+zip_invalidate_guard.install()
+
 from vldt_spark.fields import Field, UNDEFINED
 from vldt_spark.model import Model, ModelConfig
 from vldt_spark.validators import field_validator, model_validator, check

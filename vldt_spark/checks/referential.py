@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vldt_spark.errors import session_columns
+
 
 def invalid_fk_values(
     fact: DataFrame,
@@ -37,8 +39,13 @@ def invalid_fk_values(
     leaves the choice to AQE, which broadcasts small dims at runtime and
     falls back to shuffle for large ones — the safe default given this
     function is reachable from ``engine.run`` for any ``ref=`` field."""
-    vals = fact.select(fk).where(F.col(fk).isNotNull()).distinct()
-    d = dim.select(F.col(dim_key).alias(fk)).distinct()
+    fk_col, nonnull, dim_fk = session_columns(
+        fact.sparkSession,
+        ("invalid_fk_values", fk, dim_key),
+        lambda: (F.col(fk), F.col(fk).isNotNull(), F.col(dim_key).alias(fk)),
+    )
+    vals = fact.select(fk_col).where(nonnull).distinct()
+    d = dim.select(dim_fk).distinct()
     if broadcast_dim:
         d = F.broadcast(d)
     return vals.join(d, fk, "left_anti")

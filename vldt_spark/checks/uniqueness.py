@@ -20,6 +20,8 @@ from operator import and_
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vldt_spark.errors import session_columns
+
 
 def _key_list(key: str | list[str]) -> list[str]:
     return [key] if isinstance(key, str) else list(key)
@@ -38,12 +40,20 @@ def duplicate_keys(df: DataFrame, key: str | list[str]) -> DataFrame:
     do not collide.  Its NULLs are reported as ``not_null`` violations,
     not uniqueness ones."""
     keys = _key_list(key)
+    cols, nonnull, n_dups, dup = session_columns(
+        df.sparkSession, ("duplicate_keys", *keys), lambda: _duplicate_key_columns(keys)
+    )
+    return df.select(*cols).where(nonnull).groupBy(*cols).agg(n_dups).where(dup)
+
+
+def _duplicate_key_columns(keys: list[str]) -> tuple:
+    """``duplicate_keys``' Columns for ``keys``: data-independent, so built
+    once per SparkSession (``errors.session_columns``)."""
     return (
-        df.select(*keys)
-        .where(_all_not_null(keys))
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_dups"))
-        .where(F.col("n_dups") > 1)
+        [F.col(k) for k in keys],
+        _all_not_null(keys),
+        F.count(F.lit(1)).alias("n_dups"),
+        F.col("n_dups") > 1,
     )
 
 

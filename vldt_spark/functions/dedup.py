@@ -82,8 +82,10 @@ def _exact_duplicates_keyed(
 
 def dedup_exact(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the min-id representative per fingerprint. Survivor set is
-    computed by aggregate (map-side combine), then semi-joined back —
-    the full rows never shuffle."""
+    computed by aggregate (map-side combine), then semi-joined back.
+    The full rows do not shuffle only while the survivor ids (about one
+    per row) are under the broadcast threshold; above it the semi-join
+    plans as a ``SortMergeJoin`` that shuffles ``docs``."""
     fp = fingerprint(F.col(text_col)).alias("fp")
     keep = (
         docs.select(fp, F.col(id_col))
@@ -1418,7 +1420,11 @@ def token_dedup_exact(
 ) -> DataFrame:
     """Keep the min-id representative per exact token sequence; all other
     columns ride through untouched. Survivor ids come from one partial-agg
-    shuffle on the sequence key; full rows never shuffle (semi-join).
+    shuffle on the sequence key, then a semi-join back onto ``df``.  The
+    full rows do not shuffle only while the survivor ids (about one per
+    row) are under the broadcast threshold; above it the semi-join plans
+    as a ``SortMergeJoin`` that shuffles ``df``, token arrays included:
+    206 MB of shuffle writes on the 200k-row bench table.
     Rows with a null ``id_col`` never survive (a semi-join can't match
     null) — at ingest that is the desired quarantine for unkeyed rows.
     ``hash_fn`` as in ``token_exact_duplicates``: array-native xxhash64

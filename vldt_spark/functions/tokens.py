@@ -17,8 +17,9 @@ Scale design:
   final groupBy(token) is a |vocab|-sized aggregate.  Same
   partial-then-final shape as the uniqueness check's map-side-combined
   count.  A `mapInArrow` numpy `bincount` fold has the same per-token
-  cost plus the fixed cost of a Python stage, so the count stays
-  native.
+  cost plus shipping every token array across the Arrow boundary (and
+  a fixed start-up cost in each Python worker's first task;
+  DEVELOPING.md), so the count stays native.
 - `oov_report` is one hash aggregate over row-local expressions.  A
   clean row evaluates no lambda: the lambda-free `array_min`/`array_max`
   and `array_intersect` kernels decide whether a row holds an
