@@ -56,13 +56,13 @@ def test_null_fks_not_reported(spark):
 
 def test_build_is_bounded(spark):
     dim = spark.range(0, 100_000).select(F.col("id").alias("k"))
-    bm = bloom_build(dim, "k", n_bits=1 << 20, build_partitions=8)
+    bm = bloom_build(dim, "k", n_bits=1 << 20)
     assert len(bm) == (1 << 20) // 8  # fixed size regardless of dim rows
 
 
 def test_no_fact_shuffle_in_plan(spark, tables):
-    # the screen is scan -> project -> mapInPandas: no Exchange on the
-    # fact side (the whole point vs a sort-merge anti-join)
+    # the screen is scan -> Arrow UDF over the FK hash -> filter: no
+    # Exchange on the fact side (the whole point vs a sort-merge anti-join)
     fact, dim = tables
     plan = ri_bloom_screen(fact, "fk", dim, "k", n_bits=1 << 20)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan

@@ -75,7 +75,7 @@ def test_ri_anti_join(spark):
     dim = spark.createDataFrame([(1,), (2,), (3,)], "pk int")
     bad = invalid_fk_values(fact, "fk", dim, "pk").collect()
     assert [r["fk"] for r in bad] == [9]
-    rows = ri_violation_rows(fact, "fk", dim, "pk", broadcast_dim=True).collect()
+    rows = ri_violation_rows(fact, "fk", dim, "pk").collect()
     assert [r["fk"] for r in rows] == [9]  # null FK not an RI violation
 
 

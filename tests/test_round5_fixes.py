@@ -77,7 +77,7 @@ def test_dup_ngram_screened_plan_has_no_join(spark):
         .executedPlan()
         .toString()
     )
-    # the whole probe side is scan -> row-local project -> mapInPandas:
+    # the whole probe side is scan -> row-local project -> mapInArrow:
     # the doc->shingle relation never rides a join or a shuffle
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" not in plan

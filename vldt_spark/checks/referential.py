@@ -5,28 +5,41 @@ construct a valid inner model) to a foreign-key-into-dimension constraint.
 
 Scale strategy: never anti-join the 10^12-row fact table directly when the
 FK column is low-cardinality — aggregate to ``distinct(fk)`` first (a
-partial-agg shuffle of dim-like size), anti-join the *distinct values*
-against the dim, then broadcast the (tiny) invalid-value set back. For
-high-cardinality FKs use ``ri_violation_rows`` which lets Catalyst pick
-broadcast vs sort-merge anti-join (AQE re-plans at runtime).
+partial-agg shuffle of dim-like size) and anti-join the *distinct values*
+against the dim.  The dim side is not deduplicated: a left anti join
+returns the same rows whatever the duplicate or NULL dim keys are, and
+without a distinct AQE can broadcast a small dim as it stands, so the
+anti join runs map-side.  For high-cardinality FKs use
+``ri_violation_rows``, which lets Catalyst pick broadcast vs sort-merge
+anti-join (AQE re-plans at runtime).
+
+When the dim's keys are too many to broadcast, the Bloom screen
+(``ri_bloom_screen``) broadcasts a bitmap of them instead.  The bit
+positions, and setting and testing them, live in ``_bloom_bits``,
+``_bloom_set`` and ``_bloom_test`` and nowhere else: the build folds
+with ``mapInArrow``, and every probe (this module's screen and flag,
+the screened duplicated-n-gram fraction in functions/dedup.py) tests
+the same positions over uint64 key hashes, so the two sides cannot
+disagree.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, Iterator
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vldt_spark.errors import session_columns
 
+# number of partial bitmaps a build folds: bounds what the driver
+# collects (n_bits/8 bytes each) even on a 10k-split dim scan
+_BUILD_PARTITIONS = 16
 
-def invalid_fk_values(
-    fact: DataFrame,
-    fk: str,
-    dim: DataFrame,
-    dim_key: str,
-    *,
-    broadcast_dim: bool | None = None,
-) -> DataFrame:
+
+def invalid_fk_values(fact: DataFrame, fk: str, dim: DataFrame, dim_key: str) -> DataFrame:
     """Distinct non-null FK values absent from the dimension (small output).
 
     NULL semantics: a NULL FK is never an RI violation (a required FK
@@ -34,36 +47,77 @@ def invalid_fk_values(
     matches nothing, so it cannot make any FK value valid.  The result does
     not depend on how the fact table is partitioned.
 
-    ``broadcast_dim=True`` pins a broadcast anti-join — only when the dim's
-    distinct keys are known to fit executor memory. The default (``None``)
-    leaves the choice to AQE, which broadcasts small dims at runtime and
-    falls back to shuffle for large ones — the safe default given this
-    function is reachable from ``engine.run`` for any ``ref=`` field."""
+    The dim is anti-joined as it stands: AQE broadcasts a small dim at
+    runtime and falls back to a shuffle for a large one — the safe
+    default given this function is reachable from ``engine.run`` for any
+    ``ref=`` field."""
     fk_col, nonnull, dim_fk = session_columns(
         fact.sparkSession,
         ("invalid_fk_values", fk, dim_key),
         lambda: (F.col(fk), F.col(fk).isNotNull(), F.col(dim_key).alias(fk)),
     )
     vals = fact.select(fk_col).where(nonnull).distinct()
-    d = dim.select(dim_fk).distinct()
-    if broadcast_dim:
-        d = F.broadcast(d)
-    return vals.join(d, fk, "left_anti")
+    return vals.join(dim.select(dim_fk), fk, "left_anti")
 
 
-def ri_violation_rows(
-    fact: DataFrame, fk: str, dim: DataFrame, dim_key: str, *, broadcast_dim: bool | None = None
-) -> DataFrame:
+def ri_violation_rows(fact: DataFrame, fk: str, dim: DataFrame, dim_key: str) -> DataFrame:
     """Fact rows whose FK has no match in the dim (LEFT ANTI JOIN).
 
-    ``broadcast_dim=True`` forces a broadcast anti-join (dim fits in
-    executor memory); ``False`` forces shuffle; ``None`` lets AQE decide.
-    Null FKs are not RI violations (they are not_null violations).
+    AQE picks a broadcast or a shuffled anti join.  Null FKs are not RI
+    violations (they are not_null violations), and duplicate or NULL dim
+    keys change nothing.
     """
-    d = dim.select(F.col(dim_key).alias(fk)).distinct()
-    if broadcast_dim is True:
-        d = F.broadcast(d)
+    d = dim.select(F.col(dim_key).alias(fk))
     return fact.where(F.col(fk).isNotNull()).join(d, fk, "left_anti")
+
+
+def _bloom_bits(h: np.ndarray, n_bits: int, n_hashes: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(byte index, bit mask) of each of the k bit positions of the uint64
+    hashes ``h``: Kirsch–Mitzenmacher double hashing over one 64-bit hash,
+    pos_i = (h_lo + i·(h_hi|1)) mod n_bits."""
+    lo = h & np.uint64(0xFFFFFFFF)
+    hi = (h >> np.uint64(32)) | np.uint64(1)
+    nb = np.uint64(n_bits)
+    for i in range(n_hashes):
+        pos = (lo + np.uint64(i) * hi) % nb
+        yield (pos >> np.uint64(3)).astype(np.int64), np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
+
+
+def _bloom_set(bitmap: np.ndarray, h: np.ndarray, n_hashes: int) -> None:
+    """Set the bits of the uint64 hashes ``h`` in the uint8 ``bitmap``."""
+    for byte, mask in _bloom_bits(h, bitmap.size * 8, n_hashes):
+        np.bitwise_or.at(bitmap, byte, mask)
+
+
+def _bloom_test(bitmap: np.ndarray, h: np.ndarray, n_hashes: int) -> np.ndarray:
+    """True where every bit of the uint64 hash is set: the key MAY be in
+    the built set.  False is definite (Bloom filters have no false
+    negatives)."""
+    member = np.ones(h.size, dtype=bool)
+    for byte, mask in _bloom_bits(h, bitmap.size * 8, n_hashes):
+        member &= (bitmap[byte] & mask).astype(bool)
+    return member
+
+
+def _key_hash(key: str) -> Column:
+    """The 64-bit hash both Bloom sides use.  Keys are hashed by their
+    CANONICAL STRING form so the build and probe sides agree even when
+    the FK and dim-key integer widths differ (``xxhash64`` is
+    type-width-sensitive: int 5 and bigint 5 hash differently raw)."""
+    return F.xxhash64(F.col(key).cast("string"))
+
+
+def _bloom_member(spark: SparkSession, bitmap_bytes: bytes, n_hashes: int) -> Callable[[Column], Column]:
+    """A scalar Arrow UDF over a 64-bit hash column: ``_bloom_test``
+    against the broadcast bitmap.  Only the hash crosses into Python."""
+    bc = spark.sparkContext.broadcast(bitmap_bytes)
+
+    @F.arrow_udf("boolean")
+    def member(h: pa.Array) -> pa.Array:
+        bitmap = np.frombuffer(bc.value, dtype=np.uint8)
+        return pa.array(_bloom_test(bitmap, h.to_numpy().view(np.uint64), n_hashes))
+
+    return member
 
 
 def bloom_size_bits(
@@ -102,7 +156,6 @@ def bloom_build(
     *,
     n_bits: int | None = None,
     n_hashes: int = 5,
-    build_partitions: int = 16,
 ) -> bytes:
     """Build a Bloom-filter bitmap of the dimension's key set.
 
@@ -112,27 +165,12 @@ def bloom_build(
     pin the broadcast size. An explicit value whose expected fill
     exceeds 50% (per-absent-key miss ≥ ~3% at k=5) raises a warning.
 
-    Distributed build: keys are hashed JVM-side (``xxhash64``), each of
-    ``build_partitions`` partitions folds its hashes into a local bitmap
-    in one vectorized numpy pass (mapInPandas), and the ≤
-    ``build_partitions`` partial bitmaps (n_bits/8 bytes each) are OR-ed
-    driver-side — bounded driver data regardless of dim row count
-    (repartition caps the partial count even on a 10k-split dim scan).
-
-    Bit positions use Kirsch–Mitzenmacher double hashing over the single
-    64-bit key hash: pos_i = (h_lo + i·(h_hi|1)) mod n_bits — k positions
-    from one JVM-side hash, no per-row Python. Keys are hashed by their
-    CANONICAL STRING form so the build and probe sides agree even when
-    the FK and dim-key integer widths differ (``xxhash64`` is
-    type-width-sensitive: int 5 and bigint 5 hash differently raw).
+    Distributed build: keys are hashed JVM-side (``xxhash64`` of the
+    key's string form, ``_key_hash``), and ``bloom_build_hashed`` folds
+    the hashes into at most 16 partial bitmaps that the driver ORs.
     """
-    hashed = dim.where(F.col(dim_key).isNotNull()).select(
-        F.xxhash64(F.col(dim_key).cast("string")).alias("__h")
-    )
-    return bloom_build_hashed(
-        hashed, "__h", n_bits=n_bits, n_hashes=n_hashes,
-        build_partitions=build_partitions,
-    )
+    hashed = dim.where(F.col(dim_key).isNotNull()).select(_key_hash(dim_key).alias("__h"))
+    return bloom_build_hashed(hashed, "__h", n_bits=n_bits, n_hashes=n_hashes)
 
 
 def bloom_build_hashed(
@@ -141,47 +179,38 @@ def bloom_build_hashed(
     *,
     n_bits: int | None = None,
     n_hashes: int = 5,
-    build_partitions: int = 16,
 ) -> bytes:
     """``bloom_build`` over a column that ALREADY carries the 64-bit key
     hashes (``xxhash64`` computed upstream — e.g. when the same hashes
     also feed the probe side, as in the screened duplicated-n-gram
-    fraction): skips the re-hash select, everything else identical."""
-    import numpy as np
+    fraction).
 
+    Each of 16 partitions folds its hashes into a local bitmap with one
+    vectorized ``_bloom_set`` per Arrow batch (``mapInArrow``), and the
+    ≤ 16 partial bitmaps (n_bits/8 bytes each) are OR-ed driver-side —
+    bounded driver data regardless of row count (the repartition caps
+    the partial count even on a 10k-split scan)."""
     if n_bits is None:
         n_bits = bloom_size_bits(df, hash_col, n_hashes=n_hashes)
     hashed = (
         df.select(F.col(hash_col).alias("__h"))
         .where(F.col("__h").isNotNull())
-        .repartition(build_partitions)
+        .repartition(_BUILD_PARTITIONS)
     )
     n_bytes = n_bits // 8
 
-    def fold(batches):
-        import pandas as pd
-
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         bitmap = np.zeros(n_bytes, dtype=np.uint8)
         any_rows = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            any_rows = True
-            h = pdf["__h"].to_numpy(dtype=np.int64).astype(np.uint64)
-            lo = h & np.uint64(0xFFFFFFFF)
-            hi = (h >> np.uint64(32)) | np.uint64(1)
-            for i in range(n_hashes):
-                pos = (lo + np.uint64(i) * hi) % np.uint64(n_bits)
-                np.bitwise_or.at(
-                    bitmap, (pos >> np.uint64(3)).astype(np.int64),
-                    np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8),
-                )
+        for batch in batches:
+            if batch.num_rows:
+                any_rows = True
+                _bloom_set(bitmap, batch.column(0).to_numpy().view(np.uint64), n_hashes)
         if any_rows:
-            yield pd.DataFrame({"bitmap": [bitmap.tobytes()]})
+            yield pa.RecordBatch.from_arrays([pa.array([bitmap.tobytes()], pa.binary())], ["bitmap"])
 
-    partials = hashed.mapInPandas(fold, schema="bitmap binary").collect()
     merged = np.zeros(n_bytes, dtype=np.uint8)
-    for row in partials:
+    for row in hashed.mapInArrow(fold, "bitmap binary").collect():
         merged |= np.frombuffer(row["bitmap"], dtype=np.uint8)
     fill = float(np.unpackbits(merged).sum()) / n_bits
     if fill > 0.5:
@@ -205,7 +234,6 @@ def ri_bloom_screen(
     *,
     n_bits: int | None = None,
     n_hashes: int = 5,
-    build_partitions: int = 16,
 ) -> DataFrame:
     """Map-side Bloom RI screen: fact rows whose FK is DEFINITELY absent
     from the dimension — zero shuffle of the fact table.
@@ -214,7 +242,8 @@ def ri_bloom_screen(
     too many to broadcast, the exact check (``ri_violation_rows``) is a
     sort-merge anti-join that shuffles the ENTIRE fact table on the FK.
     A Bloom bitmap of the dim (1 MiB default) rides a broadcast instead,
-    and every fact partition screens locally in one vectorized pass.
+    and every fact partition screens locally: the ``bloom_probe_flag``
+    test used as a filter, so only the FK hash crosses into Python.
 
     Semantics are one-sided, stated precisely:
     - every reported row IS a true violation (a key that misses any of
@@ -229,40 +258,9 @@ def ri_bloom_screen(
 
     Null FKs are not RI violations (they are not_null violations).
     """
-    import numpy as np
-
-    bitmap_bytes = bloom_build(
-        dim, dim_key, n_bits=n_bits, n_hashes=n_hashes,
-        build_partitions=build_partitions,
-    )
-    n_bits = len(bitmap_bytes) * 8  # auto-sized build picks the width
-    spark = fact.sparkSession
-    bc = spark.sparkContext.broadcast(bitmap_bytes)
-    src = fact.where(F.col(fk).isNotNull()).withColumn(
-        "__h", F.xxhash64(F.col(fk).cast("string"))
-    )
-    out_schema = src.drop("__h").schema
-
-    def probe(batches):
-        bitmap = np.frombuffer(bc.value, dtype=np.uint8)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            h = pdf["__h"].to_numpy(dtype=np.int64).astype(np.uint64)
-            lo = h & np.uint64(0xFFFFFFFF)
-            hi = (h >> np.uint64(32)) | np.uint64(1)
-            member = np.ones(len(pdf), dtype=bool)
-            for i in range(n_hashes):
-                pos = (lo + np.uint64(i) * hi) % np.uint64(n_bits)
-                bits = bitmap[(pos >> np.uint64(3)).astype(np.int64)]
-                member &= (
-                    bits & (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
-                ).astype(bool)
-            out = pdf.loc[~member].drop(columns=["__h"])
-            if len(out):
-                yield out
-
-    return src.mapInPandas(probe, schema=out_schema)
+    bitmap = bloom_build(dim, dim_key, n_bits=n_bits, n_hashes=n_hashes)
+    member = _bloom_member(fact.sparkSession, bitmap, n_hashes)
+    return fact.where(F.col(fk).isNotNull()).where(~member(_key_hash(fk)))
 
 
 def bloom_probe_flag(
@@ -280,39 +278,14 @@ def bloom_probe_flag(
 
     ``flag_col=False`` rows are DEFINITELY absent from the built key set
     (no false negatives); ``True`` rows are *possibly* present and must be
-    confirmed exactly when the pipeline needs two-sided truth. Same
-    Kirsch–Mitzenmacher double hashing and canonical-string key form as
-    ``bloom_build`` — the two MUST agree or every probe is garbage.
-    Zero shuffle: one broadcast of the bitmap, one vectorized map pass.
+    confirmed exactly when the pipeline needs two-sided truth. Same bit
+    positions (``_bloom_bits``) and key hash (``_key_hash``) as
+    ``bloom_build``.  Zero shuffle: one broadcast of the bitmap and one
+    scalar Arrow UDF over ``xxhash64(cast(key as string))``, so only the
+    hash crosses into Python, not the rows.
     """
-    import numpy as np
-
-    n_bits = len(bitmap_bytes) * 8
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(bitmap_bytes)
-    src = df.withColumn("__h", F.xxhash64(F.col(key).cast("string")))
-    out_schema = df.schema.add(flag_col, "boolean")
-
-    def probe(batches):
-        bitmap = np.frombuffer(bc.value, dtype=np.uint8)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            h = pdf["__h"].to_numpy(dtype=np.int64).astype(np.uint64)
-            lo = h & np.uint64(0xFFFFFFFF)
-            hi = (h >> np.uint64(32)) | np.uint64(1)
-            member = np.ones(len(pdf), dtype=bool)
-            for i in range(n_hashes):
-                pos = (lo + np.uint64(i) * hi) % np.uint64(n_bits)
-                bits = bitmap[(pos >> np.uint64(3)).astype(np.int64)]
-                member &= (
-                    bits & (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
-                ).astype(bool)
-            out = pdf.drop(columns=["__h"])
-            out[flag_col] = member
-            yield out
-
-    return src.mapInPandas(probe, schema=out_schema)
+    member = _bloom_member(df.sparkSession, bitmap_bytes, n_hashes)
+    return df.withColumn(flag_col, member(_key_hash(key)))
 
 
 def ri_report(fact: DataFrame, fk: str, dim: DataFrame, dim_key: str) -> DataFrame:

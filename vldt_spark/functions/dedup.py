@@ -837,7 +837,6 @@ def duplicated_ngram_fraction_screened(
     shingle_k: int = 3,
     n_bits: int | None = None,
     n_hashes: int = 5,
-    build_partitions: int = 16,
 ) -> DataFrame:
     """Bloom-screened ``duplicated_ngram_fraction`` — the 100 TB shape.
 
@@ -850,14 +849,17 @@ def duplicated_ngram_fraction_screened(
     bounded partial bitmaps, driver OR, auto-sized from the
     duplicated-set cardinality), and every document then counts its
     duplicated shingles ROW-LOCALLY: shingles are hashed JVM-side ONCE
-    (``xxhash64``), and the cached (id, n, hashes) relation feeds both
+    (``xxhash64``), and the cached (id, hashes) relation feeds both
     the duplicated-set aggregate (an exchange of LONGS, never shingle
-    strings) and the probe (one vectorized numpy pass per Arrow batch) —
-    the whole job is a single shingling pass plus cached re-reads. The
-    only exchange left is the per-hash count aggregate's
-    map-side-combined partials; the doc→shingle relation never rides a
-    shuffle. The hash relation stays persisted (MEMORY_AND_DISK, ~8
-    bytes/shingle) for the returned DataFrame's lifetime.
+    strings) and the probe — one ``mapInArrow`` pass that flattens each
+    Arrow batch's hash lists (``_arrow_flat_tokens``), tests them all
+    with one ``_bloom_test`` and sums the members per row with one
+    ``np.add.reduceat``. The whole job is a single shingling pass plus
+    cached re-reads. The only exchange left is the per-hash count
+    aggregate's map-side-combined partials; the doc→shingle relation
+    never rides a shuffle. The hash relation stays persisted
+    (MEMORY_AND_DISK, ~8 bytes/shingle) for the returned DataFrame's
+    lifetime.
 
     Error is ONE-SIDED: a Bloom false positive can only mark a singleton
     shingle as duplicated, and counting in hash space can only MERGE
@@ -871,10 +873,12 @@ def duplicated_ngram_fraction_screened(
     same schema as the exact form.
     """
     import numpy as np
+    import pyarrow as pa
     from pyspark import StorageLevel
     from pyspark.sql import types as T
 
-    from vldt_spark.checks.referential import bloom_build_hashed
+    from vldt_spark.checks.referential import _bloom_test, bloom_build_hashed
+    from vldt_spark.functions.tokens import _arrow_flat_tokens
 
     base = ensure_min_parallelism(docs.select(id_col, text_col))
     sh = base.select(
@@ -889,7 +893,6 @@ def duplicated_ngram_fraction_screened(
     # collision can only merge counts UPWARD (overcount, never under).
     hashed = sh.select(
         F.col(id_col),
-        F.size("shingles").cast("long").alias("n_shingles"),
         F.transform("shingles", lambda s: F.xxhash64(s)).alias("__hs"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     dups = (
@@ -898,16 +901,8 @@ def duplicated_ngram_fraction_screened(
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .where(F.col("n_docs") >= 2)
     )
-    bitmap_bytes = bloom_build_hashed(
-        dups,
-        "__h",
-        n_bits=n_bits,
-        n_hashes=n_hashes,
-        build_partitions=build_partitions,
-    )
-    n_bits = len(bitmap_bytes) * 8
-    spark = docs.sparkSession
-    bc = spark.sparkContext.broadcast(bitmap_bytes)
+    bitmap_bytes = bloom_build_hashed(dups, "__h", n_bits=n_bits, n_hashes=n_hashes)
+    bc = docs.sparkSession.sparkContext.broadcast(bitmap_bytes)
     out_schema = T.StructType(
         [
             T.StructField(id_col, docs.schema[id_col].dataType, True),
@@ -916,53 +911,32 @@ def duplicated_ngram_fraction_screened(
             T.StructField("dup_fraction", T.DoubleType(), False),
         ]
     )
+    names = [f.name for f in out_schema]
 
     def probe(batches):
-        import pandas as pd
-
         bitmap = np.frombuffer(bc.value, dtype=np.uint8)
-        nb = np.uint64(n_bits)
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            lens = np.fromiter(
-                (len(a) for a in pdf["__hs"]), dtype=np.int64, count=len(pdf)
-            )
-            dup_counts = np.zeros(len(pdf), dtype=np.int64)
-            if int(lens.sum()):
-                flat = np.concatenate(
-                    [np.asarray(a, dtype=np.int64) for a in pdf["__hs"] if len(a)]
-                ).astype(np.uint64)
-                lo = flat & np.uint64(0xFFFFFFFF)
-                hi = (flat >> np.uint64(32)) | np.uint64(1)
-                member = np.ones(len(flat), dtype=bool)
-                for i in range(n_hashes):
-                    pos = (lo + np.uint64(i) * hi) % nb
-                    bits = bitmap[(pos >> np.uint64(3)).astype(np.int64)]
-                    member &= (
-                        bits
-                        & (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
-                    ).astype(bool)
-                starts = np.zeros(len(pdf), dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                nonzero = lens > 0
+            flat, lens = _arrow_flat_tokens(batch.column(1))
+            dup_counts = np.zeros(lens.size, dtype=np.int64)
+            nonzero = lens > 0
+            if flat.size:
+                member = _bloom_test(bitmap, flat.view(np.uint64), n_hashes)
                 # reduceat over nonzero-row starts: zero-length rows add
                 # no flat elements, so consecutive kept starts delimit
                 # exactly their rows' segments
+                starts = np.cumsum(lens) - lens
                 dup_counts[nonzero] = np.add.reduceat(
                     member.astype(np.int64), starts[nonzero]
                 )
-            frac = np.where(lens > 0, dup_counts / np.maximum(lens, 1), 0.0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_shingles": lens,
-                    "n_duplicated": dup_counts,
-                    "dup_fraction": frac,
-                }
+            frac = np.where(nonzero, dup_counts / np.maximum(lens, 1), 0.0)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(lens), pa.array(dup_counts), pa.array(frac)],
+                names=names,
             )
 
-    return hashed.mapInPandas(probe, schema=out_schema)
+    return hashed.mapInArrow(probe, schema=out_schema)
 
 
 def exact_substr_dedup(

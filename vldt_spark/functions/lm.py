@@ -78,6 +78,14 @@ def _train_counts(
     return counts, int(counts.sum()), int(cnt[~in_vocab].sum())
 
 
+def _add_one(counts: np.ndarray, total: int) -> tuple[np.ndarray, float]:
+    """Add-one smoothing over [0, |counts|): the log-prob vector
+    ln((cnt_t + 1) / (N + |vocab|)) and the unseen/OOV floor
+    ln(1 / (N + |vocab|))."""
+    denom = float(total + counts.size)
+    return np.log((counts + 1.0) / denom), math.log(1.0 / denom)
+
+
 def _flat_mean_logp(
     list_arr, logp: np.ndarray, floor: float
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -109,12 +117,11 @@ def unigram_lm_table(
     |vocab| rows total; downstream consumers broadcast it.
     """
     counts, total, _ = _train_counts(df, vocab_size, tokens_col)
-    denom = float(total + vocab_size)
     spark = df.sparkSession
     cols = {
         "token": np.arange(vocab_size, dtype=np.int64),
         "cnt": counts,
-        "logp": np.log((counts + 1.0) / denom),
+        "logp": _add_one(counts, total)[0],
     }
     return local_frame(spark, cols, "token long, cnt long, logp double")
 
@@ -126,9 +133,8 @@ def unigram_lm_vector(
     unseen/OOV floor) — the hand-off shape for the streaming scorer
     (`streaming/lm_stream.stream_ppl_windows`), which closes over it."""
     counts, total, _ = _train_counts(df, vocab_size, tokens_col)
-    denom = float(total + vocab_size)
-    logp = np.log((counts + 1.0) / denom)
-    return logp.tolist(), math.log(1.0 / denom)
+    logp, floor = _add_one(counts, total)
+    return logp.tolist(), floor
 
 
 def unigram_logprob(
@@ -158,8 +164,7 @@ def unigram_logprob(
     import pyarrow as pa
 
     counts, total, _ = _train_counts(df, vocab_size, tokens_col)
-    logp = np.log((counts + 1.0) / float(total + vocab_size))
-    floor = math.log(1.0 / float(total + vocab_size))
+    logp, floor = _add_one(counts, total)
     q = None if round_to is None else 10.0**round_to
 
     def score(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
@@ -230,10 +235,8 @@ def lm_cross_entropy(
     # real observations of cur, scored at each model's floor
     c_cur, n_cur, n_oov = _train_counts(cur, vocab_size, tokens_col)
 
-    logp_ref = np.log((c_ref + 1.0) / float(n_ref + vocab_size))
-    logp_cur = np.log((c_cur + 1.0) / float(n_cur + vocab_size))
-    floor_ref = math.log(1.0 / float(n_ref + vocab_size))
-    floor_cur = math.log(1.0 / float(n_cur + vocab_size))
+    logp_ref, floor_ref = _add_one(c_ref, n_ref)
+    logp_cur, floor_cur = _add_one(c_cur, n_cur)
 
     n_total = n_cur + n_oov
     spark = cur.sparkSession

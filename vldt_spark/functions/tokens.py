@@ -26,8 +26,9 @@ Scale design:
   out-of-range id or a NULL element, and only such rows run the
   per-element `filter` that counts them.  `vocab_coverage` is built on
   `token_histogram`.
-- `token_bigram_topk` is a per-partition numpy fold (`mapInPandas`) with
-  bigram keys packed into int64 (a * vocab + b), so the shuffle carries
+- `token_bigram_topk` is native too: adjacent pairs from two `slice`s
+  zipped and exploded, packed into one bigint key (a * vocab + b) and
+  counted with a map-side-combined aggregate, so the shuffle carries
   distinct-bigrams-per-partition, bounded by |vocab|², typically ≪ data.
 """
 
@@ -36,7 +37,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,11 +51,9 @@ def _arrow_flat_tokens(list_arr) -> "tuple[np.ndarray, np.ndarray]":
     with ZERO per-row Python: ``lens[i]`` is row i's element count (NULL
     array → 0, contributing nothing to ``flat``), and ``flat`` is every
     row's elements concatenated in row order with NULL elements mapped to
-    -1 (the `_int_tokens` convention).  ``pc.list_flatten`` respects
-    slices and skips null lists, so ``flat`` segments align exactly with
-    the nonzero entries of ``lens`` — the shape `np.add.reduceat` wants.
-    This is the mapInArrow fast path; `_int_tokens` remains for the
-    pandas-Series call sites."""
+    -1.  ``pc.list_flatten`` respects slices and skips null lists, so
+    ``flat`` segments align exactly with the nonzero entries of ``lens``
+    — the shape `np.add.reduceat` wants."""
     import pyarrow.compute as pc
 
     lens = (
@@ -69,25 +67,6 @@ def _arrow_flat_tokens(list_arr) -> "tuple[np.ndarray, np.ndarray]":
         .astype(np.int64)
     )
     return flat, lens
-
-
-def _int_tokens(arr) -> "np.ndarray | None":
-    """Normalize one Arrow-delivered token array to int64 with NULL
-    elements mapped to -1.  Arrow hands list<int32> to pandas as an
-    int array, but as float64-with-NaN or object-with-None the moment
-    the list contains nulls — all three shapes land here."""
-    if arr is None or (np.isscalar(arr) and pd.isna(arr)):
-        return None
-    a = np.asarray(arr)
-    if a.dtype == object:
-        return np.array(
-            [-1 if (e is None or e != e) else int(e) for e in a],
-            dtype=np.int64,
-        )
-    if a.dtype.kind == "f":
-        out = np.where(np.isnan(a), -1.0, a)
-        return out.astype(np.int64)
-    return a.astype(np.int64)
 
 
 def token_histogram(
@@ -185,43 +164,32 @@ def token_bigram_topk(
     tokens_col: str = "tokens",
 ) -> DataFrame:
     """Top-k token bigrams by exact count, deterministic tie-break
-    (cnt DESC, tok_a ASC, tok_b ASC).  Bigram keys pack into int64
-    (a * vocab_size + b) and fold per-partition via np.unique, so the
-    exchange carries distinct-bigrams-per-partition rows, never the
-    exploded pair stream.  NULL elements and out-of-vocab ids break the
-    bigram (both pairs containing them are dropped), matching the SQL
-    oracle's NULL/range filter."""
+    (cnt DESC, tok_a ASC, tok_b ASC).
+
+    A native plan, no Python worker: the adjacent pairs of each row are
+    ``explode(arrays_zip(slice(t, 1, n-1), slice(t, 2, n-1)))`` with
+    n-1 floored at 0 (NULL, empty and length-1 arrays give none).  NULL
+    elements and out-of-vocab ids break the bigram (both pairs
+    containing them are dropped), matching the SQL oracle's NULL/range
+    filter.  Each pair packs into one bigint key a·V + b, and the count
+    is a map-side-combined aggregate, as in `token_histogram`: the
+    exchange carries distinct bigrams per partition (bounded by
+    |vocab|²), never the exploded pair stream."""
     V = vocab_size
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys: dict[int, int] = {}
-        for pdf in batches:
-            for arr in pdf[tokens_col]:
-                t = _int_tokens(arr)
-                if t is None or len(t) < 2:
-                    continue
-                ok = (t >= 0) & (t < V)
-                a, b = t[:-1], t[1:]
-                good = ok[:-1] & ok[1:]
-                packed = a[good] * V + b[good]
-                if len(packed):
-                    u, c = np.unique(packed, return_counts=True)
-                    for kk, cc in zip(u.tolist(), c.tolist()):
-                        keys[kk] = keys.get(kk, 0) + cc
-            del pdf
-        if keys:
-            kk = np.fromiter(keys.keys(), dtype=np.int64, count=len(keys))
-            cc = np.fromiter(keys.values(), dtype=np.int64, count=len(keys))
-            yield pd.DataFrame({"key": kk, "cnt": cc})
-        else:
-            yield pd.DataFrame({"key": [], "cnt": []}).astype(
-                {"key": "int64", "cnt": "int64"}
-            )
-
-    partials = df.select(tokens_col).mapInPandas(
-        fold, schema="key long, cnt long"
+    t = F.col(tokens_col)
+    n = F.greatest(F.size(t) - 1, F.lit(0))
+    pair = F.explode(F.arrays_zip(F.slice(t, 1, n), F.slice(t, 2, n))).alias("__p")
+    a, b = F.col("__p")["0"], F.col("__p")["1"]
+    # a comparison with a NULL element is NULL, which drops the pair too
+    in_vocab = (a >= 0) & (a < V) & (b >= 0) & (b < V)
+    totals = (
+        df.select(pair)
+        .where(in_vocab)
+        .groupBy((a.cast("long") * V + b).alias("key"))
+        # sum(1) rather than count: cnt keeps the nullable long type the
+        # table has always had
+        .agg(F.sum(F.lit(1)).alias("cnt"))
     )
-    totals = partials.groupBy("key").agg(F.sum("cnt").alias("cnt"))
     from pyspark.sql import Window
 
     ranked = totals.select(
