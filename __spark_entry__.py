@@ -31,6 +31,27 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+# a document's event time: 01:00 on day doc_id % 30 of January 2024
+_DOC_DAY_TS = (
+    "timestamp'2024-01-01 01:00:00' + make_dt_interval(CAST(doc_id % 30 AS INT), 0, 0, 0)"
+)
+
+
+def _with_sentinel(rows: DataFrame, ts: str = "ts") -> list[DataFrame]:
+    """``rows``, then a sentinel frame: one row 90 days past a row of
+    ``rows``, every other column NULL.  Its micro-batch moves the
+    watermark past every real window; its own window never closes."""
+    sentinel = rows.limit(1).select(
+        *[
+            (F.col(f.name) + F.expr("INTERVAL 90 DAYS")).alias(f.name)
+            if f.name == ts
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in rows.schema
+        ]
+    )
+    return [rows, sentinel]
+
+
 # ---------------------------------------------------------------------------
 # flagship
 # ---------------------------------------------------------------------------
@@ -762,44 +783,21 @@ def q_streaming_degenerate_share(spark, sf_dir):
     rounding).  Sentinel-batch watermark technique; the flag is a
     stateless Arrow-batched expression, so state = |open windows| rows
     of three numbers and token arrays never enter state."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.seq_stream import stream_degenerate_share
 
-    docs = _t(spark, sf_dir, "documents")
-    seqs = _char_tokens(docs).select(
-        F.expr(
-            "timestamp'2024-01-01 01:00:00'"
-            " + make_dt_interval(CAST(doc_id % 30 AS INT), 0, 0, 0)"
-        ).alias("ts"),
-        "tokens",
+    seqs = _char_tokens(_t(spark, sf_dir, "documents")).select(
+        F.expr(_DOC_DAY_TS).alias("ts"), "tokens"
     )
-    root = tempfile.mkdtemp(prefix="vldt_stream_seq_")
-    seqs.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    seqs.limit(1).select(
-        (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit(None).cast("array<int>").alias("tokens"),
-    ).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(seqs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+    out = replay(
+        spark,
+        _with_sentinel(seqs),
+        lambda s: stream_degenerate_share(
+            s, "ts", "tokens", max_run=3, window="1 day", watermark="1 hour"
+        ),
+        mode="append",
     )
-    out = stream_degenerate_share(
-        stream, "ts", "tokens", max_run=3, window="1 day", watermark="1 hour"
-    )
-    name = f"vldt_seq_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "n_seqs",
         "n_degenerate",
@@ -841,48 +839,23 @@ def q_streaming_ppl_windows(spark, sf_dir):
     unigram_logprob.  Scoring is a stateless Arrow-batched UDF with the
     |vocab| log-prob vector closed over; state = |open windows| rows of
     three numbers.  Sentinel-batch watermark technique."""
-    import tempfile
-    import uuid
-
     from vldt_spark.functions.lm import unigram_lm_vector
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.lm_stream import stream_ppl_windows
 
-    docs = _t(spark, sf_dir, "documents")
-    toks = _char_tokens(docs)
+    toks = _char_tokens(_t(spark, sf_dir, "documents"))
     logp, floor = unigram_lm_vector(toks, 256)
-    seqs = toks.select(
-        F.expr(
-            "timestamp'2024-01-01 01:00:00'"
-            " + make_dt_interval(CAST(doc_id % 30 AS INT), 0, 0, 0)"
-        ).alias("ts"),
-        "tokens",
+    seqs = toks.select(F.expr(_DOC_DAY_TS).alias("ts"), "tokens")
+    out = replay(
+        spark,
+        _with_sentinel(seqs),
+        lambda s: stream_ppl_windows(
+            s, "ts", "tokens", logp, floor,
+            ppl_threshold=18.0, window="1 day", watermark="1 hour",
+        ),
+        mode="append",
     )
-    root = tempfile.mkdtemp(prefix="vldt_stream_lm_")
-    seqs.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    seqs.limit(1).select(
-        (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit(None).cast("array<int>").alias("tokens"),
-    ).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(seqs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_ppl_windows(
-        stream, "ts", "tokens", logp, floor,
-        ppl_threshold=18.0, window="1 day", watermark="1 hour",
-    )
-    name = f"vldt_lm_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "n_seqs",
         "avg_ppl",
@@ -3422,27 +3395,17 @@ def q_streaming_session_stats(spark, sf_dir):
     real session's end, so append mode emits exactly the batch session set
     (the sentinel's own still-open session never emits). Value-checked
     against the same SQL-islands oracle as the batch query."""
-    import tempfile
-    import uuid
-    from datetime import datetime
-
-    from vldt_spark.streaming.sessions_stream import run_session_monitor
+    from vldt_spark.streaming import replay
+    from vldt_spark.streaming.sessions_stream import stream_session_stats
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    root = tempfile.mkdtemp(prefix="vldt_stream_sess_")
-    ev.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    spark.createDataFrame(
-        [(-1, -1, datetime(2035, 1, 1), 0.0)],
-        "event_id long, user_id long, ts timestamp_ntz, value double",
-    ).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-    return run_session_monitor(
+    return replay(
         spark,
-        os.path.join(root, "b=*"),
-        "user_id",
-        "ts",
-        gap_seconds=7200,
-        value_col="value",
-        query_name=f"vldt_sess_{uuid.uuid4().hex[:8]}",
+        _with_sentinel(ev),
+        lambda s: stream_session_stats(
+            s, "user_id", "ts", gap_seconds=7200, value_col="value"
+        ),
+        mode="append",
     )
 
 
@@ -5400,36 +5363,18 @@ def q_streaming_event_verdicts(spark, sf_dir):
     fused validation projection (stateless) → day-bucketed verdicts via a
     memory sink driven to completion. Epoch bucketing (not F.window) so the
     result is timezone-independent for the oracle."""
-    from vldt_spark.streaming import validated_stream
+    from vldt_spark.cells import grouped
+    from vldt_spark.streaming import replay, validated_stream, verdict_cells
 
-    batch = _t(spark, sf_dir, "events")
-    # the file-stream source needs a directory: stream the sf dir with a
-    # glob filter selecting just the events file
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ann = validated_stream(stream, _event_model())
-    agg = (
-        ann.withColumn("day_epoch", (F.floor(F.unix_timestamp("ts") / 86400) * 86400).cast("long"))
-        .groupBy("day_epoch")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col("is_valid")).cast("long")).alias("n_invalid"),
-            F.sum(F.size("violations").cast("long")).alias("n_violations"),
+    def verdicts(stream):
+        ann = validated_stream(stream, _event_model()).withColumn(
+            "day_epoch", (F.floor(F.unix_timestamp("ts") / 86400) * 86400).cast("long")
         )
-        .withColumn("passed", F.col("n_invalid") == 0)
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("vldt_stream_contract")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("vldt_stream_contract")
+        return grouped(ann, ["day_epoch"], verdict_cells()).withColumn(
+            "passed", F.col("n_invalid") == 0
+        )
+
+    return replay(spark, [_t(spark, sf_dir, "events")], verdicts, mode="complete")
 
 
 SQL_STREAMING_EVENT_VERDICTS = f"""
@@ -5451,23 +5396,12 @@ def q_streaming_suite_events(spark, sf_dir):
     """Continuous data contract: the suite's row-local tier per event-time
     day window (same sentinel-batch watermark technique as
     streaming_drift_psi); per-window metrics value-checked against SQL."""
-    import tempfile
-    import uuid
-
     from vldt_spark.checks.suite import Suite, expect
+    from vldt_spark.streaming import replay
 
-    ev = _t(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="vldt_stream_suite_")
-    data = ev.select(
+    data = _t(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "value", "event_type"
     )
-    data.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    ev.limit(1).select(
-        (F.col("ts").cast("timestamp") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit(0.0).alias("value"),
-        F.lit("view").alias("event_type"),
-    ).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
     suite = Suite(
         [
             expect.not_null("value"),
@@ -5475,17 +5409,13 @@ def q_streaming_suite_events(spark, sf_dir):
             expect.isin("event_type", ["click", "view", "signup", "purchase", "error"]),
         ]
     )
-    stream = (
-        spark.readStream.schema(data.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+    out = replay(
+        spark,
+        _with_sentinel(data),
+        lambda s: suite.run_stream(s, "ts", window="1 day", watermark="1 hour"),
+        mode="append",
     )
-    out = suite.run_stream(stream, "ts", window="1 day", watermark="1 hour")
-    name = f"vldt_suite_stream_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "check",
         "column",
@@ -5556,43 +5486,27 @@ def q_streaming_drift_psi(spark, sf_dir):
     it advances the watermark past every real window (its own window never
     closes and is never emitted). The oracle recomputes each day's PSI
     with the identical fixed-bin formula in SQL."""
-    import tempfile
-    import uuid
-
     from vldt_spark.checks.drift import histogram
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.drift_stream import stream_psi
 
     ev = _t(spark, sf_dir, "events")
     ref = histogram(
         ev.where(F.col("event_type") == "view"), "value", bins=20, lo=0.0, hi=450.0
     )
-    root = tempfile.mkdtemp(prefix="vldt_stream_psi_")
     # watermarks need TIMESTAMP (LTZ); parquet ts is NTZ — session TZ is
     # UTC so the cast is epoch-preserving and matches DuckDB's epoch(ts)
     data = ev.select(F.col("ts").cast("timestamp").alias("ts"), "value")
-    data.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    sentinel = ev.limit(1).select(
-        (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit(0.0).alias("value"),
+    out = replay(
+        spark,
+        _with_sentinel(data),
+        lambda s: stream_psi(
+            s, ref, "value", "ts", bins=20, lo=0.0, hi=450.0,
+            window="1 day", watermark="1 hour",
+        ),
+        mode="append",
     )
-    sentinel.coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(data.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_psi(
-        stream, ref, "value", "ts", bins=20, lo=0.0, hi=450.0,
-        window="1 day", watermark="1 hour",
-    )
-    name = f"vldt_stream_psi_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "n_rows",
         "psi",
@@ -5633,42 +5547,23 @@ def q_streaming_psi_by_type(spark, sf_dir):
     Same sentinel-row watermark-advance pattern as streaming_drift_psi;
     the oracle recomputes every (day, type) PSI with the identical
     fixed-bin formula."""
-    import tempfile
-    import uuid
-
     from vldt_spark.checks.drift import histogram
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.drift_stream import stream_psi_by_group
 
     ev = _t(spark, sf_dir, "events")
     ref = histogram(ev, "value", bins=20, lo=0.0, hi=450.0)
-    root = tempfile.mkdtemp(prefix="vldt_stream_psi_grp_")
-    data = ev.select(
-        F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
+    data = ev.select(F.col("ts").cast("timestamp").alias("ts"), "event_type", "value")
+    out = replay(
+        spark,
+        _with_sentinel(data),
+        lambda s: stream_psi_by_group(
+            s, ref, "value", "ts", "event_type",
+            bins=20, lo=0.0, hi=450.0, window="1 day", watermark="1 hour",
+        ),
+        mode="append",
     )
-    data.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    sentinel = ev.limit(1).select(
-        (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-    sentinel.coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(data.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_psi_by_group(
-        stream, ref, "value", "ts", "event_type",
-        bins=20, lo=0.0, hi=450.0, window="1 day", watermark="1 hour",
-    )
-    name = f"vldt_stream_psi_grp_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "event_type",
         "n_rows",
@@ -5684,34 +5579,22 @@ def q_streaming_heavy_hitters(spark, sf_dir):
     equal the batch/exact answer (|distinct| ≪ width ⇒ the sketch is
     collision-free at deterministic hashes).  The oracle recomputes every
     day's exact top-5 with the same (count DESC, value) tie-break."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.cms_stream import stream_heavy_hitters
 
-    ev = _t(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="vldt_stream_hh_")
-    data = ev.select(
+    data = _t(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "event_type"
     ).where(F.col("event_type").isNotNull())
-    data.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-
-    stream = (
-        spark.readStream.schema(data.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+    out = replay(
+        spark,
+        [data],
+        lambda s: stream_heavy_hitters(
+            s, "event_type", "ts", k=5, width=1024, depth=3,
+            window="1 day", watermark="1 hour",
+        ),
+        mode="update",
     )
-    out = stream_heavy_hitters(
-        stream, "event_type", "ts", k=5, width=1024, depth=3,
-        window="1 day", watermark="1 hour",
-    )
-    name = f"vldt_stream_hh_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").cast("long").alias("window_epoch"),
         "value",
         "est_count",
@@ -5743,34 +5626,22 @@ def q_streaming_tdigest_quantiles(spark, sf_dir):
     singleton-exact regime and each window's (p25, p50, p75) must equal
     DuckDB's quantile_cont exactly.  All real data arrives in one
     micro-batch ⇒ one emission per window."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.tdigest_stream import stream_tdigest_quantiles
 
-    ev = _t(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="vldt_stream_td_")
-    data = ev.select(
+    data = _t(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "value"
     ).where(F.col("value").isNotNull())
-    data.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-
-    stream = (
-        spark.readStream.schema(data.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+    out = replay(
+        spark,
+        [data],
+        lambda s: stream_tdigest_quantiles(
+            s, "value", "ts", probs=(0.25, 0.5, 0.75), compression=4096,
+            window="1 day", watermark="1 hour",
+        ),
+        mode="update",
     )
-    out = stream_tdigest_quantiles(
-        stream, "value", "ts", probs=(0.25, 0.5, 0.75), compression=4096,
-        window="1 day", watermark="1 hour",
-    )
-    name = f"vldt_stream_td_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").cast("long").alias("window_epoch"),
         "n_rows",
         "p",
@@ -5806,9 +5677,7 @@ def q_streaming_centroid_drift(spark, sf_dir):
     half's literal reference centroid. Sentinel row advances the
     watermark past every real window; the oracle recomputes each day's
     cosine/L2 from the same sums in SQL."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.drift_stream import stream_centroid_drift
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -5817,29 +5686,16 @@ def q_streaming_centroid_drift(spark, sf_dir):
         F.timestamp_seconds(F.lit(base) + (F.col("vec_id") % 30) * 86400).alias("ts"),
         "embedding",
     )
-    root = tempfile.mkdtemp(prefix="vldt_stream_cent_")
-    data.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    sentinel = emb.limit(1).select(
-        F.timestamp_seconds(F.lit(base + 120 * 86400)).alias("ts"), "embedding"
-    )
-    sentinel.coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(data.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
     ref = emb.where(F.col("vec_id") % 2 == 0)
-    out = stream_centroid_drift(
-        stream, ref, "embedding", "ts", window="1 day", watermark="1 hour"
+    out = replay(
+        spark,
+        _with_sentinel(data),
+        lambda s: stream_centroid_drift(
+            s, ref, "embedding", "ts", window="1 day", watermark="1 hour"
+        ),
+        mode="append",
     )
-    name = f"vldt_stream_cent_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "n_rows",
         F.round("centroid_cosine", 6).alias("centroid_cosine"),
@@ -5909,22 +5765,14 @@ def q_streaming_dup_doc_ids(spark, sf_dir):
     arrives in a *different micro-batch* than the original, so only the
     cross-batch seen-count state can flag it. Output is batch-order
     invariant: each overlap key is emitted once with (n_seen=2, n_new=1)."""
-    import tempfile
-    import uuid
-
-    from vldt_spark.streaming.stateful import run_duplicate_monitor
+    from vldt_spark.streaming import replay, streaming_duplicate_keys
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    root = tempfile.mkdtemp(prefix="vldt_stream_dup_")
-    docs.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    docs.where(F.col("doc_id") < 50).coalesce(1).write.parquet(
-        os.path.join(root, "b=2")
-    )
-    out = run_duplicate_monitor(
+    out = replay(
         spark,
-        os.path.join(root, "b=*"),
-        "doc_id",
-        query_name=f"vldt_dup_{uuid.uuid4().hex[:8]}",
+        [docs, docs.where(F.col("doc_id") < 50)],
+        lambda s: streaming_duplicate_keys(s, "doc_id"),
+        mode="update",
     )
     return out.select(
         F.col("key").cast("long").alias("doc_id"),
@@ -5949,27 +5797,20 @@ def q_streaming_dup_sequences(spark, sf_dir):
     sequence-keyed state can flag those — an id-keyed monitor sees new
     ids. md5-portable key path so the exact emission set (key, 2, 1) is
     value-checked."""
-    import tempfile
-    import uuid
-
     from vldt_spark.functions.dedup import token_dedup_exact
-    from vldt_spark.streaming.stateful import run_sequence_dup_monitor
+    from vldt_spark.streaming import replay
+    from vldt_spark.streaming.stateful import streaming_duplicate_sequences
 
     docs = _t(spark, sf_dir, "documents")
     toks = token_dedup_exact(_char_tokens(docs).select("doc_id", "tokens"))
-    root = tempfile.mkdtemp(prefix="vldt_stream_seqdup_")
-    toks.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    (
-        toks.where(F.col("doc_id") % 9 == 4)
-        .withColumn("doc_id", F.col("doc_id") + 1000000)
-        .coalesce(1)
-        .write.parquet(os.path.join(root, "b=2"))
+    recrawl = toks.where(F.col("doc_id") % 9 == 4).withColumn(
+        "doc_id", F.col("doc_id") + 1000000
     )
-    out = run_sequence_dup_monitor(
+    out = replay(
         spark,
-        os.path.join(root, "b=*"),
-        hash_fn="md5",
-        query_name=f"vldt_seqdup_{uuid.uuid4().hex[:8]}",
+        [toks, recrawl],
+        lambda s: streaming_duplicate_sequences(s, hash_fn="md5"),
+        mode="update",
     )
     return out.select("key", "n_seen", "n_new")
 
@@ -7045,47 +6886,24 @@ def q_streaming_confusion_windows(spark, sf_dir):
     rows are excluded via conditional aggregation (a row filter would be
     pushed below the watermark node and stall emission).
     Sentinel-batch watermark technique."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.clf_stream import stream_confusion_windows
 
-    sl = _clf_eval_fixture(spark, sf_dir)
-    rows = sl.select(
-        F.expr(
-            "timestamp'2024-01-01 01:00:00'"
-            " + make_dt_interval(CAST(doc_id % 30 AS INT), 0, 0, 0)"
-        ).alias("ts"),
+    rows = _clf_eval_fixture(spark, sf_dir).select(
+        F.expr(_DOC_DAY_TS).alias("ts"),
         "score",
         F.col("is_clean").alias("label"),
     )
-    root = tempfile.mkdtemp(prefix="vldt_stream_clf_")
-    rows.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    rows.limit(1).select(
-        (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit(None).cast("double").alias("score"),
-        F.lit(None).cast("boolean").alias("label"),
-    ).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+    out = replay(
+        spark,
+        _with_sentinel(rows),
+        lambda s: stream_confusion_windows(
+            s, "ts", "score", "label",
+            threshold=0.5, window="1 day", watermark="1 hour",
+        ),
+        mode="append",
     )
-    out = stream_confusion_windows(
-        stream, "ts", "score", "label",
-        threshold=0.5, window="1 day", watermark="1 hour",
-    )
-    name = f"vldt_clf_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "n", "tp", "fp", "fn", "tn",
         "precision", "recall", "f1", "accuracy",
@@ -7783,9 +7601,7 @@ def q_streaming_pii_windows(spark, sf_dir):
     codegen rlike screens + conditional long sums, state = |open
     windows| rows of five longs; NULL-text rows advance the watermark
     without counting. Sentinel-batch watermark technique."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.pii_stream import stream_pii_windows
 
     docs = _t(spark, sf_dir, "documents")
@@ -7796,36 +7612,14 @@ def q_streaming_pii_windows(spark, sf_dir):
         .when(m == 11, F.concat("text", F.lit(" call 555-123-4567")))
         .otherwise(F.col("text"))
     )
-    rows = docs.select(
-        F.expr(
-            "timestamp'2024-01-01 01:00:00'"
-            " + make_dt_interval(CAST(doc_id % 30 AS INT), 0, 0, 0)"
-        ).alias("ts"),
-        t.alias("text"),
+    rows = docs.select(F.expr(_DOC_DAY_TS).alias("ts"), t.alias("text"))
+    out = replay(
+        spark,
+        _with_sentinel(rows),
+        lambda s: stream_pii_windows(s, "ts", "text", window="1 day", watermark="1 hour"),
+        mode="append",
     )
-    root = tempfile.mkdtemp(prefix="vldt_stream_pii_")
-    rows.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    rows.limit(1).select(
-        (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit(None).cast("string").alias("text"),
-    ).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_pii_windows(stream, "ts", "text", window="1 day", watermark="1 hour")
-    name = f"vldt_pii_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "n_docs", "n_email", "n_ip", "n_phone", "n_any", "pii_frac",
     )
@@ -7869,42 +7663,19 @@ def q_streaming_c4_windows(spark, sf_dir):
     state = |open windows| rows of a few longs.  Sentinel-batch
     watermark technique; the oracle predicts every window closed-form
     from the doc_id % 30 / % 5 arithmetic."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.c4_stream import stream_c4_windows
 
-    docs = _t(spark, sf_dir, "documents")
-    rows = _c4_fixture(docs).select(
-        F.expr(
-            "timestamp'2024-01-01 01:00:00'"
-            " + make_dt_interval(CAST(doc_id % 30 AS INT), 0, 0, 0)"
-        ).alias("ts"),
-        "text",
+    rows = _c4_fixture(_t(spark, sf_dir, "documents")).select(
+        F.expr(_DOC_DAY_TS).alias("ts"), "text"
     )
-    root = tempfile.mkdtemp(prefix="vldt_stream_c4_")
-    rows.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    rows.limit(1).select(
-        (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts"),
-        F.lit(None).cast("string").alias("text"),
-    ).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    stream = (
-        spark.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+    out = replay(
+        spark,
+        _with_sentinel(rows),
+        lambda s: stream_c4_windows(s, "ts", "text", window="1 day", watermark="1 hour"),
+        mode="append",
     )
-    out = stream_c4_windows(stream, "ts", "text", window="1 day", watermark="1 hour")
-    name = f"vldt_c4_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         F.unix_timestamp("window_start").alias("window_epoch"),
         "n_docs", "n_pass", "n_lorem", "n_brace", "n_few_sentences",
         "pass_frac", "mean_kept_frac",
@@ -8122,39 +7893,24 @@ def q_streaming_control_bands(spark, sf_dir):
     here the full series arrives as one file-batch (event-time-sorted
     inside the handler), so the oracle replays the identical window
     arithmetic closed-form."""
-    import tempfile
-    import uuid
-
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.controlband_stream import stream_control_bands
 
-    ev = _t(spark, sf_dir, "events")
     series = (
-        ev.groupBy(
-            "event_type", F.date_trunc("DAY", F.col("ts")).alias("day")
-        )
+        _t(spark, sf_dir, "events")
+        .groupBy("event_type", F.date_trunc("DAY", F.col("ts")).alias("day"))
         .agg(F.round(F.avg("value"), 6).alias("value"))
     )
-    root = tempfile.mkdtemp(prefix="vldt_cb_gate_")
-    series.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    stream = (
-        spark.readStream.schema(series.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+    out = replay(
+        spark,
+        [series],
+        lambda s: stream_control_bands(
+            s, series_col="event_type", ts_col="day", value_col="value",
+            window=5, k=2.0, alpha=0.4,
+        ),
+        mode="append",
     )
-    out = stream_control_bands(
-        stream, series_col="event_type", ts_col="day", value_col="value",
-        window=5, k=2.0, alpha=0.4,
-    )
-    name = f"vldt_cb_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    return out.select(
         "series",
         F.unix_timestamp("ts").alias("day_epoch"),
         "value", "n_trailing", "trailing_mean", "trailing_std",

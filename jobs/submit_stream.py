@@ -51,7 +51,8 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from vldt_spark.flagship import TokenSequence
-    from vldt_spark.streaming import validated_stream
+    from vldt_spark.cells import grouped
+    from vldt_spark.streaming import validated_stream, verdict_cells
 
     schema = spark.read.parquet(args.input).schema
     stream = spark.readStream.schema(schema).parquet(args.input)
@@ -67,12 +68,7 @@ def main(argv: list[str] | None = None) -> int:
 
     def write_verdicts(batch_df, batch_id: int) -> None:
         (
-            batch_df.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((~F.col("is_valid")).cast("long")).alias("n_invalid"),
-                F.sum(F.size("violations").cast("long")).alias("n_violations"),
-            )
+            grouped(batch_df, ["source"], verdict_cells())
             .withColumn("passed", F.col("n_invalid") == 0)
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")

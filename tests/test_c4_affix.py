@@ -188,10 +188,8 @@ def test_suite_c4_guard_empty_corpus(spark):
 
 def test_stream_c4_windows_closed_form(spark):
     import datetime as dt
-    import os
-    import tempfile
-    import uuid
 
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.c4_stream import stream_c4_windows
 
     d1 = dt.datetime(2024, 1, 1, 6)
@@ -206,23 +204,9 @@ def test_stream_c4_windows_closed_form(spark):
         ],
         [(dt.datetime(2024, 3, 1), None)],  # sentinel closes both windows
     ]
-    root = tempfile.mkdtemp(prefix="vldt_c4_stream_")
-    schema = "ts timestamp, text string"
-    for i, rows in enumerate(batches, 1):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            os.path.join(root, f"b={i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_c4_windows(stream, "ts", "text")
-    name = f"c4_stream_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    got = {r["window_start"]: r for r in spark.table(name).collect()}
+    frames = [spark.createDataFrame(rows, "ts timestamp, text string") for rows in batches]
+    out = replay(spark, frames, lambda s: stream_c4_windows(s, "ts", "text"), mode="append")
+    got = {r["window_start"]: r for r in out.collect()}
     w1 = got[dt.datetime(2024, 1, 1)]
     assert (w1["n_docs"], w1["n_pass"], w1["n_lorem"], w1["n_brace"]) == (3, 1, 1, 0)
     assert w1["n_few_sentences"] == 1  # the no-kept-lines doc

@@ -1,36 +1,15 @@
 """Streaming confusion/operating-point monitor."""
 
-import os
-import tempfile
-import uuid
-
-import pytest
-from pyspark.sql import functions as F
-
+from vldt_spark.streaming import replay
 from vldt_spark.streaming.clf_stream import stream_confusion_windows
 
+_SCHEMA = "ts timestamp, score double, label boolean"
 
-def _run_stream(spark, batches, threshold=0.5, window="1 day", watermark="1 hour"):
-    root = tempfile.mkdtemp(prefix="vldt_clf_stream_")
-    schema = "ts timestamp, score double, label boolean"
-    for i, rows in enumerate(batches, 1):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            os.path.join(root, f"b={i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
+
+def _confusion(stream):
+    return stream_confusion_windows(
+        stream, "ts", "score", "label", threshold=0.5, window="1 day", watermark="1 hour"
     )
-    out = stream_confusion_windows(
-        stream, "ts", "score", "label",
-        threshold=threshold, window=window, watermark=watermark,
-    )
-    name = f"clf_stream_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return {r["window_start"]: r for r in spark.table(name).collect()}
 
 
 def test_stream_confusion_closed_form(spark):
@@ -39,16 +18,12 @@ def test_stream_confusion_closed_form(spark):
     d1 = dt.datetime(2024, 1, 1, 6)
     d2 = dt.datetime(2024, 1, 2, 6)
     sentinel = [(dt.datetime(2024, 3, 1), None, None)]  # advances watermark only
-    got = _run_stream(
-        spark,
-        [
-            [
-                (d1, 0.9, True), (d1, 0.7, False), (d1, 0.2, True),
-                (d1, 0.1, False), (d2, 0.8, True), (d2, 0.3, False),
-            ],
-            sentinel,
-        ],
-    )
+    rows = [
+        (d1, 0.9, True), (d1, 0.7, False), (d1, 0.2, True),
+        (d1, 0.1, False), (d2, 0.8, True), (d2, 0.3, False),
+    ]
+    frames = [spark.createDataFrame(b, _SCHEMA) for b in (rows, sentinel)]
+    got = {r["window_start"]: r for r in replay(spark, frames, _confusion, mode="append").collect()}
     w1 = got[dt.datetime(2024, 1, 1)]
     assert (w1["tp"], w1["fp"], w1["fn"], w1["tn"]) == (1, 1, 1, 1)
     assert w1["precision"] == 0.5 and w1["recall"] == 0.5 and w1["f1"] == 0.5
@@ -62,16 +37,13 @@ def test_stream_confusion_null_rows_excluded_and_zero_denominators(spark):
     import datetime as dt
 
     d1 = dt.datetime(2024, 1, 5, 12)
-    got = _run_stream(
-        spark,
-        [
-            [
-                (d1, 0.1, True), (d1, 0.2, True),     # nothing predicted positive
-                (d1, None, True), (d1, 0.9, None),    # excluded, must not stall
-            ],
-            [(dt.datetime(2024, 3, 1), None, None)],
-        ],
-    )
+    rows = [
+        (d1, 0.1, True), (d1, 0.2, True),     # nothing predicted positive
+        (d1, None, True), (d1, 0.9, None),    # excluded, must not stall
+    ]
+    sentinel = [(dt.datetime(2024, 3, 1), None, None)]
+    frames = [spark.createDataFrame(b, _SCHEMA) for b in (rows, sentinel)]
+    got = {r["window_start"]: r for r in replay(spark, frames, _confusion, mode="append").collect()}
     w = got[dt.datetime(2024, 1, 5)]
     assert w["n"] == 2 and w["fn"] == 2
     assert w["precision"] is None and w["f1"] is None and w["recall"] == 0.0

@@ -1,34 +1,19 @@
 """Streaming CMS heavy hitters: cross-micro-batch state accumulation and
 batch/stream consistency on the shared fold code."""
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import functions as F
 
+from vldt_spark.streaming import replay
 from vldt_spark.streaming.cms_stream import stream_heavy_hitters
 
 
-def _run_stream(spark, root, k=3, **kw):
-    schema = spark.read.parquet(os.path.join(root, "b=1")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_heavy_hitters(stream, "v", "ts", k=k, width=256, depth=3, **kw)
-    name = f"hh_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).collect()
+def _top(k):
+    return lambda s: stream_heavy_hitters(s, "v", "ts", k=k, width=256, depth=3)
 
 
 def test_cross_batch_accumulation(spark):
     # the same window receives rows in TWO micro-batches; the final
     # emission must reflect the union (state carried across batches)
-    root = tempfile.mkdtemp(prefix="hh_t_")
     base = spark.createDataFrame(
         [("2024-01-01 10:00:00", "a")] * 5 + [("2024-01-01 11:00:00", "b")] * 3,
         "ts string, v string",
@@ -36,10 +21,7 @@ def test_cross_batch_accumulation(spark):
     more = spark.createDataFrame(
         [("2024-01-01 12:00:00", "b")] * 4, "ts string, v string"
     ).select(F.col("ts").cast("timestamp").alias("ts"), "v")
-    base.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    more.coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    rows = _run_stream(spark, root)
+    rows = replay(spark, [base, more], _top(3), mode="update").collect()
     # latest emission per (window, rank) is the answer
     latest = {}
     for r in rows:
@@ -52,13 +34,11 @@ def test_cross_batch_accumulation(spark):
 def test_matches_batch_cms(spark):
     from vldt_spark.checks.cms import cms_heavy_hitters
 
-    root = tempfile.mkdtemp(prefix="hh_t2_")
     df = spark.range(2000).select(
         F.lit("2024-02-02 08:00:00").cast("timestamp").alias("ts"),
         F.concat(F.lit("v"), (F.col("id") % 9)).alias("v"),
     )
-    df.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    stream_rows = _run_stream(spark, root, k=4)
+    stream_rows = replay(spark, [df], _top(4), mode="update").collect()
     batch_rows = cms_heavy_hitters(df, "v", k=4, width=256, depth=3).collect()
     assert [(r["value"], r["est_count"], r["rank"]) for r in stream_rows] == [
         (r["value"], r["est_count"], r["rank"]) for r in batch_rows
@@ -73,7 +53,6 @@ def test_stream_tdigest_cross_batch_and_exact(spark):
 
     from vldt_spark.streaming.tdigest_stream import stream_tdigest_quantiles
 
-    root = tempfile.mkdtemp(prefix="td_t_")
     b1 = spark.createDataFrame(
         [("2024-03-03 01:00:00", float(v)) for v in range(0, 60)],
         "ts string, value double",
@@ -82,23 +61,14 @@ def test_stream_tdigest_cross_batch_and_exact(spark):
         [("2024-03-03 02:00:00", float(v)) for v in range(60, 100)],
         "ts string, value double",
     ).select(F.col("ts").cast("timestamp").alias("ts"), "value")
-    b1.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    b2.coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    schema = b1.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_tdigest_quantiles(
-        stream, "value", "ts", probs=(0.5,), compression=256, window="1 day"
-    )
-    name = f"td_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.table(name).collect()
+    rows = replay(
+        spark,
+        [b1, b2],
+        lambda s: stream_tdigest_quantiles(
+            s, "value", "ts", probs=(0.5,), compression=256, window="1 day"
+        ),
+        mode="update",
+    ).collect()
     # final emission for the window covers all 100 points
     final = max(rows, key=lambda r: r["n_rows"])
     assert final["n_rows"] == 100

@@ -53,28 +53,29 @@ def test_ledger_marker_written_last(spark, ledger_root):
     assert "web" not in led.completed_partitions()
 
 
-def test_streaming_matches_batch(spark, tmp_path):
+def test_streaming_matches_batch(spark):
     """The fused validation projection is stateless → streaming totals
     must equal the batch run on the same data."""
-    from vldt_spark.streaming import validated_stream, windowed_violation_counts
+    from vldt_spark.streaming import replay, stream_verdicts, validated_stream
     from vldt_spark.engine import ValidationEngine
 
-    src = str(tmp_path / "stream_src")
     toks = token_sequences(spark, 3000, seed=42).withColumn(
         "ts",
         F.timestamp_seconds(F.lit(1700000000) + F.pmod(F.xxhash64("doc_id"), F.lit(1800))),
     )
-    toks.write.parquet(src)
-
-    out = windowed_violation_counts(
-        spark, src, TokenSequence, ts_col="ts", window="10 minutes",
-        query_name="vldt_test_stream",
+    out = replay(
+        spark,
+        [toks],
+        lambda s: stream_verdicts(
+            validated_stream(s, TokenSequence), ts_col="ts", window="10 minutes"
+        ),
+        mode="complete",
     )
     stream_totals = out.agg(
         F.sum("n_rows").alias("r"), F.sum("n_invalid").alias("i")
     ).first()
 
-    batch = ValidationEngine(TokenSequence).annotate(spark.read.parquet(src), keep_extra=True)
+    batch = ValidationEngine(TokenSequence).annotate(toks, keep_extra=True)
     batch_invalid = batch.filter(~F.col("is_valid")).count()
     assert stream_totals["r"] == 3000
     assert stream_totals["i"] == batch_invalid
@@ -134,13 +135,12 @@ def test_quarantine_counts_come_from_the_writes(spark, tmp_path, partition_col):
     assert stats["n_valid"] + stats["n_quarantined"] == 3000
 
 
-def test_streaming_drift_monitor(spark, tmp_path):
+def test_streaming_drift_monitor(spark):
     """Per-window streaming PSI: a clean-day window scores low, a shifted-
     distribution day scores high — matching the batch PSI semantics."""
     from vldt_spark.checks.drift import histogram, psi
-    from vldt_spark.streaming.drift_stream import run_drift_monitor
+    from vldt_spark.streaming import replay, stream_psi
 
-    src = str(tmp_path / "drift_src")
     # day 1: values uniform 0..99 (same as reference); day 2: shifted +50
     day1 = spark.range(5000).select(
         F.lit("2026-01-01 10:00:00").cast("timestamp").alias("ts"),
@@ -150,25 +150,25 @@ def test_streaming_drift_monitor(spark, tmp_path):
         F.lit("2026-01-02 10:00:00").cast("timestamp").alias("ts"),
         ((F.col("id") % 100) * 0.5 + 50).cast("double").alias("v"),
     )
-    day1.unionByName(day2).coalesce(2).write.parquet(src)
-
     ref = spark.range(20000).select((F.col("id") % 100).cast("double").alias("v"))
     ref_hist = histogram(ref, "v", bins=10, lo=0.0, hi=100.0)
 
-    q = run_drift_monitor(
-        spark, src, ref_hist, "v", "ts", bins=10, lo=0.0, hi=100.0,
-        window="1 day", query_name="t_drift_stream",
-    )
     # append mode: windows emit once the watermark passes their end —
-    # advance it with two later sentinel batches appended to the source
-    for day in ["2026-01-05", "2026-01-06"]:
+    # advance it with two later sentinel batches; both days stay one batch
+    sentinels = [
         spark.range(1).select(
             F.lit(day + " 10:00:00").cast("timestamp").alias("ts"),
             F.lit(1.0).alias("v"),
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    q.stop()
-    rows = {str(r["window_start"])[:10]: r["psi"] for r in spark.table("t_drift_stream").collect()}
+        )
+        for day in ["2026-01-05", "2026-01-06"]
+    ]
+    out = replay(
+        spark,
+        [day1.unionByName(day2), *sentinels],
+        lambda s: stream_psi(s, ref_hist, "v", "ts", bins=10, lo=0.0, hi=100.0, window="1 day"),
+        mode="append",
+    )
+    rows = {str(r["window_start"])[:10]: r["psi"] for r in out.collect()}
     assert rows["2026-01-01"] < 1e-6  # identical distribution
     assert rows["2026-01-02"] > 0.1  # shifted -> drifted
 
@@ -295,17 +295,15 @@ def test_submit_validation_job_resumes(spark, tmp_path, capsys):
     assert sorted(rep2["partitions_skipped"]) == sorted(rep1["partitions_run"])
 
 
-def test_streaming_psi_by_group(spark, tmp_path):
+def test_streaming_psi_by_group(spark):
     """Per-(window, group) streaming PSI: within one day-window, the clean
     group scores ~0 and the shifted group high — matching the batch
     psi_by_group semantics with the group key carried through both
     stateful aggregation stages."""
-    import uuid
-
     from vldt_spark.checks.drift import histogram, psi
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.drift_stream import stream_psi_by_group
 
-    src = str(tmp_path / "drift_grp_src")
     clean = spark.range(4000).select(
         F.lit("2026-02-01 10:00:00").cast("timestamp").alias("ts"),
         F.lit("clean").alias("grp"),
@@ -316,30 +314,25 @@ def test_streaming_psi_by_group(spark, tmp_path):
         F.lit("shifted").alias("grp"),
         ((F.col("id") % 100) * 0.5 + 50).cast("double").alias("v"),
     )
-    clean.unionByName(shifted).coalesce(1).write.parquet(src + "/b=1")
-    spark.range(1).select(
+    sentinel = spark.range(1).select(
         F.lit("2026-02-05 10:00:00").cast("timestamp").alias("ts"),
         F.lit("sentinel").alias("grp"),
         F.lit(1.0).alias("v"),
-    ).coalesce(1).write.parquet(src + "/b=2")
+    )
 
     ref = spark.range(20000).select((F.col("id") % 100).cast("double").alias("v"))
     ref_hist = histogram(ref, "v", bins=10, lo=0.0, hi=100.0)
 
-    stream = (
-        spark.readStream.schema(clean.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/b=*")
+    out = replay(
+        spark,
+        [clean.unionByName(shifted), sentinel],
+        lambda s: stream_psi_by_group(
+            s, ref_hist, "v", "ts", "grp",
+            bins=10, lo=0.0, hi=100.0, window="1 day", watermark="1 hour",
+        ),
+        mode="append",
     )
-    out = stream_psi_by_group(
-        stream, ref_hist, "v", "ts", "grp",
-        bins=10, lo=0.0, hi=100.0, window="1 day", watermark="1 hour",
-    )
-    name = f"t_drift_grp_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    rows = {r["grp"]: r for r in spark.table(name).collect()}
+    rows = {r["grp"]: r for r in out.collect()}
     assert set(rows) == {"clean", "shifted"}  # sentinel window never closes
     assert rows["clean"]["psi"] < 1e-6
     assert rows["shifted"]["psi"] > 0.1
@@ -504,14 +497,14 @@ def test_ledger_rerun_leaves_committed_partitions_untouched(spark, tmp_path):
     assert led.metrics(spark).count() == 3
 
 
-def test_stream_centroid_drift_matches_batch(spark, tmp_path):
+def test_stream_centroid_drift_matches_batch(spark):
     """Per-window streaming centroid drift: an aligned day matches the
     reference (cosine 1, L2 0), a rotated day reads orthogonal — and both
     windows' numbers equal the batch embedding_drift on the same slice."""
     from vldt_spark.checks.drift import embedding_drift
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.drift_stream import stream_centroid_drift
 
-    src = str(tmp_path / "cent_src")
     day1 = spark.range(40).select(
         F.lit("2026-01-01 10:00:00").cast("timestamp").alias("ts"),
         F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0)).cast("array<float>").alias("emb"),
@@ -520,32 +513,20 @@ def test_stream_centroid_drift_matches_batch(spark, tmp_path):
         F.lit("2026-01-02 10:00:00").cast("timestamp").alias("ts"),
         F.array(F.lit(0.0), F.lit(2.0), F.lit(0.0)).cast("array<float>").alias("emb"),
     )
-    day1.unionByName(day2).coalesce(2).write.parquet(src)
     ref = spark.range(10).select(
         F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0)).cast("array<float>").alias("emb")
     )
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    out = stream_centroid_drift(stream, ref, "emb", "ts", window="1 day")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_cent_stream")
-        .start()
-    )
-    q.processAllAvailable()
-    spark.range(1).select(
+    sentinel = spark.range(1).select(
         F.lit("2026-01-06 10:00:00").cast("timestamp").alias("ts"),
         F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0)).cast("array<float>").alias("emb"),
-    ).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    rows = {
-        str(r["window_start"])[:10]: r
-        for r in spark.table("t_cent_stream").collect()
-    }
+    )
+    out = replay(
+        spark,
+        [day1.unionByName(day2), sentinel],
+        lambda s: stream_centroid_drift(s, ref, "emb", "ts", window="1 day"),
+        mode="append",
+    )
+    rows = {str(r["window_start"])[:10]: r for r in out.collect()}
     assert rows["2026-01-01"]["n_rows"] == 40
     assert abs(rows["2026-01-01"]["centroid_cosine"] - 1.0) < 1e-9
     assert rows["2026-01-01"]["centroid_l2"] < 1e-9
@@ -556,41 +537,33 @@ def test_stream_centroid_drift_matches_batch(spark, tmp_path):
     assert abs(b["centroid_l2"] - (5.0 ** 0.5)) < 1e-6
 
 
-def test_stream_centroid_cosine_matches_batch_under_null_elements(spark, tmp_path):
+def test_stream_centroid_cosine_matches_batch_under_null_elements(spark):
     """With null vector ELEMENTS the per-position counts differ, so a
     sum-based cosine would diverge from the batch check; the mean-based
     cosine agrees exactly."""
     import math
-    import uuid
 
     from vldt_spark.checks.drift import embedding_drift
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.drift_stream import stream_centroid_drift
 
-    src = str(tmp_path / "cent_null_src")
     # position 0 present in both rows, position 1 only in the second:
     # mean = (2.0, 4.0); sum = (4.0, 4.0) — different directions
     day = spark.createDataFrame(
         [("2026-01-01 10:00:00", [1.0, None]), ("2026-01-01 11:00:00", [3.0, 4.0])],
         "ts string, emb array<float>",
     ).select(F.col("ts").cast("timestamp").alias("ts"), "emb")
-    day.coalesce(1).write.parquet(src)
     ref = spark.createDataFrame([([1.0, 1.0],)], "emb array<float>")
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    name = f"t_cent_null_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_centroid_drift(stream, ref, "emb", "ts", window="1 day")
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    q.processAllAvailable()
-    spark.createDataFrame(
+    sentinel = spark.createDataFrame(
         [("2026-02-01 10:00:00", [1.0, 1.0])], "ts string, emb array<float>"
-    ).select(F.col("ts").cast("timestamp").alias("ts"), "emb").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    got = [r for r in spark.table(name).collect() if str(r["window_start"])[:7] == "2026-01"][0]
+    ).select(F.col("ts").cast("timestamp").alias("ts"), "emb")
+    out = replay(
+        spark,
+        [day, sentinel],
+        lambda s: stream_centroid_drift(s, ref, "emb", "ts", window="1 day"),
+        mode="append",
+    )
+    got = [r for r in out.collect() if str(r["window_start"])[:7] == "2026-01"][0]
     b = embedding_drift(day.select("emb"), ref, vec_col="emb").first()
     # mean (2,4) vs ref (1,1): cos = 6/(sqrt(20)*sqrt(2)); sum-based would
     # give 8/(sqrt(32)*sqrt(2)) = 1.0 — the bug this test pins
@@ -599,50 +572,42 @@ def test_stream_centroid_cosine_matches_batch_under_null_elements(spark, tmp_pat
     assert abs(got["centroid_cosine"] - b["centroid_cosine"]) < 1e-6
 
 
-def test_stream_centroid_all_null_positions_match_batch(spark, tmp_path):
+def test_stream_centroid_all_null_positions_match_batch(spark):
     """The two all-null-position corners: (a) a position null in EVERY
     reference vector still counts the window mean² in the cosine
     denominator (batch: c·c never touches r); (b) a position null in
     every WINDOW vector drops out of L2 (batch: pow(c-r,2) is null and
     the sum skips it). Both must equal the batch numbers exactly."""
-    import uuid
-
     from vldt_spark.checks.drift import embedding_drift
+    from vldt_spark.streaming import replay
     from vldt_spark.streaming.drift_stream import stream_centroid_drift
 
-    def run_pair(tag, cur_rows, ref_rows):
-        src = str(tmp_path / f"cn_{tag}")
-        cur = spark.createDataFrame(
-            [("2026-01-01 10:00:00", v) for v in cur_rows], "ts string, emb array<float>"
+    def frame(ts, vectors):
+        return spark.createDataFrame(
+            [(ts, v) for v in vectors], "ts string, emb array<float>"
         ).select(F.col("ts").cast("timestamp").alias("ts"), "emb")
-        cur.coalesce(1).write.parquet(src)
+
+    def run_pair(cur_rows, ref_rows):
+        cur = frame("2026-01-01 10:00:00", cur_rows)
         ref = spark.createDataFrame([(v,) for v in ref_rows], "emb array<float>")
-        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        name = f"cn_{tag}_{uuid.uuid4().hex[:6]}"
-        q = (
-            stream_centroid_drift(stream, ref, "emb", "ts", window="1 day")
-            .writeStream.outputMode("append").format("memory").queryName(name).start()
+        out = replay(
+            spark,
+            [cur, frame("2026-03-01 10:00:00", ref_rows[:1])],
+            lambda s: stream_centroid_drift(s, ref, "emb", "ts", window="1 day"),
+            mode="append",
         )
-        q.processAllAvailable()
-        spark.createDataFrame(
-            [("2026-03-01 10:00:00", ref_rows[0])], "ts string, emb array<float>"
-        ).select(F.col("ts").cast("timestamp").alias("ts"), "emb").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-        q.stop()
-        got = [r for r in spark.table(name).collect() if str(r["window_start"])[:7] == "2026-01"][0]
+        got = [r for r in out.collect() if str(r["window_start"])[:7] == "2026-01"][0]
         b = embedding_drift(cur.select("emb"), ref, vec_col="emb").first()
         return got, b
 
     # (a) trailing all-null ref position: batch cosine 3/(5*1) = 0.6
-    got, b = run_pair("refnull", [[3.0, 4.0]], [[1.0, None]])
+    got, b = run_pair([[3.0, 4.0]], [[1.0, None]])
     assert abs(b["centroid_cosine"] - 0.6) < 1e-9
     assert abs(got["centroid_cosine"] - b["centroid_cosine"]) < 1e-9
     assert abs(got["centroid_l2"] - b["centroid_l2"]) < 1e-9
 
     # (b) window all-null at a ref-non-null position: batch L2 skips it
-    got2, b2 = run_pair("curnull", [[3.0, None]], [[1.0, 1.0]])
+    got2, b2 = run_pair([[3.0, None]], [[1.0, 1.0]])
     assert abs(b2["centroid_l2"] - 2.0) < 1e-9  # only |3-1| contributes
     assert abs(got2["centroid_l2"] - b2["centroid_l2"]) < 1e-9
     assert abs(got2["centroid_cosine"] - b2["centroid_cosine"]) < 1e-9

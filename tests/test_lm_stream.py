@@ -3,36 +3,27 @@ batch scorer over the same rows, and un-scoreable rows still advance the
 watermark (the filter-below-watermark stall regression)."""
 
 import math
-import os
-import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from vldt_spark.streaming import replay
 from vldt_spark.streaming.lm_stream import stream_ppl_windows
 
 
-def _run(spark, root, logp, floor, **kw):
-    schema = spark.read.parquet(os.path.join(root, "b=1")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_ppl_windows(stream, "ts", "tokens", logp, floor, **kw)
-    name = f"lm_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).collect()
+def _windows(spark, frames, logp, floor):
+    return replay(
+        spark,
+        frames,
+        lambda s: stream_ppl_windows(s, "ts", "tokens", logp, floor, ppl_threshold=3.0),
+        mode="append",
+    ).collect()
 
 
 def test_stream_ppl_windows_closed_form(spark):
     # fixed model: logp = [ln .5, ln .25], floor = ln .125
     logp = [math.log(0.5), math.log(0.25)]
     floor = math.log(0.125)
-    root = tempfile.mkdtemp(prefix="lmstream_")
     day1 = spark.createDataFrame(
         [
             ("2024-01-01 10:00:00", [0, 0]),   # ppl = 2
@@ -47,12 +38,9 @@ def test_stream_ppl_windows_closed_form(spark):
     sentinel = spark.createDataFrame(
         [("2024-03-01 00:00:00", None)], "ts string, tokens array<int>"
     ).select(F.col("ts").cast("timestamp").alias("ts"), "tokens")
-    day1.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    day2.unionByName(sentinel).coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
     rows = {
         str(r["window_start"])[:10]: r
-        for r in _run(spark, root, logp, floor, ppl_threshold=3.0)
+        for r in _windows(spark, [day1, day2.unionByName(sentinel)], logp, floor)
     }
     d1 = rows["2024-01-01"]
     # empty sequence excluded from every metric
@@ -71,7 +59,6 @@ def test_stream_ppl_unscoreable_rows_advance_watermark(spark):
     so earlier windows emit — the regression where a row filter on the
     UDF output was pushed below the watermark node and stalled emission."""
     logp, floor = [math.log(0.5)], math.log(0.25)
-    root = tempfile.mkdtemp(prefix="lmstream_")
     day1 = spark.createDataFrame(
         [("2024-01-01 10:00:00", [0])], "ts string, tokens array<int>"
     ).select(F.col("ts").cast("timestamp").alias("ts"), "tokens")
@@ -80,9 +67,6 @@ def test_stream_ppl_unscoreable_rows_advance_watermark(spark):
         [("2024-03-01 00:00:00", []), ("2024-03-01 01:00:00", None)],
         "ts string, tokens array<int>",
     ).select(F.col("ts").cast("timestamp").alias("ts"), "tokens")
-    day1.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    empties.coalesce(1).write.parquet(os.path.join(root, "b=2"))
-
-    rows = _run(spark, root, logp, floor, ppl_threshold=3.0)
+    rows = _windows(spark, [day1, empties], logp, floor)
     assert len(rows) == 1  # day-1 window DID close
     assert rows[0]["n_seqs"] == 1 and rows[0]["avg_ppl"] == pytest.approx(2.0)

@@ -12,11 +12,8 @@
 
 import ast
 import datetime as dt
-import os
 import pathlib
 import random
-import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,6 +25,7 @@ from vldt_spark.fields import Field
 from vldt_spark.functions.text import c4_report, pii_report
 from vldt_spark.model import Model
 from vldt_spark.rounding import round6
+from vldt_spark.streaming import replay
 from vldt_spark.streaming.c4_stream import stream_c4_windows
 from vldt_spark.streaming.clf_stream import stream_confusion_windows
 from vldt_spark.streaming.pii_stream import stream_pii_windows
@@ -221,23 +219,13 @@ def test_stream_window_equals_batch_report(spark, family, partitions):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     try:
-        root = tempfile.mkdtemp(prefix=f"vldt_cells_{family}_")
         half = len(rows) // 2
         sentinel = tuple([dt.datetime(2024, 3, 1)] + [None] * (len(rows[0]) - 1))
-        for i, batch in enumerate([rows[:half], rows[half:], [sentinel]], 1):
-            spark.createDataFrame(batch, schema).coalesce(1).write.parquet(
-                os.path.join(root, f"b={i}")
-            )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(root, "b=*"))
-        )
-        name = f"cells_{family}_{uuid.uuid4().hex[:8]}"
-        q = stream_fn(stream).writeStream.outputMode("append").format("memory").queryName(name).start()
-        q.processAllAvailable()
-        q.stop()
-        windows = spark.table(name).collect()
+        frames = [
+            spark.createDataFrame(batch, schema)
+            for batch in [rows[:half], rows[half:], [sentinel]]
+        ]
+        windows = replay(spark, frames, stream_fn, mode="append").collect()
         assert len(windows) == 1  # the sentinel's window never closes
         batch = batch_fn(spark, spark.createDataFrame(rows, schema).repartition(partitions))
     finally:
@@ -317,20 +305,11 @@ def test_drift_streams_null_values_advance_the_watermark(spark, monitor, schema,
     day = [(_DAY, v) for v in values]
     got = {}
     for name, rows in (("with_nulls", day + [(_DAY, None)]), ("without", day)):
-        root = tempfile.mkdtemp(prefix="vldt_drift_nulls_")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(os.path.join(root, "b=1"))
-        spark.createDataFrame([(dt.datetime(2024, 3, 1), None)], schema).coalesce(1).write.parquet(
-            os.path.join(root, "b=2")
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(os.path.join(root, "b=*"))
-        )
-        q_name = f"drift_{name}_{uuid.uuid4().hex[:8]}"
-        q = monitor(spark, stream).writeStream.outputMode("append").format("memory").queryName(q_name).start()
-        q.processAllAvailable()
-        q.stop()
-        got[name] = [r.asDict() for r in spark.table(q_name).collect()]
+        frames = [
+            spark.createDataFrame(rows, schema),
+            spark.createDataFrame([(dt.datetime(2024, 3, 1), None)], schema),
+        ]
+        out = replay(spark, frames, lambda s: monitor(spark, s), mode="append")
+        got[name] = [r.asDict() for r in out.collect()]
     assert len(got["without"]) == 1
     assert got["with_nulls"] == got["without"]

@@ -1,49 +1,28 @@
 """Streaming PII-rate monitor."""
 
 import datetime as dt
-import os
-import tempfile
-import uuid
 
-from pyspark.sql import functions as F
-
+from vldt_spark.streaming import replay
 from vldt_spark.streaming.pii_stream import stream_pii_windows
 
+_SCHEMA = "ts timestamp, text string"
+_SENTINEL = [(dt.datetime(2024, 3, 1), None)]  # advances the watermark only
 
-def _run_stream(spark, batches, window="1 day", watermark="1 hour"):
-    root = tempfile.mkdtemp(prefix="vldt_pii_stream_")
-    schema = "ts timestamp, text string"
-    for i, rows in enumerate(batches, 1):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            os.path.join(root, f"b={i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_pii_windows(stream, "ts", "text", window=window, watermark=watermark)
-    name = f"pii_stream_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return {r["window_start"]: r for r in spark.table(name).collect()}
+
+def _pii(stream):
+    return stream_pii_windows(stream, "ts", "text", window="1 day", watermark="1 hour")
 
 
 def test_stream_pii_closed_form(spark):
     d1 = dt.datetime(2024, 1, 1, 6)
     d2 = dt.datetime(2024, 1, 2, 6)
-    got = _run_stream(
-        spark,
-        [
-            [
-                (d1, "mail a@b.co"), (d1, "ip 10.0.0.1 and mail x@y.io"),
-                (d1, "clean"), (d1, "clean too"),
-                (d2, "call 555-123-4567"),
-            ],
-            [(dt.datetime(2024, 3, 1), None)],  # sentinel: watermark only
-        ],
-    )
+    rows = [
+        (d1, "mail a@b.co"), (d1, "ip 10.0.0.1 and mail x@y.io"),
+        (d1, "clean"), (d1, "clean too"),
+        (d2, "call 555-123-4567"),
+    ]
+    frames = [spark.createDataFrame(b, _SCHEMA) for b in (rows, _SENTINEL)]
+    got = {r["window_start"]: r for r in replay(spark, frames, _pii, mode="append").collect()}
     w1 = got[dt.datetime(2024, 1, 1)]
     assert (w1["n_docs"], w1["n_email"], w1["n_ip"], w1["n_phone"]) == (4, 2, 1, 0)
     assert w1["n_any"] == 2 and w1["pii_frac"] == 0.5
@@ -53,13 +32,9 @@ def test_stream_pii_closed_form(spark):
 
 def test_stream_pii_null_text_advances_watermark_without_counting(spark):
     d1 = dt.datetime(2024, 1, 5, 12)
-    got = _run_stream(
-        spark,
-        [
-            [(d1, "clean"), (d1, None)],           # NULL text: no cell, no stall
-            [(dt.datetime(2024, 3, 1), None)],
-        ],
-    )
+    rows = [(d1, "clean"), (d1, None)]  # NULL text: no cell, no stall
+    frames = [spark.createDataFrame(b, _SCHEMA) for b in (rows, _SENTINEL)]
+    got = {r["window_start"]: r for r in replay(spark, frames, _pii, mode="append").collect()}
     w = got[dt.datetime(2024, 1, 5)]
     assert w["n_docs"] == 1 and w["n_any"] == 0 and w["pii_frac"] == 0.0
     # the sentinel's own (still-open) window is not emitted in append
@@ -77,7 +52,8 @@ def test_stream_pii_matches_batch_report(spark):
          f"doc {i} " + ("mail a@b.co" if i % 4 == 0 else "clean"))
         for i in range(24)
     ]
-    got = _run_stream(spark, [rows, [(dt.datetime(2024, 3, 1), None)]])
+    frames = [spark.createDataFrame(b, _SCHEMA) for b in (rows, _SENTINEL)]
+    got = {r["window_start"]: r for r in replay(spark, frames, _pii, mode="append").collect()}
     streamed = {
         "n": sum(r["n_docs"] for r in got.values()),
         "email": sum(r["n_email"] for r in got.values()),

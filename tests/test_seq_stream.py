@@ -2,31 +2,22 @@
 batch suite guard's metric over the same rows, and the flag column is a
 stateless expression (cross-batch rows land in their own windows)."""
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import functions as F
 
+from vldt_spark.streaming import replay
 from vldt_spark.streaming.seq_stream import stream_degenerate_share
 
 
-def _run(spark, root, **kw):
-    schema = spark.read.parquet(os.path.join(root, "b=1")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "b=*"))
-    )
-    out = stream_degenerate_share(stream, "ts", "tokens", **kw)
-    name = f"seq_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).collect()
+def _windows(spark, frames):
+    return replay(
+        spark,
+        frames,
+        lambda s: stream_degenerate_share(s, "ts", "tokens", max_run=3),
+        mode="append",
+    ).collect()
 
 
-def _write(spark, root):
+def _frames(spark):
     day1 = spark.createDataFrame(
         [
             ("2024-01-01 10:00:00", [1, 2, 3, 4]),     # healthy
@@ -42,14 +33,11 @@ def _write(spark, root):
     sentinel = spark.createDataFrame(
         [("2024-03-01 00:00:00", None)], "ts string, tokens array<int>"
     ).select(F.col("ts").cast("timestamp").alias("ts"), "tokens")
-    day1.coalesce(1).write.parquet(os.path.join(root, "b=1"))
-    day2.unionByName(sentinel).coalesce(1).write.parquet(os.path.join(root, "b=2"))
+    return [day1, day2.unionByName(sentinel)]
 
 
 def test_stream_degenerate_share_per_window(spark):
-    root = tempfile.mkdtemp(prefix="seqstream_")
-    _write(spark, root)
-    rows = {str(r["window_start"])[:10]: r for r in _run(spark, root, max_run=3)}
+    rows = {str(r["window_start"])[:10]: r for r in _windows(spark, _frames(spark))}
     d1 = rows["2024-01-01"]
     assert d1["n_seqs"] == 4 and d1["n_degenerate"] == 2
     assert d1["degenerate_share"] == 0.5
@@ -63,14 +51,13 @@ def test_stream_degenerate_share_per_window(spark):
 def test_stream_share_equals_batch_guard_metric(spark):
     from vldt_spark.checks.suite import Suite, expect
 
-    root = tempfile.mkdtemp(prefix="seqstream_")
-    _write(spark, root)
-    day1 = spark.read.parquet(os.path.join(root, "b=1"))
+    frames = _frames(spark)
+    day1 = frames[0]
     batch = (
         Suite([expect.degenerate_sequence_share_below("tokens", 1.1, max_run=3)])
         .run(day1)
         .collect()[0]
     )
-    stream_rows = _run(spark, root, max_run=3)
+    stream_rows = _windows(spark, frames)
     d1 = [r for r in stream_rows if str(r["window_start"])[:10] == "2024-01-01"][0]
     assert d1["degenerate_share"] == batch["metric"]

@@ -68,33 +68,26 @@ def test_sessionize_rejects_bad_gap(spark):
         sessionize(_events(spark), "user_id", "ts", gap_seconds=0)
 
 
-def test_stream_session_stats_equals_batch(spark, tmp_path):
+def test_stream_session_stats_equals_batch(spark):
     """The streaming twin emits exactly the batch sessions once a
     future-dated sentinel advances the watermark past every real
     session's end; the sentinel's own (still-open) session is absent."""
-    import os
-    import uuid
     from datetime import datetime
 
     from vldt_spark.functions.sessions import session_stats
-    from vldt_spark.streaming.sessions_stream import run_session_monitor
+    from vldt_spark.streaming import replay
+    from vldt_spark.streaming.sessions_stream import stream_session_stats
 
     ev = _events(spark).withColumn("value", F.col("event_id").cast("double"))
-    root = str(tmp_path / "stream_src")
-    ev.coalesce(1).write.parquet(os.path.join(root, "b=1"))
     sentinel = spark.createDataFrame(
         [(999, -1, datetime(2030, 1, 1))], "event_id int, user_id int, ts timestamp"
     ).withColumn("value", F.lit(0.0))
-    sentinel.coalesce(1).write.parquet(os.path.join(root, "b=2"))
 
-    streamed = run_session_monitor(
+    streamed = replay(
         spark,
-        os.path.join(root, "b=*"),
-        "user_id",
-        "ts",
-        gap_seconds=300,
-        value_col="value",
-        query_name=f"sess_{uuid.uuid4().hex[:8]}",
+        [ev, sentinel],
+        lambda s: stream_session_stats(s, "user_id", "ts", gap_seconds=300, value_col="value"),
+        mode="append",
     )
     batch = session_stats(ev, "user_id", "ts", gap_seconds=300, value_col="value")
     assert sorted(streamed.collect()) == sorted(batch.collect())

@@ -1,30 +1,26 @@
 """Stateful streaming duplicate monitor + CSV validated reader tests."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from vldt_spark.flagship import TokenSequence
+from vldt_spark.streaming import replay, streaming_duplicate_keys
 
 
-def test_streaming_duplicate_keys_cross_batch(spark, tmp_path):
+def _duplicates(spark, batches):
+    """The duplicate events of ``batches``, one micro-batch each."""
+    frames = [spark.createDataFrame(rows, "doc_id string, source string") for rows in batches]
+    return replay(
+        spark, frames, lambda s: streaming_duplicate_keys(s, "doc_id"), mode="update"
+    )
+
+
+def test_streaming_duplicate_keys_cross_batch(spark):
     """Duplicates split ACROSS micro-batches are caught — the case a
     per-batch groupBy cannot see. File 1 and file 2 each contain `dup-1`
     once; with maxFilesPerTrigger=1 they arrive in different batches."""
-    from vldt_spark.streaming.stateful import run_duplicate_monitor
-
-    src = str(tmp_path / "dups_src")
     rows1 = [("dup-1", "web"), ("a", "web"), ("b", "wiki"), ("both-2", "web")]
     rows2 = [("dup-1", "wiki"), ("c", "web"), ("both-2", "web"), ("both-2", "web")]
-    spark.createDataFrame(rows1, "doc_id string, source string").coalesce(1).write.parquet(
-        os.path.join(src, "f=1")
-    )
-    spark.createDataFrame(rows2, "doc_id string, source string").coalesce(1).write.parquet(
-        os.path.join(src, "f=2")
-    )
-    out = run_duplicate_monitor(
-        spark, src + "/f=*", "doc_id", query_name="t_dups_cross"
-    )
+    out = _duplicates(spark, [rows1, rows2])
     got = {r["key"]: r["n_seen"] for r in out.collect()}
     # dup-1: second occurrence lands in a later batch → n_seen reaches 2
     assert got.get("dup-1") == 2
@@ -34,14 +30,9 @@ def test_streaming_duplicate_keys_cross_batch(spark, tmp_path):
     assert "a" not in got and "b" not in got and "c" not in got
 
 
-def test_streaming_duplicate_single_batch(spark, tmp_path):
+def test_streaming_duplicate_single_batch(spark):
     """Within-batch duplicates also emit (n_new counts the batch's rows)."""
-    from vldt_spark.streaming.stateful import run_duplicate_monitor
-
-    src = str(tmp_path / "dups_one")
-    rows = [("x", "web"), ("x", "web"), ("y", "web")]
-    spark.createDataFrame(rows, "doc_id string, source string").coalesce(1).write.parquet(src)
-    out = run_duplicate_monitor(spark, src, "doc_id", query_name="t_dups_one")
+    out = _duplicates(spark, [[("x", "web"), ("x", "web"), ("y", "web")]])
     got = {r["key"]: (r["n_seen"], r["n_new"]) for r in out.collect()}
     assert got == {"x": (2, 2)}
 

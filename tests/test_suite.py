@@ -251,37 +251,33 @@ def test_suite_strict_bounds(spark):
     assert rep2["metric"] == 0.0
 
 
-def test_suite_run_stream_per_window(spark, tmp_path):
+def test_suite_run_stream_per_window(spark):
     """Continuous contract: per-window report rows equal the batch tier
     run on each window's slice; whole-table expectations are rejected."""
     import pytest as _pytest
+
+    from vldt_spark.streaming import replay
 
     df = spark.createDataFrame(
         [("2024-01-01 10:00:00", 1.0), ("2024-01-01 11:00:00", None),
          ("2024-01-02 09:00:00", -3.0), ("2024-01-02 10:00:00", 2.0)],
         "ts_s string, v double",
     ).select(F.col("ts_s").cast("timestamp").alias("ts"), "v")
-    src = str(tmp_path / "stream_src")
-    df.coalesce(1).write.parquet(src + "/b=1")
     # future sentinel closes both real windows
-    spark.createDataFrame([("2024-06-01 00:00:00", 0.0)], "ts_s string, v double") \
-        .select(F.col("ts_s").cast("timestamp").alias("ts"), "v") \
-        .coalesce(1).write.parquet(src + "/b=2")
+    sentinel = spark.createDataFrame(
+        [("2024-06-01 00:00:00", 0.0)], "ts_s string, v double"
+    ).select(F.col("ts_s").cast("timestamp").alias("ts"), "v")
 
     suite = Suite([expect.not_null("v"), expect.range("v", lo=0.0)])
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/b=*")
+    out = replay(
+        spark,
+        [df, sentinel],
+        lambda s: suite.run_stream(s, "ts", window="1 day", watermark="1 hour"),
+        mode="append",
     )
-    out = suite.run_stream(stream, "ts", window="1 day", watermark="1 hour")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("vldt_suite_stream").start())
-    q.processAllAvailable()
-    q.stop()
     rows = {
         (str(r["window_start"])[:10], r["check"]): r
-        for r in spark.table("vldt_suite_stream").collect()
+        for r in out.collect()
     }
     assert rows[("2024-01-01", "not_null")]["metric"] == 1.0
     assert rows[("2024-01-01", "range")]["metric"] == 0.0
@@ -290,7 +286,7 @@ def test_suite_run_stream_per_window(spark, tmp_path):
            rows[("2024-01-02", "not_null")]["metric"] == 0.0
 
     with _pytest.raises(ValueError, match="row-local"):
-        Suite([expect.unique("v")]).run_stream(stream, "ts")
+        replay(spark, [df], lambda s: Suite([expect.unique("v")]).run_stream(s, "ts"), mode="append")
 
 
 def test_suite_volume_cardinality_quantile_expectations(spark):

@@ -187,27 +187,26 @@ def test_suite_distinct_seq_frac_guard_arms(spark):
     assert row["passed"] and row["metric"] > 0.9
 
 
-def test_streaming_duplicate_sequences_cross_batch(spark, tmp_path):
+def test_streaming_duplicate_sequences_cross_batch(spark):
     """A sequence re-crawled under a FRESH doc_id in a later micro-batch
     is flagged by the sequence-keyed monitor (an id-keyed monitor would
     see only new ids). Both hash paths emit the same event set."""
-    import os
-
-    from vldt_spark.streaming.stateful import run_sequence_dup_monitor
+    from vldt_spark.streaming import replay
+    from vldt_spark.streaming.stateful import streaming_duplicate_sequences
 
     rows1 = [(1, [5, 6, 7]), (2, [8, 9]), (3, [10])]
     rows2 = [(100, [5, 6, 7]), (101, [11, 12])]  # 100 re-crawls 1's sequence
-    for i, (name, rows) in enumerate([("b=1", rows1), ("b=2", rows2)]):
-        spark.createDataFrame(
-            rows, "doc_id long, tokens array<int>"
-        ).coalesce(1).write.parquet(str(tmp_path / "seq_src" / name))
-    src = str(tmp_path / "seq_src") + "/b=*"
+    frames = [spark.createDataFrame(rows, "doc_id long, tokens array<int>") for rows in (rows1, rows2)]
 
+    events = {}
     for hash_fn in ("xxhash64", "md5"):
-        out = run_sequence_dup_monitor(
-            spark, src, hash_fn=hash_fn, query_name=f"t_seqdups_{hash_fn}"
-        )
-        got = [(r["n_seen"], r["n_new"]) for r in out.collect()]
+        events[hash_fn] = replay(
+            spark,
+            frames,
+            lambda s: streaming_duplicate_sequences(s, hash_fn=hash_fn),
+            mode="update",
+        ).collect()
+        got = [(r["n_seen"], r["n_new"]) for r in events[hash_fn]]
         assert got == [(2, 1)], hash_fn  # exactly the re-crawled sequence
 
     # the md5 path's key is the canonical-rendering fingerprint (the
@@ -220,8 +219,7 @@ def test_streaming_duplicate_sequences_cross_batch(spark, tmp_path):
         .select(fingerprint(tokens_canonical_text(F.col("tokens"))))
         .first()[0]
     )
-    md5_out = spark.table("t_seqdups_md5").collect()
-    assert md5_out[0]["key"] == expected_key
+    assert events["md5"][0]["key"] == expected_key
 
 
 def test_token_exact_substr_dedup_excises_spans(spark):

@@ -151,42 +151,6 @@ def _windowed_psi(stream_df, ref_hist, value_col, ts_col, by, bins, lo, hi, wind
     )
 
 
-def run_drift_monitor(
-    spark,
-    source_dir: str,
-    ref_hist: DataFrame,
-    value_col: str,
-    ts_col: str,
-    *,
-    bins: int,
-    lo: float,
-    hi: float,
-    window: str = "1 day",
-    schema=None,
-    query_name: str = "vldt_stream_drift",
-) -> "StreamingQuery":
-    """Drive a parquet-directory stream through the drift monitor (memory
-    sink, APPEND mode — chained stateful aggregations require it; a window
-    emits once the watermark passes its end) and return the live
-    ``StreamingQuery`` (NOT the result table — the caller keeps driving it:
-    append fresh data to advance the watermark past the windows of
-    interest, call ``processAllAvailable()``, then read
-    ``spark.table(query_name)``, and finally ``stop()`` it)."""
-    schema = schema or spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    out = stream_psi(
-        stream, ref_hist, value_col, ts_col, bins=bins, lo=lo, hi=hi, window=window
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    return q
-
-
 def _ref_centroid(ref: DataFrame, vec_col: str) -> dict[int, float]:
     """Static reference frame → per-position centroid means embedded as
     driver-side literals (dim-bounded, same rationale as ``_ref_probs``:

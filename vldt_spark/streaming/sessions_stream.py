@@ -19,7 +19,7 @@ this extends the engine's session operator to continuous ingestion.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vldt_spark.functions.sessions import _check_gap
@@ -60,44 +60,3 @@ def stream_session_stats(
             *([f"sum_{value_col}"] if value_col is not None else []),
         )
     )
-
-
-def run_session_monitor(
-    spark: SparkSession,
-    source_glob: str,
-    key_col: str,
-    ts_col: str,
-    *,
-    gap_seconds: float,
-    value_col: str | None = None,
-    watermark: str = "1 hour",
-    query_name: str = "vldt_stream_sessions",
-) -> DataFrame:
-    """Drive a parquet-directory stream to completion synchronously
-    (one file per micro-batch, append mode, memory sink) and return the
-    emitted sessions — the local smoke-test path; production swaps
-    source/sink, the plan is identical. Append mode only emits sessions
-    the watermark has closed: feed a future-dated sentinel row in the
-    final file to flush (the sentinel's own session stays in state and
-    is never emitted — the established gate-query pattern)."""
-    schema = spark.read.parquet(source_glob).schema
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(source_glob)
-    out = stream_session_stats(
-        stream,
-        key_col,
-        ts_col,
-        gap_seconds=gap_seconds,
-        value_col=value_col,
-        watermark=watermark,
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(query_name)

@@ -100,38 +100,6 @@ def streaming_duplicate_keys(
     )
 
 
-def run_duplicate_monitor(
-    spark,
-    source_dir: str,
-    key_col: str,
-    *,
-    schema=None,
-    max_files_per_trigger: int = 1,
-    query_name: str = "vldt_stream_dups",
-) -> DataFrame:
-    """Drive a parquet-directory stream through the stateful duplicate
-    monitor to completion (memory sink) and return the emitted duplicate
-    events — the local test path; production swaps source/sink and a
-    RocksDB state store, the plan is identical. ``max_files_per_trigger=1``
-    forces one micro-batch per file so cross-batch state is exercised."""
-    schema = schema or spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    dups = streaming_duplicate_keys(stream, key_col)
-    q = (
-        dups.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(query_name)
-
-
 def streaming_duplicate_sequences(
     stream_df: DataFrame,
     *,
@@ -163,37 +131,3 @@ def streaming_duplicate_sequences(
     return streaming_duplicate_keys(
         keyed, "__seq_key", state_ttl_ms=state_ttl_ms
     )
-
-
-def run_sequence_dup_monitor(
-    spark,
-    source_dir: str,
-    *,
-    tokens_col: str = "tokens",
-    hash_fn: str = "xxhash64",
-    schema=None,
-    max_files_per_trigger: int = 1,
-    query_name: str = "vldt_stream_seq_dups",
-) -> DataFrame:
-    """``run_duplicate_monitor`` for the sequence-keyed variant: drive a
-    parquet-directory stream of pre-tokenized rows through
-    ``streaming_duplicate_sequences`` to completion (memory sink) and
-    return the emitted duplicate-sequence events."""
-    schema = schema or spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    dups = streaming_duplicate_sequences(
-        stream, tokens_col=tokens_col, hash_fn=hash_fn
-    )
-    q = (
-        dups.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(query_name)

@@ -11,7 +11,7 @@ batch exactness).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vldt_spark.cells import Cells, windowed
@@ -25,6 +25,19 @@ def validated_stream(stream_df: DataFrame, model: type[Model]) -> DataFrame:
     return ValidationEngine(model).annotate(stream_df, keep_extra=True)
 
 
+def verdict_cells() -> Cells:
+    """The verdict counts of annotated rows: n_rows, n_invalid and
+    n_violations, all long.  A function, since a Column needs a session."""
+    return Cells(
+        F.lit(True),
+        {
+            "n_rows": F.lit(1),
+            "n_invalid": (~F.col("is_valid")).cast("long"),
+            "n_violations": F.size("violations").cast("long"),
+        },
+    )
+
+
 def stream_verdicts(
     annotated: DataFrame,
     *,
@@ -35,49 +48,6 @@ def stream_verdicts(
 ) -> DataFrame:
     """Windowed per-partition verdicts (streaming B11): (window,
     extra_keys..., n_rows, n_invalid, n_violations, passed)."""
-    cells = Cells(
-        F.lit(True),
-        {
-            "n_rows": F.lit(1),
-            "n_invalid": (~F.col("is_valid")).cast("long"),
-            "n_violations": F.size("violations").cast("long"),
-        },
-    )
     return windowed(
-        annotated, ts_col, cells, window=window, watermark=watermark, by=extra_keys
+        annotated, ts_col, verdict_cells(), window=window, watermark=watermark, by=extra_keys
     ).withColumn("passed", F.col("n_invalid") == 0)
-
-
-def windowed_violation_counts(
-    spark: SparkSession,
-    source_dir: str,
-    model: type[Model],
-    *,
-    ts_col: str,
-    schema=None,
-    window: str = "5 minutes",
-    query_name: str = "vldt_stream_verdicts",
-) -> DataFrame:
-    """Drive a parquet-directory stream to completion synchronously (memory
-    sink, complete mode) and return the final verdict table — the local
-    smoke-test path; production swaps source/sink, the plan is identical."""
-    schema = schema or spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    ann = validated_stream(stream, model)
-    agg = stream_verdicts(ann, ts_col=ts_col, window=window)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.table(query_name)
-    return out.select(
-        F.col("window.start").cast("long").alias("window_start"),
-        "n_rows",
-        "n_invalid",
-        "n_violations",
-        "passed",
-    )
