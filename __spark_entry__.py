@@ -37,14 +37,14 @@ _DOC_DAY_TS = (
 )
 
 
-def _with_sentinel(rows: DataFrame, ts: str = "ts") -> list[DataFrame]:
-    """``rows``, then a sentinel frame: one row 90 days past a row of
-    ``rows``, every other column NULL.  Its micro-batch moves the
+def _with_sentinel(rows: DataFrame) -> list[DataFrame]:
+    """``rows``, then a sentinel frame: one row whose ``ts`` is 90 days past
+    a row of ``rows``, every other column NULL.  Its micro-batch moves the
     watermark past every real window; its own window never closes."""
     sentinel = rows.limit(1).select(
         *[
-            (F.col(f.name) + F.expr("INTERVAL 90 DAYS")).alias(f.name)
-            if f.name == ts
+            (F.col("ts") + F.expr("INTERVAL 90 DAYS")).alias("ts")
+            if f.name == "ts"
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in rows.schema
         ]
