@@ -1,4 +1,4 @@
-"""The one stream replay driver: each frame is one micro-batch, the query
+"""The one stream replay function: each frame is one micro-batch, the query
 and its files are gone afterwards, and no other code drains a stream."""
 
 import ast
@@ -135,11 +135,11 @@ def test_only_replay_drains_streams():
     files = [_REPO / "__spark_entry__.py"]
     files += sorted((_REPO / "vldt_spark").rglob("*.py"))
     files += sorted((_REPO / "tests").rglob("*.py"))
-    driver = _REPO / "vldt_spark" / "streaming" / "replay.py"
+    replay_py = _REPO / "vldt_spark" / "streaming" / "replay.py"
     offenders = [
         (str(p.relative_to(_REPO)), line)
         for p in files
-        if p != driver
+        if p != replay_py
         for line in _drains(ast.parse(p.read_text()))
     ]
     assert offenders == []

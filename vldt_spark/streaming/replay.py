@@ -1,6 +1,6 @@
 """Replay frames through a streaming operator, one micro-batch per frame.
 
-The local driver for every streaming twin: the same plan runs in
+The one local runner for every streaming twin: the same plan runs in
 production against a real source and sink, while tests and gates feed a
 fixed list of frames and read back what a memory sink collected.  Frame
 ``i`` is written as one parquet file and streamed with one file per
